@@ -54,6 +54,7 @@ object ScaleProbe {
       Map(id -> Array.tabulate(64)(j => 25.0 + (id % 7) * 0.3 + j * 0.01))
     val eidxPath = Scratch.dir("scale_eidx")
     val cidxPath = Scratch.dir("scale_cidx")
+    val mhidxPath = Scratch.dir("scale_idx")
 
     val stages = Seq(
       time("exact_dedup") {
@@ -85,9 +86,8 @@ object ScaleProbe {
       time("index_build") {
         // pay-once: materialize the persistent band-bucket index for the
         // whole corpus (the LAST full signature pass it ever needs)
-        val tmp = Scratch.dir("scale_idx")
         graft.operators.DedupIndex.build(corpus, "doc_id", "text",
-          tmp, "scale_mhidx", shingleN = 3, numHashes = 64, bands = 16,
+          mhidxPath, "scale_mhidx", shingleN = 3, numHashes = 64, bands = 16,
           buckets = 32).indexedDocs()
       },
       time("index_probe_batch") {
@@ -95,8 +95,7 @@ object ScaleProbe {
         // fresh ids) probed against the stored index — only the batch is
         // hashed; the corpus contributes a bucketed columnar scan
         val idx = graft.operators.DedupIndex.open(spark, "scale_mhidx",
-          "unused-for-probe", shingleN = 3, numHashes = 64, bands = 16,
-          buckets = 32)
+          mhidxPath)
         val batch = base.filter(col("doc_id") >= 10000 && col("doc_id") < 15000)
           .select((col("doc_id") + 10 * n).as("doc_id"), col("text"))
         idx.probe(batch, "doc_id", "text", threshold = 0.9).count()
@@ -198,7 +197,7 @@ object ScaleProbe {
         // baseline — the rewrite is one bucketed pass over assignments;
         // labels must be IDENTICAL after (count invariant below)
         val cidx = graft.operators.ComponentsIndex.open(
-          spark, "scale_cidx", cidxPath, buckets = 32)
+          spark, "scale_cidx", cidxPath)
         val labels = cidx.compact(s"$cidxPath-v2").assignments()
         labels.select("comp").distinct().count() * 1000000 + labels.count()
       },
@@ -259,7 +258,7 @@ object ScaleProbe {
         graft.operators.Similarity.IvfIndex.save(ivf, "scale_ivf",
           s"$ivfPath/v1", buckets = 32)
         val opened = graft.operators.Similarity.IvfIndex.open(
-          spark, "scale_ivf", s"$ivfPath/v1", buckets = 32)
+          spark, "scale_ivf", s"$ivfPath/v1")
         require(!opened.needsRetrain(),
           "a just-saved 505k IVF must not want a retrain")
         val shifted = spark.range(3 * n, 3 * n + 50000)

@@ -214,23 +214,16 @@ object Bm25Index extends CacheLedger {
     idx
   }
 
-  /** Re-open an existing index — no data work. Meta WINS over the
-    * argument (the [[DedupIndex.open]] rule): a mismatched bucket count
-    * would make `append` fail on the bucket spec and `rewrite` silently
-    * re-bucket. The argument applies only to legacy meta-less paths.
+  /** Re-open an existing index — no data work. The bucket count loads
+    * from the required `meta` record (the [[DedupIndex.open]] rule): a
+    * guessed count would make `append` fail on the bucket spec and
+    * `rewrite` silently re-bucket.
     */
-  def open(
-      spark: SparkSession, name: String, path: String,
-      buckets: Int = 32): Bm25Index = {
+  def open(spark: SparkSession, name: String, path: String): Bm25Index = {
     import org.json4s.DefaultFormats
     implicit val fmts: DefaultFormats.type = DefaultFormats
-    val b = MetaIo.read(spark, s"$path/meta") match {
-      case Some(j) => (j \ "buckets").extract[Int]
-      case None if MetaIo.exists(spark, s"$path/meta") => // pre-JSON index
-        spark.read.parquet(s"$path/meta").head().getAs[Int]("buckets")
-      case None => buckets
-    }
-    new Bm25Index(spark, s"${name}_postings", s"${name}_doclens", path, b)
+    new Bm25Index(spark, s"${name}_postings", s"${name}_doclens", path,
+      (MetaIo.read(spark, s"$path/meta") \ "buckets").extract[Int])
   }
 
   private[operators] def writeMeta(

@@ -231,22 +231,19 @@ object ComponentsIndex {
   }
 
   /** Re-open an existing index (one tiny meta read, no corpus work). The
-    * bucket count comes from the persisted meta — META WINS over the
-    * argument (a wrong count would make update's append throw and compact
-    * silently re-bucket); the argument stays only as the fallback for
-    * indexes written before the meta existed.
+    * bucket count loads from the required meta (a guessed count would
+    * make update's append throw and compact silently re-bucket).
     */
-  def open(spark: SparkSession, name: String, path: String,
-      buckets: Int = 32): CompIndex =
+  def open(spark: SparkSession, name: String, path: String): CompIndex =
     new CompIndex(spark, s"${name}_comp", path,
-      CompIndex.readBucketsMeta(spark, path).getOrElse(buckets))
+      CompIndex.readBucketsMeta(spark, path))
 }
 
 private object CompIndex {
   import org.apache.hadoop.fs.{FileSystem, Path}
 
   /** Storage geometry beside the data, so open() never guesses the bucket
-    * count (META WINS over the argument — the DedupIndex rule).
+    * count (the DedupIndex rule).
     */
   private[operators] def writeBucketsMeta(
       spark: SparkSession, path: String, buckets: Int): Unit = {
@@ -254,24 +251,15 @@ private object CompIndex {
     MetaIo.write(spark, s"$path/meta", "buckets" -> buckets)
   }
 
-  /** Fallback to the caller's count ONLY for a genuinely absent meta
-    * (pre-meta index) — gated on an explicit existence check, never a
-    * broad catch: a corrupt or transiently unreadable meta must FAIL the
-    * open, not silently fall back and let the next compact cement the
-    * wrong geometry.
+  /** The required bucket count — a missing, corrupt or transiently
+    * unreadable meta FAILS the open instead of letting the next compact
+    * cement a guessed geometry.
     */
   private[operators] def readBucketsMeta(
-      spark: SparkSession, path: String): Option[Int] = {
+      spark: SparkSession, path: String): Int = {
     import org.json4s.DefaultFormats
     implicit val fmts: DefaultFormats.type = DefaultFormats
-    MetaIo.read(spark, s"$path/meta") match {
-      case Some(j) => Some((j \ "buckets").extract[Int])
-      case None =>
-        val p = new Path(s"$path/meta")
-        if (!fs(spark, path).exists(p)) None // genuinely pre-meta
-        else Some( // pre-JSON index
-          spark.read.parquet(s"$path/meta").head().getAs[Int]("buckets"))
-    }
+    (MetaIo.read(spark, s"$path/meta") \ "buckets").extract[Int]
   }
 
   private def fs(spark: SparkSession, p: String): FileSystem =
@@ -302,18 +290,12 @@ private object CompIndex {
       .sorted
   }
 
-  /** The LIVE remap directory: highest committed version, falling back to
-    * the pre-versioning single `remap` dir for indexes written before the
-    * scheme, then to "no remap yet" (empty map).
+  /** The LIVE remap directory: highest committed version, or None for
+    * "no remap yet" (empty map).
     */
   private[operators] def currentRemapDir(
-      spark: SparkSession, base: String): Option[String] = {
-    val vs = committedVersions(spark, base)
-    if (vs.nonEmpty) Some(s"$base/remap-v${vs.last}")
-    else if (fs(spark, base).exists(new Path(s"$base/remap")))
-      Some(s"$base/remap")
-    else None
-  }
+      spark: SparkSession, base: String): Option[String] =
+    committedVersions(spark, base).lastOption.map(v => s"$base/remap-v$v")
 
   /** Publish a new remap state: write version current+1 (Overwrite clears
     * any uncommitted partial a previous crash left at that number), then
@@ -338,7 +320,7 @@ private object CompIndex {
       s"parquet commit left no _SUCCESS under $base/remap-v$next " +
         "(mapreduce.fileoutputcommitter.marksuccessfuljobs disabled?) — " +
         "versioned remap publication depends on the marker")
-    (old.map(v => s"$base/remap-v$v") :+ s"$base/remap").foreach { p =>
+    old.map(v => s"$base/remap-v$v").foreach { p =>
       try {
         val d = new Path(p)
         if (f.exists(d)) {

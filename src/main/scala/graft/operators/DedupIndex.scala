@@ -310,35 +310,18 @@ object DedupIndex {
   /** Re-open an existing index (e.g. a new session over yesterday's
     * tables) — no data work, just the handle.
     *
-    * Opening never guesses geometry: indexes written since the `meta`
-    * file existed carry (shingleN, numHashes, bands, buckets) with the
-    * data, and meta WINS over the arguments — an open with mismatched
-    * args would otherwise hash probe batches with a different LSH
-    * geometry than the stored buckets and silently emit garbage pairs
-    * (the failure [[EmbedIndex.open]] was designed against). The
-    * argument geometry applies only to legacy paths without a meta file.
+    * Opening never guesses geometry: (shingleN, numHashes, bands,
+    * buckets) load from the required `meta` record — probing with a
+    * geometry other than the stored buckets' would silently emit garbage
+    * pairs (the failure [[EmbedIndex.open]] was designed against).
     */
-  def open(
-      spark: SparkSession, name: String, path: String,
-      shingleN: Int = 3, numHashes: Int = 128, bands: Int = 32,
-      buckets: Int = 32): MinHashIndex = {
+  def open(spark: SparkSession, name: String, path: String): MinHashIndex = {
     import org.json4s.DefaultFormats
     implicit val fmts: DefaultFormats.type = DefaultFormats
-    MetaIo.read(spark, s"$path/meta") match {
-      case Some(j) => new MinHashIndex(
-        spark, s"${name}_buckets", s"${name}_sets", path,
-        (j \ "shingleN").extract[Int], (j \ "numHashes").extract[Int],
-        (j \ "bands").extract[Int], (j \ "buckets").extract[Int])
-      case None if MetaIo.exists(spark, s"$path/meta") => // pre-JSON index
-        val r = spark.read.parquet(s"$path/meta").head()
-        new MinHashIndex(
-          spark, s"${name}_buckets", s"${name}_sets", path,
-          r.getAs[Int]("shingleN"), r.getAs[Int]("numHashes"),
-          r.getAs[Int]("bands"), r.getAs[Int]("buckets"))
-      case None => new MinHashIndex(
-        spark, s"${name}_buckets", s"${name}_sets", path,
-        shingleN, numHashes, bands, buckets)
-    }
+    val j = MetaIo.read(spark, s"$path/meta")
+    new MinHashIndex(spark, s"${name}_buckets", s"${name}_sets", path,
+      (j \ "shingleN").extract[Int], (j \ "numHashes").extract[Int],
+      (j \ "bands").extract[Int], (j \ "buckets").extract[Int])
   }
 
   private[operators] def writeMeta(

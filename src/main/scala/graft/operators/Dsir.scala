@@ -256,26 +256,13 @@ object Dsir {
   def open(spark: SparkSession, path: String): Weights = {
     import org.json4s.DefaultFormats
     implicit val fmts: DefaultFormats.type = DefaultFormats
-    val (dims, seed, alpha, base) = MetaIo.read(spark, s"$path/meta") match {
-      case Some(j) => ((j \ "dims").extract[Int], (j \ "seed").extract[Long],
-        (j \ "alpha").extract[Double], (j \ "base").extract[Double])
-      case None => // pre-JSON model
-        val meta = spark.read.parquet(s"$path/meta").collect()
-        require(meta.length == 1,
-          s"corrupt DSIR meta at $path: ${meta.length} rows")
-        val m = meta(0)
-        // models written before the sparse layout stored every NON-ZERO
-        // row and no baseline — absent row ⇒ 0.0, exactly the value that
-        // cut dropped, so zero-filling reconstructs the old format
-        // bit-exactly
-        val b =
-          if (m.schema.fieldNames.contains("base")) m.getDouble(3) else 0.0
-        (m.getInt(0), m.getLong(1), m.getDouble(2), b)
-    }
+    val j = MetaIo.read(spark, s"$path/meta")
+    val (dims, base) = ((j \ "dims").extract[Int], (j \ "base").extract[Double])
     val lr = Array.fill(dims)(base)
     spark.read.parquet(s"$path/weights").collect().foreach { r =>
       lr(r.getInt(0)) = r.getDouble(1)
     }
-    new Weights(dims, seed, alpha, lr)
+    new Weights(dims, (j \ "seed").extract[Long],
+      (j \ "alpha").extract[Double], lr)
   }
 }

@@ -46,7 +46,7 @@ final class SrpEmbedIndex private[operators] (
     val tables: Int,
     val seed: Long,
     val buckets: Int,
-    val designThreshold: Double = 0.95) extends Serializable {
+    val designThreshold: Double) extends Serializable {
 
   /** The build-time hyperplanes, regenerated deterministically — SAME
     * construction as `Dedup.srpBucketed` (one Random stream, table-major),
@@ -399,24 +399,11 @@ object EmbedIndex {
   def open(spark: SparkSession, name: String, path: String): SrpEmbedIndex = {
     import org.json4s.DefaultFormats
     implicit val fmts: DefaultFormats.type = DefaultFormats
-    MetaIo.read(spark, s"$path/meta") match {
-      case Some(j) => new SrpEmbedIndex(
-        spark, s"${name}_ebuckets", s"${name}_evectors", path,
-        (j \ "dim").extract[Int], (j \ "bits").extract[Int],
-        (j \ "tables").extract[Int], (j \ "seed").extract[Long],
-        (j \ "buckets").extract[Int], (j \ "threshold").extract[Double])
-      case None => // pre-JSON index
-        val df = spark.read.parquet(s"$path/meta")
-        val m = df.head()
-        // indexes written before meta carried the design threshold default
-        // to the historical 0.95
-        val t = if (df.schema.fieldNames.contains("threshold"))
-          m.getAs[Double]("threshold") else 0.95
-        new SrpEmbedIndex(spark, s"${name}_ebuckets", s"${name}_evectors",
-          path, m.getAs[Int]("dim"), m.getAs[Int]("bits"),
-          m.getAs[Int]("tables"), m.getAs[Long]("seed"),
-          m.getAs[Int]("buckets"), t)
-    }
+    val j = MetaIo.read(spark, s"$path/meta")
+    new SrpEmbedIndex(spark, s"${name}_ebuckets", s"${name}_evectors", path,
+      (j \ "dim").extract[Int], (j \ "bits").extract[Int],
+      (j \ "tables").extract[Int], (j \ "seed").extract[Long],
+      (j \ "buckets").extract[Int], (j \ "threshold").extract[Double])
   }
 
   private[operators] def writeMeta(

@@ -398,14 +398,13 @@ object GraftTable {
       spark: SparkSession, base: String): Option[Long] =
     committedVersions(spark, base).lastOption
 
-  /** Meta is ONE driver-sized record per version: serializing it as a
-    * JSON blob written directly through the FileSystem (plus the
-    * `_SUCCESS` marker [[isCommitted]] gates on) costs zero Spark jobs,
-    * where the previous one-row-parquet form paid a full job per commit
-    * — per-commit latency, the hot axis of every DML/stream lifecycle.
-    * Tables committed before the switch read back through the parquet
-    * fallback in [[readMeta]]; the on-disk contract (meta dir +
-    * `_SUCCESS`, atomic under the publish rename) is unchanged.
+  /** Meta is ONE driver-sized record per version, written as a JSON blob
+    * directly through the FileSystem (plus the `_SUCCESS` marker
+    * [[isCommitted]] gates on): zero Spark jobs per commit, whose
+    * latency is the hot axis of every DML/stream lifecycle. The meta dir
+    * and its marker are atomic under the publish rename. The record is
+    * required: [[readMeta]] fails naming the path when a committed
+    * version has no `meta.json`.
     */
   private def writeMeta(spark: SparkSession, dir: String, m: Meta): Unit = {
     val f = fs(spark, dir)
@@ -462,49 +461,10 @@ object GraftTable {
 
   private[operators] def readMeta(spark: SparkSession, base: String,
       v: Long): Meta = {
-    readSmall(fs(spark, base), new Path(s"$base/v$v/meta/meta.json")) match {
-      case Some(s) => parseMetaJson(s, base)
-      case None => readMetaParquet(spark, base, v) // pre-JSON commits
-    }
-  }
-
-  private def readMetaParquet(spark: SparkSession, base: String,
-      v: Long): Meta = {
-    val df = spark.read.parquet(s"$base/v$v/meta")
-    val r = df.head()
-    def ix(n: String) = r.fieldIndex(n)
-    // `streamed` arrived after the first committed tables: default false
-    // (pre-flag tables were never stream-bootstrapped under the flag's
-    // contract anyway — the shim only widens, never changes, semantics)
-    val streamed = df.schema.fieldNames.contains("streamed") &&
-      r.getBoolean(ix("streamed"))
-    // bloom bits hash what the scheme tag says ([[ZoneMap.BloomScheme]]);
-    // a meta without the tag predates it — unknown hash basis, refused
-    // below iff the table actually carries blooms (min/max pruning is
-    // scheme-independent and keeps working)
-    val scheme =
-      if (df.schema.fieldNames.contains("bloom_scheme"))
-        r.getString(ix("bloom_scheme"))
-      else ""
-    // policy fields that arrived after the first committed tables read
-    // back with their pre-field defaults (feed on; no time retention) —
-    // the shim only widens, never changes, committed semantics
-    val changeFeed = !df.schema.fieldNames.contains("change_feed") ||
-      r.getBoolean(ix("change_feed"))
-    val keepHours =
-      if (df.schema.fieldNames.contains("keep_hours"))
-        r.getDouble(ix("keep_hours"))
-      else -1.0
-    val m = Meta(r.getSeq[String](ix("zone_cols")),
-      r.getSeq[String](ix("bloom_cols")),
-      r.getLong(ix("bloom_items")), r.getDouble(ix("bloom_fpp")),
-      r.getSeq[String](ix("type_cols"))
-        .zip(r.getSeq[String](ix("type_ddls"))).toMap,
-      r.getSeq[String](ix("layout_cols")), r.getLong(ix("applied_hwm")),
-      r.getString(ix("schema_ddl")), r.getInt(ix("keep_versions")), streamed,
-      scheme, changeFeed, keepHours)
-    requireBloomScheme(m, base)
-    m
+    val p = new Path(s"$base/v$v/meta/meta.json")
+    parseMetaJson(readSmall(fs(spark, base), p)
+      .getOrElse(sys.error(s"graft table $base has no metadata record at $p")),
+      base)
   }
 
   /** The new generation's data files as (path, on-disk bytes) — the
@@ -2358,15 +2318,17 @@ final class GraftTable private[operators] (spark: SparkSession,
   /** The commit log over the RETAINED versions — (version, operation,
     * files), metadata-only (one marker read + one manifest count per
     * version; versions older than the retention window were pruned with
-    * their markers). Legacy versions committed before the marker
-    * existed report `"write"`.
+    * their markers). Every publish writes the `_op` marker; a version
+    * without one fails naming the path.
     */
   def history(): DataFrame = {
     val f = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     import spark.implicits._
     versions().map { v =>
-      val op = readSmall(f, new Path(s"$path/v$v/_op")).getOrElse("write")
+      val p = new Path(s"$path/v$v/_op")
+      val op = readSmall(f, p).getOrElse(
+        sys.error(s"graft table $path has no operation marker at $p"))
       (v, op, storedFiles(v).size)
     }.toDF("version", "operation", "files")
   }

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * per-(query, cluster) probe relation already enforces, each probe
   * scoring against a LUT built from ITS cluster's query residual — and
   * a coarse-quantizer retrain now invalidates the codes. The flag lives
-  * in the index meta (meta wins; `open` never guesses the variant).
+  * in the index meta (`open` reads it, never guesses the variant).
   *
   * Maintenance mirrors the component indexes: counted-idempotent
   * [[IvfPqIndex.append]], anti-join [[IvfPqIndex.delete]] /
@@ -116,32 +116,20 @@ object IvfPq extends CacheLedger {
   private def readVariant(spark: SparkSession, path: String): Boolean = {
     import org.json4s.DefaultFormats
     implicit val fmts: DefaultFormats.type = DefaultFormats
-    MetaIo.read(spark, s"$path/variant") match {
-      case Some(j) => (j \ "residual").extract[Boolean]
-      case None =>
-        val p = new org.apache.hadoop.fs.Path(s"$path/variant/_SUCCESS")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // absent = raw: indexes written before the variant entered the
-        // meta ARE raw-coded, so the default reads them correctly
-        fs.exists(p) && // pre-JSON index
-          spark.read.parquet(s"$path/variant").head().getBoolean(0)
-    }
+    (MetaIo.read(spark, s"$path/variant") \ "residual").extract[Boolean]
   }
 
   /** Re-open a saved index: both quantizers load to the driver (always
     * model-sized), codes resolve lazily through the catalog with a
-    * relation-cache refresh per access. The bucket count comes from the
-    * persisted meta — META WINS over the argument (a wrong count would
-    * make append throw and compact/delete silently re-bucket); the
-    * argument stays only as the legacy fallback.
+    * relation-cache refresh per access. The bucket count loads from the
+    * required codebook record (a guessed count would make append throw
+    * and compact/delete silently re-bucket).
     */
-  def open(spark: SparkSession, name: String, path: String,
-      buckets: Int = 16): IvfPqIndex = {
+  def open(spark: SparkSession, name: String, path: String): IvfPqIndex = {
     val cents = Similarity.IvfIndex.readCentroids(spark, path)
     require(cents.nonEmpty, s"no centroids at $path/centroids")
-    val (cb, stored) = Pq.readCodebook(spark, path)
-    new IvfPqIndex(spark, cents, cb,
-      s"${name}_ivfpq", path, stored.getOrElse(buckets),
+    val (cb, buckets) = Pq.readCodebook(spark, path)
+    new IvfPqIndex(spark, cents, cb, s"${name}_ivfpq", path, buckets,
       readVariant(spark, path))
   }
 
@@ -152,7 +140,7 @@ object IvfPq extends CacheLedger {
       val codesTable: String,
       val path: String,
       val buckets: Int,
-      val residual: Boolean = false) {
+      val residual: Boolean) {
 
     /** The stored (vid, cluster, codes) relation, catalog-fresh. */
     def codes: DataFrame = {

@@ -71,24 +71,15 @@ object MaterializedAgg {
     new MatAgg(spark, path, gc, vc)
   }
 
-  /** (group cols, value cols, applied high-water mark) of version `v` —
-    * JSON (driver read), parquet fallback for pre-JSON versions.
-    */
+  /** (group cols, value cols, applied high-water mark) of version `v`. */
   private[operators] def readMeta(spark: SparkSession, path: String,
       v: Long): (Seq[String], Seq[String], Long) = {
     import org.json4s.DefaultFormats
     implicit val fmts: DefaultFormats.type = DefaultFormats
-    MetaIo.read(spark, s"$path/v$v/meta") match {
-      case Some(j) => ((j \ "group_cols").extract[Seq[String]],
-        (j \ "val_cols").extract[Seq[String]],
-        (j \ "applied_hwm").extract[Long])
-      case None => // pre-JSON version
-        val rows = spark.read.parquet(s"$path/v$v/meta").collect()
-        require(rows.length == 1,
-          s"corrupt meta under $path/v$v: ${rows.length} rows")
-        val m = rows(0)
-        (m.getSeq[String](0), m.getSeq[String](1), m.getLong(2))
-    }
+    val j = MetaIo.read(spark, s"$path/v$v/meta")
+    ((j \ "group_cols").extract[Seq[String]],
+      (j \ "val_cols").extract[Seq[String]],
+      (j \ "applied_hwm").extract[Long])
   }
 
   /** One map-side-combined hash aggregate over a frame — the monoid's

@@ -6,20 +6,17 @@ import org.json4s.JValue
 import org.json4s.jackson.JsonMethods
 
 /** Driver-written JSON metadata for the persistent-index family — the
-  * [[GraftTable]] meta discipline generalized: every index persisted a
-  * ONE-ROW parquet "meta" (geometry, drift baselines, model weights'
-  * shape), which cost a full Spark job to write at every build/save and
-  * another (schema inference + head) at every open — pure per-query
-  * fixed cost, since the payload is a handful of driver-sized scalars.
-  * Writing the record as `meta.json` through the FileSystem (plus the
-  * `_SUCCESS` marker the family's committed-iff-marker checks gate on)
-  * costs zero Spark jobs on both sides.
+  * [[GraftTable]] meta discipline generalized. Each record (geometry,
+  * drift baselines, model weights' shape) is a handful of driver-sized
+  * scalars, so it is written as `meta.json` through the FileSystem (plus
+  * the `_SUCCESS` marker the family's committed-iff-marker checks gate
+  * on): zero Spark jobs at build/save and at open.
   *
-  * Layout compatibility: the JSON lands INSIDE the same directory the
-  * parquet row used (`<dir>/meta.json` + `<dir>/_SUCCESS`), so every
-  * existing "meta exists ⇒ committed" directory check keeps working;
-  * readers fall back to the parquet form when `meta.json` is absent
-  * (indexes written before the switch).
+  * Layout: the JSON lands INSIDE the record's directory
+  * (`<dir>/meta.json` + `<dir>/_SUCCESS`), so every "meta exists ⇒
+  * committed" directory check gates on the marker. The record is
+  * required: a reader that finds no `meta.json` fails naming the path
+  * instead of guessing a default.
   */
 private[operators] object MetaIo {
 
@@ -55,18 +52,12 @@ private[operators] object MetaIo {
     writeFile(f, new Path(d, "_SUCCESS"), "")
   }
 
-  /** The committed JSON record under `dir`, or None when absent (caller
-    * falls back to the legacy parquet read, or to its pre-meta default).
+  /** The committed JSON record under `dir`; fails naming the path when
+    * the record is absent.
     */
-  def read(spark: SparkSession, dir: String): Option[JValue] =
-    readFile(fs(spark, dir), new Path(dir, "meta.json"))
-      .map(s => JsonMethods.parse(s))
-
-  /** Does the meta directory exist at all (either format)? The family's
-    * existence checks predate the JSON form and keep their semantics.
-    */
-  def exists(spark: SparkSession, dir: String): Boolean =
-    fs(spark, dir).exists(new Path(dir))
+  def read(spark: SparkSession, dir: String): JValue =
+    JsonMethods.parse(readFile(fs(spark, dir), new Path(dir, "meta.json"))
+      .getOrElse(sys.error(s"no metadata record at $dir/meta.json")))
 
   /** JSON-safe double: NaN has no JSON literal (a codebook's drift
     * baseline can legitimately be NaN before it is measured) — encode it

@@ -228,19 +228,13 @@ object PhraseIndex {
     idx
   }
 
-  /** Re-open — no data work; meta wins over the argument (the
-    * [[DedupIndex.open]] rule).
+  /** Re-open — no data work; the bucket count loads from the required
+    * `meta` record (the [[DedupIndex.open]] rule).
     */
-  def open(spark: SparkSession, name: String, path: String,
-      buckets: Int = 32): PhraseIndex = {
+  def open(spark: SparkSession, name: String, path: String): PhraseIndex = {
     import org.json4s.DefaultFormats
     implicit val fmts: DefaultFormats.type = DefaultFormats
-    val b = MetaIo.read(spark, s"$path/meta") match {
-      case Some(j) => (j \ "buckets").extract[Int]
-      case None if MetaIo.exists(spark, s"$path/meta") => // pre-JSON index
-        spark.read.parquet(s"$path/meta").head().getAs[Int]("buckets")
-      case None => buckets
-    }
-    new PhraseIndex(spark, s"${name}_postings", s"${name}_docs", path, b)
+    new PhraseIndex(spark, s"${name}_postings", s"${name}_docs", path,
+      (MetaIo.read(spark, s"$path/meta") \ "buckets").extract[Int])
   }
 }

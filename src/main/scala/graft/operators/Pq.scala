@@ -332,8 +332,8 @@ object Pq {
 
   /** Codebook persistence shared by [[saveIndex]]/[[openIndex]] and the
     * IVF-PQ composite — meta (shape + drift baseline + the index's
-    * bucket count, so open() never guesses storage geometry: a wrong
-    * caller-supplied count would make append throw on the spec mismatch
+    * bucket count, so open() never guesses storage geometry: a guessed
+    * count would make append throw on the spec mismatch
     * and compact/delete silently RE-BUCKET the codes table) and
     * per-subspace centroids, both driver-sized.
     */
@@ -353,60 +353,30 @@ object Pq {
         ("cents" -> cb.cents.toSeq.map(_.toSeq.map(_.toSeq))))
   }
 
-  /** @return the codebook plus the persisted bucket count (None only for
-    *         indexes written before buckets entered the meta)
-    */
+  /** @return the codebook plus the persisted bucket count */
   private[operators] def readCodebook(
-      spark: SparkSession, path: String): (Codebook, Option[Int]) = {
+      spark: SparkSession, path: String): (Codebook, Int) = {
     import org.json4s.DefaultFormats
     implicit val fmts: DefaultFormats.type = DefaultFormats
-    MetaIo.read(spark, s"$path/codebook/meta") match {
-      case Some(j) =>
-        val cents = (j \ "cents").extract[Seq[Seq[Seq[Double]]]]
-          .map(_.map(_.toArray).toArray).toArray
-        (new Codebook((j \ "m").extract[Int], (j \ "k").extract[Int],
-          (j \ "dsub").extract[Int], cents,
-          MetaIo.doubleOf(j \ "train_mse"),
-          (j \ "mse_sample_size").extract[Int],
-          (j \ "mse_seed").extract[Long]),
-          Some((j \ "buckets").extract[Int]))
-      case None => readCodebookParquet(spark, path) // pre-JSON index
-    }
+    val j = MetaIo.read(spark, s"$path/codebook/meta")
+    val cents = (j \ "cents").extract[Seq[Seq[Seq[Double]]]]
+      .map(_.map(_.toArray).toArray).toArray
+    (new Codebook((j \ "m").extract[Int], (j \ "k").extract[Int],
+      (j \ "dsub").extract[Int], cents,
+      MetaIo.doubleOf(j \ "train_mse"),
+      (j \ "mse_sample_size").extract[Int],
+      (j \ "mse_seed").extract[Long]),
+      (j \ "buckets").extract[Int])
   }
 
-  private def readCodebookParquet(
-      spark: SparkSession, path: String): (Codebook, Option[Int]) = {
-    val df = spark.read.parquet(s"$path/codebook/meta")
-    val meta = df.head()
-    val (m, k, dsub) = (meta.getAs[Int]("m"), meta.getAs[Int]("k"),
-      meta.getAs[Int]("dsub"))
-    val cents = Array.ofDim[Array[Double]](m, k)
-    spark.read.parquet(s"$path/codebook/cents").collect().foreach { r =>
-      cents(r.getAs[Int]("sub"))(r.getAs[Int]("code")) =
-        r.getSeq[Double](2).toArray
-    }
-    require(cents.forall(_.forall(_ != null)),
-      s"codebook at $path/codebook is missing (sub, code) entries")
-    val buckets = if (df.schema.fieldNames.contains("buckets"))
-      Some(meta.getAs[Int]("buckets")) else None
-    // sampling params default for codebooks written before they entered
-    // the meta — those defaults ARE what such codebooks measured under
-    val (ss, sd) =
-      if (df.schema.fieldNames.contains("mse_sample_size"))
-        (meta.getAs[Int]("mse_sample_size"), meta.getAs[Long]("mse_seed"))
-      else (10000, 42L)
-    (new Codebook(m, k, dsub, cents, meta.getAs[Double]("train_mse"),
-      ss, sd), buckets)
-  }
-
-  /** Persist an index: codebook as two driver-sized parquets (meta +
-    * per-subspace centroids, trainMse included — the drift baseline
-    * travels with the quantizer it describes) and the encoded corpus as
-    * a BUCKETED codes table. Encoding runs ONCE, here — [[openIndex]]
-    * never re-encodes (the PQ analogue of the other indexes' pay-once
-    * contract, and the point of PQ at scale: a 64-dim float corpus rests
-    * at m bytes/vector, 32× smaller, and every later search scans codes,
-    * not vectors).
+  /** Persist an index: codebook as one driver-written JSON record
+    * (shape + per-subspace centroids, trainMse included — the drift
+    * baseline travels with the quantizer it describes) and the encoded
+    * corpus as a BUCKETED codes table. Encoding runs ONCE, here —
+    * [[openIndex]] never re-encodes (the PQ analogue of the other
+    * indexes' pay-once contract, and the point of PQ at scale: a 64-dim
+    * float corpus rests at m bytes/vector, 32× smaller, and every later
+    * search scans codes, not vectors).
     */
   def saveIndex(
       emb: DataFrame, idCol: String, vecCol: String, cb: Codebook,
@@ -423,15 +393,12 @@ object Pq {
     * doubles — always model-sized), codes resolve lazily through the
     * catalog with a relation-cache refresh per access (appends from any
     * session must be visible — same contract as the other indexes). The
-    * bucket count comes from the persisted meta — META WINS over the
-    * argument (same rule as `DedupIndex.open`), which stays only as the
-    * fallback for indexes written before buckets entered the meta.
+    * bucket count loads from the required codebook record (same rule as
+    * `DedupIndex.open`).
     */
-  def openIndex(
-      spark: SparkSession, name: String, path: String,
-      buckets: Int = 32): PqIndex = {
-    val (cb, stored) = readCodebook(spark, path)
-    new PqIndex(spark, cb, s"${name}_pqcodes", path, stored.getOrElse(buckets))
+  def openIndex(spark: SparkSession, name: String, path: String): PqIndex = {
+    val (cb, buckets) = readCodebook(spark, path)
+    new PqIndex(spark, cb, s"${name}_pqcodes", path, buckets)
   }
 
   /** Persistent PQ index: the stored-codes face of [[adcTopK]]. Search

@@ -202,20 +202,14 @@ object QualityModel {
   def open(spark: SparkSession, path: String): Model = {
     import org.json4s.DefaultFormats
     implicit val fmts: DefaultFormats.type = DefaultFormats
-    val (dims, bias, seed) = MetaIo.read(spark, s"$path/meta") match {
-      case Some(j) => ((j \ "dims").extract[Int],
-        (j \ "bias").extract[Double], (j \ "seed").extract[Long])
-      case None => // pre-JSON model
-        val meta = spark.read.parquet(s"$path/meta").collect()
-        require(meta.length == 1,
-          s"corrupt model meta at $path: ${meta.length} rows")
-        (meta(0).getInt(0), meta(0).getDouble(1), meta(0).getLong(2))
-    }
+    val j = MetaIo.read(spark, s"$path/meta")
+    val dims = (j \ "dims").extract[Int]
     val w = new Array[Double](dims)
     spark.read.parquet(s"$path/weights").collect().foreach { r =>
       w(r.getInt(0)) = r.getDouble(1)
     }
-    new Model(dims, bias, w, seed)
+    new Model(dims, (j \ "bias").extract[Double], w,
+      (j \ "seed").extract[Long])
   }
 
   // ─────────────────── drift observability + refit ───────────────────

@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   * path, the [[EmbedIndex]] rebuild contract.
   *
   * The screen threshold is BUILD geometry (prefix lengths depend on it)
-  * and lives in meta — meta wins over `open` arguments, the family rule,
-  * so a mismatched open cannot probe under prefixes cut for a different
+  * and lives in meta — `open` takes no geometry arguments, the family
+  * rule, so an open cannot probe under prefixes cut for a different
   * threshold.
   *
   * Probe cost: batch-shaped tokenize + one bucketed-side join per stage —
@@ -253,11 +253,7 @@ object ScreenIndex {
   private def readBuiltDocs(spark: SparkSession, path: String): Long = {
     import org.json4s.DefaultFormats
     implicit val fmts: DefaultFormats.type = DefaultFormats
-    MetaIo.read(spark, s"$path/meta") match {
-      case Some(j) => (j \ "built_docs").extract[Long]
-      case None => // pre-JSON index
-        spark.read.parquet(s"$path/meta").head().getAs[Long]("built_docs")
-    }
+    (MetaIo.read(spark, s"$path/meta") \ "built_docs").extract[Long]
   }
 
   /** Materialize the benchmark's screen state at `path`: one tokenize
@@ -293,33 +289,18 @@ object ScreenIndex {
     idx
   }
 
-  /** Re-open — no data work; stored geometry WINS over every argument
-    * (the [[DedupIndex.open]] rule: probing under the wrong threshold or
-    * shingle width would silently use prefixes cut for another screen).
+  /** Re-open — no data work; the geometry loads from the required
+    * `meta` record (the [[DedupIndex.open]] rule: probing under another
+    * threshold or shingle width would silently use prefixes cut for
+    * another screen).
     */
-  def open(spark: SparkSession, name: String, path: String,
-      shingleN: Int = 3, threshold: Double = 0.8,
-      buckets: Int = 8): ScreenIndex = {
+  def open(spark: SparkSession, name: String, path: String): ScreenIndex = {
     val (setsT, prefT, dfT) = tables(name)
     import org.json4s.DefaultFormats
     implicit val fmts: DefaultFormats.type = DefaultFormats
-    val fromJson = MetaIo.read(spark, s"$path/meta").map { j =>
-      new ScreenIndex(spark, setsT, prefT, dfT, path,
-        (j \ "buckets").extract[Int], (j \ "shingle_n").extract[Int],
-        (j \ "t_num").extract[Long], (j \ "t_den").extract[Long])
-    }
-    val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fromJson.isDefined) fromJson.get
-    else if (fs.exists(metaPath)) { // pre-JSON index
-      val m = spark.read.parquet(s"$path/meta").head()
-      new ScreenIndex(spark, setsT, prefT, dfT, path,
-        m.getAs[Int]("buckets"), m.getAs[Int]("shingle_n"),
-        m.getAs[Long]("t_num"), m.getAs[Long]("t_den"))
-    } else {
-      val (tNum, tDen) = Dedup.thresholdFraction(threshold)
-      new ScreenIndex(spark, setsT, prefT, dfT, path, buckets,
-        shingleN, tNum, tDen)
-    }
+    val j = MetaIo.read(spark, s"$path/meta")
+    new ScreenIndex(spark, setsT, prefT, dfT, path,
+      (j \ "buckets").extract[Int], (j \ "shingle_n").extract[Int],
+      (j \ "t_num").extract[Long], (j \ "t_den").extract[Long])
   }
 }

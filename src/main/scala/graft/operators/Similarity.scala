@@ -292,10 +292,7 @@ object Similarity extends CacheLedger {
       require(tolerance > 0, s"tolerance must be positive: $tolerance")
       val ref = requireTable("needsRetrain")
       val spark = baseAssigned.sparkSession
-      val st = IvfIndex.readStats(spark, ref.path).getOrElse(
-        throw new IllegalStateException(
-          s"no drift baseline at ${ref.path}/stats — the index predates " +
-            "drift tracking; retrain(toPath) (or re-save) establishes one"))
+      val st = IvfIndex.readStats(spark, ref.path)
       quantError(st.sampleSize, st.seed) > st.mqe * tolerance
     }
 
@@ -357,6 +354,7 @@ object Similarity extends CacheLedger {
         s"newBuckets must be positive, or 0 to keep the current count: $newBuckets")
       val b = if (newBuckets > 0) newBuckets else ref.buckets
       val spark = baseAssigned.sparkSession
+      val st = IvfIndex.readStats(spark, ref.path)
       // model-sized copy, driver-side (no Spark job): delete/compact move
       // data, never the quantizer
       IvfIndex.writeCentroids(spark, toPath,
@@ -372,8 +370,7 @@ object Similarity extends CacheLedger {
       // the drift BASELINE travels with the quantizer it describes —
       // delete/compact move data, never the centroids (after the assigned
       // write: writeStats re-counts the corpus at toPath)
-      IvfIndex.readStats(spark, ref.path).foreach(st =>
-        IvfIndex.writeStats(spark, toPath, st.mqe, st.sampleSize, st.seed))
+      IvfIndex.writeStats(spark, toPath, st.mqe, st.sampleSize, st.seed)
       new IvfIndex(centroids, spark.table(ref.table),
         Some(ref.copy(path = toPath, buckets = b)))
     }
@@ -613,35 +610,23 @@ object Similarity extends CacheLedger {
           ("seed" -> seed))
     }
 
-    /** None ONLY for a genuinely absent stats dir (index saved before
-      * drift tracking) — explicit existence check, never a broad catch: a
-      * corrupt stats record must fail needsRetrain loudly, not silently
-      * disable drift observation.
+    /** The required drift baseline — an absent or corrupt stats record
+      * fails needsRetrain loudly instead of silently disabling drift
+      * observation.
       */
     private[operators] def readStats(
-        spark: SparkSession, path: String): Option[Stats] = {
+        spark: SparkSession, path: String): Stats = {
       import org.json4s.DefaultFormats
       implicit val fmts: DefaultFormats.type = DefaultFormats
-      MetaIo.read(spark, s"$path/stats") match {
-        case Some(j) => Some(Stats((j \ "mqe").extract[Double],
-          (j \ "n").extract[Long], (j \ "sample_size").extract[Int],
-          (j \ "seed").extract[Long]))
-        case None =>
-          val p = new org.apache.hadoop.fs.Path(s"$path/stats")
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(p)) None // genuinely pre-drift-tracking
-          else { // pre-JSON index
-            val r = spark.read.parquet(s"$path/stats").head()
-            Some(Stats(r.getAs[Double]("mqe"), r.getAs[Long]("n"),
-              r.getAs[Int]("sample_size"), r.getAs[Long]("seed")))
-          }
-      }
+      val j = MetaIo.read(spark, s"$path/stats")
+      Stats((j \ "mqe").extract[Double], (j \ "n").extract[Long],
+        (j \ "sample_size").extract[Int], (j \ "seed").extract[Long])
     }
 
     /** Storage geometry persisted beside the centroids, so [[open]] never
-      * guesses the bucket count (META WINS over the argument — a wrong
-      * caller-supplied count would make append throw on the bucket-spec
-      * mismatch and delete/compact silently RE-BUCKET the assignments).
+      * guesses the bucket count (a wrong count would make append throw
+      * on the bucket-spec mismatch and delete/compact silently RE-BUCKET
+      * the assignments).
       */
     private[operators] def writeIvfMeta(
         spark: SparkSession, path: String, buckets: Int): Unit = {
@@ -649,24 +634,13 @@ object Similarity extends CacheLedger {
       MetaIo.write(spark, s"$path/meta", "buckets" -> buckets)
     }
 
-    /** Caller's-count fallback ONLY for a genuinely absent meta
-      * (pre-meta index) — explicit existence check, never a broad catch:
-      * a corrupt meta must fail the open, not silently hand the next
-      * compact the wrong geometry to cement.
+    /** The required bucket count — an absent or corrupt meta fails the
+      * open instead of handing the next compact a guessed geometry.
       */
-    private[operators] def readIvfMeta(
-        spark: SparkSession, path: String): Option[Int] = {
+    private[operators] def readIvfMeta(spark: SparkSession, path: String): Int = {
       import org.json4s.DefaultFormats
       implicit val fmts: DefaultFormats.type = DefaultFormats
-      MetaIo.read(spark, s"$path/meta") match {
-        case Some(j) => Some((j \ "buckets").extract[Int])
-        case None =>
-          val p = new org.apache.hadoop.fs.Path(s"$path/meta")
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(p)) None // genuinely pre-meta
-          else Some( // pre-JSON index
-            spark.read.parquet(s"$path/meta").head().getAs[Int]("buckets"))
-      }
+      (MetaIo.read(spark, s"$path/meta") \ "buckets").extract[Int]
     }
 
     /** Centroids are MODEL-sized (nClusters × dim doubles) — persisted as
@@ -683,22 +657,13 @@ object Similarity extends CacheLedger {
         "centroids" -> cents.toSeq.map(_.toSeq))
     }
 
-    /** Centroids ascending by cluster id; pre-JSON indexes read the
-      * legacy parquet form.
-      */
+    /** Centroids ascending by cluster id. */
     private[operators] def readCentroids(
         spark: SparkSession, path: String): Array[Array[Double]] = {
       import org.json4s.DefaultFormats
       implicit val fmts: DefaultFormats.type = DefaultFormats
-      MetaIo.read(spark, s"$path/centroids") match {
-        case Some(j) =>
-          (j \ "centroids").extract[Seq[Seq[Double]]].map(_.toArray).toArray
-        case None => // pre-JSON index
-          spark.read.parquet(s"$path/centroids")
-            .collect()
-            .sortBy(_.getInt(0))
-            .map(_.getSeq[Double](1).toArray)
-      }
+      (MetaIo.read(spark, s"$path/centroids") \ "centroids")
+        .extract[Seq[Seq[Double]]].map(_.toArray).toArray
     }
 
     /** Nearest-centroid assignment: broadcast centroids, narrow map —
@@ -721,7 +686,7 @@ object Similarity extends CacheLedger {
       }.toDF("vid", "v", "cluster")
     }
 
-    /** Persist an index: centroids as one tiny parquet (nClusters × dim
+    /** Persist an index: centroids as one JSON record (nClusters × dim
       * doubles — always driver-sized), assignments as parquet BUCKETED on
       * cluster, so [[IvfIndex.search]]'s literal cluster filter prunes
       * the scan to the probed buckets. The assignment pass runs once,
@@ -748,17 +713,14 @@ object Similarity extends CacheLedger {
       * assignment table resolves lazily through the catalog with a
       * relation-cache refresh on every search (appends/compactions from
       * other sessions must be visible — same reasoning as
-      * `DedupIndex.probe`). The bucket count comes from the persisted
-      * meta — META WINS over the argument (same rule as
-      * `DedupIndex.open`); the argument stays only as the fallback for
-      * indexes written before the meta existed.
+      * `DedupIndex.probe`). The bucket count loads from the required
+      * meta (same rule as `DedupIndex.open`).
       */
-    def open(spark: SparkSession, name: String, path: String,
-        buckets: Int = 16): IvfIndex = {
+    def open(spark: SparkSession, name: String, path: String): IvfIndex = {
       val cents = readCentroids(spark, path)
       require(cents.nonEmpty, s"no centroids at $path/centroids")
+      val b = readIvfMeta(spark, path)
       spark.catalog.refreshTable(s"${name}_ivf")
-      val b = readIvfMeta(spark, path).getOrElse(buckets)
       new IvfIndex(cents, spark.table(s"${name}_ivf"),
         Some(TableRef(s"${name}_ivf", b, path)))
     }

@@ -46,8 +46,8 @@ import org.apache.spark.sql.types.{DataType, StringType}
   *
   * On-disk layout is the family's versioned-meta discipline
   * ([[ScreenIndex]], [[MaterializedAgg]]): `indexPath/zones` holds the
-  * zone rows, `indexPath/meta` a single geometry row — indexed columns,
-  * bloom columns, bloom sizing, and the indexed columns' data types —
+  * zone rows, `indexPath/meta` a single JSON geometry record — indexed
+  * columns, bloom columns, bloom sizing, and the indexed columns' types —
   * written LAST, so its `_SUCCESS` marker commits the index. Geometry
   * therefore lives in exactly one place: [[append]] and [[ingestStream]]
   * take no sizing parameters at all (meta wins), which makes the
@@ -222,7 +222,7 @@ object ZoneMap {
     * string cast of timestamps (the bug the UTC pin fixed), so their
     * bloom bits silently false-negative when probed under a different
     * zone — the one failure a pruning index must never have. A bloomed
-    * index whose meta carries a different (or no) scheme is refused
+    * index whose meta carries a different scheme is refused
     * loudly with a rebuild instruction instead of probed wrong;
     * min/max-only indexes are scheme-independent and unaffected.
     */
@@ -252,26 +252,15 @@ object ZoneMap {
   private def readMeta(spark: SparkSession, indexPath: String): Meta = {
     import org.json4s.DefaultFormats
     implicit val fmts: DefaultFormats.type = DefaultFormats
-    val m = MetaIo.read(spark, s"$indexPath/meta") match {
-      case Some(j) => Meta(
-        (j \ "cols").extract[Seq[String]],
-        (j \ "bloom_cols").extract[Seq[String]],
-        (j \ "bloom_items").extract[Long],
-        (j \ "bloom_fpp").extract[Double],
-        (j \ "type_cols").extract[Seq[String]]
-          .zip((j \ "type_ddls").extract[Seq[String]]).toMap,
-        (j \ "bloom_scheme").extract[String])
-      case None => // pre-JSON index
-        val df = spark.read.parquet(s"$indexPath/meta")
-        val r = df.head()
-        val scheme =
-          if (df.schema.fieldNames.contains("bloom_scheme"))
-            r.getString(r.fieldIndex("bloom_scheme"))
-          else "" // pre-tag index: unknown hash basis
-        Meta(r.getSeq[String](0), r.getSeq[String](1), r.getLong(2),
-          r.getDouble(3), r.getSeq[String](4).zip(r.getSeq[String](5)).toMap,
-          scheme)
-    }
+    val j = MetaIo.read(spark, s"$indexPath/meta")
+    val m = Meta(
+      (j \ "cols").extract[Seq[String]],
+      (j \ "bloom_cols").extract[Seq[String]],
+      (j \ "bloom_items").extract[Long],
+      (j \ "bloom_fpp").extract[Double],
+      (j \ "type_cols").extract[Seq[String]]
+        .zip((j \ "type_ddls").extract[Seq[String]]).toMap,
+      (j \ "bloom_scheme").extract[String])
     require(m.bloomCols.isEmpty || m.scheme == BloomScheme,
       s"zone-map index at $indexPath has bloom bits under hash scheme " +
         s"'${m.scheme}' but this engine probes '$BloomScheme' — indexes " +

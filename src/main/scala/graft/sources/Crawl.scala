@@ -62,43 +62,9 @@ object Crawl {
     */
   def crawlRaw(
       spark: SparkSession, root: String, schema: StructType,
-      format: String, options: Map[String, String]): DataFrame = {
-    val base = spark.read
-      .option("recursiveFileLookup", "true")
-      .options(options)
-    val df = format match {
-      case "json" =>
-        base.schema(schema.add(CorruptCol, StringType))
-          // One JSON document per file, possibly pretty-printed — the
-          // reference's decode unit (`crawler.go:53-54`).
-          .option("multiLine", "true")
-          .option("mode", "PERMISSIVE")
-          .option("columnNameOfCorruptRecord", CorruptCol)
-          .json(root)
-      case "csv" =>
-        base.schema(schema.add(CorruptCol, StringType))
-          .option("mode", "PERMISSIVE")
-          .option("columnNameOfCorruptRecord", CorruptCol)
-          .csv(root)
-      case "parquet" | "orc" =>
-        base.schema(schema).format(format).load(root)
-          .withColumn(CorruptCol, lit(null).cast(StringType))
-      case "text" =>
-        textColumn(schema)
-        base.option("wholetext", "true").text(root)
-          .select(col("value").as(schema.fieldNames.head))
-          .withColumn(CorruptCol, lit(null).cast(StringType))
-      case "binaryFile" =>
-        return base.format("binaryFile").load(root)
-          .select(col("path"), col("length"), col("content"))
-          .withColumn(CorruptCol, lit(null).cast(StringType))
-          .withColumn("source_file", col("path"))
-      case other =>
-        throw new IllegalArgumentException(
-          s"unsupported crawl format '$other' (json, csv, parquet, orc, text, binaryFile)")
-    }
-    df.withColumn("source_file", input_file_name())
-  }
+      format: String, options: Map[String, String]): DataFrame =
+    readFiles(spark, Seq(root), schema, format,
+      Map("recursiveFileLookup" -> "true") ++ options)
 
   /** `text`-format crawls read whole files into one string column. */
   private def textColumn(schema: StructType): String = {
@@ -238,6 +204,8 @@ object Crawl {
     val df = format match {
       case "json" =>
         base.schema(schema.add(CorruptCol, StringType))
+          // One JSON document per file, possibly pretty-printed — the
+          // reference's decode unit (`crawler.go:53-54`).
           .option("multiLine", "true")
           .option("mode", "PERMISSIVE")
           .option("columnNameOfCorruptRecord", CorruptCol)

@@ -103,9 +103,10 @@ class Bm25IndexSpec extends SparkSpec {
     val c = idx.compact(tmp("bm25e2"), newBuckets = 8)
     assert(c.buckets == 8)
     assert(rows(c.search(terms, 15)) == before)
-    // meta carries the evolved count: an open with a WRONG argument gets 8
-    val reopened = Bm25Index.open(spark, "bm25_t5", c.path, buckets = 2)
-    assert(reopened.buckets == 8, "meta must win over the open argument")
+    // meta carries the evolved count: a reopen reads 8
+    assert(hasJsonMeta(s"${c.path}/meta"))
+    val reopened = Bm25Index.open(spark, "bm25_t5", c.path)
+    assert(reopened.buckets == 8, "open must read the count from meta")
     assert(rows(reopened.search(terms, 15)) == before)
   }
 

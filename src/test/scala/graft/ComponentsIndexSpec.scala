@@ -37,10 +37,11 @@ class ComponentsIndexSpec extends SparkSpec {
     val base = Files.createTempDirectory("comp_idx").toString
     val idx = ComponentsIndex.build(w1, base, "cidx_a", buckets = 4)
     assert(resolved(idx) == want(w1))
-    // storage geometry is in meta — a wrong caller-supplied bucket count
-    // cannot re-bucket the index (meta wins, the DedupIndex.open rule)
-    assert(ComponentsIndex.open(spark, "cidx_a", base, buckets = 3).buckets == 4,
-      "open must take the bucket count from meta, not the argument")
+    // storage geometry is in meta — open reads the stored bucket count
+    // (the DedupIndex.open rule)
+    assert(hasJsonMeta(s"$base/meta"))
+    assert(ComponentsIndex.open(spark, "cidx_a", base).buckets == 4,
+      "open must take the bucket count from meta")
     idx.update(w2)
     assert(resolved(idx) == want(w1.unionByName(w2)))
     val rowsAfterW2 = idx.assignedDocs()
@@ -127,29 +128,6 @@ class ComponentsIndexSpec extends SparkSpec {
     val w3 = Seq((11L, 40L)).toDF("i", "j")
     idx.update(w3)
     assert(resolved(idx) == want(w1.unionByName(w2).unionByName(w3)))
-  }
-
-  test("pre-versioning layout (single in-place remap dir) still opens and upgrades") {
-    import spark.implicits._
-    import org.apache.hadoop.fs.Path
-    val w1 = Seq((1L, 2L), (10L, 11L)).toDF("i", "j")
-    val w2 = Seq((2L, 10L)).toDF("i", "j")
-    val base = Files.createTempDirectory("comp_legacy").toString
-    val idx = ComponentsIndex.build(w1, base, "cidx_l", buckets = 4)
-    idx.update(w2)
-    val good = resolved(idx)
-    // demote the live versioned remap to the r8 on-disk layout
-    val cur = CompIndex.currentRemapDir(spark, base).get
-    val fs = new Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new Path(cur), new Path(s"$base/remap")))
-    assert(resolved(idx) == good, "legacy single-dir remap must still resolve")
-    // the next update publishes version 1 and prunes the legacy dir
-    idx.update(Seq((11L, 40L)).toDF("i", "j"))
-    assert(resolved(idx) ==
-      want(w1.unionByName(w2).unionByName(Seq((11L, 40L)).toDF("i", "j"))))
-    assert(!fs.exists(new Path(s"$base/remap")),
-      "publication must prune the superseded legacy dir")
   }
 
   test("end-to-end continuous dedup: doc stream → pair stream → component labels") {

@@ -95,10 +95,10 @@ class DedupIndexSpec extends SparkSpec {
     val idx = DedupIndex.build(corpus, "doc_id", "text", base, "mhidx_m",
       shingleN = 3, numHashes = 64, bands = 16, buckets = 8)
     val want = idx.probe(batch, "doc_id", "text").orderBy("i", "j").collect().toSeq
-    // an open with NO geometry args (the defaults disagree on every knob)
-    // must still read the stored 64/16/8 from meta — probing with the
-    // argument defaults would hash a different LSH geometry than the
-    // stored buckets and silently emit garbage
+    // open takes no geometry: it must read the stored 64/16/8 from meta
+    // (the build defaults disagree on every knob) — probing with another
+    // LSH geometry than the stored buckets would silently emit garbage
+    assert(hasJsonMeta(s"$base/meta"))
     val reopened = DedupIndex.open(spark, "mhidx_m", base)
     assert(reopened.numHashes == 64 && reopened.bands == 16 && reopened.buckets == 8,
       s"meta must win: got ${reopened.numHashes}/${reopened.bands}/${reopened.buckets}")
@@ -109,12 +109,61 @@ class DedupIndexSpec extends SparkSpec {
     val reopened2 = DedupIndex.open(spark, "mhidx_m", s"$base-v2")
     assert(reopened2.numHashes == 64 && reopened2.bands == 16,
       "compact must carry meta to the new path")
-    // legacy path without meta: arguments still apply (the ScaleProbe
-    // open-by-args contract)
-    val legacy = DedupIndex.open(spark, "mhidx_m", s"$base-nometa",
-      shingleN = 3, numHashes = 64, bands = 16, buckets = 8)
-    assert(legacy.numHashes == 64 && legacy.bands == 16)
     Dedup.releaseCaches()
+  }
+
+  test("open without a metadata record fails naming the path, for every family") {
+    import spark.implicits._
+    // a directory holding no meta: every family's open must refuse it
+    // loudly instead of guessing a geometry
+    val opens: Seq[(String, String => Any)] = Seq(
+      "DedupIndex" -> (p => DedupIndex.open(spark, "nometa_mh", p)),
+      "Bm25Index" -> (p => Bm25Index.open(spark, "nometa_bm", p)),
+      "PhraseIndex" -> (p => PhraseIndex.open(spark, "nometa_ph", p)),
+      "ScreenIndex" -> (p => ScreenIndex.open(spark, "nometa_scr", p)),
+      "ComponentsIndex" -> (p => ComponentsIndex.open(spark, "nometa_c", p)),
+      "EmbedIndex" -> (p => EmbedIndex.open(spark, "nometa_e", p)),
+      "IvfIndex" -> (p => Similarity.IvfIndex.open(spark, "nometa_ivf", p)),
+      "IvfPq" -> (p => IvfPq.open(spark, "nometa_ivfpq", p)),
+      "Pq" -> (p => Pq.openIndex(spark, "nometa_pq", p)),
+      "Dsir" -> (p => Dsir.open(spark, p)),
+      "QualityModel" -> (p => QualityModel.open(spark, p)),
+      "MaterializedAgg" -> (p => MaterializedAgg.open(spark, p)),
+      "GraftTable" -> (p => GraftTable.open(spark, p)))
+    opens.foreach { case (family, open) =>
+      val dir = Files.createTempDirectory(s"nometa_$family").toString
+      val e = intercept[Exception](open(dir))
+      assert(e.getMessage.contains(dir),
+        s"$family must name the path it could not open: ${e.getMessage}")
+    }
+    // a committed version whose meta.json is gone: the versioned families
+    // and the zone map fail on the missing record, naming it
+    val rows = (0L until 20L).map(i => (i, i * 0.5)).toDF("k", "v")
+    def dropMetaJson(metaDir: String): String = {
+      val f = new java.io.File(metaDir, "meta.json")
+      assert(f.delete(), s"test setup: no meta.json under $metaDir")
+      f.getPath
+    }
+    val tbl = Files.createTempDirectory("nometa_table").toString
+    val t = GraftTable.create(rows, tbl, zoneCols = Seq("k"))
+    val tblMeta = dropMetaJson(s"$tbl/v${t.version}/meta")
+    val agg = Files.createTempDirectory("nometa_agg").toString
+    MaterializedAgg.build(rows, Seq("k"), Seq("v"), agg)
+    val aggMeta = dropMetaJson(s"$agg/v1/meta")
+    val data = Files.createTempDirectory("nometa_zdata").toString
+    rows.coalesce(2).write.mode("overwrite").parquet(data)
+    val zm = Files.createTempDirectory("nometa_zm").toString
+    ZoneMap.build(spark, data, Seq("k"), zm)
+    val zmMeta = dropMetaJson(s"$zm/meta")
+    Seq[(String, () => Any)](
+      tblMeta -> (() => GraftTable.open(spark, tbl).read()),
+      aggMeta -> (() => MaterializedAgg.open(spark, agg)),
+      zmMeta -> (() => ZoneMap.prunedFiles(spark, data, zm,
+        Seq(ZoneMap.Point("k", 3L))))).foreach { case (missing, open) =>
+      val e = intercept[Exception](open())
+      assert(e.getMessage.contains(missing),
+        s"the failure must name $missing: ${e.getMessage}")
+    }
   }
 
   test("compact can re-bucket: geometry evolves, meta records it, probes unchanged") {

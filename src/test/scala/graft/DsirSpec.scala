@@ -114,6 +114,7 @@ class DsirSpec extends SparkSpec {
     val w = Dsir.fit(target, raw, "text")
     val dir = java.nio.file.Files.createTempDirectory("dsir").toString
     Dsir.save(spark, w, dir)
+    assert(hasJsonMeta(s"$dir/meta"))
     val r = Dsir.open(spark, dir)
     assert(r.dims == w.dims && r.seed == w.seed && r.alpha == w.alpha)
     assert(java.util.Arrays.equals(r.logRatio, w.logRatio))

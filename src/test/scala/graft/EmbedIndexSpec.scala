@@ -85,6 +85,7 @@ class EmbedIndexSpec extends SparkSpec {
     assert((0L until 5L).forall(v => got.contains((v + 10000L, v + 20000L))),
       s"pairs through the appended batch missing: $got")
     // geometry survives a cold re-open (meta, not caller memory)
+    assert(hasJsonMeta(s"$base/v1/meta"))
     val reopened = EmbedIndex.open(spark, "eidx_b", s"$base/v1")
     assert(reopened.bits == idx.bits && reopened.tables == idx.tables)
     // drift check: at fixture size the frozen width is still the derived

@@ -29,6 +29,7 @@ class GraftTableSpec extends SparkSpec {
     val t = GraftTable.create(rows(0, 800), p, zoneCols = Seq("k", "v"),
       nFiles = 8)
     assert(t.version == 1 && t.files().size == 8)
+    assert(hasJsonMeta(s"$p/v1/meta"))
 
     t.append(rows(800, 1000))
     assert(t.version == 2)
@@ -736,18 +737,16 @@ class GraftTableSpec extends SparkSpec {
     val t = GraftTable.create(rows(0, 200).repartition(4), p,
       zoneCols = Seq("v"), bloomCols = Seq("k"), bloomItems = 1000L)
     assert(t.scanFileCount(Seq(ZoneMap.Point("k", 7L))) <= 4)
-    // simulate a PRE-TAG table: hand-write the legacy one-row-parquet
-    // meta shape without bloom_scheme (a genuinely old table also has no
-    // meta.json — the overwrite clears it, so readMeta takes the parquet
-    // fallback exactly as it would on a pre-JSON commit)
+    // simulate a table whose blooms hash another basis: hand-write its
+    // JSON meta (meta.json + _SUCCESS) carrying the pre-UTC-pin
+    // session-string scheme tag in place of the engine's own
     val metaDir = s"$p/v${t.version}/meta"
-    val ddl = t.read().schema.toDDL
-    Seq((Seq("v"), Seq("k"), 1000L, 0.03, Seq("k", "v"),
-        Seq("BIGINT", "DOUBLE"), Seq.empty[String], -1L, ddl, 1, false))
-      .toDF("zone_cols", "bloom_cols", "bloom_items", "bloom_fpp",
-        "type_cols", "type_ddls", "layout_cols", "applied_hwm",
-        "schema_ddl", "keep_versions", "streamed")
-      .coalesce(1).write.mode("overwrite").parquet(metaDir)
+    val json = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(metaDir, "meta.json")), "UTF-8")
+    assert(json.contains(ZoneMap.BloomScheme))
+    writeText(s"$metaDir/meta.json",
+      json.replace(ZoneMap.BloomScheme, "xxhash64(session-string),seed=42"))
+    writeText(s"$metaDir/_SUCCESS", "")
     val e = intercept[IllegalArgumentException] {
       GraftTable.open(spark, p).scan(Seq(ZoneMap.Point("k", 7L)))
     }

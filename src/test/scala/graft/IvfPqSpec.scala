@@ -51,14 +51,16 @@ class IvfPqSpec extends SparkSpec {
     val plan = one.queryExecution.executedPlan.toString
     assert(plan.contains("SelectedBucketsCount: 1 out of 8"),
       s"probe scan must prune to the probed bucket, got:\n$plan")
-    // meta wins over a WRONG caller-supplied bucket count (open never
-    // guesses storage geometry)
-    val wrong = IvfPq.open(spark, "ivfpq_t", s"$base/v1", buckets = 3)
-    val w1 = wrong.search(Map(0L -> qs(0L)), k = 5, nprobe = 1)
+    // a reopen reads the stored bucket count (open never guesses
+    // storage geometry)
+    Seq("variant", "centroids", "codebook/meta").foreach(d =>
+      assert(hasJsonMeta(s"$base/v1/$d"), s"$d must be a JSON record"))
+    val opened = IvfPq.open(spark, "ivfpq_t", s"$base/v1")
+    val w1 = opened.search(Map(0L -> qs(0L)), k = 5, nprobe = 1)
     w1.count()
     assert(w1.queryExecution.executedPlan.toString
       .contains("SelectedBucketsCount: 1 out of 8"),
-      "open must take the bucket count from meta, not the argument")
+      "open must take the bucket count from meta")
     // nprobe=1, four queries from four separated clusters: every neighbor
     // shares its query's cluster — cluster candidates never leak across
     // queries even though all four buckets are in the pruned scan
@@ -83,7 +85,7 @@ class IvfPqSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("ivfpq_m").toString
     IvfPq.build(oldPart, "vec_id", "embedding", "ivfpq_m", s"$base/v1",
       nClusters = 8, m = 4, kCodes = 8, buckets = 8)
-    val idx = IvfPq.open(spark, "ivfpq_m", s"$base/v1", buckets = 8)
+    val idx = IvfPq.open(spark, "ivfpq_m", s"$base/v1")
     val qids = Seq(1L, 2L, 3L)
     val qs = qvecs(df, qids)
     // the codebook here is trained on oldPart — the flat reference must
@@ -126,7 +128,7 @@ class IvfPqSpec extends SparkSpec {
     one.count()
     assert(one.queryExecution.executedPlan.toString
       .contains("out of 16"), "pruned scan must reflect the evolved bucket count")
-    assert(IvfPq.open(spark, "ivfpq_m", s"$base/v4", buckets = 3).buckets == 16,
+    assert(IvfPq.open(spark, "ivfpq_m", s"$base/v4").buckets == 16,
       "open must read the evolved count from meta")
   }
 
@@ -235,7 +237,7 @@ class IvfPqSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("ivfpq_s").toString
     IvfPq.build(oldPart, "vec_id", "embedding", "ivfpq_s", s"$base/v1",
       nClusters = 8, m = 4, kCodes = 8, buckets = 8)
-    val idx = IvfPq.open(spark, "ivfpq_s", s"$base/v1", buckets = 8)
+    val idx = IvfPq.open(spark, "ivfpq_s", s"$base/v1")
     Seq(col("vec_id") < 200, col("vec_id") >= 200).foreach { p =>
       newPart.filter(p).coalesce(1).write.mode("append").parquet(s"$base/in")
     }

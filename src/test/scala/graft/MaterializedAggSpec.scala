@@ -61,6 +61,7 @@ class MaterializedAggSpec extends SparkSpec {
     val m = MaterializedAgg.build(docs.filter(col("doc_id") < 250),
       Seq("lang", "source"), Seq("n_chars"), dir)
     m.update(docs.filter(col("doc_id") >= 250), 0L)
+    assert(hasJsonMeta(s"$dir/v2/meta"))
     val before = canon(m.read())
     // simulate a crash mid-publish: v3 state written (wrong content), meta
     // absent — the version must not resolve

@@ -107,12 +107,13 @@ class PhraseIndexSpec extends SparkSpec {
       .orderBy("doc_id").as[(Long, Int)].collect().toSeq ==
       (20L until 40L).filter(_ % 4 == 0).map((_, 1)).toSeq)
 
-    // compact with re-bucketing preserves every result; meta wins on open
+    // compact with re-bucketing preserves every result; open reads meta
     val compacted = afterDel.compact(s"$path/v3", newBuckets = 2)
     assert(compacted.phrase(Seq("hit", "me", "now")).count() ==
       afterDel.phrase(Seq("hit", "me", "now")).count())
-    val reopened = PhraseIndex.open(spark, "pidx_f", s"$path/v3", buckets = 99)
-    assert(reopened.buckets == 2, "meta must win over the open argument")
+    assert(hasJsonMeta(s"$path/v3/meta"))
+    val reopened = PhraseIndex.open(spark, "pidx_f", s"$path/v3")
+    assert(reopened.buckets == 2, "open must read the count from meta")
     assert(reopened.near("hit", "now", 2).count() == 5)
   }
 

@@ -80,14 +80,14 @@ class PqSpec extends SparkSpec {
       rows(Pq.adcTopK(oldPart, "vec_id", "embedding", cb, qids, 5)))
     // cold reopen: codebook roundtrips (shape, baseline, centroids) and
     // searches identically
-    val reopened = Pq.openIndex(spark, "pqidx_t", s"$base/v1", buckets = 8)
+    assert(hasJsonMeta(s"$base/v1/codebook/meta"))
+    val reopened = Pq.openIndex(spark, "pqidx_t", s"$base/v1")
     assert(reopened.cb.m == cb.m && reopened.cb.k == cb.k &&
       reopened.cb.dsub == cb.dsub && reopened.cb.trainMse == cb.trainMse)
-    // meta wins over a WRONG caller-supplied bucket count — a mistaken
-    // open can neither break append (spec mismatch) nor silently
-    // re-bucket the codes on the next compact
-    assert(Pq.openIndex(spark, "pqidx_t", s"$base/v1", buckets = 3).buckets == 8,
-      "openIndex must take the bucket count from meta, not the argument")
+    // the bucket count comes from meta — open can neither break append
+    // (spec mismatch) nor silently re-bucket the codes on the next compact
+    assert(reopened.buckets == 8,
+      "openIndex must take the bucket count from meta")
     assert(rows(reopened.search(qs, k = 5)) == rows(idx.search(qs, k = 5)))
     // append the held-out fifth: counted, idempotent, and the search
     // equals in-memory ADC over the whole corpus
@@ -115,7 +115,7 @@ class PqSpec extends SparkSpec {
       "re-bucketing must not add or drop rows")
     assert(rows(rb.search(qs, k = 5)) == preRb,
       "re-bucketing must not change search results")
-    assert(Pq.openIndex(spark, "pqidx_t", s"$base/v4", buckets = 3).buckets == 16,
+    assert(Pq.openIndex(spark, "pqidx_t", s"$base/v4").buckets == 16,
       "a later open must read the evolved count from meta")
   }
 

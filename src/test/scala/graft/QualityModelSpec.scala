@@ -56,6 +56,7 @@ class QualityModelSpec extends SparkSpec {
     val m = QualityModel.train(docs, "doc_id", "text", "label")
     val dir = java.nio.file.Files.createTempDirectory("graft_qm").toString
     QualityModel.save(spark, m, dir)
+    assert(hasJsonMeta(s"$dir/meta"))
     val re = QualityModel.open(spark, dir)
     assert(re.dims == m.dims && re.bias == m.bias && re.seed == m.seed)
     assert(java.util.Arrays.equals(re.weights, m.weights))

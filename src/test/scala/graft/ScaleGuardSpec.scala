@@ -114,7 +114,7 @@ class ScaleGuardSpec extends SparkSpec {
         nClusters = 8)
       val dir = java.nio.file.Files.createTempDirectory(s"ivf_guard_$n").toString
       Similarity.IvfIndex.save(idx, s"ivf_guard_$n", dir, buckets = 8)
-      val opened = Similarity.IvfIndex.open(spark, s"ivf_guard_$n", dir, buckets = 8)
+      val opened = Similarity.IvfIndex.open(spark, s"ivf_guard_$n", dir)
       val qv = emb.select(transform(col("embedding"), x => x.cast("double")))
         .head().getSeq[Double](0).toArray
       val res = opened.search(Map(0L -> qv), k = 3, nprobe = 2)
@@ -142,8 +142,7 @@ class ScaleGuardSpec extends SparkSpec {
       val dir = java.nio.file.Files.createTempDirectory(s"ivfpq_guard_$n").toString
       graft.operators.IvfPq.build(emb, "vec_id", "embedding",
         s"ivfpq_guard_$n", dir, nClusters = 8, m = 4, kCodes = 8, buckets = 8)
-      val opened = graft.operators.IvfPq.open(spark, s"ivfpq_guard_$n", dir,
-        buckets = 8)
+      val opened = graft.operators.IvfPq.open(spark, s"ivfpq_guard_$n", dir)
       val qv = emb.select(transform(col("embedding"), x => x.cast("double")))
         .head().getSeq[Double](0).toArray
       val res = opened.search(Map(0L -> qv), k = 3, nprobe = 2)

@@ -112,11 +112,11 @@ class ScreenIndexSpec extends SparkSpec {
     val compacted = after.compact(s"$base/v3", newBuckets = 2)
     assert(pairs(compacted.probe(corpus, "doc_id", "text")) ==
       before.filterNot(_._2 == victim))
-    // meta wins: a sloppy open with wrong geometry probes correctly
-    val reopened = ScreenIndex.open(spark, "scr_e", s"$base/v3",
-      shingleN = 7, threshold = 0.35, buckets = 99)
+    // open reads the stored geometry and probes correctly
+    assert(hasJsonMeta(s"$base/v3/meta"))
+    val reopened = ScreenIndex.open(spark, "scr_e", s"$base/v3")
     assert(reopened.buckets == 2 && reopened.shingleN == 3 &&
-      reopened.threshold == 0.8, "stored geometry must win over arguments")
+      reopened.threshold == 0.8, "open must read the stored geometry")
     Dedup.releaseCaches()
   }
 

@@ -77,15 +77,10 @@ class SimilaritySpec extends SparkSpec {
     assert(rows(reopened.search(emb.filter(col("vec_id") < 3),
         "vec_id", "embedding", k = 3, nprobe = 8)) ==
       rows(reopened.search(qs, k = 3, nprobe = 8)))
-    // storage geometry comes from the persisted meta — a WRONG
-    // caller-supplied bucket count cannot re-bucket the index (meta wins,
-    // the DedupIndex.open rule): the probe still prunes out of 8
-    val wrong = Similarity.IvfIndex.open(spark, "ivfidx_t", base, buckets = 3)
-    val w1 = wrong.search(Map(0L -> qs(0L)), k = 3, nprobe = 1)
-    w1.count()
-    assert(w1.queryExecution.executedPlan.toString
-      .contains("SelectedBucketsCount: 1 out of 8"),
-      "open must take the bucket count from meta, not the argument")
+    // storage geometry, drift baseline and quantizer are JSON records
+    // (the reopen above pruned out of the stored 8 buckets)
+    Seq("meta", "stats", "centroids").foreach(d =>
+      assert(hasJsonMeta(s"$base/$d"), s"$d must be a JSON record"))
   }
 
   test("IVF append grows a saved index: results identical to a rebuild, pruning intact") {
@@ -96,7 +91,7 @@ class SimilaritySpec extends SparkSpec {
     val idx = Similarity.IvfIndex.build(spark, oldPart, "vec_id", "embedding", nClusters = 8)
     val base = java.nio.file.Files.createTempDirectory("ivf_append").toString
     Similarity.IvfIndex.save(idx, "ivfidx_app", base, buckets = 8)
-    val opened = Similarity.IvfIndex.open(spark, "ivfidx_app", base, buckets = 8)
+    val opened = Similarity.IvfIndex.open(spark, "ivfidx_app", base)
     val nOld = opened.assigned.count()
     opened.append(newPart, "vec_id", "embedding")
     assert(opened.assigned.count() == nOld + newPart.count(),
@@ -138,7 +133,7 @@ class SimilaritySpec extends SparkSpec {
     val idx = Similarity.IvfIndex.build(spark, emb, "vec_id", "embedding", nClusters = 8)
     val base = java.nio.file.Files.createTempDirectory("ivf_maint").toString
     Similarity.IvfIndex.save(idx, "ivfidx_mnt", s"$base/v1", buckets = 8)
-    val opened = Similarity.IvfIndex.open(spark, "ivfidx_mnt", s"$base/v1", buckets = 8)
+    val opened = Similarity.IvfIndex.open(spark, "ivfidx_mnt", s"$base/v1")
     val qids = Seq(0L, 1L, 2L)
     val qs = emb.filter(col("vec_id").isin(qids: _*))
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")))
@@ -157,7 +152,7 @@ class SimilaritySpec extends SparkSpec {
     assert(got == want)
     assert(deleted.assigned.count() == emb.count() - 1)
     // compact after appends: file count shrinks, searches byte-identical
-    val grown = Similarity.IvfIndex.open(spark, "ivfidx_mnt", s"$base/v2", buckets = 8)
+    val grown = Similarity.IvfIndex.open(spark, "ivfidx_mnt", s"$base/v2")
     grown.append(emb.filter(col("vec_id") === victim), "vec_id", "embedding")
     def parquetFiles(dir: String): Int = {
       val d = new java.io.File(dir)
@@ -173,13 +168,12 @@ class SimilaritySpec extends SparkSpec {
     assert(compacted.assigned.count() == emb.count())
     // re-bucketing compaction: results captured BEFORE the compact
     // re-points the shared table; evolved count reaches the pruned scan
-    // and a later open (meta wins over a wrong argument)
+    // and a later open (read from meta)
     val preRb = rows(compacted.search(qs, k = 3, nprobe = 8))
     val rb = compacted.compact(s"$base/v4", newBuckets = 16)
     assert(rows(rb.search(qs, k = 3, nprobe = 8)) == preRb,
       "re-bucketing must not change search results")
-    val reop = Similarity.IvfIndex.open(spark, "ivfidx_mnt", s"$base/v4",
-      buckets = 3)
+    val reop = Similarity.IvfIndex.open(spark, "ivfidx_mnt", s"$base/v4")
     val one16 = reop.search(Map(qids.head -> qs(qids.head)), k = 3, nprobe = 1)
     one16.count()
     assert(one16.queryExecution.executedPlan.toString.contains("out of 16"),
@@ -191,7 +185,7 @@ class SimilaritySpec extends SparkSpec {
     val idx = Similarity.IvfIndex.build(spark, emb, "vec_id", "embedding", nClusters = 8)
     val base = java.nio.file.Files.createTempDirectory("ivf_drift").toString
     Similarity.IvfIndex.save(idx, "ivfidx_drift", s"$base/v1", buckets = 8)
-    val opened = Similarity.IvfIndex.open(spark, "ivfidx_drift", s"$base/v1", buckets = 8)
+    val opened = Similarity.IvfIndex.open(spark, "ivfidx_drift", s"$base/v1")
     // freshly saved: the current error IS the baseline — no retrain wanted
     assert(!opened.needsRetrain(),
       "a just-saved index must not want a retrain")

@@ -36,6 +36,7 @@ class ZoneMapSpec extends SparkSpec {
     val (data, idx) = mkDirs()
     writeFixture(data)
     assert(ZoneMap.build(spark, data, Seq("k", "v", "nv"), idx) == 8)
+    assert(hasJsonMeta(s"$idx/meta"))
 
     val preds = Seq(ZoneMap.Range("k", 100L, 240L))
     val files = ZoneMap.prunedFiles(spark, data, idx, preds).get
@@ -282,21 +283,19 @@ class ZoneMapSpec extends SparkSpec {
 
   test("bloom hash-scheme tag: pre-UTC-pin indexes are refused, not probed wrong") {
     // an index written before the UTC cast pin hashed SESSION-zone
-    // timestamp strings — its meta has no scheme tag, and probing its
-    // bits can silently false-negative. Simulate one by rewriting a
-    // fresh index's meta WITHOUT the tag column: any read must refuse
-    // with a rebuild instruction. Min/max-only indexes stay readable.
-    // a pre-tag index wrote its meta as a ONE-ROW PARQUET without the
-    // bloom_scheme column — construct that legacy layout explicitly (the
-    // current writer emits JSON; the parquet fallback is exactly what a
-    // pre-tag index exercises)
-    import spark.implicits._
+    // timestamp strings, and probing its bits can silently false-negative.
+    // Simulate one by hand-writing a fresh index's JSON meta (meta.json +
+    // _SUCCESS) under that foreign scheme tag: any read must refuse with
+    // a rebuild instruction. Min/max-only indexes stay readable.
     def writeLegacyMeta(idx: String, bloomCols: Seq[String],
-        items: Long, fpp: Double): Unit =
-      Seq((Seq("k"), bloomCols, items, fpp, Seq("k"), Seq("BIGINT")))
-        .toDF("cols", "bloom_cols", "bloom_items", "bloom_fpp",
-          "type_cols", "type_ddls")
-        .coalesce(1).write.mode("overwrite").parquet(s"$idx/meta")
+        items: Long, fpp: Double): Unit = {
+      val bloom = bloomCols.map(c => "\"" + c + "\"").mkString(",")
+      writeText(s"$idx/meta/meta.json",
+        s"""{"cols":["k"],"bloom_cols":[$bloom],""" +
+          s""""bloom_items":$items,"bloom_fpp":$fpp,"type_cols":["k"],""" +
+          """"type_ddls":["BIGINT"],"bloom_scheme":"xxhash64(session-string),seed=42"}""")
+      writeText(s"$idx/meta/_SUCCESS", "")
+    }
     val (data, idx) = mkDirs()
     writeFixture(data)
     ZoneMap.build(spark, data, Seq("k"), idx, bloomCols = Seq("k"),
