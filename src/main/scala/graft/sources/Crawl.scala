@@ -1,7 +1,16 @@
 package graft.sources
 
 import graft.functions.MonoidAggregator
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.text.TextFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
@@ -11,9 +20,11 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *
   * Reference stages → Spark realization:
   *  - BFS directory listing (O1/O5, `pool.go:168-196` + `crawler.go:113-155`)
-  *    → `recursiveFileLookup=true`; Spark's `InMemoryFileIndex` lists
-  *    directories in parallel on the driver/cluster, so the per-level
-  *    barrier of the reference is subsumed (and beaten) by built-in listing.
+  *    → [[Crawl.listWithErrors]]: one level per barrier, directories of a
+  *    level listed concurrently on a driver pool, each file's access probe
+  *    on the same pool. [[Crawl.collect]] scans exactly the statuses that
+  *    walk returned, so the tree is listed once per crawl. [[Crawl.crawlRaw]]
+  *    leaves the walk to Spark's own `recursiveFileLookup` listing.
   *  - per-file JSON decode (O6, `crawler.go:158-201`) → the JSON datasource
   *    in PERMISSIVE mode; one JSON document per file, user-supplied schema.
   *  - partial fold + final combine (O3+O4) → [[MonoidAggregator]] running as
@@ -27,10 +38,14 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *  - cooperative cancellation (O10) → Spark job groups
   *    ([[Crawl.cancellable]] / [[Crawl.cancel]]).
   *
-  * Scale note: file *listing* is driver-parallelized and the decode is one
-  * Spark task per file-split, so a 100 TB tree of JSON documents scans with
-  * full cluster parallelism; `spark.sql.files.maxPartitionBytes` controls
-  * split size exactly where the reference exposed `FileWorkers`.
+  * Scale note: the tree is listed once, on the driver, and never again by
+  * Spark — a file list handed to a plain read is re-listed by a Spark job
+  * once it names more than `spark.sql.sources.parallelPartitionDiscovery.threshold`
+  * paths, which on an object store is a second full metadata sweep. The
+  * decode is one Spark task per file-split, so a 100 TB tree of JSON
+  * documents scans with full cluster parallelism;
+  * `spark.sql.files.maxPartitionBytes` controls split size exactly where
+  * the reference exposed `FileWorkers`.
   *
   * Pluggable filesystems (the reference's `FileSystem` interface,
   * `internal/fs/filesystem.go:19-41`): `root` is any Hadoop-compatible URI
@@ -40,6 +55,65 @@ import org.apache.spark.sql.types.{StringType, StructType}
 object Crawl {
 
   private val CorruptCol = "_corrupt_record"
+  private val BadFile = "_bad_file"
+
+  /** How one file format decodes into the crawl's row shape: the schema
+    * columns, then `_corrupt_record` (null on a clean record), then
+    * `source_file`. `options` override the caller's; `dataSchema` is what
+    * the reader decodes for a crawl schema, and `rows` maps the reader's
+    * rows to the schema columns plus `_corrupt_record`.
+    */
+  private final case class Format(
+      name: String,
+      format: () => FileFormat,
+      options: Map[String, String],
+      dataSchema: StructType => StructType,
+      rows: (DataFrame, StructType) => DataFrame,
+      source: Column)
+
+  private val Permissive = Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> CorruptCol)
+  private def withCorrupt(schema: StructType): StructType = schema.add(CorruptCol, StringType)
+  private def cleanRows(df: DataFrame): DataFrame =
+    df.withColumn(CorruptCol, lit(null).cast(StringType))
+
+  /** Every format a crawl reads. Text-based formats (`json`, `csv`) decode
+    * PERMISSIVE with per-record corrupt accounting, the reference's
+    * zero-on-decode-failure contract (`crawler.go:179,196`); columnar
+    * formats (`parquet`, `orc`) validate structurally at the footer, so a
+    * readable file has no per-record corruption and the corrupt column is
+    * constant null. `text` reads each file whole into the schema's single
+    * string column; `binaryFile` yields (path, length, content) rows and
+    * ignores the schema.
+    */
+  private val Formats: Seq[Format] = Seq(
+    // One JSON document per file, possibly pretty-printed — the
+    // reference's decode unit (`crawler.go:53-54`).
+    Format("json", () => new JsonFileFormat, Permissive + ("multiLine" -> "true"),
+      withCorrupt, (df, _) => df, input_file_name()),
+    Format("csv", () => new CSVFileFormat, Permissive,
+      withCorrupt, (df, _) => df, input_file_name()),
+    Format("parquet", () => new ParquetFileFormat, Map.empty,
+      identity, (df, _) => cleanRows(df), input_file_name()),
+    Format("orc", () => new OrcFileFormat, Map.empty,
+      identity, (df, _) => cleanRows(df), input_file_name()),
+    Format("text", () => new TextFileFormat, Map("wholetext" -> "true"),
+      s => { textColumn(s); new StructType().add("value", StringType) },
+      (df, s) => cleanRows(df.select(col("value").as(s.fieldNames.head))),
+      input_file_name()),
+    Format("binaryFile", () => new BinaryFileFormat, Map.empty,
+      _ => BinaryFileFormat.schema,
+      (df, _) => cleanRows(df.select(col("path"), col("length"), col("content"))),
+      col("path")))
+
+  private def formatOf(name: String): Format =
+    Formats.find(_.name == name).getOrElse(throw new IllegalArgumentException(
+      s"unsupported crawl format '$name' (${Formats.map(_.name).mkString(", ")})"))
+
+  /** The caller's options with the format's own laid over them, keys
+    * compared case-insensitively as Spark's readers do.
+    */
+  private def readerOptions(f: Format, options: Map[String, String]): Map[String, String] =
+    CaseInsensitiveMap(options) ++ f.options
 
   /** Raw crawl: one row per JSON document under `root` (recursive), with
     * `source_file` and `_corrupt_record` bookkeeping columns appended.
@@ -47,24 +121,24 @@ object Crawl {
   def crawlRaw(spark: SparkSession, root: String, schema: StructType): DataFrame =
     crawlRaw(spark, root, schema, "json", Map.empty)
 
-  /** Format-generic recursive crawl. Text-based formats (`json`, `csv`)
-    * decode PERMISSIVE with per-record corrupt accounting, the reference's
-    * zero-on-decode-failure contract (`crawler.go:179,196`); columnar
-    * formats (`parquet`, `orc`) validate structurally at the footer, so a
-    * readable file has no per-record corruption and the corrupt column is
-    * constant null. Two ingestion formats serve LLM-pipeline crawls:
-    * `text` reads each file whole into the schema's single string column
-    * (raw-corpus ingestion), and `binaryFile` yields (path, length,
-    * content) rows for opaque media payloads — `schema` is ignored for
-    * binaryFile, whose source schema is fixed; pair it with
-    * [[graft.operators.Multimodal.fromBinaryFiles]]. Extra `options` pass
-    * through to the reader (csv delimiter, header, pathGlobFilter, …).
+  /** Format-generic recursive crawl over any format of the crawl's format
+    * table: `json`, `csv`, `parquet`, `orc`, `text` (each file whole in the
+    * schema's single string column, raw-corpus ingestion) and `binaryFile`
+    * ((path, length, content) rows for opaque media payloads; `schema` is
+    * ignored — pair it with [[graft.operators.Multimodal.fromBinaryFiles]]).
+    * Extra `options` pass through to the reader (csv delimiter, header,
+    * pathGlobFilter, …).
     */
   def crawlRaw(
       spark: SparkSession, root: String, schema: StructType,
-      format: String, options: Map[String, String]): DataFrame =
-    readFiles(spark, Seq(root), schema, format,
-      Map("recursiveFileLookup" -> "true") ++ options)
+      format: String, options: Map[String, String]): DataFrame = {
+    val f = formatOf(format)
+    val raw = spark.read.format(f.name)
+      .options(readerOptions(f, Map("recursiveFileLookup" -> "true") ++ options))
+      .schema(f.dataSchema(schema))
+      .load(root)
+    f.rows(raw, schema).withColumn("source_file", f.source)
+  }
 
   /** `text`-format crawls read whole files into one string column. */
   private def textColumn(schema: StructType): String = {
@@ -73,11 +147,16 @@ object Crawl {
     schema.fieldNames.head
   }
 
+  /** The reference's zero-value substitution: null schema fields become
+    * their type's zero; bookkeeping columns are left as they are.
+    */
+  private def zeroFilled(raw: DataFrame, schema: StructType): DataFrame = {
+    val fields = schema.fieldNames.toSeq
+    raw.na.fill(0L, fields).na.fill(0.0, fields).na.fill("", fields).na.fill(false, fields)
+  }
+
   private def typedFrom[T: Encoder](raw: DataFrame, schema: StructType): Dataset[T] =
-    raw
-      .na.fill(0).na.fill(0.0).na.fill("").na.fill(false)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-      .as[T]
+    zeroFilled(raw, schema).select(schema.fieldNames.map(col).toIndexedSeq: _*).as[T]
 
   /** Typed crawl with the reference's zero-value substitution for corrupt
     * files (`crawler.go:179,196`): numeric/boolean fields null out on decode
@@ -122,7 +201,12 @@ object Crawl {
     * the reference exposes as `Configuration.SearchWorkers`
     * (`crawler.go:17-21`). Listing runs on the driver, the same place
     * Spark's own file index lists; one level per barrier, directories
-    * within a level listed concurrently.
+    * within a level listed concurrently. The access probes run on the same
+    * pool, queued as each directory's entries arrive and overlapping the
+    * next level's listing: a probe is not free — without native Hadoop IO
+    * the local filesystem loads a file's permissions by running a shell
+    * command — so a serial probe loop would cost one such round trip per
+    * file on the calling thread.
     *
     * Scale note: a mid-stream read failure on a file that passed the probe
     * is NOT zero-substituted — Spark retries the task and then fails the
@@ -133,16 +217,35 @@ object Crawl {
   def listWithErrors(
       spark: SparkSession, root: String, parallelism: Int = 8,
       accessProbe: Boolean = true): Listing = {
-    import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+    val (files, errors) = listStatuses(spark, root, parallelism, accessProbe)
+    Listing(files.map(_.getPath.toString), errors)
+  }
+
+  /** [[listWithErrors]] keeping each readable file's `FileStatus`. */
+  private def listStatuses(
+      spark: SparkSession, root: String, parallelism: Int,
+      accessProbe: Boolean): (Seq[FileStatus], Seq[IoError]) = {
+    import java.util.concurrent.{Callable, CompletableFuture, Future}
     import org.apache.hadoop.fs.permission.FsAction
     import scala.jdk.CollectionConverters._
     val rootPath = new HPath(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism.max(1))
-    val files = Seq.newBuilder[String]
+    val probes = Seq.newBuilder[Future[Either[IoError, FileStatus]]]
     val errors = Seq.newBuilder[IoError]
     def msg(e: Throwable): String =
       Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
+    // One metadata call per file; on object stores where access() is
+    // advisory (S3A always succeeds) pass accessProbe=false to skip the
+    // round-trips — open failures then surface as task retries instead of
+    // pre-flight IoErrors.
+    def probe(st: FileStatus): Future[Either[IoError, FileStatus]] =
+      if (!accessProbe) CompletableFuture.completedFuture[Either[IoError, FileStatus]](Right(st))
+      else pool.submit(new Callable[Either[IoError, FileStatus]] {
+        def call() =
+          try { fs.access(st.getPath, FsAction.READ); Right(st) }
+          catch { case e: Exception => Left(IoError("open", st.getPath.toString, msg(e))) }
+      })
     // Symlink-cycle guard: track each directory's *resolved* identity (real
     // path on filesystems that support symlinks, identity elsewhere) and
     // never expand one twice — a `dir -> ancestor` symlink loop would
@@ -164,7 +267,7 @@ object Crawl {
       while (frontier.nonEmpty) {
         frontier = frontier.filter(d => visited.add(realId(d)))
         val tasks = frontier.map { dir =>
-          new java.util.concurrent.Callable[(HPath, Either[Throwable, Array[FileStatus]])] {
+          new Callable[(HPath, Either[Throwable, Array[FileStatus]])] {
             def call() = (dir,
               try Right(fs.listStatus(dir))
               catch { case e: Exception => Left(e) })
@@ -176,68 +279,47 @@ object Crawl {
             errors += IoError("list", dir.toString, msg(e))
           case (_, Right(statuses)) => statuses.foreach { st =>
             if (st.isDirectory) next += st.getPath
-            else if (!accessProbe) files += st.getPath.toString
-            else {
-              // One metadata RPC per file; on object stores where access()
-              // is advisory (S3A always succeeds) pass accessProbe=false to
-              // skip the round-trips — open failures then surface as task
-              // retries instead of pre-flight IoErrors.
-              try { fs.access(st.getPath, FsAction.READ); files += st.getPath.toString }
-              catch { case e: Exception =>
-                errors += IoError("open", st.getPath.toString, msg(e)) }
-            }
+            else probes += probe(st)
           }
         }
         frontier = next.result()
       }
+      val (bad, files) = probes.result().map(_.get()).partitionMap(identity)
+      (files, errors.result() ++ bad)
     } finally pool.shutdown()
-    Listing(files.result(), errors.result())
   }
 
-  /** Same PERMISSIVE decode as [[crawlRaw]] but over an explicit file list
-    * (the readable survivors of [[listWithErrors]]).
+  /** The crawl rows of exactly `files`, already listed: Spark neither
+    * globs, re-checks nor re-lists them, because the file index is seeded
+    * with a status cache that answers each listed path with its own status.
     */
-  private def readFiles(
-      spark: SparkSession, files: Seq[String], schema: StructType,
+  private def scanListed(
+      spark: SparkSession, files: Seq[FileStatus], schema: StructType,
       format: String, options: Map[String, String]): DataFrame = {
-    val base = spark.read.options(options)
-    val df = format match {
-      case "json" =>
-        base.schema(schema.add(CorruptCol, StringType))
-          // One JSON document per file, possibly pretty-printed — the
-          // reference's decode unit (`crawler.go:53-54`).
-          .option("multiLine", "true")
-          .option("mode", "PERMISSIVE")
-          .option("columnNameOfCorruptRecord", CorruptCol)
-          .json(files: _*)
-      case "csv" =>
-        base.schema(schema.add(CorruptCol, StringType))
-          .option("mode", "PERMISSIVE")
-          .option("columnNameOfCorruptRecord", CorruptCol)
-          .csv(files: _*)
-      case "parquet" | "orc" =>
-        base.schema(schema).format(format).load(files: _*)
-          .withColumn(CorruptCol, lit(null).cast(StringType))
-      case "text" =>
-        textColumn(schema)
-        base.option("wholetext", "true").text(files: _*)
-          .select(col("value").as(schema.fieldNames.head))
-          .withColumn(CorruptCol, lit(null).cast(StringType))
-      case "binaryFile" =>
-        return base.format("binaryFile").load(files: _*)
-          .select(col("path"), col("length"), col("content"))
-          .withColumn(CorruptCol, lit(null).cast(StringType))
-          .withColumn("source_file", col("path"))
-      case other =>
-        throw new IllegalArgumentException(
-          s"unsupported crawl format '$other' (json, csv, parquet, orc, text, binaryFile)")
+    val f = formatOf(format)
+    val opts = readerOptions(f, options)
+    val byPath = files.iterator.map(st => st.getPath -> st).toMap
+    val listed = new FileStatusCache {
+      override def getLeafFiles(path: HPath): Option[Array[FileStatus]] =
+        byPath.get(path).map(Array(_))
+      def putLeafFiles(path: HPath, leafFiles: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
     }
-    df.withColumn("source_file", input_file_name())
+    val dataSchema = f.dataSchema(schema)
+    val index = new InMemoryFileIndex(spark, files.map(_.getPath), opts, Some(dataSchema), listed)
+    val relation = HadoopFsRelation(index, index.partitionSchema, dataSchema,
+      bucketSpec = None, f.format(), opts)(spark)
+    f.rows(spark.baseRelationToDataFrame(relation), schema).withColumn("source_file", f.source)
   }
+
+  /** A scan's file name in the listing's form: `input_file_name()` gives
+    * the path's URI, in which reserved characters are %-escaped.
+    */
+  private val listedForm = udf((uri: String) => new HPath(new java.net.URI(uri)).toString)
 
   /** Scope a session conf override to `body` (restores the prior value).
     * File-source split planning consults the session conf at action time,
-    * so overrides applied around the actions in [[collect]] take effect.
+    * so overrides applied around the action in [[collect]] take effect.
     */
   private def withConf[A](spark: SparkSession, key: String, value: Option[String])(body: => A): A =
     value match {
@@ -259,9 +341,13 @@ object Crawl {
     * first error — the reference's error matrix (`crawler_test.go:395-455`,
     * result-plus-error at `crawler.go:253`). `corruptFiles` counts files
     * (not rows) that failed to open or decode; `firstError` is
-    * deterministic — the lexicographically smallest failing path, I/O
-    * errors (discovered during listing, which precedes decode) before
-    * decode errors.
+    * deterministic — the lexicographically smallest failing path as the
+    * listing names it, I/O errors (discovered during listing, which
+    * precedes decode) before decode errors.
+    *
+    * One listing, one pass: the scan reads exactly the files the listing
+    * returned, and the fold, the smallest corrupt file and the count of
+    * corrupt files come out of a single aggregate over it.
     *
     * Per-crawl DOP knobs — the `Configuration{SearchWorkers, FileWorkers,
     * AccumulatorWorkers}` analogue (`crawler.go:17-21`):
@@ -285,64 +371,41 @@ object Crawl {
       options: Map[String, String] = Map.empty,
       listingParallelism: Int = 8,
       maxPartitionBytes: Option[Long] = None): CrawlResult[R] = {
-    val listing = listWithErrors(spark, root, listingParallelism)
-    val openFailures = listing.errors.count(_.op == "open")
-    val firstIo = listing.errors.sortBy(_.path).headOption
+    val (files, errors) = listStatuses(spark, root, listingParallelism, accessProbe = true)
+    val openFailures = errors.count(_.op == "open")
+    val firstIo = errors.sortBy(_.path).headOption
       .map(e => s"failed to ${e.op}: ${e.path} (${e.error})")
-    if (listing.files.isEmpty)
+    if (files.isEmpty)
       return CrawlResult(agg.zeroValue, openFailures.toLong, firstIo)
     withConf(spark, "spark.sql.files.maxPartitionBytes", maxPartitionBytes.map(_.toString)) {
-      // Cache the parsed relation: Spark refuses plans that reference only
-      // the corrupt-record column of a raw JSON scan, and caching also makes
-      // the error pass free of a second file read.
-      val raw = readFiles(spark, listing.files, schema, format, options).cache()
-      try {
-        val result = typedFrom[T](raw, schema).select(agg.column).head()
-        val corrupt = raw
-          .filter(col(CorruptCol).isNotNull)
-          .select(min(col("source_file")).as("first"),
-            countDistinct(col("source_file")).as("n"))
-          .head()
-        val n = corrupt.getLong(1)
-        val firstDecode =
-          if (n > 0) Some(s"failed to decode: ${corrupt.getString(0)}") else None
-        CrawlResult(result, n + openFailures, firstIo.orElse(firstDecode))
-      } finally raw.unpersist()
+      val rows = scanListed(spark, files, schema, format, options)
+        .withColumn(BadFile, when(col(CorruptCol).isNotNull, listedForm(col("source_file"))))
+      val typed = zeroFilled(rows, schema)
+        .select(schema.fieldNames.map(col).toIndexedSeq :+ col(BadFile): _*).as[T]
+      val (result, firstBad, nBad) = typed.select(agg.column,
+        min(col(BadFile)).as(Encoders.STRING),
+        count_distinct(col(BadFile)).as(Encoders.scalaLong)).head()
+      val firstDecode = Option(firstBad).map(f => s"failed to decode: $f")
+      CrawlResult(result, nBad + openFailures, firstIo.orElse(firstDecode))
     }
   }
 
   /** Unbounded crawl: a streaming Dataset over files appearing under
     * `root` — the reference's bounded `Collect` pipeline with the bound
-    * removed. New files are discovered per micro-batch (recursive, same
-    * PERMISSIVE zero-substitution decode as [[crawl]]); compose with
-    * watermarks/aggregations and a `writeStream` sink.
+    * removed. New files are discovered per micro-batch (recursive, the
+    * same format table and PERMISSIVE zero-substitution decode as
+    * [[crawl]]); compose with watermarks/aggregations and a `writeStream`
+    * sink.
     */
   def crawlStream[T: Encoder](
       spark: SparkSession, root: String, schema: StructType,
       format: String = "json", options: Map[String, String] = Map.empty): Dataset[T] = {
-    val base = spark.readStream
-      .option("recursiveFileLookup", "true")
-      .options(options)
-    val raw = format match {
-      case "json" =>
-        base.schema(schema.add(CorruptCol, StringType))
-          .option("multiLine", "true")
-          .option("mode", "PERMISSIVE")
-          .option("columnNameOfCorruptRecord", CorruptCol)
-          .json(root)
-      case "csv" =>
-        base.schema(schema.add(CorruptCol, StringType))
-          .option("mode", "PERMISSIVE")
-          .option("columnNameOfCorruptRecord", CorruptCol)
-          .csv(root)
-      case "parquet" | "orc" =>
-        base.schema(schema).format(format).load(root)
-          .withColumn(CorruptCol, lit(null).cast(StringType))
-      case other =>
-        throw new IllegalArgumentException(
-          s"unsupported stream crawl format '$other' (json, csv, parquet, orc)")
-    }
-    typedFrom[T](raw.withColumn("source_file", lit("")), schema)
+    val f = formatOf(format)
+    val raw = spark.readStream.format(f.name)
+      .options(readerOptions(f, Map("recursiveFileLookup" -> "true") ++ options))
+      .schema(f.dataSchema(schema))
+      .load(root)
+    typedFrom[T](f.rows(raw, schema).withColumn("source_file", lit("")), schema)
   }
 
   /** Running `Collect`: fold the unbounded crawl with the monoid and keep

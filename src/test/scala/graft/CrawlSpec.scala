@@ -304,4 +304,181 @@ class CrawlSpec extends SparkSpec {
     val unprobed = Crawl.listWithErrors(spark, root.toString, accessProbe = false)
     assert(unprobed.files.length == 2 && unprobed.errors.isEmpty)
   }
+
+  /** The Spark work `body` runs under its own job group: the group's jobs
+    * and the tasks of their stages, as the status tracker reports them, and
+    * each job's description. The status tracker and a listener are fed
+    * asynchronously, each from its own ordered queue; a fence job run after
+    * `body` in a second group is polled for in both, and once both report
+    * it every earlier event of the group has landed.
+    */
+  private def sparkWork(body: => Unit): (Int, Int, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val group = s"crawl-budget-${java.util.UUID.randomUUID}"
+    val fence = s"$group-fence"
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val fenced = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        prop("spark.jobGroup.id") match {
+          case Some(`group`) => descriptions.add(prop("spark.job.description").getOrElse(""))
+          case Some(`fence`) => fenced.set(true)
+          case _ =>
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      def inGroup(g: String)(run: => Unit): Unit = {
+        sc.setJobGroup(g, g, interruptOnCancel = false)
+        try run finally sc.clearJobGroup()
+      }
+      inGroup(group)(body)
+      inGroup(fence)(sc.parallelize(Seq(1), 1).count())
+      val tracker = sc.statusTracker
+      val deadline = System.nanoTime() + 20000000000L
+      while ((!fenced.get || tracker.getJobIdsForGroup(fence).isEmpty) &&
+          System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(fenced.get && tracker.getJobIdsForGroup(fence).nonEmpty,
+        "the fence job never reached the listeners")
+      val jobs = tracker.getJobIdsForGroup(group).toSeq
+      val stages = jobs.flatMap(j => tracker.getJobInfo(j).toSeq.flatMap(_.stageIds)).distinct
+      val tasks = stages.flatMap(s => tracker.getStageInfo(s)).map(_.numCompletedTasks).sum
+      (jobs.size, tasks, descriptions.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `n` equal-size `{"data": 1}` files spread over a three-level tree. */
+  private def equalTree(prefix: String, n: Int): Path = {
+    val root = Files.createTempDirectory(prefix)
+    for (i <- 0 until n) {
+      val dir = Files.createDirectories(root.resolve(s"d${i % 3}/e${i % 2}"))
+      Files.writeString(dir.resolve(f"f$i%04d.json"), """{"data": 1}""")
+    }
+    root
+  }
+
+  test("job budget: collect over 40 and 120 files runs the same <= 3 jobs, no re-listing, no cache") {
+    import spark.implicits._
+    val agg = MonoidAggregator.sumLong[Rec](_.data)
+    // Both trees name more files than Spark's parallel-listing threshold
+    // (32), where a plain read of a file list re-lists it in a Spark job.
+    val small = equalTree("crawlbudget40", 40)
+    val large = equalTree("crawlbudget120", 120)
+    Crawl.collect[Rec, Long](spark, small.toString, schema, agg) // warm, outside the count
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    def run(root: Path, want: Long) = {
+      var res: Crawl.CrawlResult[Long] = null
+      val work = sparkWork { res = Crawl.collect[Rec, Long](spark, root.toString, schema, agg) }
+      assert(res.result == want && res.corruptFiles == 0L && res.firstError.isEmpty)
+      work
+    }
+    val (jobs40, tasks40, labels40) = run(small, 40L)
+    val (jobs120, tasks120, labels120) = run(large, 120L)
+    assert(jobs40 == jobs120 && jobs120 <= 3,
+      s"collect must run a fixed, small number of jobs: 40 files $jobs40, 120 files $jobs120")
+    assert((labels40 ++ labels120).forall(!_.startsWith("Listing leaf files")),
+      s"collect re-listed files it had already listed: ${labels40 ++ labels120}")
+    assert(tasks40 == tasks120,
+      s"collect's task count must not grow with the file count: $tasks40 -> $tasks120")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+      "collect must not leave (or use) a persisted relation")
+  }
+
+  test("decode errors name files as the listing does, smallest in the listing's order") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("crawlnames")
+    Files.writeString(root.resolve("ok.json"), """{"data": 5}""")
+    // Raw order puts ' ' (0x20) before '!' (0x21); URI-escaped, "a%20b"
+    // sorts after "a!" — the smallest must be chosen in the raw form.
+    Files.writeString(root.resolve("a b.json"), """{"data": oops""")
+    Files.writeString(root.resolve("a!.json"), """{"data": oops""")
+    Files.writeString(root.resolve("a%41.json"), """{"data": oops""")
+    val listed = Crawl.listWithErrors(spark, root.toString).files
+    val first = listed.find(_.endsWith("/a b.json")).get
+    assert(listed.exists(_.endsWith("/a%41.json")))
+    val res = Crawl.collect[Rec, Long](spark, root.toString, schema,
+      MonoidAggregator.sumLong[Rec](_.data))
+    assert(res.result == 5L)
+    assert(res.corruptFiles == 3L)
+    assert(res.firstError.contains(s"failed to decode: $first"), res.firstError)
+  }
+
+  test("io error matrix above Spark's parallel-listing threshold: more than 32 readable files") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.faulty.impl", classOf[FaultyFs].getName)
+    val root = Files.createTempDirectory("crawlio40")
+    for (i <- 0 until 40) {
+      val dir = Files.createDirectories(root.resolve(s"d${i % 4}"))
+      Files.writeString(dir.resolve(s"good$i.json"), s"""{"data": $i}""")
+    }
+    val unlistable = Files.createDirectory(root.resolve("unlistable"))
+    Files.writeString(unlistable.resolve("hidden.json"), """{"data": 50}""")
+    val panicdir = Files.createDirectory(root.resolve("panicdir"))
+    Files.writeString(panicdir.resolve("hidden2.json"), """{"data": 60}""")
+    Files.writeString(root.resolve("d2/noopen.json"), """{"data": 9}""")
+    Files.writeString(root.resolve("nopanic.json"), """{"data": 11}""")
+    Files.writeString(root.resolve("d3/bad.json"), """{"data": oops""")
+    val faultyRoot = "faulty:" + root.toString
+
+    val listing = Crawl.listWithErrors(spark, faultyRoot)
+    assert(listing.errors.count(_.op == "list") == 2)
+    assert(listing.errors.count(_.op == "open") == 2)
+    assert(listing.files.size == 41)
+
+    val res = Crawl.collect[Rec, Long](spark, faultyRoot, schema,
+      MonoidAggregator.sumLong[Rec](_.data))
+    assert(res.result == (0 until 40).sum.toLong) // the readable files only
+    assert(res.corruptFiles == 3L) // two unopenable files + one undecodable
+    // I/O errors precede decode errors; "d2/noopen.json" is the smallest
+    // failing path, ahead of "nopanic.json", "panicdir" and "unlistable"
+    assert(res.firstError.exists(e =>
+      e.startsWith("failed to open:") && e.contains("d2/noopen.json")), res.firstError)
+  }
+
+  test("a zero-byte json file is neither a row nor a corrupt file") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("crawlempty")
+    Files.writeString(root.resolve("good.json"), """{"data": 8}""")
+    Files.writeString(root.resolve("empty.json"), "")
+    val res = Crawl.collect[Rec, Long](spark, root.toString, schema,
+      MonoidAggregator.sumLong[Rec](_.data))
+    assert(res.result == 8L)
+    assert(res.corruptFiles == 0L && res.firstError.isEmpty)
+    assert(Crawl.crawl[Rec](spark, root.toString, schema).count() == 1L)
+  }
+
+  test("a csv file with two corrupt rows counts as one corrupt file") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("crawlcsv2")
+    Files.writeString(root.resolve("one.csv"), "1\nx\n2\ny\n")
+    Files.writeString(root.resolve("two.csv"), "4\n")
+    val res = Crawl.collect[Rec, Long](spark, root.toString, schema,
+      MonoidAggregator.sumLong[Rec](_.data), format = "csv")
+    assert(res.result == 7L)
+    assert(res.corruptFiles == 1L)
+    assert(res.firstError.exists(e => e.startsWith("failed to decode:") && e.endsWith("/one.csv")))
+  }
+
+  test("io error: a tree whose every file is unopenable returns the zero value and counts them all") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.faulty.impl", classOf[FaultyFs].getName)
+    val root = Files.createTempDirectory("crawlnoopen")
+    val sub = Files.createDirectory(root.resolve("sub"))
+    Files.writeString(root.resolve("noopen1.json"), """{"data": 1}""")
+    Files.writeString(sub.resolve("noopen0.json"), """{"data": 2}""")
+    Files.writeString(sub.resolve("nopanic.json"), """{"data": 3}""")
+    val res = Crawl.collect[Rec, Long](spark, "faulty:" + root.toString, schema,
+      MonoidAggregator.sumLong[Rec](_.data))
+    assert(res.result == 0L)
+    assert(res.corruptFiles == 3L)
+    assert(res.firstError.exists(e =>
+      e.startsWith("failed to open:") && e.contains("noopen1.json")), res.firstError)
+  }
 }
