@@ -404,10 +404,10 @@ object ScaleProbe {
       time("bloom_point_scan") {
         // bloom data-skipping leg on a HASH-SCATTERED layout: 256 files
         // that each span the whole key range, so zone min/max prunes
-        // nothing and only the per-file blooms discriminate. The probe
-        // evaluates EXECUTOR-side (ZoneMap.pruneFrame): the driver
-        // collects (file, keep) verdicts, never the ~91 KB-per-file
-        // bloom bits — the invariant that keeps an 800k-file table's
+        // nothing and only the per-file blooms discriminate. On a bloom
+        // table the pruner runs EXECUTOR-side (ZoneMap.pruneFrameCnf):
+        // the driver collects (file, keep) verdicts, never the ~91 KB
+        // of bloom bits per file — the invariant that keeps an 800k-file table's
         // pushed `=` metadata-sized instead of a ~700 GB driver collect.
         // Gates: a present key opens ~collision-many files (fpp 3% of
         // 256, never the corpus), and the lookup is row-exact. Encoded

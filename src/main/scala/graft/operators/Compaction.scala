@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   * snapshot isolation). Within this engine's plain-directory model the
   * contract is: compact to a fresh generation directory, point readers
   * at it, retire the old one — [[compactTo]] is the rewrite leg, and
-  * the [[ZoneMap]] refresh is part of the same move ([[ZoneMap.rebuild]]
-  * on the new directory, or append+retract when generations share an
-  * index).
+  * the [[ZoneMap]] refresh is part of the same move (a fresh
+  * [[ZoneMap.build]] on the new directory, or append+retract when
+  * generations share an index).
   *
   * Row preservation is the correctness contract: compaction is a pure
   * relayout, so any query over the compacted directory equals the same

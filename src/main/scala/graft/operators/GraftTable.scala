@@ -560,22 +560,6 @@ object GraftTable {
       } finally in.close()
     }
 
-  /** The whole publish cycle for a mutation that lands `rows` as the
-    * version-`v` generation. Collision-free until one atomic commit:
-    * data files land under a publish-unique `data/g{v}_{token}`, the
-    * manifest (new files' zone rows, paths RELATIVIZED to the table
-    * root, plus any carried-forward rows of the previous manifest), the
-    * meta and the publisher token are staged under a hidden dir, and ONE
-    * directory rename makes `v{v}` visible whole. The token read back
-    * after the rename certifies whose attempt won; a loser cleans its
-    * debris and throws `ConcurrentModificationException` — exactly one
-    * commit per version survives, and the winner's files were never
-    * touched by the loser (no shared directories before the commit
-    * point). A crash anywhere before the rename leaves the previous
-    * version current and only vacuum-fodder behind; an existing
-    * UNCOMMITTED `v{v}` dir can only be such a remnant (a live racer
-    * stages elsewhere) and is cleared.
-    */
   /** Is there a committed graft table at `path`? */
   def exists(spark: SparkSession, path: String): Boolean =
     currentVersion(spark, path).isDefined
@@ -672,6 +656,22 @@ object GraftTable {
       fs(spark, destPath).makeQualified(new Path(destPath)).toUri.getPath)
   }
 
+  /** The whole publish cycle for a mutation that lands `rows` as the
+    * version-`v` generation. Collision-free until one atomic commit:
+    * data files land under a publish-unique `data/g{v}_{token}`, the
+    * manifest (new files' zone rows, paths RELATIVIZED to the table
+    * root, plus any carried-forward rows of the previous manifest), the
+    * meta and the publisher token are staged under a hidden dir, and ONE
+    * directory rename makes `v{v}` visible whole. The token read back
+    * after the rename certifies whose attempt won; a loser cleans its
+    * debris and throws `ConcurrentModificationException` — exactly one
+    * commit per version survives, and the winner's files were never
+    * touched by the loser (no shared directories before the commit
+    * point). A crash anywhere before the rename leaves the previous
+    * version current and only vacuum-fodder behind; an existing
+    * UNCOMMITTED `v{v}` dir can only be such a remnant (a live racer
+    * stages elsewhere) and is cleared.
+    */
   private[operators] def publishGeneration(spark: SparkSession, base: String,
       rows: DataFrame, v: Long, meta: Meta,
       carryForward: Option[DataFrame],
@@ -1025,26 +1025,22 @@ final class GraftTable private[operators] (spark: SparkSession,
   /** Full read of the current version. */
   def read(): DataFrame = readVersion(version)
 
-  /** One pruning pass for version `v` under a CNF spec: driver-side over
-    * the manifest snapshot when the table has no blooms and every probe
-    * literal matches its zone value class ([[ZoneMap.pruneSnapCnf]] —
-    * zero Spark jobs), the executor (file, _keep) collect otherwise —
-    * identical survivor algebra either way.
+  /** One pruning pass for version `v` under a CNF spec, through the one
+    * [[ZoneMap.Pruner]]: on the driver over the manifest snapshot (zero
+    * Spark jobs), or — on a bloom table, whose bloom bytes the snapshot
+    * leaves out — in executors over the manifest, collecting only
+    * `(file, _keep)`.
     */
   private def pruneVersion(v: Long, m: Meta, cnf: ZoneMap.Cnf)
-      : (Seq[String], Set[String]) = {
-    val driver =
-      if (m.bloomCols.nonEmpty) None
-      else {
-        val (ss, sr) = manifestSnap(v)
-        ZoneMap.pruneSnapCnf(ss, sr, m.zoneMeta, cnf)
-      }
-    driver.getOrElse(
-      ZoneMap.pruneZoneRowsCnf(manifestDf(v), m.zoneMeta, cnf))
-  }
+      : (Seq[String], Set[String]) =
+    if (m.bloomCols.isEmpty) {
+      val (schema, rows) = manifestSnap(v)
+      ZoneMap.pruner(schema, m.zoneMeta, cnf).survivors(rows)
+    } else ZoneMap.pruneZoneRowsCnf(manifestDf(v), m.zoneMeta, cnf)
 
   /** Zone-and-bloom-pruned scan under `preds`: manifest rows prune to
-    * the surviving file list ([[ZoneMap.pruneZoneRows]], conservative by
+    * the surviving file list ([[pruneVersion]] — on the driver with zero
+    * Spark jobs unless the table carries blooms; conservative by
     * construction) and the exact predicate re-applies on read — result
     * is row-identical to `read().filter(ZoneMap.predicate(preds))` at
     * every version, pruning only changes how many files open.
@@ -1131,14 +1127,13 @@ final class GraftTable private[operators] (spark: SparkSession,
     * `SupportsReportStatistics`: without it Catalyst assumes
     * `defaultSizeInBytes` (≈ Long.Max) and a metadata-sized graft
     * dimension joined to a 100 TB fact would NEVER auto-broadcast.
-    */
-  /** A committed version's manifest is IMMUTABLE — its aggregate is
+    *
+    * A committed version's manifest is IMMUTABLE, so the answer is
     * folded once PROCESS-WIDE (see [[GraftTable.statsCacheG]]): the
     * planner asks for table statistics several times per statement (size
-    * estimate, row estimate, CBO), each ask was a manifest aggregate job,
-    * and the SQL door opens a fresh handle per statement so a
-    * handle-scoped memo re-paid it per statement. Two longs per version,
-    * never persisted.
+    * estimate, row estimate, CBO), and the SQL door opens a fresh handle
+    * per statement, so a handle-scoped memo would re-pay it per
+    * statement. Two longs per version, never persisted.
     */
   private[graft] def approxStats(v: Long): (Long, Long) = {
     val key = (rootNorm, v, commitToken(v))
@@ -1178,38 +1173,34 @@ final class GraftTable private[operators] (spark: SparkSession,
 
   /** Per-ZONE-COLUMN plan statistics of version `v` — ONE metadata fold
     * over the manifest: global min/max from the per-file zone ranges,
-    * null count from the per-file null counts (when the manifest
-    * records them). Zero write-path cost — everything falls out of
-    * statistics the manifest already carries; NDV derivation (bounded
-    * by the integral value-range width) happens in the consumer. Feeds
-    * the CBO-facing `CatalogTable` [[graft.plans.GraftV2ScanStats]]
-    * synthesizes when `spark.sql.cbo.enabled` is on — per-column
+    * null count from the per-file null counts. Zero write-path cost —
+    * everything falls out of statistics the manifest already carries
+    * (both manifest writers record min, max and nulls for every zone
+    * column); NDV derivation (bounded by the integral value-range
+    * width) happens in the consumer. Feeds the CBO-facing
+    * `CatalogTable` [[graft.plans.GraftV2ScanStats]] synthesizes when
+    * `spark.sql.cbo.enabled` is on — per-column
     * min/max/null/NDV is what lets join reordering over three or more
     * graft tables estimate instead of guess.
     *
-    * @return (column, min, max, nullCount; nullCount = -1 when the
-    *         manifest predates per-file null counts)
+    * @return (column, min, max, nullCount)
     */
   private[graft] def columnStats(v: Long): Seq[(String, Any, Any, Long)] = {
     val m = readMeta(spark, path, v)
     val (schema, rowsArr) = manifestSnap(v)
-    val have = schema.fieldNames.toSet
-    val cols = m.zoneCols.filter(c => have(s"min_$c") && have(s"max_$c"))
-    if (cols.isEmpty) return Nil
     // driver fold over the snapshot — min-of-mins / max-of-maxes /
     // sum-of-null-counts, null-skipping like the Spark aggregates it
     // replaces (zone values are Comparable: numerics, strings,
     // timestamps — the types [[ZoneMap]] indexes)
     def cmp(a: Any, b: Any): Int =
       a.asInstanceOf[Comparable[Any]].compareTo(b)
-    cols.map { c =>
+    m.zoneCols.map { c =>
       val mnIx = schema.fieldIndex(s"min_$c")
       val mxIx = schema.fieldIndex(s"max_$c")
-      val nlIx = if (have(s"nulls_$c")) schema.fieldIndex(s"nulls_$c") else -1
+      val nlIx = schema.fieldIndex(s"nulls_$c")
       var mn: Any = null
       var mx: Any = null
       var nl = 0L
-      var sawNl = false
       rowsArr.foreach { r =>
         if (!r.isNullAt(mnIx)) {
           val v0 = r.get(mnIx)
@@ -1219,11 +1210,9 @@ final class GraftTable private[operators] (spark: SparkSession,
           val v0 = r.get(mxIx)
           if (mx == null || cmp(v0, mx) > 0) mx = v0
         }
-        if (nlIx >= 0 && !r.isNullAt(nlIx)) {
-          nl += r.getAs[Number](nlIx).longValue(); sawNl = true
-        }
+        if (!r.isNullAt(nlIx)) nl += r.getLong(nlIx)
       }
-      (c, mn, mx, if (nlIx >= 0 && sawNl) nl else -1L)
+      (c, mn, mx, nl)
     }
   }
 
@@ -1580,11 +1569,7 @@ final class GraftTable private[operators] (spark: SparkSession,
           rangeCand.collect().map(_.getString(0)).toSet
         else {
           val anyHit = udf((bytes: Array[Byte], hs: Seq[Long]) =>
-            bytes != null && {
-              val bf = org.apache.spark.util.sketch.BloomFilter
-                .readFrom(new java.io.ByteArrayInputStream(bytes))
-              hs.exists(bf.mightContainLong)
-            })
+            ZoneMap.bloomProbe(bytes, hs).contains(true))
           val khs = keys
             .select(ZoneMap.bloomHash(col(keyCol)).as("_kh")).distinct()
             .agg(collect_list("_kh").as("_khs"))
@@ -2221,8 +2206,8 @@ final class GraftTable private[operators] (spark: SparkSession,
     * re-sorted (range-partition + sort-within, restoring [[ZoneMap]]
     * pruning power interleaved appends destroyed — [[Compaction]]'s
     * trade) — and commit files + zones + ledger as ONE version: the
-    * choreography [[Compaction]] + [[ZoneMap.rebuild]] required two
-    * calls and a staleness window for. Row-preserving by construction.
+    * choreography [[Compaction]] + a fresh [[ZoneMap.build]] required
+    * two calls and a staleness window for. Row-preserving by construction.
     *
     * @return (files before, files after)
     */

@@ -1,9 +1,21 @@
 package graft.operators
 
+import scala.collection.mutable
+import scala.util.Try
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.analysis.{AnsiTypeCoercion, TypeCoercion}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
+  EvalMode, Literal, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, DateType, NumericType,
+  StringType, StructType, TimestampNTZType, TimestampType}
 
 /** File-level zone maps — the data-skipping layer between partition
   * pruning and row-group statistics: a tiny parquet table holding
@@ -37,12 +49,17 @@ import org.apache.spark.sql.types.{DataType, StringType}
   *    losing it costs one [[build]] re-scan, never data. [[scan]] falls
   *    back to the full unpruned scan when the index is absent.
   *
+  * Pruning is ONE evaluator, the [[Pruner]] ([[pruner]] compiles it on
+  * the driver): it judges zone rows on the driver over a collected
+  * snapshot ([[GraftTable]]'s non-bloom manifests) or in executors
+  * ([[pruneFrameCnf]]) where bloom bytes live, comparing in the type
+  * and under the ordering Catalyst itself uses.
+  *
   * Null semantics: min/max aggregate over non-null values, so a file
   * whose column is entirely null carries null min/max and is pruned for
-  * range predicates — correct, because a range predicate rejects nulls.
-  * IS NULL predicates must not be routed through [[Range]] pruning (the
-  * per-file `nulls_c` count is persisted for that audit, not consulted
-  * by pruning).
+  * range and point predicates — correct, because both reject nulls.
+  * IS NULL / IS NOT NULL are [[Nulls]] predicates, pruned from the
+  * per-file `nulls_c` count.
   *
   * On-disk layout is the family's versioned-meta discipline
   * ([[ScreenIndex]], [[MaterializedAgg]]): `indexPath/zones` holds the
@@ -55,9 +72,9 @@ import org.apache.spark.sql.types.{DataType, StringType}
   * impossible by construction.
   *
   * Maintenance cycle, matching the repo's persistent-index family:
-  * [[build]] / [[append]] (new files only, idempotent — keyed on file
-  * path) / [[retract]] (drop zone rows for vanished files) / [[rebuild]]
-  * (fresh derivation). Zone rows for live files are immutable because
+  * [[build]] (also the fresh derivation) / [[append]] (new files only,
+  * idempotent — keyed on file path) / [[retract]] (drop zone rows for
+  * vanished files). Zone rows for live files are immutable because
   * parquet files are immutable — there is no update path by design.
   */
 object ZoneMap {
@@ -147,59 +164,47 @@ object ZoneMap {
     * "123.0" to the engine, a timestamp's `toString` carries a trailing
     * ".0") can never hash differently. A hash mismatch here would be a
     * silent FALSE NEGATIVE — files dropped that contain matching rows —
-    * the one failure mode a pruning index must never have.
+    * the one failure mode a pruning index must never have. Sibling
+    * operators probing manifest blooms executor-side ([[GraftTable]]'s
+    * merge candidacy) hash through this too.
     *
     * The cast is PINNED to UTC, not left to the analyzer: a bare
     * `cast("string")` resolves with the SESSION time zone, and
     * [[probeHash]] evaluates driver-side with an explicit zone — if the
     * two differed, every timestamp bloom built under a non-UTC session
-    * would silently false-negative on probe (index side renders local
-    * time, probe side UTC, hashes diverge). Pinning the SAME constant
+    * would silently false-negative on probe. Pinning the SAME constant
     * zone on both sides makes them agree regardless of session config,
     * and keeps a persisted index portable across sessions with
     * different zones — a session-zone key would bake the builder's
     * zone into the bits with no record of it in meta.
     */
-  private def bloomKey(c: Column): Column = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, XxHash64}
-    val bridge = org.apache.spark.sql.graft.ColumnBridge
-    bridge.column(XxHash64(
-      Seq(Cast(bridge.expression(c), StringType, Some("UTC"))), 42L))
-  }
+  private[operators] def bloomHash(c: Column): Column =
+    ColumnBridge.column(XxHash64(
+      Seq(Cast(ColumnBridge.expression(c), StringType, Some("UTC"))), 42L))
 
-  /** [[bloomKey]] for sibling operators probing manifest blooms
-    * DISTRIBUTED-side (e.g. [[GraftTable]]'s merge rewrite-set
-    * tightening hashes batch keys in the executors): the exact hash the
-    * bits were built under, so cross-module probes can never diverge
-    * from the scheme tag.
+  /** The probe-side twin of [[bloomHash]]: cast the literal to the
+    * indexed column's type as a comparison would (session zone `tz`),
+    * then to string, through Catalyst itself — identical
+    * canonicalization by construction. Fails loudly on a probe value
+    * the column type cannot hold rather than guessing.
     */
-  private[operators] def bloomHash(c: Column): Column = bloomKey(c)
-
-  /** The probe-side twin of [[bloomKey]]: cast the literal to the
-    * indexed column's type, then to string, through Catalyst itself —
-    * identical canonicalization by construction. Fails loudly on a
-    * probe value the column type cannot hold rather than guessing.
-    */
-  private def probeHash(v: Any, dt: DataType): Long = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, XxHash64}
-    val typed = Cast(Literal(v), dt, Some("UTC"))
+  private def probeHash(v: Any, dt: DataType, tz: String): Long = {
+    val typed = Cast(Literal(v), dt, Some(tz))
     XxHash64(Seq(Cast(typed, StringType, Some("UTC"))), 42L)
       .eval(null).asInstanceOf[Long]
   }
 
   private def bloomAgg(c: String, items: Long, bits: Long): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        org.apache.spark.sql.graft.ColumnBridge.expression(bloomKey(col(c))),
-        org.apache.spark.sql.catalyst.expressions.Literal(items),
-        org.apache.spark.sql.catalyst.expressions.Literal(bits))
-        .toAggregateExpression())
+    ColumnBridge.column(new BloomFilterAggregate(
+      ColumnBridge.expression(bloomHash(col(c))), Literal(items), Literal(bits))
+      .toAggregateExpression())
 
   /** Zone rows for every file behind `df` (one group per file out of a
     * single scan): `(file, cnt, min_c…, max_c…, nulls_c…[, bloom_c…])`.
     * The shuffle moves |files| tiny rows (a bloom adds its fixed bit
     * array); partial aggregation collapses everything map-side first.
-    * Blooms hash via `xxhash64`, the same hash [[survives]] probes
+    * Every zone column gets its `nulls_c` count, which [[Nulls]] prunes
+    * on. Blooms hash via `xxhash64`, the same hash [[probeHash]] probes
     * with; each file's bloom is self-contained, so files indexed by
     * different calls never need matching sizes — but [[append]] reads
     * sizing from meta anyway, so they DO match.
@@ -266,7 +271,7 @@ object ZoneMap {
         s"'${m.scheme}' but this engine probes '$BloomScheme' — indexes " +
         "built before the UTC cast pin hashed session-local timestamp " +
         "strings and can silently false-negative; rebuild the index " +
-        "(ZoneMap.rebuild) instead of probing it")
+        "(ZoneMap.build) instead of probing it")
     m
   }
 
@@ -357,11 +362,6 @@ object ZoneMap {
     dropped
   }
 
-  /** Fresh derivation at a (possibly new) location — the rebuild leg. */
-  def rebuild(spark: SparkSession, dataPath: String, cols: Seq[String],
-      toPath: String, bloomCols: Seq[String] = Nil): Long =
-    build(spark, dataPath, cols, toPath, bloomCols)
-
   /** How stale is the index: (files on disk but unindexed, zone rows
     * whose files vanished). (0, 0) means the index exactly covers the
     * data; a nonzero first component only costs [[scan]] pruning power,
@@ -370,63 +370,10 @@ object ZoneMap {
   def staleness(spark: SparkSession, dataPath: String,
       indexPath: String): (Long, Long) = {
     val disk = listDataFiles(spark, dataPath).toSet
-    val idx = zones(spark, indexPath) match {
-      case Some(z) => z.select(FileCol).collect().map(_.getString(0)).toSet
-      case None => Set.empty[String]
-    }
+    val idx = zones(spark, indexPath).fold(Set.empty[String])(
+      _.select(FileCol).collect().map(_.getString(0)).toSet)
     ((disk diff idx).size.toLong, (idx diff disk).size.toLong)
   }
-
-  /** Survivor test for one file's zone row against every predicate:
-    * keep the file iff EACH check that exists for its column can
-    * intersect — null min/max (all-null column in that file) fails
-    * every range/point, correctly, because both reject nulls; a bloom
-    * miss (no false negatives) proves the key absent. Every check is
-    * conservative, so multiple checks on one column compose by AND.
-    */
-  /** Is a probe literal a float/double NaN? NaN check values must not
-    * prune on min/max: footer-derived bounds (and any writer following
-    * PARQUET-1246) EXCLUDE NaN from min/max, while Spark's ordering
-    * calls NaN the maximum — so a NaN-bearing file could carry clean
-    * bounds below the probe and be mis-pruned. NaN probes are vanishingly
-    * rare; surviving them unconditionally is the conservative fix.
-    */
-  private def isNan(v: Any): Boolean = v match {
-    case d: Double => d.isNaN
-    case f: Float => f.isNaN
-    case d: java.lang.Double => d.isNaN
-    case f: java.lang.Float => f.isNaN
-    case _ => false
-  }
-
-  private[operators] def survives(preds: Seq[Pred], zoned: Set[String],
-      bloomed: Set[String]): Column =
-    preds.map {
-      case Range(c, lo0, hi0) =>
-        require(zoned(c), s"column $c not zone-indexed " +
-          s"(indexed: ${zoned.mkString(", ")})")
-        val lo = if (lo0 == null || isNan(lo0)) lit(true)
-          else col(s"max_$c").isNotNull && col(s"max_$c") >= lit(lo0)
-        val hi = if (hi0 == null) lit(true)
-          else col(s"min_$c").isNotNull && col(s"min_$c") <= lit(hi0)
-        lo && hi
-      case Point(c, v) =>
-        require(zoned(c) || bloomed(c), s"column $c neither zone- nor " +
-          s"bloom-indexed (zones: ${zoned.mkString(", ")}; " +
-          s"blooms: ${bloomed.mkString(", ")})")
-        // the bloom half of a Point check is conjoined EXECUTOR-side by
-        // [[pruneFrame]] — bloom bytes never leave the executors
-        if (zoned(c) && !isNan(v))
-          col(s"max_$c").isNotNull && col(s"max_$c") >= lit(v) &&
-            col(s"min_$c") <= lit(v)
-        else lit(true)
-      case Nulls(c, want) =>
-        require(zoned(c), s"column $c not zone-indexed " +
-          s"(indexed: ${zoned.mkString(", ")}) — null counts live in " +
-          "the zone row")
-        if (want) col(s"nulls_$c") > lit(0L)
-        else col("cnt") > col(s"nulls_$c")
-    }.reduce(_ && _)
 
   /** The exact row-level predicate the preds describe — re-applied on
     * read so pruning coarseness can never change results.
@@ -450,226 +397,197 @@ object ZoneMap {
     */
   type Cnf = Seq[Seq[Seq[Pred]]]
 
-  /** One conjunct's file-survival Column (zone check + the bloom half
-    * of each Point on a bloom-indexed column, all EXECUTOR-side). An
-    * empty conjunct survives everything (`true`), so disjunct algebra
-    * composes cleanly. The bloom half reads from `hitIdx`/`_bloomhits_*`
-    * — the per-column BATCHED probe [[pruneFrameCnf]] projects once per
-    * file row — so a 50-way IN (50 Point disjuncts on one column)
-    * deserializes each file's bloom ONCE, not 50 times.
+  /** Probe one file's serialized bloom for each hash. A null bloom (the
+    * column is all-null in that file) contains nothing. The one place
+    * bloom bytes are deserialized: zone pruning and [[GraftTable]]'s
+    * merge candidacy both probe through it, executor-side.
     */
-  private def keepCond(meta: Meta, zoned: Set[String],
-      hitIdx: Map[(String, Long), Int], preds: Seq[Pred]): Column = {
-    val bloomed = meta.bloomCols.toSet
-    val bloomPts = preds.collect {
-      case p: Point if bloomed(p.col) =>
-        (p.col, probeHash(p.v, meta.dataType(p.col)))
-    }.distinct.filter(hitIdx.contains)
-    val base =
-      if (preds.isEmpty) lit(true) else survives(preds, zoned, bloomed)
-    bloomPts.foldLeft(base) { case (acc, key @ (bc, _)) =>
-      // element_at is 1-indexed; the hits array is positionally aligned
-      // with the distinct hash list projected for this column
-      acc && element_at(col(s"_bloomhits_$bc"), hitIdx(key) + 1)
+  private[operators] def bloomProbe(bytes: Array[Byte],
+      hashes: Seq[Long]): Seq[Boolean] =
+    if (bytes == null) hashes.map(_ => false)
+    else {
+      val bf = org.apache.spark.util.sketch.BloomFilter
+        .readFrom(new java.io.ByteArrayInputStream(bytes))
+      hashes.map(bf.mightContainLong)
     }
+
+  /** One compiled check of a zone row. */
+  private sealed trait Check extends Serializable
+  /** Zone value at `ix` (column type `ct`) >= `lit` (`atLeast`) or <=
+    * `lit`, compared in type `t` under `PhysicalDataType.ordering(t)` —
+    * the ordering Catalyst's `BinaryComparison` uses, so NaN (greatest),
+    * ±0.0 (equal) and UTF-8 byte order follow Spark by construction. A
+    * null zone value (all-null column in that file) fails.
+    */
+  private final case class Bound(ix: Int, ct: DataType, t: DataType,
+      tz: String, lit: Any, atLeast: Boolean) extends Check {
+    @transient private lazy val internal =
+      CatalystTypeConverters.createToCatalystConverter(ct)
+    @transient private lazy val widen =
+      Cast(BoundReference(0, ct, nullable = false), t, Some(tz), EvalMode.ANSI)
+    @transient private lazy val ordering = PhysicalDataType.ordering(t)
+    def holds(r: Row): Boolean = !r.isNullAt(ix) && {
+      val z = internal(r.get(ix))
+      val d = ordering.compare(if (t == ct) z else widen.eval(InternalRow(z)), lit)
+      if (atLeast) d >= 0 else d <= 0
+    }
+  }
+  /** `IS NULL` (`want`): the file counted a null; else a non-null row. */
+  private final case class NullCount(nullsIx: Int, cntIx: Int,
+      want: Boolean) extends Check
+  /** Hash `i` of bloom slot `slot` may be in the file. */
+  private final case class Bloom(slot: Int, i: Int) extends Check
+
+  /** The CNF survivor test, written once. [[pruner]] compiles it on
+    * the driver, once per pruning call; [[keep]] judges one zone row. It
+    * runs on the driver over a collected manifest snapshot (zero Spark
+    * jobs) and in executors ([[pruneFrameCnf]]), where bloom bytes live.
+    *
+    * A file survives iff every OR-group has some disjunct whose checks
+    * all hold — the conservative reading of `k < 10 OR k > 90`; an empty
+    * spec, group or conjunct keeps everything. A Point checks the zone
+    * range and, where built, the bloom (no false negatives). Each file's
+    * bloom deserializes at most once, however many Points probe it.
+    */
+  private[operators] final class Pruner private[ZoneMap] (fileIx: Int,
+      cnf: Seq[Seq[Seq[Check]]], blooms: Seq[(Int, Seq[Long])])
+      extends Serializable {
+
+    def keep(r: Row): Boolean = {
+      val hits = new Array[Seq[Boolean]](blooms.size)
+      def holds(c: Check): Boolean = c match {
+        case b: Bound => b.holds(r)
+        case NullCount(nl, cnt, want) =>
+          if (want) r.getLong(nl) > 0L else r.getLong(cnt) > r.getLong(nl)
+        case Bloom(slot, i) =>
+          if (hits(slot) == null) hits(slot) =
+            bloomProbe(r.getAs[Array[Byte]](blooms(slot)._1), blooms(slot)._2)
+          hits(slot)(i)
+      }
+      cnf.forall(dnf => dnf.isEmpty || dnf.exists(_.forall(holds)))
+    }
+
+    /** (survivor files, all files) over `rows`. */
+    def survivors(rows: Iterable[Row]): (Seq[String], Set[String]) =
+      (rows.filter(keep).map(_.getString(fileIx)).toSeq,
+        rows.map(_.getString(fileIx)).toSet)
+  }
+
+  /** Compile `cnf` against zone rows of `schema`: resolve field
+    * indexes, refuse preds on columns the index does not hold, hash
+    * bloom probes ([[probeHash]]) and normalize each literal.
+    *
+    * The literal is cast to the type Catalyst itself compares
+    * `column <op> literal` in (the wider of the two). Where that is not
+    * the column's type, the zone value is widened too, and only where
+    * that widening is monotone (numeric to numeric, date to timestamp):
+    * narrowing the literal instead can prune wrongly (a bigint file
+    * holding 2^53+3 passes `k >= 2^53+4` as a double). A pred whose
+    * types allow no such cast, or whose literal casts to null, NaN or
+    * an error, drops from its conjunct — only widening the read. NaN
+    * keeps the never-prune rule: footer bounds exclude NaN
+    * (PARQUET-1246) while Spark's ordering calls NaN the maximum.
+    */
+  private[operators] def pruner(schema: StructType, meta: Meta,
+      cnf: Cnf): Pruner = {
+    val conf = SQLConf.get
+    val tz = conf.sessionLocalTimeZone
+    def wider(a: DataType, b: DataType): Option[DataType] =
+      if (conf.ansiEnabled) AnsiTypeCoercion.findWiderTypeForTwo(a, b)
+      else TypeCoercion.findWiderTypeForTwo(a, b)
+    def monotone(ct: DataType, t: DataType): Boolean = ct == t ||
+      ct.isInstanceOf[NumericType] && t.isInstanceOf[NumericType] ||
+      ct == DateType && (t == TimestampType || t == TimestampNTZType)
+    // (literal, column type, comparison type) where pruning is sound
+    def typed(c: String, v: Any): Option[(Literal, DataType, DataType)] = {
+      val ct = meta.dataType(c)
+      for (l <- Try(Literal(v)).toOption; t <- wider(ct, l.dataType)
+        if monotone(ct, t)) yield (l, ct, t)
+    }
+    def bound(c: String, v: Any, atLeast: Boolean): Option[Check] = for {
+      (l, ct, t) <- typed(c, v)
+      x <- Try(Cast(l, t, Some(tz), EvalMode.ANSI).eval()).toOption.filter {
+        case d: Double => !d.isNaN
+        case f: Float => !f.isNaN
+        case x => x != null
+      }
+    } yield Bound(schema.fieldIndex(s"${if (atLeast) "max" else "min"}_$c"),
+      ct, t, tz, x, atLeast)
+    // every distinct (bloom column, hash) the spec probes, by slot. A
+    // bloom holds column values, so it only answers an equality Catalyst
+    // decides in the column's own type: a double literal on a bigint
+    // column equals several bigints.
+    val hashes = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Long]]
+    def bloom(c: String, v: Any): Option[Check] =
+      typed(c, v).collect { case (_, ct, t) if t == ct =>
+        probeHash(v, ct, tz) // loud on a value c can't hold
+      }.filter(_ => schema.fieldNames.contains(s"bloom_$c")).map { h =>
+        val hs = hashes.getOrElseUpdate(c, mutable.ArrayBuffer.empty[Long])
+        if (!hs.contains(h)) hs += h
+        Bloom(hashes.keysIterator.indexOf(c), hs.indexOf(h))
+      }
+    val zoned = meta.cols.toSet
+    def indexed = s"(indexed: ${meta.cols.mkString(", ")})"
+    def checks(p: Pred): Seq[Check] = p match {
+      case Range(c, lo, hi) =>
+        require(zoned(c), s"column $c not zone-indexed $indexed")
+        Option(lo).flatMap(bound(c, _, atLeast = true)).toSeq ++
+          Option(hi).flatMap(bound(c, _, atLeast = false))
+      case Point(c, v) =>
+        val bloomed = meta.bloomCols.contains(c)
+        require(zoned(c) || bloomed, s"column $c neither zone- nor " +
+          s"bloom-indexed (zones: ${meta.cols.mkString(", ")}; " +
+          s"blooms: ${meta.bloomCols.mkString(", ")})")
+        (if (zoned(c)) bound(c, v, atLeast = true).toSeq ++
+          bound(c, v, atLeast = false) else Nil) ++
+          (if (bloomed) bloom(c, v) else None)
+      case Nulls(c, want) =>
+        require(zoned(c), s"column $c not zone-indexed $indexed — null " +
+          "counts live in the zone row")
+        Seq(NullCount(schema.fieldIndex(s"nulls_$c"),
+          schema.fieldIndex("cnt"), want))
+    }
+    val compiled = cnf.map(_.map(_.flatMap(checks)))
+    new Pruner(schema.fieldIndex(FileCol), compiled, hashes.toSeq.map {
+      case (c, hs) => (schema.fieldIndex(s"bloom_$c"), hs.toVector) })
   }
 
   /** The pruning verdict frame `(file, _keep)` for the indexed rows of
-    * `z` under `preds` — EVERY check, including the bloom half of each
-    * Point predicate, evaluates EXECUTOR-side, so the only thing a
-    * caller ever collects is file names and booleans. This matters at
-    * scale: at the default sizing (1M items, fpp 0.03 → ~912 KB of bits
-    * per file per column) an 800k-file table's blooms are ~700 GB —
-    * collecting them to probe driver-side (the pre-r15 shape) is an
-    * OOM, not a slowdown. The probe UDF deserializes each file's bloom
-    * once per predicate in the executor that holds the row (metadata
-    * scale — |files| rows), the exact [[GraftTable]] merge `anyHit`
-    * discipline. A null bloom (all-null column in that file) cannot
-    * contain the key → pruned; no false negatives otherwise.
+    * `z` under `preds`: the [[Pruner]] runs EXECUTOR-side, bloom probes
+    * included, so a caller only ever collects file names and booleans.
+    * At the default sizing (~912 KB of bits per file per column) an
+    * 800k-file table's blooms are ~700 GB: a driver-side probe is an OOM.
     */
   private[operators] def pruneFrame(z: DataFrame, meta: Meta,
       preds: Seq[Pred]): DataFrame = pruneFrameCnf(z, meta, Seq(Seq(preds)))
 
-  /** [[pruneFrame]] generalized to a [[Cnf]] spec: a file survives iff
-    * every OR-group has SOME disjunct whose conjuncts all intersect it —
-    * per-disjunct pruning unioned by the OR, exactly the conservative
-    * fix for `k < 10 OR k > 90` (each arm prunes independently; the
-    * survivor union is read). Still one executor-side pass, one
-    * (file, _keep) collect.
+  /** [[pruneFrame]] over a [[Cnf]] spec. Only the zone fields
+    * (`<stat>_<column>`) of columns the spec names ride into the probe.
     */
   private[operators] def pruneFrameCnf(z: DataFrame, meta: Meta,
       cnf: Cnf): DataFrame = {
-    val zoned = z.schema.fieldNames
-      .collect { case f if f.startsWith("min_") => f.drop(4) }.toSet
-    // a [[Nulls]] check needs the per-file null count; a manifest
-    // predating it simply cannot prune that pred (dropping a conjunct
-    // member widens — conservative)
-    val nulled = z.schema.fieldNames
-      .collect { case f if f.startsWith("nulls_") => f.drop(6) }.toSet
-    def usable(conj: Seq[Pred]): Seq[Pred] = conj.filter {
-      case Nulls(c, _) => nulled(c)
-      case _ => true
-    }
-    // BATCH the bloom probes: every distinct (bloom column, hash) the
-    // whole CNF will ever ask about is probed in ONE pass per column —
-    // `_bloomhits_c` holds the per-hash verdicts, each file's bloom
-    // deserializing once per COLUMN instead of once per predicate
-    // (|files| × |preds| deserializations was the pre-r17 shape; a
-    // 50-way IN paid it 50×). Verdicts are booleans, bloom bytes still
-    // never leave the executors.
-    val bloomed = meta.bloomCols.toSet
-    val have = z.schema.fieldNames.toSet
-    val colHashes: Map[String, Seq[Long]] = cnf.flatten.flatMap(usable)
-      .collect {
-        case p: Point if bloomed(p.col) && have(s"bloom_${p.col}") =>
-          (p.col, probeHash(p.v, meta.dataType(p.col)))
-      }.distinct.groupBy(_._1).map { case (c, hs) => c -> hs.map(_._2) }
-    val hitIdx: Map[(String, Long), Int] = colHashes.flatMap {
-      case (c, hs) => hs.zipWithIndex.map { case (h, i) => (c, h) -> i }
-    }
-    val probeAll = udf((bytes: Array[Byte], hs: Seq[Long]) =>
-      if (bytes == null) hs.map(_ => false)
-      else {
-        val bf = org.apache.spark.util.sketch.BloomFilter
-          .readFrom(new java.io.ByteArrayInputStream(bytes))
-        hs.map(bf.mightContainLong)
-      })
-    val z2 = colHashes.foldLeft(z) { case (acc, (c, hs)) =>
-      acc.withColumn(s"_bloomhits_$c",
-        probeAll(col(s"bloom_$c"), typedLit(hs)))
-    }
-    val keep =
-      if (cnf.isEmpty) lit(true)
-      else cnf.map { dnf =>
-        if (dnf.isEmpty) lit(true)
-        else dnf.map(conj => keepCond(meta, zoned, hitIdx, usable(conj)))
-          .reduce(_ || _)
-      }.reduce(_ && _)
-    z2.select(col(FileCol), keep.as("_keep"))
+    val named = cnf.flatten.flatten.map(_.col).toSet + FileCol + "cnt"
+    val read = z.select(z.columns
+      .filter(f => named(f.drop(f.indexOf('_') + 1))).map(col): _*)
+    val p = pruner(read.schema, meta, cnf)
+    val keep = udf((r: Row) => p.keep(r))
+    read.select(col(FileCol), keep(struct(read.columns.map(col): _*)).as("_keep"))
   }
 
-  /** Survivors of zone + bloom pruning among the indexed rows of `z`:
-    * ONE collect of [[pruneFrame]]'s `(file, _keep)` rows — strings and
-    * booleans only, never bloom bytes (ZoneMapSpec pins the collected
-    * schema). Returns (survivor files, all indexed files). Shared with
-    * [[graft.operators.GraftTable]], whose manifest rows have the same
-    * shape.
+  /** (survivor files, all indexed files) of `z`: ONE collect of
+    * [[pruneFrame]]'s `(file, _keep)` rows, never bloom bytes.
     */
   private[operators] def pruneZoneRows(z: DataFrame, meta: Meta,
       preds: Seq[Pred]): (Seq[String], Set[String]) =
     pruneZoneRowsCnf(z, meta, Seq(Seq(preds)))
 
-  /** [[pruneZoneRows]] over a [[Cnf]] spec — same single
-    * (file, _keep) collect. */
+  /** [[pruneZoneRows]] over a [[Cnf]] spec, for [[GraftTable]]'s bloom
+    * manifests (the same row shape). */
   private[operators] def pruneZoneRowsCnf(z: DataFrame, meta: Meta,
       cnf: Cnf): (Seq[String], Set[String]) = {
     val rows = pruneFrameCnf(z, meta, cnf).collect()
     (rows.filter(_.getBoolean(1)).map(_.getString(0)).toSeq,
       rows.map(_.getString(0)).toSet)
-  }
-
-  /** Driver-side twin of [[pruneZoneRowsCnf]] over an already-collected
-    * manifest snapshot (NON-BLOOM tables only — bloom bytes must stay
-    * executor-side): the same conservative algebra as [[survives]] /
-    * [[keepCond]], evaluated per row with zero Spark jobs. STRICTLY
-    * GATED: returns None — caller falls back to the executor path,
-    * which also owns the loud non-indexed-pred requires — whenever the
-    * table carries blooms, a pred names a non-indexed column, or a probe
-    * literal's runtime class differs from the zone value's (the executor
-    * path's Catalyst coercion has no driver twin). Comparison semantics
-    * mirror Spark's: UTF8String byte order for strings, NaN greatest and
-    * ±0.0 equal for floats.
-    */
-  private[operators] def pruneSnapCnf(schema: org.apache.spark.sql.types.StructType,
-      rows: Array[org.apache.spark.sql.Row], meta: Meta, cnf: Cnf)
-      : Option[(Seq[String], Set[String])] = {
-    if (meta.bloomCols.nonEmpty) return None
-    val names = schema.fieldNames
-    val zoned = names.collect { case f if f.startsWith("min_") => f.drop(4) }.toSet
-    val nulled = names.collect { case f if f.startsWith("nulls_") => f.drop(6) }.toSet
-    def usable(conj: Seq[Pred]): Seq[Pred] = conj.filter {
-      case Nulls(c, _) => nulled(c)
-      case _ => true
-    }
-    def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
-      case (x: java.lang.Double, y: java.lang.Double) =>
-        Some(if (x.doubleValue == y.doubleValue) 0
-             else java.lang.Double.compare(x, y))
-      case (x: java.lang.Float, y: java.lang.Float) =>
-        Some(if (x.floatValue == y.floatValue) 0
-             else java.lang.Float.compare(x, y))
-      case (x: String, y: String) =>
-        Some(org.apache.spark.unsafe.types.UTF8String.fromString(x)
-          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y)))
-      case (x: java.lang.Long, y: java.lang.Long) => Some(x.compareTo(y))
-      case (x: java.lang.Integer, y: java.lang.Integer) => Some(x.compareTo(y))
-      case (x: java.lang.Short, y: java.lang.Short) => Some(x.compareTo(y))
-      case (x: java.lang.Byte, y: java.lang.Byte) => Some(x.compareTo(y))
-      case (x: java.lang.Boolean, y: java.lang.Boolean) => Some(x.compareTo(y))
-      case _ => None
-    }
-    val fileIx = schema.fieldIndex(FileCol)
-    val ixOf = names.zipWithIndex.toMap
-    def check(r: org.apache.spark.sql.Row, p: Pred): Option[Boolean] = p match {
-      case Range(c, lo0, hi0) =>
-        if (!zoned(c)) return None
-        val mnIx = ixOf(s"min_$c"); val mxIx = ixOf(s"max_$c")
-        val lo =
-          if (lo0 == null || isNan(lo0)) Some(true)
-          else if (r.isNullAt(mxIx)) Some(false)
-          else cmp(r.get(mxIx), lo0).map(_ >= 0)
-        val hi =
-          if (hi0 == null) Some(true)
-          else if (r.isNullAt(mnIx)) Some(false)
-          else cmp(r.get(mnIx), hi0).map(_ <= 0)
-        for (a <- lo; b <- hi) yield a && b
-      case Point(c, v) =>
-        if (!zoned(c)) None // bloom-only Point or unindexed: executor path
-        else if (isNan(v)) Some(true)
-        else {
-          val mnIx = ixOf(s"min_$c"); val mxIx = ixOf(s"max_$c")
-          if (r.isNullAt(mxIx) || r.isNullAt(mnIx)) Some(false)
-          else for (a <- cmp(r.get(mxIx), v); b <- cmp(r.get(mnIx), v))
-            yield a >= 0 && b <= 0
-        }
-      case Nulls(c, want) =>
-        if (!zoned(c)) return None
-        val nlIx = ixOf(s"nulls_$c")
-        if (want) Some(!r.isNullAt(nlIx) && r.getLong(nlIx) > 0L)
-        else {
-          val cntIx = ixOf("cnt")
-          Some(!r.isNullAt(nlIx) && !r.isNullAt(cntIx) &&
-            r.getLong(cntIx) > r.getLong(nlIx))
-        }
-    }
-    def keep(r: org.apache.spark.sql.Row): Option[Boolean] =
-      if (cnf.isEmpty) Some(true)
-      else cnf.foldLeft(Option(true)) { (accO, dnf) =>
-        accO.flatMap { acc =>
-          if (dnf.isEmpty) Some(acc)
-          else dnf.foldLeft(Option(false)) { (orO, conj) =>
-            orO.flatMap { or =>
-              val preds = usable(conj)
-              if (preds.isEmpty) Some(true)
-              else preds.foldLeft(Option(true)) { (andO, p) =>
-                andO.flatMap(and => check(r, p).map(and && _))
-              }.map(or || _)
-            }
-          }.map(acc && _)
-        }
-      }
-    val survivors = Seq.newBuilder[String]
-    val all = Set.newBuilder[String]
-    rows.foreach { r =>
-      val f = r.getString(fileIx)
-      all += f
-      keep(r) match {
-        case Some(true) => survivors += f
-        case Some(false) => ()
-        case None => return None
-      }
-    }
-    Some((survivors.result(), all.result()))
   }
 
   /** File paths a pruned scan must read: indexed survivors that still
@@ -719,11 +637,13 @@ object ZoneMap {
       else append(spark, dataDir, indexPath)
     }
 
-  /** Zone-map-pruned scan of `dataPath` under `preds`: reads only the
-    * surviving files and re-applies the exact predicate. Result is
-    * row-identical to `spark.read.parquet(dataPath).filter(predicate)`
-    * under ANY index state (fresh, stale, or missing) — the index only
-    * changes how many files open.
+  /** Zone-map-pruned scan of `dataPath` under `preds`: the [[Pruner]]
+    * runs in executors over the zone rows ([[prunedFiles]]), the scan
+    * reads only the surviving files and re-applies the exact predicate.
+    * Result is row-identical to
+    * `spark.read.parquet(dataPath).filter(predicate)` under ANY index
+    * state (fresh, stale, or missing) — the index only changes how many
+    * files open.
     */
   def scan(spark: SparkSession, dataPath: String, indexPath: String,
       preds: Seq[Pred]): DataFrame = {

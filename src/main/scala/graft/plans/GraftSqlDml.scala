@@ -181,12 +181,12 @@ object GraftV2ScanStats {
     val schema = tbl.schemaAt(v)
     val colStats = tbl.columnStats(v).flatMap { case (c, mn, mx, nl) =>
       schema.find(_.name == c).flatMap { f =>
-        val nullCount = if (nl >= 0) Some(BigInt(nl)) else None
+        val nullCount = Some(BigInt(nl))
         f.dataType match {
           case _ if mn == null || mx == null => None
           case ByteType | ShortType | IntegerType | LongType =>
             val span = BigInt(mx.toString) - BigInt(mn.toString) + 1
-            val nonNull = BigInt(rows) - nullCount.getOrElse(BigInt(0))
+            val nonNull = BigInt(rows) - BigInt(nl)
             Some(c -> CatalogColumnStat(
               distinctCount = Some(span.min(nonNull).max(1)),
               min = Some(mn.toString), max = Some(mx.toString),

@@ -305,53 +305,6 @@ class CrawlSpec extends SparkSpec {
     assert(unprobed.files.length == 2 && unprobed.errors.isEmpty)
   }
 
-  /** The Spark work `body` runs under its own job group: the group's jobs
-    * and the tasks of their stages, as the status tracker reports them, and
-    * each job's description. The status tracker and a listener are fed
-    * asynchronously, each from its own ordered queue; a fence job run after
-    * `body` in a second group is polled for in both, and once both report
-    * it every earlier event of the group has landed.
-    */
-  private def sparkWork(body: => Unit): (Int, Int, Seq[String]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
-    val group = s"crawl-budget-${java.util.UUID.randomUUID}"
-    val fence = s"$group-fence"
-    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val fenced = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-        prop("spark.jobGroup.id") match {
-          case Some(`group`) => descriptions.add(prop("spark.job.description").getOrElse(""))
-          case Some(`fence`) => fenced.set(true)
-          case _ =>
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      def inGroup(g: String)(run: => Unit): Unit = {
-        sc.setJobGroup(g, g, interruptOnCancel = false)
-        try run finally sc.clearJobGroup()
-      }
-      inGroup(group)(body)
-      inGroup(fence)(sc.parallelize(Seq(1), 1).count())
-      val tracker = sc.statusTracker
-      val deadline = System.nanoTime() + 20000000000L
-      while ((!fenced.get || tracker.getJobIdsForGroup(fence).isEmpty) &&
-          System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(fenced.get && tracker.getJobIdsForGroup(fence).nonEmpty,
-        "the fence job never reached the listeners")
-      val jobs = tracker.getJobIdsForGroup(group).toSeq
-      val stages = jobs.flatMap(j => tracker.getJobInfo(j).toSeq.flatMap(_.stageIds)).distinct
-      val tasks = stages.flatMap(s => tracker.getStageInfo(s)).map(_.numCompletedTasks).sum
-      (jobs.size, tasks, descriptions.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** `n` equal-size `{"data": 1}` files spread over a three-level tree. */
   private def equalTree(prefix: String, n: Int): Path = {
     val root = Files.createTempDirectory(prefix)

@@ -1104,4 +1104,35 @@ class GraftTableSpec extends SparkSpec {
     assert(rows1 == 2000L && bytes1 > naive / 2,
       s"bytes must survive the carry-forward: $bytes1")
   }
+
+  test("job budget: scanFileCount prunes on the driver for every zone type; a bloom table runs one job") {
+    import java.sql.{Date, Timestamp}
+    val day0 = java.time.LocalDate.of(2024, 1, 1)
+    val typed = (0L until 400L).map { k =>
+      (k, new Timestamp(1700000000000L + k * 60000L),
+        java.math.BigDecimal.valueOf(k * 25L, 2), Date.valueOf(day0.plusDays(k)))
+    }.toDF("k", "ts", "m", "dt").repartitionByRange(8, col("k"))
+    val t = GraftTable.create(typed, base(), zoneCols = Seq("k", "ts", "m", "dt"))
+    val all = t.files().size // collects the manifest snapshot outside the counts
+    Seq(
+      "Int literal on a bigint" -> ZoneMap.Range("k", 10, 20),
+      "Timestamp" -> ZoneMap.Point("ts", new Timestamp(1700000000000L + 15L * 60000L)),
+      "Decimal" -> ZoneMap.Range("m", new java.math.BigDecimal("2.50"),
+        new java.math.BigDecimal("5.00")),
+      "Date" -> ZoneMap.Point("dt", Date.valueOf(day0.plusDays(15)))
+    ).foreach { case (zone, pred) =>
+      var opened = 0L
+      val (jobs, _, _) = sparkWork { opened = t.scanFileCount(Seq(pred)) }
+      assert(jobs == 0, s"$zone zone: pruning ran $jobs Spark jobs")
+      assert(opened >= 1 && opened < all, s"$zone zone: opened $opened of $all files")
+    }
+    // blooms stay in the executors: one (file, _keep) collect
+    val bt = GraftTable.create(rows(0, 400).repartition(8), base(),
+      zoneCols = Seq("v"), bloomCols = Seq("k"), bloomItems = 1000L, bloomFpp = 0.01)
+    bt.files()
+    var opened = 0L
+    val (jobs, _, _) = sparkWork { opened = bt.scanFileCount(Seq(ZoneMap.Point("k", 7L))) }
+    assert(jobs == 1, s"bloom pruning must run exactly one Spark job: $jobs")
+    assert(opened >= 1 && opened <= 3, s"the bloom must prune: opened $opened of 8 files")
+  }
 }

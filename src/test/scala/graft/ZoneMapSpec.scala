@@ -360,4 +360,89 @@ class ZoneMapSpec extends SparkSpec {
       s"an absent key must bloom-prune on a hash-scattered layout: " +
         s"${miss.size}/${all.size}")
   }
+
+  test("property: the pruner never drops a file holding a kept row; driver and executor runs agree") {
+    import java.math.{BigDecimal => JBigDecimal}
+    import java.sql.Timestamp
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    def sample[A](g: Gen[A]): A = g.pureApply(Gen.Parameters.default, Seed(42L))
+
+    // 2^53: past it, Catalyst compares bigint with double in double, and
+    // 2^53+3 equals the double 2^53+4
+    val big = 9007199254740992L
+    val t0 = 1700000000000L
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("d", DoubleType), StructField("s", StringType),
+      StructField("m", DecimalType(12, 3)), StructField("ts", TimestampType)))
+    val cols = schema.fieldNames.toSeq
+    val values: Seq[Seq[Any]] = Seq(
+      Seq(-5L, 0L, 7L, 40L, big + 1, big + 3, big + 5),
+      Seq(Double.NaN, -0.0, 0.0, 1.5, -2.25, 7.0, 1e300),
+      // U+FB01 sorts below U+1F600 in UTF-8 bytes, above it in UTF-16
+      Seq("", "a", "Z", "\u00e9", "\uFB01", "\uD83D\uDE00", "z"),
+      Seq("-12.345", "0.000", "7.000", "7.001", "40.500").map(new JBigDecimal(_)),
+      Seq(0L, 1L, 60000L, 3600000L).map(d => new Timestamp(t0 + d)))
+    val numeric: Seq[Any] = Seq(-5, 0, 7, 40, 7L, big + 2, big + 4,
+      Double.NaN, -0.0, 0.0, 1.5, 7.0, (big + 2).toDouble, (big + 4).toDouble,
+      new JBigDecimal("7.000"), new JBigDecimal("-12.35"), new JBigDecimal("1.50"))
+    val literals: Map[String, Seq[Any]] = Map("k" -> numeric, "d" -> numeric,
+      "m" -> numeric, "s" -> (values(2) ++ Seq("b", "\u00e0")),
+      "ts" -> (values(4) ++ Seq(new Timestamp(t0 - 1000L), new Timestamp(t0 + 30000L))))
+
+    // 14 files of 1-5 rows: each column is null in some rows and
+    // all-null in some files
+    val fileGen: Gen[Seq[Row]] = for {
+      dead <- Gen.listOfN(cols.size, Gen.frequency(1 -> true, 5 -> false))
+      n <- Gen.chooseNum(1, 5)
+      rows <- Gen.listOfN(n, Gen.sequence[List[Any], Any](
+        values.zip(dead).map { case (vs, allNull) =>
+          if (allNull) Gen.const(null)
+          else Gen.frequency(1 -> Gen.const(null), 6 -> Gen.oneOf(vs))
+        }))
+    } yield rows.map(Row.fromSeq)
+    val files = sample(Gen.listOfN(14, fileGen))
+    val (data, _) = mkDirs()
+    spark.createDataFrame(spark.sparkContext.parallelize(files.indices, files.size)
+      .flatMap(i => files(i)), schema).write.parquet(data)
+    val df = spark.read.parquet(data)
+    val bloomCols = Seq("k", "s")
+    val z = ZoneMap.zoneRows(df, cols, bloomCols, 1000L, 0.01).localCheckpoint(true)
+    val meta = ZoneMap.Meta(cols, bloomCols, 1000L, 0.01,
+      cols.map(c => c -> schema(c).dataType.sql).toMap)
+
+    val predGen: Gen[ZoneMap.Pred] = Gen.oneOf(cols).flatMap { c =>
+      val lit = Gen.oneOf(literals(c))
+      Gen.oneOf(
+        for (lo <- lit; hi <- lit; side <- Gen.chooseNum(0, 2)) yield side match {
+          case 0 => ZoneMap.Range(c, lo = lo)
+          case 1 => ZoneMap.Range(c, hi = hi)
+          case _ => ZoneMap.Range(c, lo, hi)
+        },
+        lit.map(ZoneMap.Point(c, _)),
+        Gen.oneOf(true, false).map(ZoneMap.Nulls(c, _)))
+    }
+    def nonEmpty[A](g: Gen[A]) = Gen.chooseNum(1, 3).flatMap(Gen.listOfN(_, g))
+    val cnfs = sample(Gen.listOfN(120, nonEmpty(nonEmpty(nonEmpty(predGen)))))
+
+    // the files holding a row each spec keeps, in one pass over the data
+    val held = df.select(ZoneMap.canonical(input_file_name()) +:
+      cnfs.map(cnf => coalesce(cnf.map(_.map(ZoneMap.predicate).reduce(_ || _))
+        .reduce(_ && _), lit(false))): _*).collect()
+    val zoneRows = z.collect()
+    var pruned = 0
+    cnfs.zipWithIndex.foreach { case (cnf, i) =>
+      val want = held.filter(_.getBoolean(i + 1)).map(_.getString(0)).toSet
+      val (executor, all) = ZoneMap.pruneZoneRowsCnf(z, meta, cnf)
+      val (driver, _) = ZoneMap.pruner(z.schema, meta, cnf).survivors(zoneRows)
+      assert(want.subsetOf(executor.toSet),
+        s"$cnf pruned files holding kept rows: ${want -- executor}")
+      assert(driver.sorted == executor.sorted,
+        s"$cnf: driver kept ${driver.sorted}, executors kept ${executor.sorted}")
+      pruned += all.size - executor.size
+    }
+    assert(pruned > cnfs.size, s"the specs must prune, not keep everything: $pruned")
+  }
 }
