@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
+import scala.util.Using
 import graft.functions.MonoidAggregator
 import graft.sources.{Bfs, Crawl}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -8,7 +9,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 /** Reference-parity goldens for the crawl pipeline.
   *
   * Mirrors the reference's own test strategy (SURVEY.md §5):
-  *  - demo golden: sum over `tests/` fixtures = 300 (`cmd/app/app.go:54`)
+  *  - demo golden: sum over the reference's `tests/` fixtures = 300
+  *    (`cmd/app/app.go:54`), read from the committed copy under
+  *    `src/test/resources/reference/tests` (three `{"data": 100}` files at
+  *    depths 2, 3 and 4; FIXTURES.md §1)
   *  - real-FS golden: 10 dirs × 10 files of {"data":1} = 100
   *    (`internal/filecrawler/crawler_test.go:64-107`)
   *  - error injection: malformed file ⇒ zero-value substitution + first
@@ -20,9 +24,21 @@ case class Rec(data: Long)
 class CrawlSpec extends SparkSpec {
   private val schema = StructType(Seq(StructField("data", LongType)))
 
+  /** The reference's demo fixture tree, as a local path off the test classpath.
+    * An incremental build keeps the copied directories of deleted resources,
+    * so the tree must also hold a file, not just resolve.
+    */
+  private lazy val referenceTests: String = {
+    val root = Option(getClass.getResource("/reference/tests")).map(u => Paths.get(u.toURI))
+    require(root.exists(r => Using.resource(Files.walk(r))(_.anyMatch(p => Files.isRegularFile(p)))),
+      "fixture tree reference/tests is missing from the test classpath " +
+        "(expected under src/test/resources/reference/tests)")
+    root.get.toString
+  }
+
   test("golden: reference demo fixtures sum to 300 (app.go:54)") {
     import spark.implicits._
-    val res = Crawl.collect[Rec, Long](spark, "/root/reference/tests", schema,
+    val res = Crawl.collect[Rec, Long](spark, referenceTests, schema,
       MonoidAggregator.sumLong[Rec](_.data))
     assert(res.result == 300L)
     assert(res.corruptFiles == 0L)
@@ -189,7 +205,7 @@ class CrawlSpec extends SparkSpec {
 
   test("typed crawl decodes nested depths recursively") {
     import spark.implicits._
-    val ds = Crawl.crawl[Rec](spark, "/root/reference/tests", schema)
+    val ds = Crawl.crawl[Rec](spark, referenceTests, schema)
     assert(ds.collect().map(_.data).sorted.toSeq == Seq(100L, 100L, 100L))
   }
 
