@@ -513,10 +513,10 @@ private[graft] object EntryExt {
       .toString.replace("-", "")}"
 
   /** `DELETE FROM … WHERE …` as SQL TEXT through the DSv2 catalog
-    * ([[graft.sources.GraftCatalog]] → `SupportsDelete.deleteWhere` →
+    * ([[graft.sources.GraftCatalog]] → [[graft.plans.GraftSqlDml]] →
     * the zone-pruned transactional rewrite): CREATE TABLE + INSERT INTO
-    * land the key-clustered events, the DELETE's WHERE routes through
-    * Spark's own filter translation, and the commit is [[qDeleteWhere]]'s
+    * land the key-clustered events, the DELETE's resolved WHERE prunes
+    * through the engine's one Catalyst translator, and the commit is [[qDeleteWhere]]'s
     * — pruned rewrite (required in-body: untouched files carry across
     * the commit), exact delete-only change slice (required in-body).
     * Same set algebra, same oracle as `q_delete_where`.
@@ -557,7 +557,7 @@ private[graft] object EntryExt {
   /** `UPDATE … SET … WHERE …` as SQL TEXT: Spark's connector API has no
     * non-row-level UPDATE contract, so the resolved plan routes through
     * the injected rule ([[graft.plans.GraftSqlDml]]) onto
-    * [[graft.operators.GraftTable.dmlWhere]] — the WHERE's literal
+    * [[graft.operators.GraftTable.dmlWhereCnf]] — the WHERE's literal
     * conjuncts prune the rewrite (required in-body via the command's
     * (files_rewritten, files_carried) result), SET expressions evaluate
     * against current row values. Same arithmetic, same oracle as

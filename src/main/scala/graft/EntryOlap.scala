@@ -126,9 +126,25 @@ private[graft] object EntryOlap {
     * reference's own fixture tree; golden result 300 (`cmd/app/app.go:54`).
     */
   private[graft] def q15(s: SparkSession, d: String): DataFrame =
-    Crawl.crawlRaw(s, "/root/reference/tests",
+    Crawl.crawlRaw(s, referenceTests,
         StructType(Seq(StructField("data", LongType))))
       .agg(sum("data").as("s"))
+
+  /** The reference's demo fixture tree as the repository commits it,
+    * `src/test/resources/reference/tests`, in the nearest directory
+    * above the engine's classes that holds it: the repository they were
+    * built in, whether the mains run from `target/scala-2.13/classes` or
+    * from a copy sbt made under `target`. Elsewhere, relative to the
+    * working directory.
+    */
+  private[graft] lazy val referenceTests: String = {
+    val tree = "src/test/resources/reference/tests"
+    val classes = java.nio.file.Paths.get(
+      getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    Iterator.iterate(classes)(_.getParent).takeWhile(_ != null)
+      .map(_.resolve(tree)).find(java.nio.file.Files.isDirectory(_))
+      .getOrElse(java.nio.file.Paths.get(tree).toAbsolutePath).toString
+  }
 
   /** Typed monoid aggregation through the MonoidAggregator kernel (O3+O4). */
   private[graft] def q16(s: SparkSession, d: String): DataFrame = {

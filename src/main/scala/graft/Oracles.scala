@@ -258,7 +258,8 @@ private[graft] object Oracles {
         |  SELECT unnest(string_split(text, ' ')) AS token FROM documents)
         |WHERE token <> '' GROUP BY 1 ORDER BY c DESC, token LIMIT 20""".stripMargin,
     "q15_crawl" ->
-      "SELECT CAST(SUM(data) AS BIGINT) AS s FROM read_json_auto('/root/reference/tests/**/*.json')",
+      ("SELECT CAST(SUM(data) AS BIGINT) AS s FROM " +
+        s"read_json_auto('${EntryOlap.referenceTests}/**/*.json')"),
     "q16_monoid" ->
       "SELECT ROUND(SUM(l_quantity), 1) AS s FROM lineitem",
     "q17_rollup" ->

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import graft.sources.GraftFileIndex
 
 /** The unified table: data files + zone statistics + layout committed as
   * ONE atomic version — the composition of [[Compaction]], [[Layout]]
@@ -750,14 +751,11 @@ object GraftTable {
       spark.createDataFrame(rs.asJava, footerSchema)
     }
     lazy val fresh = footerFresh.getOrElse {
-      // an all-delete merge can land a generation with ZERO data files —
-      // the zone-row schema still has to come from somewhere, so derive it
-      // from the (empty) generation rows instead of a zero-path read
-      // schema pinned from the rows just written: skips the read-back's
-      // driver-side footer inference — the generation IS that schema
-      val genRows =
-        if (files.isEmpty) rows.limit(0)
-        else spark.read.schema(rows.schema).parquet(files.map(_._1): _*)
+      // the files just listed, read back under the schema they were
+      // written with; an all-delete merge's generation of ZERO files
+      // reads as an empty frame of that schema
+      val genRows = spark.baseRelationToDataFrame(GraftFileIndex.relation(
+        spark, gen, files, None, rows.schema))
       import spark.implicits._
       // REAL on-disk bytes per file, joined onto the zone rows (both
       // metadata-scale) before relativization: size estimation must never
@@ -778,10 +776,9 @@ object GraftTable {
       ManifestIo.write(spark, s"$staging/manifest", ms, mr) }
     if (!wroteDriver) {
       val manifest = carryForward match {
-        // allowMissingColumns: a carried manifest committed before the
-        // `bytes` column reads back null there — approxStats falls back to
-        // rows × width for exactly those rows
-        case Some(prev) => prev.unionByName(fresh, allowMissingColumns = true)
+        // by name: both sides carry the same zone, null-count and bytes
+        // columns, each in its writer's order
+        case Some(prev) => prev.unionByName(fresh)
         case None => fresh
       }
       labeled(spark, s"graft:publish:manifest v$v ($op)") {
@@ -909,12 +906,33 @@ final class GraftTable private[operators] (spark: SparkSession,
     require(versions().contains(v),
       s"version $v is not committed/retained under $path " +
         s"(retained: ${versions().mkString(", ")})")
-    val m = readMeta(spark, path, v)
-    val fl = storedFiles(v).map(resolve)
-    if (fl.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-    else spark.read.schema(m.schema).parquet(fl: _*)
+    frame(v)
   }
+
+  /** Version `v`'s data — optionally only the `stripe` of its stored
+    * files, under a `schema` other than the version's own — through the
+    * version-pinned [[graft.sources.GraftFileIndex]]: every table data
+    * read plans through it, and the filters Catalyst pushes to the scan
+    * prune the version's manifest there.
+    */
+  private[graft] def relation(v: Long, stripe: Option[Set[String]] = None,
+      schema: Option[StructType] = None)
+      : org.apache.spark.sql.execution.datasources.HadoopFsRelation = {
+    // the meta is read now: a frame planned after a later commit pruned
+    // version v still prunes (and reads) v's own files
+    val m = readMeta(spark, path, v)
+    val (s, rows) = manifestSnap(v)
+    val (fIx, bIx) = (s.fieldIndex("file"), s.fieldIndex("bytes"))
+    val files = rows.toSeq.map(r => (r.getString(fIx), r.getLong(bIx)))
+      .filter(f => stripe.forall(_(f._1)))
+      .map { case (f, bytes) => (resolve(f), bytes) }
+    GraftFileIndex.relation(spark, path, files,
+      Some(cnf => pruneFilesCnf(v, m, cnf)), schema.getOrElse(m.schema))
+  }
+
+  private def frame(v: Long, stripe: Option[Set[String]] = None,
+      schema: Option[StructType] = None): DataFrame =
+    spark.baseRelationToDataFrame(relation(v, stripe, schema))
 
   private def metaNow: Meta = readMeta(spark, path, version)
 
@@ -1038,21 +1056,23 @@ final class GraftTable private[operators] (spark: SparkSession,
       ZoneMap.pruner(schema, m.zoneMeta, cnf).survivors(rows)
     } else ZoneMap.pruneZoneRowsCnf(manifestDf(v), m.zoneMeta, cnf)
 
-  /** Zone-and-bloom-pruned scan under `preds`: manifest rows prune to
-    * the surviving file list ([[pruneVersion]] — on the driver with zero
-    * Spark jobs unless the table carries blooms; conservative by
-    * construction) and the exact predicate re-applies on read — result
-    * is row-identical to `read().filter(ZoneMap.predicate(preds))` at
-    * every version, pruning only changes how many files open.
+  /** Zone-and-bloom-pruned scan under `preds`: the current version
+    * filtered by `ZoneMap.predicate(preds)`. Catalyst hands those
+    * predicates to the version's file index, which prunes the manifest
+    * ([[pruneFilesCnf]] — on the driver with zero Spark jobs unless the
+    * table carries blooms; conservative by construction), and the exact
+    * predicate re-applies on read — the result is row-identical to
+    * `read().filter(ZoneMap.predicate(preds))`, pruning only changes how
+    * many files open.
     */
   def scan(preds: Seq[ZoneMap.Pred]): DataFrame = {
     require(preds.nonEmpty, "GraftTable.scan needs at least one predicate")
-    val m = metaNow
-    val (survivors, _) = pruneVersion(version, m, Seq(Seq(preds)))
-    if (survivors.isEmpty)
-      read().filter(lit(false)) // schema-only, zero splits read
-    else spark.read.schema(m.schema).parquet(survivors.map(resolve): _*)
-      .filter(ZoneMap.predicate(preds))
+    val v = version
+    val m = readMeta(spark, path, v)
+    // compiled only for its loud checks: every pred names an indexed
+    // column and a value that column can hold
+    ZoneMap.pruner(manifestSnap(v)._1, m.zoneMeta, Seq(Seq(preds)))
+    frame(v).filter(ZoneMap.predicate(preds))
   }
 
   /** How many files a scan under `preds` would open — the observability
@@ -1062,35 +1082,25 @@ final class GraftTable private[operators] (spark: SparkSession,
   def scanFileCount(preds: Seq[ZoneMap.Pred]): Long =
     pruneVersion(version, metaNow, Seq(Seq(preds)))._1.size.toLong
 
-  /** The files a pruned scan of VERSION `v` must open (resolved), with
-    * the total file count — the version-pinned planning primitive behind
-    * the SQL read path ([[graft.sources.GraftTableSource]]), whose
-    * relation is a snapshot of the version it loaded. The spec is a
-    * [[ZoneMap.Cnf]] (AND across pushed filters, OR-groups inside), so
-    * AND trees, OR trees and IN lists all prune: each OR-group keeps the
-    * union of its disjuncts' survivors, groups compose by intersection.
-    * Predicates on columns the table does not index are DROPPED here,
-    * not refused — Catalyst pushes every comparison filter it sees, and
-    * an unindexable check simply cannot prune; per-conjunct drops and
-    * whole-group drops both WIDEN the read, and the engine's re-applied
-    * residual keeps the result exact ([[scan]], the hand-held API,
-    * still refuses loudly — a caller naming a pred explicitly should
-    * learn it does nothing). An empty / fully-dropped spec skips
-    * pruning (full manifest).
+  /** The files a pruned scan of VERSION `v` must open (resolved), or
+    * None when nothing in the spec can prune — the planning primitive
+    * every read's [[graft.sources.GraftFileIndex]] lists through. The
+    * spec is a [[ZoneMap.Cnf]] (AND across pushed filters, OR-groups
+    * inside), so AND trees, OR trees and IN lists all prune: each
+    * OR-group keeps the union of its disjuncts' survivors, groups
+    * compose by intersection. Predicates on columns the table does not
+    * index are DROPPED here, not refused — Catalyst pushes every
+    * comparison filter it sees, and an unindexable check simply cannot
+    * prune; per-conjunct drops and whole-group drops both WIDEN the
+    * read, and the engine's re-applied residual keeps the result exact
+    * ([[scan]], the hand-held API, still refuses loudly — a caller
+    * naming a pred explicitly should learn it does nothing).
     */
-  private[graft] def pruneFilesCnf(v: Long, cnf: ZoneMap.Cnf)
-      : (Seq[String], Int) = {
-    lazy val m = readMeta(spark, path, v)
-    val usable = if (cnf.isEmpty) Nil else usableCnf(m, cnf)
-    if (usable.isEmpty) {
-      val all = storedFiles(v)
-      (all.map(resolve), all.size)
-    } else {
-      // the pruning pass already carries every manifest row — the
-      // total file count reads off it, no second manifest pass
-      val (survivors, all) = pruneVersion(v, m, usable)
-      (survivors.map(resolve), all.size)
-    }
+  private def pruneFilesCnf(v: Long, m: Meta, cnf: ZoneMap.Cnf)
+      : Option[Set[String]] = {
+    val usable = usableCnf(m, cnf)
+    if (usable.isEmpty) None
+    else Some(pruneVersion(v, m, usable)._1.map(resolve).toSet)
   }
 
   /** Drop what the version's index cannot check from a pruning spec —
@@ -1120,13 +1130,12 @@ final class GraftTable private[operators] (spark: SparkSession,
     * size themselves — never rows × schema width, which UNDER-estimates
     * string-heavy tables (StringType.defaultSize is 20 bytes) and a
     * too-small size broadcasts what should shuffle (driver OOM, the
-    * unsafe direction). Manifest rows committed before the `bytes`
-    * column fall back to rows × width for just those rows.
+    * unsafe direction). Every manifest writer records `bytes` for every
+    * row.
     *
-    * This feeds `BaseRelation.sizeInBytes` (DSv1) and the V2 scan's
-    * `SupportsReportStatistics`: without it Catalyst assumes
-    * `defaultSizeInBytes` (≈ Long.Max) and a metadata-sized graft
-    * dimension joined to a 100 TB fact would NEVER auto-broadcast.
+    * This sizes compaction and feeds the CBO `CatalogTable` of catalog
+    * reads; a read's plan size is the same byte total, summed by its
+    * [[graft.sources.GraftFileIndex]].
     *
     * A committed version's manifest is IMMUTABLE, so the answer is
     * folded once PROCESS-WIDE (see [[GraftTable.statsCacheG]]): the
@@ -1143,24 +1152,18 @@ final class GraftTable private[operators] (spark: SparkSession,
     }
   }
 
-  /** Driver fold over the manifest snapshot — same algebra as the
-    * former `sum(cnt), sum(coalesce(bytes, cnt*width))` aggregate, zero
-    * Spark jobs.
+  /** Driver fold over the manifest snapshot: `sum(cnt), sum(bytes)`,
+    * zero Spark jobs.
     */
   private def approxStatsUncached(v: Long): (Long, Long) = {
     val (schema, rowsArr) = manifestSnap(v)
-    val width = math.max(1, schemaAt(v).defaultSize)
     val cntIx = schema.fieldIndex("cnt")
-    val bytesIx =
-      if (schema.fieldNames.contains("bytes")) schema.fieldIndex("bytes")
-      else -1
+    val bytesIx = schema.fieldIndex("bytes")
     var rows = 0L
     var raw = 0L
     rowsArr.foreach { r =>
-      val c = if (r.isNullAt(cntIx)) 0L else r.getLong(cntIx)
-      rows += c
-      raw += (if (bytesIx >= 0 && !r.isNullAt(bytesIx)) r.getLong(bytesIx)
-              else c * width.toLong)
+      rows += (if (r.isNullAt(cntIx)) 0L else r.getLong(cntIx))
+      raw += r.getLong(bytesIx)
     }
     val factor = scala.util.Try(spark.conf
       .get("spark.sql.sources.fileCompressionFactor", "1.0").toDouble)
@@ -1168,8 +1171,6 @@ final class GraftTable private[operators] (spark: SparkSession,
     val b = BigInt((raw * math.max(1.0, factor)).toLong)
     (rows, if (b > Long.MaxValue) Long.MaxValue else b.toLong)
   }
-
-  private[graft] def approxBytes(v: Long): Long = approxStats(v)._2
 
   /** Per-ZONE-COLUMN plan statistics of version `v` — ONE metadata fold
     * over the manifest: global min/max from the per-file zone ranges,
@@ -1601,8 +1602,7 @@ final class GraftTable private[operators] (spark: SparkSession,
       val stored =
         if (affected.isEmpty) None
         else {
-          val st = spark.read.schema(evolved)
-            .parquet(affected.toSeq.map(resolve): _*)
+          val st = frame(v, Some(affected), Some(evolved))
           Some(if (m.changeFeed) st.persist(
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else st)
         }
@@ -1860,20 +1860,13 @@ final class GraftTable private[operators] (spark: SparkSession,
 
 
   /** The SQL front door's DML body ([[graft.plans]] routes `DELETE
-    * FROM`/`UPDATE` here): `preds` is best-effort pruning ONLY — preds
-    * on non-indexed columns are dropped, an empty survivor set means a
-    * full-manifest rewrite candidacy — and `extra` carries the EXACT
-    * SQL condition, so correctness never depends on what pruned (the
-    * [[graft.sources.GraftTableSource]] discipline). The hand-held
+    * FROM`/`UPDATE` here): `cnf` is best-effort pruning ONLY — OR/IN
+    * trees prune per-disjunct and union ([[pruneFilesCnf]]'s algebra),
+    * preds on non-indexed columns are dropped, an empty survivor set
+    * means a full-manifest rewrite candidacy — and `extra` carries the
+    * EXACT SQL condition, so correctness never depends on what pruned
+    * (the [[graft.sources.GraftFileIndex]] discipline). The hand-held
     * [[delete]]/[[update]] keep their loud non-empty/indexed contract.
-    */
-  private[graft] def dmlWhere(preds: Seq[ZoneMap.Pred], extra: Column,
-      set: Option[Map[String, Column]]): DmlResult =
-    dmlWhereCnf(preds.map(p => Seq(Seq(p))), extra, set)
-
-  /** [[dmlWhere]] with a [[ZoneMap.Cnf]] pruning spec — the SQL door's
-    * OR/IN trees prune per-disjunct and union ([[pruneFilesCnf]]'s
-    * algebra); `extra` stays the one EXACT condition.
     */
   private[graft] def dmlWhereCnf(cnf: ZoneMap.Cnf, extra: Column,
       set: Option[Map[String, Column]]): DmlResult =
@@ -1912,8 +1905,7 @@ final class GraftTable private[operators] (spark: SparkSession,
       // change slice — 2-3 evaluations; a LAZY persist lets the gate's
       // count populate the cache in the pass it pays anyway (no extra
       // job) and the later consumers read it back. Released per attempt.
-      val stored = spark.read.schema(m.schema)
-        .parquet(affected.toSeq.map(resolve): _*)
+      val stored = frame(v, Some(affected))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
       val (rewritten, slice) = set match {
@@ -2113,13 +2105,14 @@ final class GraftTable private[operators] (spark: SparkSession,
       else {
         val prev = fileSet(w - 1)
         val cur = fileSet(w)
-        def part(fl: Seq[String], tpe: String): Option[DataFrame] =
+        // each side read through the version that lists it (version 0,
+        // before the first commit, lists nothing)
+        def part(of: Long, fl: Set[String], tpe: String): Option[DataFrame] =
           if (fl.isEmpty) None
-          else Some(spark.read.schema(m.schema).parquet(fl.map(resolve): _*)
+          else Some(frame(of, Some(fl), Some(m.schema))
             .withColumn(ChangeType, lit(tpe))
             .withColumn("_commit_version", lit(w)))
-        part((prev -- cur).toSeq.sorted, "delete") ++
-          part((cur -- prev).toSeq.sorted, "insert")
+        part(w - 1, prev -- cur, "delete") ++ part(w, cur -- prev, "insert")
       }
     }
     if (parts.isEmpty)
@@ -2216,8 +2209,8 @@ final class GraftTable private[operators] (spark: SparkSession,
     require(targetRows > 0, s"targetRows must be positive: $targetRows")
     val v = version
     val m = readMeta(spark, path, v)
-    val before = files()
-    val df = spark.read.schema(m.schema).parquet(before: _*)
+    val before = storedFiles(v).size.toLong
+    val df = frame(v)
     // the manifest already records the EXACT per-file row count (`cnt`)
     // — sizing the relayout from its sum ([[approxStats]], cached) costs
     // one metadata fold instead of a full count() scan of the table
@@ -2234,7 +2227,7 @@ final class GraftTable private[operators] (spark: SparkSession,
     publishGeneration(spark, path, out, v + 1,
       m.copy(layoutCols = sortCols), carryForward = None,
       changesEmpty = true, op = "compact")
-    (before.size.toLong, files().size.toLong)
+    (before, files().size.toLong)
   }
 
   /** REPLACE the table's rows atomically (`SaveMode.Overwrite` through
@@ -2280,8 +2273,7 @@ final class GraftTable private[operators] (spark: SparkSession,
     val carried = manifestDf(v)
       .filter(!col("file").isInCollection(affected))
     val carriedCount = storedFiles(v).size.toLong - affected.size
-    val df = spark.read.schema(m.schema)
-      .parquet(affected.toSeq.map(resolve): _*)
+    val df = frame(v, Some(affected))
     // stripe row count from the manifest's exact per-file `cnt` — one
     // metadata-scale aggregate instead of a full count() of the stripe
     val rowsRow = manifestDf(v).filter(col("file").isInCollection(affected))
@@ -2336,7 +2328,7 @@ final class GraftTable private[operators] (spark: SparkSession,
     require(nFiles > 0, s"nFiles must be positive: $nFiles")
     val v = version
     val m = readMeta(spark, path, v)
-    val df = spark.read.schema(m.schema).parquet(files(): _*)
+    val df = frame(v)
     // global (min, max) per curve column from the MANIFEST when every
     // column is zone-indexed and numeric (min-of-mins/max-of-maxes is the
     // global bound; cast monotone) — one metadata fold replaces the full

@@ -39,15 +39,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Optimizer rule: users who write the composable HOF cosine get the
     // fused native kernel automatically (see RewriteCosine).
     ext.injectOptimizerRule(_ => RewriteCosine)
-    // SQL DML front door: UPDATE / MERGE INTO on graft-catalog tables
-    // route to the table's transactional machinery (Spark's connector
-    // API has no non-row-level contract for them — see GraftSqlDml).
+    // SQL DML front door: DELETE / UPDATE / MERGE INTO on graft-catalog
+    // tables route to the table's transactional machinery (Spark's
+    // connector API has no non-row-level contract for them — see
+    // GraftSqlDml).
     ext.injectPostHocResolutionRule(_ => GraftSqlDml)
-    // Statistics for the catalog read path: V1ScanWrapper hides the
-    // scan's estimate from computeStats, so a pre-CBO rule (runs after
-    // V2ScanRelationPushDown, before join planning) rebuilds graft V2
-    // scan relations as LogicalRelations whose sizeInBytes is the
-    // manifest-derived real-byte estimate (see GraftV2ScanStats).
+    // The catalog read path: a pre-CBO rule (runs before the V2 pushdown
+    // batch) plans graft catalog reads, under INSERT/CTAS too, as the
+    // version's file-index relation every table read uses — pruning,
+    // statistics and snapshot pinning in one place (see
+    // GraftV2ScanStats). Catalog reads need it.
     ext.injectPreCBORule(spark => GraftV2ScanStats(spark))
   }
 }

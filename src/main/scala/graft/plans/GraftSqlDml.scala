@@ -5,31 +5,33 @@ import graft.sources.GraftTableV2
 import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute,
-  AttributeReference, EqualTo, Expression, GreaterThan,
-  GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, Or}
+  AttributeReference, BinaryComparison, Cast, EqualNullSafe, EqualTo,
+  Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull,
+  LessThan, LessThanOrEqual, Literal, Or}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment,
-  DeleteAction, InsertAction, LogicalPlan, MergeIntoTable, SubqueryAlias,
-  UpdateAction, UpdateTable}
+  DeleteAction, DeleteFromTable, InsertAction, LogicalPlan, MergeIntoTable,
+  SubqueryAlias, UpdateAction, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graft.{CatalystBridge, ColumnBridge,
   PlanBridge}
+import org.apache.spark.sql.types.{DateType, NumericType, TimestampNTZType,
+  TimestampType}
 
 /** The SQL DML front door for graft-catalog tables: Spark's connector
   * API has no non-row-level contract for `UPDATE` and `MERGE INTO` (a
   * table must implement `SupportsRowLevelOperations` and accept the
   * engine's group-rewrite plans), so this POST-HOC RESOLUTION rule —
   * injected by [[GraftExtensions]] — rewrites the RESOLVED
-  * `UpdateTable`/`MergeIntoTable` plans over a [[GraftTableV2]] into
-  * commands on the table's own transactional machinery
-  * ([[GraftTable!.update]]'s pruned rewrite, [[GraftTable!.mergeCond]]'s
-  * pruned conditional merge). The analyzer's own row-level rewrites run
-  * in the Resolution batch but leave non-row-level tables untouched, so
-  * by post-hoc time these plans are exactly what the user wrote,
-  * resolved. `DELETE FROM` never reaches here — [[GraftTableV2]] serves
-  * it natively through `SupportsDelete`.
+  * `DeleteFromTable`/`UpdateTable`/`MergeIntoTable` plans over a
+  * [[GraftTableV2]] into commands on the table's own transactional
+  * machinery ([[GraftTable!.dmlWhereCnf]]'s pruned rewrite for DELETE
+  * and UPDATE, [[GraftTable!.mergeSpec]]'s pruned merge). The analyzer's
+  * own row-level rewrites run in the Resolution batch but leave
+  * non-row-level tables untouched, so by post-hoc time these plans are
+  * exactly what the user wrote, resolved.
   *
   * Supported MERGE shapes (the engine's merge semantics; anything else
   * refuses loudly with the API route):
@@ -57,11 +59,16 @@ object GraftSqlDml extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperators {
+      case d @ DeleteFromTable(table, condition) if d.resolved =>
+        graftTarget(table) match {
+          case Some((_, v2)) =>
+            GraftWhereCommand(v2.tablePath, None, Some(condition))
+          case None => d
+        }
       case u @ UpdateTable(table, assignments, condition) if u.resolved =>
         graftTarget(table) match {
-          case Some((rel, v2)) =>
-            GraftUpdateCommand(v2.tablePath, rel.output, assignments,
-              condition)
+          case Some((_, v2)) =>
+            GraftWhereCommand(v2.tablePath, Some(assignments), condition)
           case None => u
         }
       case m: MergeIntoTable if m.resolved =>
@@ -103,38 +110,29 @@ object GraftSqlDml extends Rule[LogicalPlan] {
   }
 }
 
-/** Pre-CBO STATISTICS + planning rule for the catalog READ path: the
-  * optimizer wraps every `V1Scan` in a stats-opaque `V1ScanWrapper`, so
-  * a graft catalog table would report `defaultSizeInBytes` (~ Long.Max)
-  * and a 1,000-row dimension would NEVER auto-broadcast through SQL
-  * text. This rule -- injected at the pre-CBO hook, which runs before
-  * the V2 pushdown batch and before join planning -- rewrites a
-  * catalog-resolved graft READ relation into the classic
-  * `LogicalRelation` over the SAME [[graft.sources.GraftTableRelation]]
-  * the path-based reader uses (identical output attributes, identical
-  * pruned `buildScan`), so the SQL-text door gets the DSv1 path's
-  * whole discipline in one hop: `sizeInBytes` = the manifest-derived
-  * real-byte estimate (auto-broadcast works), filter/column pushdown
-  * via `PrunedFilteredScan` (manifest pruning included), snapshot
-  * pinning via the relation's version. Command plans are left
-  * untouched: INSERT/DELETE/UPDATE/MERGE targets must stay V2
-  * relations for their connector contracts (`V1Write`,
-  * `SupportsDelete`, the DML rule) to fire -- only pure reads convert.
-  * A session without the extensions still reads correctly through the
-  * [[graft.sources.GraftV1Scan]] bridge; it just plans without
-  * statistics.
+/** Pre-CBO planning rule for the catalog READ path: rewrites every
+  * catalog-resolved graft relation a plan reads — a query, or the
+  * SELECT under an INSERT / CTAS — into a `LogicalRelation` over its
+  * pinned version's `HadoopFsRelation` ([[graft.sources.GraftFileIndex]]),
+  * with the relation's output attributes kept. The catalog then reads
+  * exactly as the path reader and the table API do: Spark's file-source
+  * strategy pushes the filters into the index's manifest pruning and the
+  * parquet reader, and the relation's size is the manifest's real-byte
+  * total, so a metadata-sized dimension auto-broadcasts. The rule runs
+  * before the V2 pushdown batch, so the connector scan builder is never
+  * asked for. Write targets are not children of their commands and stay
+  * V2, as do the targets of DELETE / UPDATE / MERGE that
+  * [[GraftSqlDml]] did not rewrite.
   */
 final case class GraftV2ScanStats(spark: SparkSession)
   extends Rule[LogicalPlan] {
 
-  import org.apache.spark.sql.catalyst.plans.logical.Command
   import org.apache.spark.sql.execution.datasources.LogicalRelation
-  import graft.sources.GraftTableRelation
 
   // transform, not resolveOperators: optimizer-time plans are all
   // marked analyzed, and resolveOperators skips analyzed subtrees
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
-    case _: Command => plan
+    case _: DeleteFromTable | _: UpdateTable | _: MergeIntoTable => plan
     case _ => plan.transform {
       case r: DataSourceV2Relation if r.table.isInstanceOf[GraftTableV2] =>
         val v2 = r.table.asInstanceOf[GraftTableV2]
@@ -149,9 +147,7 @@ final case class GraftV2ScanStats(spark: SparkSession)
           if (spark.sessionState.conf.cboEnabled)
             Some(GraftV2ScanStats.cboCatalogTable(v2))
           else None
-        LogicalRelation(
-          new GraftTableRelation(spark.sqlContext, v2.tbl,
-            v2.snapshotVersion),
+        LogicalRelation(v2.tbl.relation(v2.snapshotVersion),
           r.output, ct, isStreaming = false, None)
     }
   }
@@ -210,7 +206,7 @@ object GraftV2ScanStats {
   }
 }
 
-private[plans] object DmlExpr {
+private[graft] object DmlExpr {
 
   /** Re-anchor a resolved expression on plain column names so it can
     * evaluate against the table's stored DataFrame (fresh exprIds).
@@ -220,22 +216,24 @@ private[plans] object DmlExpr {
       case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
     })
 
-  /** Scala-space literal value (Catalyst internals like UTF8String must
-    * not leak into `lit()`/[[ZoneMap.Pred]]s).
+  /** The one Catalyst → [[ZoneMap.Cnf]] translator: the data filters a
+    * scan pushes to its [[graft.sources.GraftFileIndex]], a DML WHERE and
+    * a compact WHERE all prune through it. Best-effort and conservative,
+    * in CNF (`GraftTable.pruneFilesCnf`'s algebra): AND
+    * over the conditions' top-level conjuncts, OR-groups inside. Each OR
+    * arm prunes independently and unions; an IN list, and the InSet
+    * Catalyst plans a long one as, expands to one Point per non-null
+    * value; strict bounds widen to inclusive; an unknown shape widens its
+    * group to no-prune. Exactness always rides the full residual.
     */
-  private def scalaV(l: Literal): Any =
-    CatalystBridge.toScala(l.value, l.dataType)
-
-  /** Best-effort prunable spec of a resolved condition, in CNF (AND
-    * over the WHERE's top-level conjuncts, OR-groups inside —
-    * [[graft.operators.GraftTable.pruneFilesCnf]]'s algebra): each OR
-    * arm prunes independently and unions, IN lists expand to one Point
-    * per literal value, unknown shapes widen to no-prune; exactness
-    * always rides the full residual.
-    */
-  def toCnf(e: Expression): ZoneMap.Cnf = {
+  def toCnf(conds: Seq[Expression]): ZoneMap.Cnf = {
     val NoPrune: Seq[Seq[ZoneMap.Pred]] = Seq(Seq.empty)
     val MaxDisjuncts = 64
+    def points(c: String, vs: Seq[Any]): Seq[Seq[ZoneMap.Pred]] = {
+      val arms = vs.filter(_ != null).distinct
+        .map(v => Seq(ZoneMap.Point(c, v): ZoneMap.Pred))
+      if (arms.isEmpty || arms.size > MaxDisjuncts) NoPrune else arms
+    }
     def dnf(g: Expression): Seq[Seq[ZoneMap.Pred]] = g match {
       case Or(l, r) =>
         val u = dnf(l) ++ dnf(r)
@@ -244,20 +242,13 @@ private[plans] object DmlExpr {
         val (dl, dr) = (dnf(l), dnf(r))
         if (dl.size.toLong * dr.size > MaxDisjuncts) NoPrune
         else for (a <- dl; b <- dr) yield a ++ b
-      case In(a: AttributeReference, vs)
-          if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) &&
-            vs.exists(_.asInstanceOf[Literal].value != null) =>
-        val arms = vs.collect {
-          case l: Literal if l.value != null =>
-            Seq(ZoneMap.Point(a.name, scalaV(l)): ZoneMap.Pred)
-        }.distinct
-        if (arms.size > MaxDisjuncts) NoPrune else arms
-      case leaf => toPreds(leaf) match {
-        case Nil => NoPrune
-        case ps => Seq(ps)
-      }
+      case In(Stored(c), vs) if vs.forall(_.isInstanceOf[Literal]) =>
+        points(c, vs.map(v => scalaV(v.asInstanceOf[Literal])))
+      case InSet(e @ Stored(c), hs) =>
+        points(c, hs.toSeq.map(CatalystBridge.toScala(_, e.dataType)))
+      case leaf => toPred(leaf).map(p => Seq(Seq(p))).getOrElse(NoPrune)
     }
-    splitAnd(e).map(dnf)
+    conds.flatMap(splitAnd).map(dnf)
   }
 
   private def splitAnd(e: Expression): Seq[Expression] = e match {
@@ -265,37 +256,54 @@ private[plans] object DmlExpr {
     case other => Seq(other)
   }
 
-  /** Best-effort prunable conjuncts of a resolved condition — strict
-    * bounds widen (conservative), non-literal comparisons and OR trees
-    * contribute nothing; exactness always rides the full residual.
+  /** Scala-space literal value (Catalyst internals like UTF8String must
+    * not leak into `lit()`/[[ZoneMap.Pred]]s).
     */
-  def toPreds(e: Expression): Seq[ZoneMap.Pred] = e match {
-    case And(l, r) => toPreds(l) ++ toPreds(r)
-    case EqualTo(a: AttributeReference, l: Literal) if l.value != null =>
-      Seq(ZoneMap.Point(a.name, scalaV(l)))
-    case EqualTo(l: Literal, a: AttributeReference) if l.value != null =>
-      Seq(ZoneMap.Point(a.name, scalaV(l)))
-    case GreaterThan(a: AttributeReference, l: Literal)
-        if l.value != null => Seq(ZoneMap.Range(a.name, lo = scalaV(l)))
-    case GreaterThanOrEqual(a: AttributeReference, l: Literal)
-        if l.value != null => Seq(ZoneMap.Range(a.name, lo = scalaV(l)))
-    case LessThan(a: AttributeReference, l: Literal)
-        if l.value != null => Seq(ZoneMap.Range(a.name, hi = scalaV(l)))
-    case LessThanOrEqual(a: AttributeReference, l: Literal)
-        if l.value != null => Seq(ZoneMap.Range(a.name, hi = scalaV(l)))
-    case GreaterThan(l: Literal, a: AttributeReference)
-        if l.value != null => Seq(ZoneMap.Range(a.name, hi = scalaV(l)))
-    case GreaterThanOrEqual(l: Literal, a: AttributeReference)
-        if l.value != null => Seq(ZoneMap.Range(a.name, hi = scalaV(l)))
-    case LessThan(l: Literal, a: AttributeReference)
-        if l.value != null => Seq(ZoneMap.Range(a.name, lo = scalaV(l)))
-    case LessThanOrEqual(l: Literal, a: AttributeReference)
-        if l.value != null => Seq(ZoneMap.Range(a.name, lo = scalaV(l)))
-    case org.apache.spark.sql.catalyst.expressions.IsNull(
-        a: AttributeReference) => Seq(ZoneMap.Nulls(a.name, want = true))
-    case org.apache.spark.sql.catalyst.expressions.IsNotNull(
-        a: AttributeReference) => Seq(ZoneMap.Nulls(a.name, want = false))
-    case _ => Nil
+  private def scalaV(l: Literal): Any =
+    CatalystBridge.toScala(l.value, l.dataType)
+
+  /** The stored column an operand reads: the attribute itself, or the
+    * attribute under a widening cast — the cast Catalyst puts on a column
+    * compared with a wider literal. Those casts (numeric to wider
+    * numeric, date to timestamp) are monotone, and [[ZoneMap.pruner]]
+    * compares in the same wider type, so the zone check stays sound. Any
+    * other cast is not seen through.
+    */
+  private object Stored {
+    def unapply(e: Expression): Option[String] = e match {
+      case a: AttributeReference => Some(a.name)
+      case Cast(a: AttributeReference, t, _, _) if ((a.dataType, t) match {
+          case (_: NumericType, _: NumericType) => Cast.canUpCast(a.dataType, t)
+          case (DateType, TimestampType | TimestampNTZType) => true
+          case _ => false
+        }) => Some(a.name)
+      case _ => None
+    }
+  }
+
+  /** One prunable leaf: `column <op> literal` in either operand order
+    * (`=`, `<=>`, `<`, `<=`, `>`, `>=`, with a non-null literal), or a
+    * null test.
+    */
+  private def toPred(e: Expression): Option[ZoneMap.Pred] = e match {
+    case IsNull(Stored(c)) => Some(ZoneMap.Nulls(c, want = true))
+    case IsNotNull(Stored(c)) => Some(ZoneMap.Nulls(c, want = false))
+    case b: BinaryComparison =>
+      val (col, l, flipped) = (b.left, b.right) match {
+        case (Stored(c), l: Literal) => (c, l, false)
+        case (l: Literal, Stored(c)) => (c, l, true)
+        case _ => return None
+      }
+      val v = if (l.value == null) return None else scalaV(l)
+      b match {
+        case _: EqualTo | _: EqualNullSafe => Some(ZoneMap.Point(col, v))
+        case _: GreaterThan | _: GreaterThanOrEqual => Some(
+          if (flipped) ZoneMap.Range(col, hi = v) else ZoneMap.Range(col, lo = v))
+        case _: LessThan | _: LessThanOrEqual => Some(
+          if (flipped) ZoneMap.Range(col, lo = v) else ZoneMap.Range(col, hi = v))
+        case _ => None
+      }
+    case _ => None
   }
 
   /** The assigned top-level column's name; nested-field assignment has
@@ -308,23 +316,24 @@ private[plans] object DmlExpr {
   }
 }
 
-/** `UPDATE graft.t SET … WHERE …` → [[GraftTable!.dmlWhere]]: the WHERE
-  * prunes files through its literal conjuncts and applies EXACTLY as the
+/** `DELETE FROM graft.t WHERE …` (no `assignments`) and `UPDATE
+  * graft.t SET … WHERE …` → [[GraftTable!.dmlWhereCnf]]: the WHERE
+  * prunes files through [[DmlExpr.toCnf]] and applies EXACTLY as the
   * residual; SET expressions evaluate against each stored row (all
   * columns addressable), cast to the stored type — the
-  * [[GraftTable!.update]] contract, now reachable as SQL text.
+  * [[GraftTable!.delete]]/[[GraftTable!.update]] contracts, reachable as
+  * SQL text.
   */
-final case class GraftUpdateCommand(path: String,
-    targetOutput: Seq[Attribute], assignments: Seq[Assignment],
-    condition: Option[Expression]) extends LeafRunnableCommand {
+final case class GraftWhereCommand(path: String,
+    assignments: Option[Seq[Assignment]], condition: Option[Expression])
+    extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
     val tbl = GraftTable.open(spark, path)
-    val set = assignments
-      .map(a => DmlExpr.keyName(a) -> DmlExpr.toCol(a.value)).toMap
+    val set = assignments.map(_.map(a =>
+      DmlExpr.keyName(a) -> DmlExpr.toCol(a.value)).toMap)
     val extra = condition.map(DmlExpr.toCol).getOrElse(lit(true))
-    val cnf = condition.map(DmlExpr.toCnf).getOrElse(Nil)
-    val r = tbl.dmlWhereCnf(cnf, extra, Some(set))
+    val r = tbl.dmlWhereCnf(DmlExpr.toCnf(condition.toSeq), extra, set)
     Seq(Row(r.rowsAffected, r.filesRewritten, r.filesCarried))
   }
 

@@ -5,29 +5,21 @@ import java.util
 import graft.operators.{GraftTable, ZoneMap}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.internal.Logging
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException,
   NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{Identifier,
-  ProcedureCatalog, SupportsDelete, SupportsNamespaces, SupportsRead,
-  SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
+  ProcedureCatalog, SupportsNamespaces, SupportsRead, SupportsWrite, Table,
+  TableCapability, TableCatalog, TableChange, TruncatableTable}
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure,
   ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.LocalScan
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder,
-  Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns,
-  SupportsReportStatistics, V1Scan}
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo,
   SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.functions.{col, lit, not}
-import org.apache.spark.sql.sources.{AlwaysFalse, AlwaysTrue, And,
-  BaseRelation, EqualNullSafe, EqualTo, Filter, GreaterThan,
-  GreaterThanOrEqual, In, InsertableRelation, IsNotNull, IsNull, LessThan,
-  LessThanOrEqual, Not, Or, StringContains, StringEndsWith,
-  StringStartsWith, TableScan}
+import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -41,7 +33,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     "OPTIONS (zoneCols 'k')")
   *   spark.sql("INSERT INTO graft.t SELECT ...")
   *   spark.sql("SELECT * FROM graft.t WHERE k = 42")      -- pruned scan
-  *   spark.sql("DELETE FROM graft.t WHERE k < 100")        -- native DSv2
+  *   spark.sql("DELETE FROM graft.t WHERE k < 100")        -- via rule
   *   spark.sql("UPDATE graft.t SET v = v + 1 WHERE k = 7") -- via rule
   *   spark.sql("MERGE INTO graft.t USING s ON ...")        -- via rule
   * }}}
@@ -51,20 +43,20 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `format("graft-table")` reader and the API interoperate on the same
   * tables.
   *
-  * Architecture per operation (Spark-first: each SQL verb lands on the
-  * narrowest public connector contract that can express it):
-  *  - SELECT: [[V1Scan]] — DSv2 pushdown (filters + required columns)
-  *    bridged onto the proven [[GraftTableRelation]] pruned scan, so
-  *    the catalog and the path reader share one planning path.
+  * Architecture per operation. The catalog needs the session extensions
+  * (`spark.sql.extensions=graft.plans.GraftExtensions`):
+  *  - SELECT, and the read side of INSERT … SELECT / CTAS:
+  *    [[graft.plans.GraftV2ScanStats]] plans the table as the version's
+  *    `HadoopFsRelation` over a [[GraftFileIndex]] — the relation the
+  *    path reader and every API read use, so pushed filters prune the
+  *    manifest in one place. The connector scan builder is never used.
   *  - INSERT INTO / CTAS / INSERT OVERWRITE: [[V1Write]] →
   *    transactional `append` / atomic `replace` commits.
-  *  - DELETE FROM: [[SupportsDelete]] — Spark routes the WHERE to
-  *    `deleteWhere` when every conjunct translates ([[canDeleteWhere]]),
-  *    which runs the zone/bloom-pruned rewrite with the EXACT residual.
-  *  - UPDATE / MERGE INTO: Spark has no non-row-level connector contract
-  *    for these, so [[graft.plans.GraftSqlDml]] (injected via
-  *    `graft.plans.GraftExtensions`) rewrites the resolved plans into
-  *    commands on the same `update`/`mergeCond` machinery.
+  *  - DELETE FROM / UPDATE / MERGE INTO: [[graft.plans.GraftSqlDml]]
+  *    rewrites the resolved plans into commands on the table's own
+  *    pruned rewrite (`dmlWhereCnf`) and `mergeSpec` machinery, with the
+  *    EXACT condition as the residual. TRUNCATE TABLE is
+  *    [[TruncatableTable]].
   *
   * Snapshot semantics: a loaded table pins the version current at
   * `loadTable` for READS (the time-travel guarantee); mutations resolve
@@ -440,53 +432,27 @@ private[sources] object GraftProcedures {
 
   val Names: Seq[String] = Seq("vacuum", "history", "compact", "zorder")
 
-  /** Parse an `OPTIMIZE … WHERE`-style predicate string into the zone
-    * pruning algebra: conjunctions of `<col> (=|<|<=|>|>=) <literal>`
-    * (both operand orders). Anything the manifest cannot prune on
+  /** The compact WHERE as zone preds: parsed, resolved against the
+    * table and constant-folded, then translated by
+    * [[graft.plans.DmlExpr.toCnf]], the one Catalyst translator. Only a
+    * plain conjunction of prunable comparisons passes; anything else
     * refuses loudly — a silent no-prune would quietly rewrite the whole
     * table, the opposite of a stripe-scoped compact.
     */
-  private def parsePreds(spark: org.apache.spark.sql.SparkSession,
-      where: String): Seq[graft.operators.ZoneMap.Pred] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.{expressions => ce}
-    import graft.operators.ZoneMap
-    def cname(x: ce.Expression): Option[String] = x match {
-      case a: UnresolvedAttribute if a.nameParts.length == 1 =>
-        Some(a.nameParts.head)
-      case _ => None
+  private def wherePreds(tbl: GraftTable, where: String)
+      : Seq[ZoneMap.Pred] = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val cond = tbl.read().filter(where).queryExecution.analyzed match {
+      case Filter(c, _) => c.transformDown {
+        case e if e.foldable => Literal.create(e.eval(), e.dataType)
+      }
     }
-    def litV(x: ce.Expression): Option[Any] = x match {
-      case l: ce.Literal if l.value != null =>
-        Some(org.apache.spark.sql.graft.CatalystBridge
-          .toScala(l.value, l.dataType))
-      case _ => None
+    graft.plans.DmlExpr.toCnf(Seq(cond)).map {
+      case Seq(Seq(p)) => p
+      case _ => sys.error(s"unsupported compact WHERE shape: $where — " +
+        "conjunctions of <zone col> (=|<|<=|>|>=) <literal> only")
     }
-    def walk(e: ce.Expression): Seq[ZoneMap.Pred] = e match {
-      case ce.And(l, r) => walk(l) ++ walk(r)
-      case ce.EqualTo(a, b) => (for (n <- cname(a); v <- litV(b))
-        yield ZoneMap.Point(n, v)).orElse(
-        for (n <- cname(b); v <- litV(a)) yield ZoneMap.Point(n, v))
-        .map(Seq(_: ZoneMap.Pred)).getOrElse(bad(e))
-      case ce.GreaterThanOrEqual(a, b) => (for (n <- cname(a); v <- litV(b))
-        yield ZoneMap.Range(n, lo = v)).orElse(
-        for (n <- cname(b); v <- litV(a)) yield ZoneMap.Range(n, hi = v))
-        .map(Seq(_: ZoneMap.Pred)).getOrElse(bad(e))
-      case ce.LessThanOrEqual(a, b) => (for (n <- cname(a); v <- litV(b))
-        yield ZoneMap.Range(n, hi = v)).orElse(
-        for (n <- cname(b); v <- litV(a)) yield ZoneMap.Range(n, lo = v))
-        .map(Seq(_: ZoneMap.Pred)).getOrElse(bad(e))
-      // strict bounds widen to inclusive (conservative: a compact may
-      // touch one extra boundary file; row preservation never depends
-      // on the pruning)
-      case ce.GreaterThan(a, b) => walk(ce.GreaterThanOrEqual(a, b))
-      case ce.LessThan(a, b) => walk(ce.LessThanOrEqual(a, b))
-      case other => bad(other)
-    }
-    def bad(e: ce.Expression): Nothing = sys.error(
-      s"unsupported compact WHERE shape: ${e.sql} — conjunctions of " +
-        "<zone col> (=|<|<=|>|>=) <literal> only")
-    walk(spark.sessionState.sqlParser.parseExpression(where))
   }
 
   private def param(n: String, dt: org.apache.spark.sql.types.DataType,
@@ -572,9 +538,7 @@ private[sources] object GraftProcedures {
             StructField("files_after", LongType))),
             Seq(InternalRow(before, after)))
         } else {
-          val preds = parsePreds(
-            org.apache.spark.sql.SparkSession.active,
-            in.getUTF8String(2).toString)
+          val preds = wherePreds(tbl, in.getUTF8String(2).toString)
           val (rew, carried) =
             tbl.compactWhere(preds, in.getLong(1), sortCols)
           (StructType(Seq(StructField("files_rewritten", LongType),
@@ -610,13 +574,13 @@ private[sources] object GraftProcedures {
   */
 final class GraftTableV2(spark: SparkSession, val tablePath: String,
     ident: String, pinned: Option[Long] = None) extends Table
-  with SupportsRead with SupportsWrite with SupportsDelete with Logging {
+  with SupportsRead with SupportsWrite with TruncatableTable {
 
   private[graft] val tbl = GraftTable.open(spark, tablePath)
   private val snapshot = pinned.getOrElse(tbl.version)
 
-  /** The pinned read version — [[graft.plans.GraftV2ScanStats]] plants
-    * it into the classic relation it rebuilds reads as.
+  /** The pinned read version — [[graft.plans.GraftV2ScanStats]] plans
+    * reads as this version's relation.
     */
   private[graft] def snapshotVersion: Long = snapshot
 
@@ -646,31 +610,18 @@ final class GraftTableV2(spark: SparkSession, val tablePath: String,
     m
   }
 
+  /** Never reached in a session with the graft extensions:
+    * [[graft.plans.GraftV2ScanStats]] plans every read of this table as
+    * its version's `HadoopFsRelation` before Spark asks for a scan.
+    */
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
-    new GraftV2ScanBuilder(tbl, snapshot, schema)
+    throw new UnsupportedOperationException(s"reading graft table $ident " +
+      "needs the session extensions: set " +
+      "spark.sql.extensions=graft.plans.GraftExtensions")
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GraftV2WriteBuilder(tbl)
-
-  // ------------------------------------------------------- DELETE FROM --
-
-  /** Every conjunct must translate to an EXACT Column — unlike scan
-    * pruning (a hint), `deleteWhere` is authoritative: Spark deletes
-    * nothing else. Untranslatable shapes refuse here and Spark raises
-    * the standard cannot-delete error instead of guessing.
-    */
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.forall(f => GraftTableV2.toColumn(f).isDefined)
-
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    val extra = filters.flatMap(GraftTableV2.toColumn)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val cnf = filters.toSeq.map(GraftTableV2.toCnfGroup)
-    val r = tbl.dmlWhereCnf(cnf, extra, None)
-    logInfo(s"DELETE on $tablePath: ${r.filesRewritten} file(s) " +
-      s"rewritten, ${r.filesCarried} carried, ${r.rowsAffected} row(s)")
-  }
 
   override def truncateTable(): Boolean = {
     tbl.replace(tbl.read().limit(0))
@@ -678,177 +629,6 @@ final class GraftTableV2(spark: SparkSession, val tablePath: String,
   }
 
   override def toString: String = s"GraftTableV2[$ident @ $tablePath]"
-}
-
-private[sources] object GraftTableV2 {
-
-  /** The `true` OR-group: one empty conjunct — survives every file, so
-    * a group this translation cannot prune drops out of the spec
-    * ([[graft.operators.GraftTable.pruneFilesCnf]]'s widening).
-    */
-  private[graft] val NoPrune: Seq[Seq[ZoneMap.Pred]] = Seq(Seq.empty)
-
-  /** Cap on a group's disjunct count — a pathological OR/IN tree falls
-    * back to "prune nothing" instead of an exponential DNF expansion.
-    */
-  private[graft] val MaxDisjuncts = 64
-
-  /** Zone/bloom-prunable translation of ONE pushed filter into an
-    * OR-group (a DNF: OR over conjunct lists) — conservative by
-    * construction: strict bounds widen to inclusive, unknown shapes
-    * yield [[NoPrune]]. `Or` arms prune INDEPENDENTLY and union
-    * (an arm this translation cannot prune poisons only its own group);
-    * `In` expands to one Point disjunct per non-null value, so an IN
-    * list probes the blooms exactly like a union of equalities.
-    */
-  private[graft] def toCnfGroup(f: Filter): Seq[Seq[ZoneMap.Pred]] = {
-    def dnf(g: Filter): Seq[Seq[ZoneMap.Pred]] = g match {
-      case EqualTo(a, v) if v != null => Seq(Seq(ZoneMap.Point(a, v)))
-      case EqualNullSafe(a, v) if v != null => Seq(Seq(ZoneMap.Point(a, v)))
-      case GreaterThan(a, v) if v != null =>
-        Seq(Seq(ZoneMap.Range(a, lo = v)))
-      case GreaterThanOrEqual(a, v) if v != null =>
-        Seq(Seq(ZoneMap.Range(a, lo = v)))
-      case LessThan(a, v) if v != null => Seq(Seq(ZoneMap.Range(a, hi = v)))
-      case LessThanOrEqual(a, v) if v != null =>
-        Seq(Seq(ZoneMap.Range(a, hi = v)))
-      case IsNull(a) => Seq(Seq(ZoneMap.Nulls(a, want = true)))
-      case IsNotNull(a) => Seq(Seq(ZoneMap.Nulls(a, want = false)))
-      case In(a, vs) if vs.nonEmpty && vs.exists(_ != null) =>
-        // null IN-values match no row (`a = NULL` is never true) — the
-        // non-null values are the only disjuncts a file must cover
-        val arms = vs.toSeq.filter(_ != null).distinct
-          .map(v => Seq(ZoneMap.Point(a, v): ZoneMap.Pred))
-        if (arms.size > MaxDisjuncts) NoPrune else arms
-      case And(l, r) =>
-        // DNF product; either side's NoPrune is the identity
-        val (dl, dr) = (dnf(l), dnf(r))
-        if (dl.size.toLong * dr.size > MaxDisjuncts) NoPrune
-        else for (a <- dl; b <- dr) yield a ++ b
-      case Or(l, r) =>
-        val u = dnf(l) ++ dnf(r)
-        if (u.size > MaxDisjuncts) NoPrune else u
-      case _ => NoPrune
-    }
-    dnf(f)
-  }
-
-  /** EXACT translation of a pushed Filter, or None when the shape has
-    * semantics a Column can't reproduce verbatim.
-    */
-  private[graft] def toColumn(f: Filter): Option[org.apache.spark.sql.Column] =
-    f match {
-      case EqualTo(a, v) => Some(col(a) === lit(v))
-      case EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
-      case GreaterThan(a, v) => Some(col(a) > lit(v))
-      case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-      case LessThan(a, v) => Some(col(a) < lit(v))
-      case LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-      case In(a, vs) => Some(col(a).isInCollection(vs.toSeq))
-      case IsNull(a) => Some(col(a).isNull)
-      case IsNotNull(a) => Some(col(a).isNotNull)
-      case StringStartsWith(a, v) => Some(col(a).startsWith(v))
-      case StringEndsWith(a, v) => Some(col(a).endsWith(v))
-      case StringContains(a, v) => Some(col(a).contains(v))
-      case _: AlwaysTrue => Some(lit(true))
-      case _: AlwaysFalse => Some(lit(false))
-      case And(l, r) => for (a <- toColumn(l); b <- toColumn(r)) yield a && b
-      case Or(l, r) => for (a <- toColumn(l); b <- toColumn(r)) yield a || b
-      case Not(c) => toColumn(c).map(not)
-      case _ => None
-    }
-}
-
-/** DSv2 pushdown (filters + column pruning) bridged onto the DSv1
-  * pruned scan: `build()` yields a [[V1Scan]] whose relation delegates
-  * to [[GraftTableRelation.buildScan]] — one planning path for the
-  * catalog and the path-based reader, manifest pruning included.
-  */
-final class GraftV2ScanBuilder(tbl: GraftTable, version: Long,
-    fullSchema: StructType) extends ScanBuilder
-  with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-
-  private var required: StructType = fullSchema
-  private var filters: Array[Filter] = Array.empty
-
-  /** Keep a copy for pruning, return EVERYTHING as unhandled — the
-    * engine re-applies every filter above the scan; manifest pruning is
-    * a performance hint, never a correctness dependency (the
-    * [[GraftTableRelation.unhandledFilters]] discipline).
-    */
-  override def pushFilters(fs: Array[Filter]): Array[Filter] = {
-    filters = fs
-    fs
-  }
-
-  override def pushedFilters(): Array[Filter] = filters
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    required = requiredSchema
-  }
-
-  override def build(): Scan = new GraftV1Scan(tbl, version, fullSchema,
-    required, filters)
-}
-
-/** The catalog read path's V1 bridge scan - NAMED (not anonymous) so
-  * the statistics rule can recognize it: Spark's optimizer wraps every
-  * `V1Scan` in a stats-opaque `V1ScanWrapper`, so
-  * [[graft.plans.GraftV2ScanStats]] (pre-CBO) rebuilds the scan
-  * relation as a classic `LogicalRelation` over [[toV1TableScan]]'s
-  * relation, whose `sizeInBytes` below feeds join planning. Without it
-  * the SQL-text door reports `defaultSizeInBytes` (~ Long.Max) and a
-  * metadata-sized `graftsql` dimension joined to a big fact NEVER
-  * auto-broadcasts: a full shuffle join on a 1,000-row table, on the
-  * exact door users type queries into. The DSv1 path has reported the
-  * same estimate via `BaseRelation.sizeInBytes` since r14; this closes
-  * the V2 half. `SupportsReportStatistics` is also implemented for any
-  * engine path that consults the scan directly.
-  */
-final class GraftV1Scan(private[graft] val tbl: GraftTable,
-    private[graft] val version: Long, fullSchema: StructType,
-    required: StructType, filters: Array[Filter])
-  extends V1Scan with SupportsReportStatistics {
-
-  override def readSchema(): StructType = required
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = required
-      override def needConversion: Boolean = false
-      override def sizeInBytes: Long = estimatedBytes
-      override def buildScan(): RDD[Row] =
-        new GraftTableRelation(context, tbl, version)
-          .buildScan(required.fieldNames, filters)
-    }.asInstanceOf[T]
-
-  /** Manifest-derived REAL on-disk bytes ([[GraftTable!.approxStats]]),
-    * pro-rated to the pruned column set.
-    */
-  private def estimatedBytes: Long = {
-    val (_, total) = tbl.approxStats(version)
-    val fullW = math.max(1, fullSchema.defaultSize)
-    val reqW = math.max(1, required.defaultSize)
-    val sized = (BigInt(total) * reqW / fullW).max(1)
-    if (sized > Long.MaxValue) Long.MaxValue else sized.toLong
-  }
-
-  override def estimateStatistics(): Statistics = {
-    val rows = tbl.approxStats(version)._1
-    val sz = estimatedBytes
-    new Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(sz)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
-  }
-
-  override def description(): String =
-    s"GraftTableScan[${tbl.path}@v$version, " +
-      s"filters=${filters.mkString(", ")}]"
 }
 
 /** INSERT INTO → transactional append; INSERT OVERWRITE / CTAS-replace →

@@ -1,16 +1,14 @@
 package graft.sources
 
-import graft.operators.{GraftTable, ZoneMap}
+import graft.operators.GraftTable
 import org.apache.spark.internal.Logging
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SQLContext}
+import org.apache.spark.sql.{DataFrame, SaveMode, SQLContext}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.sources.{BaseRelation,
-  CreatableRelationProvider, DataSourceRegister, Filter,
-  PrunedFilteredScan, RelationProvider, StreamSinkProvider}
+  CreatableRelationProvider, DataSourceRegister, RelationProvider,
+  StreamSinkProvider}
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types.StructType
 
 /** The SQL batch read path for [[graft.operators.GraftTable]]:
   * `spark.read.format("graft-table").option("path", root).load()` — a
@@ -22,18 +20,15 @@ import org.apache.spark.sql.types.StructType
   * "read the manifest, open 3 of 40,000 files" versus "list and read
   * everything" IS the query's cost.
   *
-  * Architecture: a DSv1 [[PrunedFilteredScan]] relation (the
-  * declarative-source shape Catalyst has pushed projection + filters
-  * into since Spark 1.3). `buildScan` receives the pushed filters,
-  * translates the zone-expressible ones (`=`, `<`, `<=`, `>`, `>=`,
-  * `AND`; strict bounds widen to the inclusive zone check — pruning is
-  * conservative, never wrong), prunes the version-pinned manifest, and
-  * serves the surviving parquet with the full residual applied — AND
-  * declares every filter unhandled, so the engine re-applies them all:
-  * pruning is a performance hint; exactness never depends on it.
-  * Projection rides the same path (`requiredColumns` → parquet column
-  * pruning), and `needConversion = false` hands Spark the internal rows
-  * directly — no Row round-trip on the hot path.
+  * Architecture: `load()` returns the version's `HadoopFsRelation` over
+  * a [[GraftFileIndex]], the same relation every table read uses. Spark's
+  * file-source strategy hands the index the pushed data filters, which
+  * prune the manifest, and pushes them into the parquet reader as well;
+  * every filter is re-applied above the scan, so pruning is a
+  * performance hint and exactness never depends on it. Projection
+  * reaches the parquet read as its read schema, and the relation's size
+  * is the manifest's byte total, so a small graft dimension
+  * auto-broadcasts.
   *
   * SNAPSHOT semantics: the relation pins the table version current at
   * `load()`; concurrent commits never shift a running query's input
@@ -100,7 +95,7 @@ final class GraftTableSource
       s"versionAsOf $v is not committed/retained under ${tbl.path} " +
         s"(retained: ${tbl.versions().mkString(", ")}) — increase " +
         "keepVersions to widen the time-travel window")
-    new GraftTableRelation(ctx, tbl, v)
+    tbl.relation(v)
   }
 
   override def createRelation(ctx: SQLContext, mode: SaveMode,
@@ -215,71 +210,9 @@ final class GraftTableSink(path: String, parameters: Map[String, String])
   override def toString: String = s"GraftTableSink[$path]"
 }
 
-/** One snapshot-pinned relation; see [[GraftTableSource]]. */
-final class GraftTableRelation(ctx: SQLContext, tbl: GraftTable,
-    snapshotVersion: Long) extends BaseRelation with PrunedFilteredScan
-  with Logging {
-
-  override def sqlContext: SQLContext = ctx
-
-  override val schema: StructType = tbl.schemaAt(snapshotVersion)
-
-  /** Manifest row counts × schema width — one metadata read, computed
-    * lazily once per relation. Without this the relation reports
-    * `defaultSizeInBytes` (≈ Long.Max) and a small graft dimension never
-    * auto-broadcasts against a big fact (see
-    * [[graft.operators.GraftTable.approxBytes]]).
-    */
-  override lazy val sizeInBytes: Long = tbl.approxBytes(snapshotVersion)
-
-  /** Every filter is ALSO re-applied by the engine — this relation uses
-    * them only to prune files and to push row-group filtering into the
-    * inner parquet read, both conservative.
-    */
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
-    filters
-
-  /** buildScan's rows are the inner plan's internal rows verbatim. */
-  override def needConversion: Boolean = false
-
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): RDD[Row] = {
-    // one OR-group per pushed filter ([[GraftTableV2.toCnfGroup]]): AND
-    // across filters, per-disjunct pruning unioned inside each — so
-    // `k < 10 OR k > 90` opens both stripes and nothing between, and an
-    // IN list probes the blooms per value
-    val cnf = filters.toSeq.map(GraftTableV2.toCnfGroup)
-    val (files, total) = tbl.pruneFilesCnf(snapshotVersion, cnf)
-    GraftTableRelation.record(tbl.path, files.size, total)
-    logInfo(s"graft-table scan of ${tbl.path}@v$snapshotVersion: " +
-      s"${files.size}/$total files under ${filters.length} pushed filters")
-    val spark = ctx.sparkSession
-    val base =
-      if (files.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], schema)
-      else spark.read.schema(schema).parquet(files: _*)
-    // residual inside the inner read too: parquet row-group stats and
-    // codegen'd filtering do their part before rows surface (the engine
-    // still re-applies everything above — see unhandledFilters)
-    val filtered = filters.toSeq.flatMap(toColumn)
-      .foldLeft(base)((df, c) => df.filter(c))
-    val projected =
-      filtered.select(requiredColumns.toIndexedSeq.map(n =>
-        col(s"`$n`")): _*)
-    projected.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-      .queryExecution.toRdd.asInstanceOf[RDD[Row]]
-  }
-
-  /** Inner-read residual — [[GraftTableV2.toColumn]]'s EXACT
-    * translation (Or/Not/strings included), so parquet row-group stats
-    * filter as much as the pushed shapes allow before rows surface.
-    */
-  private def toColumn(f: Filter): Option[Column] = GraftTableV2.toColumn(f)
-
-  override def toString: String =
-    s"GraftTableRelation[${tbl.path}@v$snapshotVersion]"
-}
-
+/** Scan observability for graft tables: each pinned
+  * [[GraftFileIndex]] listing records what it kept.
+  */
 object GraftTableRelation {
   private val scans =
     scala.collection.concurrent.TrieMap.empty[String, (Int, Int)]

@@ -67,7 +67,25 @@ class GraftCatalogSpec extends SparkSpec {
       == "overwrite")
   }
 
-  test("DELETE FROM routes through SupportsDelete: exact rows, pruned rewrite") {
+  test("INSERT INTO ... SELECT from another catalog table: exact rows, the source read prunes") {
+    warehouse
+    val src = freshTable()
+    val srcPath = s"$warehouse/t$n"
+    mk(src)
+    val dst = freshTable()
+    spark.sql(s"CREATE TABLE $dst (k BIGINT, v DOUBLE, u STRING) " +
+      "OPTIONS (zoneCols 'k')")
+    GraftTableRelation.clearScan(srcPath)
+    spark.sql(s"INSERT INTO $dst SELECT * FROM $src WHERE k < 10")
+    assert(spark.sql(s"SELECT k, v, u FROM $dst ORDER BY k").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq ==
+      (0L until 10L).map(k => (k, k * 2.0, s"u${k % 7}")))
+    assert(GraftTableRelation.lastScan(srcPath).exists {
+      case (opened, total) => opened >= 1 && opened < total
+    }, s"the read under INSERT must prune: ${GraftTableRelation.lastScan(srcPath)}")
+  }
+
+  test("DELETE FROM routes through the DML rule: exact rows, pruned rewrite") {
     warehouse
     val t = freshTable()
     mk(t)

@@ -84,6 +84,27 @@ class GraftTableSourceSpec extends SparkSpec {
       (0L until 400L).map(_ * 2.0).sum)
   }
 
+  test("an IN list past the InSet threshold and a null-safe equality prune like their plain forms") {
+    val p = base()
+    GraftTable.create(
+      rows(0, 400).withColumn("k", when(col("k") >= 0L, col("k")))
+        .repartitionByRange(4, col("k")).sortWithinPartitions("k"),
+      p, zoneCols = Seq("k"))
+    val df = load(p)
+    // 11 values: past spark.sql.optimizer.inSetConversionThreshold (10),
+    // Catalyst plans the list as an InSet
+    val vs = (1L to 10L) :+ 395L
+    GraftTableRelation.clearScan(p)
+    assert(df.filter(col("k").isInCollection(vs)).count() == 11)
+    assert(GraftTableRelation.lastScan(p).contains((2, 4)),
+      s"an 11-value IN must prune per value: ${GraftTableRelation.lastScan(p)}")
+    // k is nullable, so `<=>` stays a null-safe equality in the plan
+    GraftTableRelation.clearScan(p)
+    assert(df.filter(col("k") <=> 5L).count() == 1)
+    assert(GraftTableRelation.lastScan(p).contains((1, 4)),
+      s"k <=> 5 must prune like k = 5: ${GraftTableRelation.lastScan(p)}")
+  }
+
   test("IS NULL / IS NOT NULL prune from the manifest's per-file null counts") {
     val p = base()
     // three files: two all-non-null range stripes + one all-null stripe
@@ -236,5 +257,113 @@ class GraftTableSourceSpec extends SparkSpec {
       case (opened, total) => opened < total
     }, s"the indexed half of a mixed filter must still prune: " +
       s"${GraftTableRelation.lastScan(p)}")
+  }
+
+  test("property: the file index never drops a file holding a kept row; rows equal the unpruned read") {
+    import java.math.{BigDecimal => JBigDecimal}
+    import java.sql.{Date, Timestamp}
+    import org.apache.spark.sql.{Column, Row}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.types._
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import graft.operators.ZoneMap
+    def sample[A](g: Gen[A]): A = g.pureApply(Gen.Parameters.default, Seed(42L))
+
+    // 2^53: past it, Catalyst compares bigint with double in double, and
+    // 2^53+3 equals the double 2^53+4
+    val big = 9007199254740992L
+    val t0 = 1700000000000L
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("i", IntegerType), StructField("d", DoubleType),
+      StructField("s", StringType), StructField("m", DecimalType(12, 3)),
+      StructField("ts", TimestampType)))
+    val cols = schema.fieldNames.toSeq
+    val values: Seq[Seq[Any]] = Seq(
+      Seq(-5L, 0L, 7L, 40L, big + 1, big + 3, big + 5),
+      Seq(-5, 0, 7, 40, Int.MinValue, Int.MaxValue),
+      Seq(Double.NaN, -0.0, 0.0, 1.5, -2.25, 7.0, 1e300),
+      // U+FB01 sorts below U+1F600 in UTF-8 bytes, above it in UTF-16
+      Seq("", "a", "Z", "\u00e9", "\uFB01", "\uD83D\uDE00", "z"),
+      Seq("-12.345", "0.000", "7.000", "7.001", "40.500").map(new JBigDecimal(_)),
+      Seq(0L, 1L, 60000L, 3600000L).map(d => new Timestamp(t0 + d)))
+    // Int, Long, Double and Decimal literals against every numeric
+    // column: Catalyst casts the narrower side, the column or the literal
+    val numeric: Seq[Any] = Seq(-5, 0, 7, 40, 7L, big + 2, big + 4,
+      Int.MaxValue.toLong + 1, Double.NaN, -0.0, 0.0, 1.5, 7.0,
+      (big + 2).toDouble, (big + 4).toDouble, new JBigDecimal("7.000"),
+      new JBigDecimal("-12.35"), new JBigDecimal("1.50"), new JBigDecimal("7.0005"))
+    val literals: Map[String, Seq[Any]] = Map("k" -> numeric, "i" -> numeric,
+      "d" -> numeric, "m" -> numeric, "s" -> (values(3) ++ Seq("b", "\u00e0")),
+      "ts" -> (values(5) ++ Seq(new Timestamp(t0 - 1000L), new Timestamp(t0 + 30000L),
+        new Date(t0))))
+
+    // 14 files of 1-5 rows: each column is null in some rows and
+    // all-null in some files
+    val fileGen: Gen[Seq[Row]] = for {
+      dead <- Gen.listOfN(cols.size, Gen.frequency(1 -> true, 5 -> false))
+      n <- Gen.chooseNum(1, 5)
+      rows <- Gen.listOfN(n, Gen.sequence[List[Any], Any](
+        values.zip(dead).map { case (vs, allNull) =>
+          if (allNull) Gen.const(null)
+          else Gen.frequency(1 -> Gen.const(null), 6 -> Gen.oneOf(vs))
+        }))
+    } yield rows.map(Row.fromSeq)
+    val files = sample(Gen.listOfN(14, fileGen))
+    val p = base()
+    val t = GraftTable.create(spark.createDataFrame(
+      spark.sparkContext.parallelize(files.indices, files.size)
+        .flatMap(i => files(i)), schema),
+      p, zoneCols = cols, bloomCols = Seq("k", "s"), bloomItems = 1000L,
+      bloomFpp = 0.01)
+    assert(t.files().size == 14)
+    val unpruned = spark.read.parquet(t.files(): _*)
+
+    val atomGen: Gen[Column] = Gen.oneOf(cols).flatMap { c =>
+      val lit1 = Gen.oneOf(literals(c))
+      Gen.oneOf(
+        for (lo <- lit1; hi <- lit1; side <- Gen.chooseNum(0, 2)) yield
+          ZoneMap.predicate(Seq(side match {
+            case 0 => ZoneMap.Range(c, lo = lo)
+            case 1 => ZoneMap.Range(c, hi = hi)
+            case _ => ZoneMap.Range(c, lo, hi)
+          })),
+        lit1.map(v => ZoneMap.predicate(Seq(ZoneMap.Point(c, v)))),
+        Gen.oneOf(true, false).map(w => ZoneMap.predicate(Seq(ZoneMap.Nulls(c, w)))),
+        lit1.map(v => col(c) < lit(v)),
+        lit1.map(v => col(c) > lit(v)),
+        lit1.map(v => col(c) <=> lit(v)),
+        // 11 or more values plan as an InSet
+        Gen.chooseNum(1, 13).flatMap(Gen.listOfN(_, lit1)).map(vs => col(c).isin(vs: _*)))
+    }
+    def nonEmpty[A](g: Gen[A]) = Gen.chooseNum(1, 3).flatMap(Gen.listOfN(_, g))
+    // a cast to string orders values unlike their column: such a filter
+    // must not prune as its column would
+    val casts = for (c <- cols; v <- Seq("0", "5", "N"); up <- Seq(true, false))
+      yield if (up) col(c).cast("string") >= lit(v) else col(c).cast("string") <= lit(v)
+    val filters = casts ++ sample(Gen.listOfN(90, nonEmpty(nonEmpty(atomGen))))
+      .map(cnf => cnf.map(_.reduce(_ || _)).reduce(_ && _))
+
+    def fileOf(uri: String) = new java.net.URI(uri).getPath
+    var pruned = 0
+    filters.foreach { f =>
+      val q = t.read().filter(f)
+      val ref = unpruned.filter(f).withColumn("_file", input_file_name()).collect()
+      assert(q.collect().map(_.toString).sorted.toSeq ==
+        ref.map(r => Row.fromSeq(r.toSeq.init).toString).sorted.toSeq,
+        s"$f: rows differ from the unpruned read")
+      val held = ref.map(r => fileOf(r.getString(cols.size))).toSet
+      q.queryExecution.sparkPlan.collectFirst { case s: FileSourceScanExec => s } match {
+        case None => assert(held.isEmpty, s"$f: no scan planned, but rows match")
+        case Some(scan) =>
+          val listed = scan.relation.location
+            .listFiles(scan.partitionFilters, scan.dataFilters)
+            .flatMap(_.files).map(_.getPath.toUri.getPath).toSet
+          assert(held.subsetOf(listed),
+            s"$f: the index dropped files holding kept rows: ${held -- listed}")
+          pruned += 14 - listed.size
+      }
+    }
+    assert(pruned > filters.size, s"the filters must prune, not keep everything: $pruned")
   }
 }

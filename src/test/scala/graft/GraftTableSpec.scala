@@ -1135,4 +1135,35 @@ class GraftTableSpec extends SparkSpec {
     assert(jobs == 1, s"bloom pruning must run exactly one Spark job: $jobs")
     assert(opened >= 1 && opened <= 3, s"the bloom must prune: opened $opened of 8 files")
   }
+
+  test("a read frame stays its snapshot: after a later commit prunes its version, filters still prune its files") {
+    import graft.sources.GraftTableRelation
+    val p = base()
+    val t = GraftTable.create(rows(0, 400).repartitionByRange(4, col("k"))
+      .sortWithinPartitions("k"), p, zoneCols = Seq("k"))
+    val v1 = t.read()
+    t.append(rows(400, 500))
+    assert(t.versions() == Seq(2L), "keepVersions = 1 prunes version 1")
+    GraftTableRelation.clearScan(p)
+    assert(v1.filter(col("k") < 10L).count() == 10)
+    assert(GraftTableRelation.lastScan(p).contains((1, 4)),
+      s"the filter must prune version 1's files: ${GraftTableRelation.lastScan(p)}")
+    assert(v1.count() == 400)
+  }
+
+  test("job budget: a pruned read that keeps more than 32 of 100 files runs its read job and no listing job") {
+    val t = GraftTable.create(rows(0, 2000).repartitionByRange(100, col("k"))
+      .sortWithinPartitions("k"), base(), zoneCols = Seq("k"))
+    assert(t.files().size == 100)
+    val preds = Seq(ZoneMap.Range("k", 0L, 999L))
+    val kept = t.scanFileCount(preds)
+    assert(kept > 32 && kept < 100, s"the fixture must keep more than 32 files: $kept")
+    var got = Array.empty[org.apache.spark.sql.Row]
+    val (jobs, _, labels) = sparkWork { got = t.scan(preds).select("k").collect() }
+    assert(got.length == 1000)
+    // above 32 paths, spark.sql.sources.parallelPartitionDiscovery.threshold,
+    // a path-list read lists its files with a Spark job of its own
+    assert(jobs == 1 && !labels.exists(_.contains("Listing")),
+      s"the read must run one job and list nothing: $jobs jobs ${labels.mkString("; ")}")
+  }
 }
