@@ -66,6 +66,13 @@ import graft.sources.GraftFileIndex
   *    survives; no torn state (racing attempts never share a data or
   *    staging directory, so the loser cannot clobber the winner's
   *    files).
+  *  - every mutation but `create` commits through ONE path
+  *    ([[GraftTable!.commit]]) with ONE rebase rule
+  *    ([[GraftTable.rebases]]): a loser re-plans against the new head
+  *    iff the winner removed none of the files it replaces and did not
+  *    reach its explicit batch id (a winner that pruned the loser's base
+  *    counts as an overlap unless the loser replaces nothing), at most
+  *    10 attempts; otherwise the conflict surfaces.
   *  - data files are immutable and superseded versions are pruned only
   *    AFTER the new commit (best-effort, marker-first), so a reader that
   *    resolved a committed version never has files deleted under it by
@@ -175,7 +182,7 @@ object GraftTable {
       keepHours = keepHours)
     val v = currentVersion(spark, path).getOrElse(0L) + 1
     val sized = if (nFiles > 0) df.repartition(nFiles) else df
-    publishGeneration(spark, path, sized, v, meta, carryForward = None,
+    publishGeneration(spark, path, Some(sized), v, meta, carry = None,
       op = "create")
     new GraftTable(spark, path)
   }
@@ -190,20 +197,11 @@ object GraftTable {
   def ingestStream(rows: DataFrame, path: String, zoneCols: Seq[String],
       checkpointDir: String, bloomCols: Seq[String] = Nil, nFiles: Int = 0,
       bloomItems: Long = 1000000L, bloomFpp: Double = 0.03): Unit = {
-    // ONE handle across micro-batches (a handle re-resolves the current
-    // version per call, so reuse is safe by contract) — its per-version
-    // stats/file caches then serve the whole drain instead of being
-    // rebuilt per batch
     var handle: GraftTable = null
     IndexStream.runIndexed(rows, checkpointDir) { (batch, id) =>
-      val spark = batch.sparkSession
-      if (handle == null && currentVersion(spark, path).isEmpty) {
-        handle = create(batch, path, zoneCols, bloomCols, nFiles, bloomItems,
+      handle = streamBatch(handle, batch, path, id, None, null) { seed =>
+        create(seed, path, zoneCols, bloomCols, nFiles, bloomItems,
           bloomFpp, firstBatchId = id)
-        ()
-      } else {
-        if (handle == null) handle = new GraftTable(spark, path)
-        handle.append(batch, id); ()
       }
     }
   }
@@ -221,29 +219,43 @@ object GraftTable {
   def mergeStream(rows: DataFrame, path: String, keyCol: String,
       checkpointDir: String, nFiles: Int = 0,
       keepVersions: Int = 1, opCol: String = null): Unit = {
-    // ONE handle across micro-batches — see [[ingestStream]]
     var handle: GraftTable = null
     IndexStream.runIndexed(rows, checkpointDir) { (batch, id) =>
-      val spark = batch.sparkSession
-      if (handle == null && currentVersion(spark, path).isEmpty) {
-        // bootstrap: deletes against a table that does not exist yet
-        // are no-ops by definition — seed from the upsert rows only
-        // null-safe: a NULL op is "any other value", i.e. an upsert —
-        // a bare =!= would evaluate to null and silently drop the row
-        val seed =
-          if (opCol == null) batch
-          else batch.filter(!(col(opCol) <=> lit(DeleteOp))).drop(opCol)
-        // the bootstrap batch honors the same key contract every
-        // later merge() enforces — duplicates in batch 0 must refuse
-        // as loudly as they would in batch 1
-        requireMergeContract(seed, keyCol)
-        handle = create(seed, path, Seq(keyCol), nFiles = nFiles,
+      handle = streamBatch(handle, batch, path, id, Some(keyCol), opCol) {
+        seed => create(seed, path, Seq(keyCol), nFiles = nFiles,
           firstBatchId = id, keepVersions = keepVersions)
-        ()
-      } else {
-        if (handle == null) handle = new GraftTable(spark, path)
-        handle.merge(batch, keyCol, id, opCol); ()
       }
+    }
+  }
+
+  /** One micro-batch of a table-owning stream ([[ingestStream]],
+    * [[mergeStream]], the graft-table sink). The first batch CREATES the
+    * table through `create`, seeded with the batch id; with `opCol` the
+    * seed keeps only the upsert rows (null-safe: a NULL op upserts), and
+    * a merge seed passes the batch-key contract. Every later batch is a
+    * ledgered merge on `mergeKey`, or append, under the batch id. Returns
+    * the ONE handle reused across micro-batches, so its per-version
+    * caches serve the whole drain.
+    */
+  private[graft] def streamBatch(handle: GraftTable, batch: DataFrame,
+      path: String, id: Long, mergeKey: Option[String], opCol: String)(
+      create: DataFrame => GraftTable): GraftTable = {
+    val spark = batch.sparkSession
+    if (handle == null && currentVersion(spark, path).isEmpty) {
+      val seed =
+        if (opCol == null) batch
+        else batch.filter(!(col(opCol) <=> lit(DeleteOp))).drop(opCol)
+      // duplicate or null keys in batch 0 would otherwise land silently
+      // and make the table's upsert state wrong from birth
+      mergeKey.foreach(requireMergeContract(seed, _))
+      create(seed)
+    } else {
+      val h = if (handle == null) new GraftTable(spark, path) else handle
+      mergeKey match {
+        case Some(k) => h.merge(batch, k, id, opCol)
+        case None => h.append(batch, id)
+      }
+      h
     }
   }
 
@@ -611,29 +623,10 @@ object GraftTable {
     val manifest = src.manifestDf(v).withColumn("file",
       when(col("file").startsWith("/"), col("file"))
         .otherwise(concat(lit(srcRoot + "/"), col("file"))))
-    val f = fs(spark, destPath)
-    val token = java.util.UUID.randomUUID().toString
-    val staging = s"$destPath/.v1_stage_$token"
-    labeled(spark, "graft:clone:manifest") {
-      withoutAqe(spark) {
-        manifest.coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(s"$staging/manifest")
-      }
-    }
-    writeMeta(spark, s"$staging/meta",
-      m.copy(appliedHwm = -1L, streamed = false,
-        keepVersions = keepVersions))
-    writeSmall(f, new Path(s"$staging/_op"), "clone")
-    writeSmall(f, new Path(s"$staging/_publisher"), token)
-    val verDir = new Path(s"$destPath/v1")
-    val renamed =
-      try f.rename(new Path(staging), verDir)
-      catch { case _: Throwable => false }
-    if (!(renamed &&
-        readSmall(f, new Path(verDir, "_publisher")).contains(token))) {
-      try f.delete(new Path(staging), true) catch { case _: Throwable => () }
-      conflict(destPath, 1L)
-    }
+    // a metadata-only publish whose carried rows are the whole manifest
+    publishGeneration(spark, destPath, None, 1L,
+      m.copy(appliedHwm = -1L, streamed = false, keepVersions = keepVersions),
+      Some(Carry(manifest, None)), op = "clone")
     // register the clone against its SOURCE so a source vacuum/drop/
     // rename is LOUD instead of silently breaking the clone's absolute
     // references ([[GraftTable!.vacuum]]'s clone-safety check, shared by
@@ -657,13 +650,62 @@ object GraftTable {
       fs(spark, destPath).makeQualified(new Path(destPath)).toUri.getPath)
   }
 
+  /** A commit's row-level change slice: the exact rows, provably empty
+    * (a relayout or a metadata-only commit changes no rows), or left to
+    * [[GraftTable.readChanges]]'s manifest diff.
+    */
+  private[operators] sealed trait Changes
+  private[operators] object Changes {
+    final case class Rows(df: DataFrame) extends Changes
+    case object Empty extends Changes
+    case object Diff extends Changes
+  }
+
+  /** The rows of the head's manifest a commit keeps: lazily for the
+    * engine write, and as driver rows off the snapshot when it holds
+    * them (not on bloom tables, whose bloom bytes it leaves out).
+    */
+  private[operators] final case class Carry(rows: DataFrame,
+      snap: Option[(StructType, Seq[org.apache.spark.sql.Row])])
+
+  /** What a mutation decides against one head: commit nothing and
+    * return `result`, or publish `rows` (None = a metadata-only commit)
+    * in place of the head's `replaced` files under `meta`.
+    */
+  private[operators] sealed trait Plan[+R]
+  private[operators] final case class Skip[R](result: R) extends Plan[R]
+  private[operators] final case class Publish[R](rows: Option[DataFrame],
+      replaced: Set[String], meta: Meta, changes: Changes, result: R)
+      extends Plan[R]
+
+  /** How a mutation consumes a batch id: `batchId = None` is the manual
+    * form (high-water + 1 on every attempt), and a redelivered id
+    * returns `redelivered` without planning.
+    */
+  private[operators] final case class Ledger[R](batchId: Option[Long],
+      redelivered: R)
+
+  /** The one rebase rule: a commit that lost its race re-plans against
+    * the new head iff the winner removed none of the files it replaces
+    * and did not reach its explicit batch id. `removed` is None when the
+    * winner's retention pruned the base version, so the removed set is
+    * unknown: an overlap, unless the commit replaces nothing.
+    */
+  private[operators] def rebases(replaced: Set[String],
+      removed: Option[Set[String]], batchId: Option[Long],
+      headHwm: Long): Boolean =
+    !batchId.exists(_ <= headHwm) &&
+      removed.fold(replaced.isEmpty)(r => !replaced.exists(r))
+
   /** The whole publish cycle for a mutation that lands `rows` as the
     * version-`v` generation. Collision-free until one atomic commit:
     * data files land under a publish-unique `data/g{v}_{token}`, the
     * manifest (new files' zone rows, paths RELATIVIZED to the table
-    * root, plus any carried-forward rows of the previous manifest), the
+    * root, plus the `carry`ed rows of the previous manifest), the
     * meta and the publisher token are staged under a hidden dir, and ONE
-    * directory rename makes `v{v}` visible whole. The token read back
+    * directory rename makes `v{v}` visible whole. `rows = None` is a
+    * metadata-only commit: no generation is written and the carried
+    * rows are the whole manifest. The token read back
     * after the rename certifies whose attempt won; a loser cleans its
     * debris and throws `ConcurrentModificationException` — exactly one
     * commit per version survives, and the winner's files were never
@@ -674,13 +716,8 @@ object GraftTable {
     * stages elsewhere) and is cleared.
     */
   private[operators] def publishGeneration(spark: SparkSession, base: String,
-      rows: DataFrame, v: Long, meta: Meta,
-      carryForward: Option[DataFrame],
-      changes: Option[DataFrame] = None,
-      changesEmpty: Boolean = false,
-      op: String = "write",
-      carrySnap: Option[(StructType, Seq[org.apache.spark.sql.Row])] = None)
-      : Unit = {
+      rows: Option[DataFrame], v: Long, meta: Meta, carry: Option[Carry],
+      changes: Changes = Changes.Diff, op: String = "write"): Unit = {
     val f = fs(spark, base)
     val verDir = new Path(s"$base/v$v")
     if (isCommitted(f, base, v)) conflict(base, v)
@@ -706,10 +743,13 @@ object GraftTable {
       }
     }
     val gen = s"$base/data/g${v}_$token"
-    labeled(spark, s"graft:publish:generation v$v ($op)") {
-      rows.write.mode(SaveMode.Overwrite).parquet(gen)
+    val files = rows.fold(Seq.empty[(String, Long)]) { r =>
+      labeled(spark, s"graft:publish:generation v$v ($op)") {
+        r.write.mode(SaveMode.Overwrite).parquet(gen)
+      }
+      listGeneration(spark, gen)
     }
-    val files = listGeneration(spark, gen)
+    val schema = rows.fold(meta.schema)(_.schema)
     val rootNorm = new Path(base).toUri.getPath
     // root-relative storage: the committed table survives a directory
     // move/rename/DR-copy; absolute rows (legacy, or files genuinely
@@ -728,10 +768,10 @@ object GraftTable {
       if (meta.bloomCols.nonEmpty) None
       else FooterStats.zoneRowsFromFooters(
         spark.sparkContext.hadoopConfiguration, files, meta.zoneCols,
-        rows.schema).map(_.map(r =>
+        schema).map(_.map(r =>
         org.apache.spark.sql.Row.fromSeq(
           relativize(r.getString(0)) +: r.toSeq.tail)))
-    val footerSchema = FooterStats.manifestSchema(meta.zoneCols, rows.schema)
+    val footerSchema = FooterStats.manifestSchema(meta.zoneCols, schema)
     // the WHOLE new manifest driver-side when both halves already are —
     // fresh rows from the footers just written, carried rows from the
     // previous version's snapshot: written without a Spark job
@@ -740,9 +780,9 @@ object GraftTable {
     // failure) falls back to the engine write path unchanged.
     val driverManifest: Option[(StructType, Seq[org.apache.spark.sql.Row])] =
       footerRows.flatMap { fr =>
-        carryForward match {
+        carry match {
           case None => Some((footerSchema, fr))
-          case Some(_) => carrySnap.map { case (cs, cr) =>
+          case Some(c) => c.snap.map { case (cs, cr) =>
             ManifestIo.unionAligned(cs, cr, footerSchema, fr) }
         }
       }.filter(m => ManifestIo.driverWritable(m._1))
@@ -755,7 +795,7 @@ object GraftTable {
       // written with; an all-delete merge's generation of ZERO files
       // reads as an empty frame of that schema
       val genRows = spark.baseRelationToDataFrame(GraftFileIndex.relation(
-        spark, gen, files, None, rows.schema))
+        spark, gen, files, None, schema))
       import spark.implicits._
       // REAL on-disk bytes per file, joined onto the zone rows (both
       // metadata-scale) before relativization: size estimation must never
@@ -775,11 +815,12 @@ object GraftTable {
     val wroteDriver = driverManifest.exists { case (ms, mr) =>
       ManifestIo.write(spark, s"$staging/manifest", ms, mr) }
     if (!wroteDriver) {
-      val manifest = carryForward match {
+      val manifest = (carry, rows) match {
+        case (Some(prev), None) => prev.rows
         // by name: both sides carry the same zone, null-count and bytes
         // columns, each in its writer's order
-        case Some(prev) => prev.unionByName(fresh)
-        case None => fresh
+        case (Some(prev), Some(_)) => prev.rows.unionByName(fresh)
+        case (None, _) => fresh
       }
       labeled(spark, s"graft:publish:manifest v$v ($op)") {
         // |files| metadata rows — one file keeps reads cheap. coalesce, not
@@ -806,16 +847,18 @@ object GraftTable {
     // dropping it here means the extra write job never runs — and
     // [[GraftTable.readChanges]] falls back to the file-granularity
     // manifest diff, which stays exact (just coarser).
-    // `changesEmpty` is the PROVABLY-EMPTY slice (relayouts, policy/DDL
+    // `Changes.Empty` is the PROVABLY-EMPTY slice (relayouts, policy/DDL
     // commits: row-preserving by construction): a zero-byte marker file
     // replaces the empty-parquet Spark job — same feed semantics
     // ([[GraftTable.readChanges]]/[[GraftTable!.commitChanges]] serve an
     // empty slice for the version), one job less per commit.
-    if (meta.changeFeed) {
-      if (changesEmpty) writeSmall(f, new Path(s"$staging/_changes_none"), "")
-      else changes.foreach(c => labeled(spark, s"graft:publish:changes v$v") {
+    if (meta.changeFeed) changes match {
+      case Changes.Empty =>
+        writeSmall(f, new Path(s"$staging/_changes_none"), "")
+      case Changes.Rows(c) => labeled(spark, s"graft:publish:changes v$v") {
         c.write.mode(SaveMode.Overwrite).parquet(s"$staging/_changes")
-      })
+      }
+      case Changes.Diff => ()
     }
     // the operation marker feeds [[GraftTable.history]]; written inside
     // the staged commit so it is atomic with everything else
@@ -1014,22 +1057,95 @@ final class GraftTable private[operators] (spark: SparkSession,
     rows.toSeq.map(_.getString(ix))
   }
 
-  /** The previous version's snapshot minus `drop`ped files, as
-    * [[GraftTable.publishGeneration]]'s `carrySnap` — the carried half
-    * of a driver-written manifest. None on bloom tables: the snapshot
-    * deliberately excludes the bloom bytes a carried manifest must keep,
-    * so those tables stay on the engine write path.
+  /** One commit attempt against head `v`; [[commit]] releases the
+    * frames the plan [[persist]]s when the attempt ends.
     */
-  private def carrySnapOf(v: Long, m: Meta, drop: Set[String] = Set.empty)
-      : Option[(StructType, Seq[org.apache.spark.sql.Row])] =
-    if (m.bloomCols.nonEmpty) None
-    else {
-      val (s, r) = manifestSnap(v)
-      val fIx = s.fieldIndex("file")
-      Some((s,
-        if (drop.isEmpty) r.toSeq
-        else r.toSeq.filterNot(x => drop(x.getString(fIx)))))
+  private final class Attempt(val v: Long, val meta: Meta) {
+    private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def persist(df: DataFrame): DataFrame = {
+      held += df
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
+    def release(): Unit = held.foreach(_.unpersist(false))
+  }
+
+  /** The one commit path of every mutation but [[GraftTable.create]]:
+    * resolve the head, apply the ledger, run `plan` against the head and
+    * publish what it decides, carrying forward every manifest row of the
+    * files it does not replace.
+    *
+    * OPTIMISTIC REBASE (the Delta/Iceberg retry discipline): a publish
+    * that loses its race — or an attempt whose base version a winner's
+    * retention pruned mid-flight — re-plans against the new head under
+    * the one rule of [[GraftTable.rebases]]: iff the winner removed none
+    * of the files this attempt replaces and did not reach its explicit
+    * batch id, at most 10 attempts. Every re-attempt plans from the new
+    * head, so the commit is serializable after the winner; a true
+    * overlap still throws `ConcurrentModificationException`.
+    */
+  private def commit[R](op: String, ledger: Option[Ledger[R]] = None)(
+      plan: Attempt => Plan[R]): R = {
+    var attempt = 0
+    while (true) {
+      val v = version
+      var replaced = Set.empty[String]
+      try {
+        val m = readMeta(spark, path, v)
+        val id = ledger.map(_.batchId.getOrElse {
+          requireManualLedgerAllowed(m, op)
+          m.appliedHwm + 1
+        })
+        if (id.exists(_ <= m.appliedHwm)) {
+          DedupIndex.log.warn(s"graft table $path: $op batch ${id.get} at " +
+            s"or below the applied high-water mark ${m.appliedHwm} — " +
+            "redelivery (or a non-monotone id) skipped")
+          return ledger.get.redelivered
+        }
+        val a = new Attempt(v, m)
+        try plan(a) match {
+          case Skip(r) => return r
+          case Publish(rows, rep, nm, changes, r) =>
+            replaced = rep
+            publishGeneration(spark, path, rows, v + 1,
+              id.fold(nm)(i => nm.copy(appliedHwm = i)), carry(v, m, rep),
+              changes, op)
+            return r
+        } finally a.release()
+      } catch {
+        case e: Throwable
+            if e.isInstanceOf[java.util.ConcurrentModificationException] ||
+              (GraftTable.raceArtifact(e) && version > v) =>
+          attempt += 1
+          val head = version
+          val removed =
+            scala.util.Try(storedFiles(v).toSet -- storedFiles(head)).toOption
+          val headHwm = readMeta(spark, path, head).appliedHwm
+          if (attempt >= 10 || !GraftTable.rebases(replaced, removed,
+              ledger.flatMap(_.batchId), headHwm)) throw e
+          DedupIndex.log.info(s"graft table $path: $op lost the v${v + 1} " +
+            s"race — rebasing onto v$head (attempt $attempt)")
+      }
+    }
+    sys.error("unreachable")
+  }
+
+  /** Version `v`'s manifest rows minus the `replaced` files — None when
+    * every file is replaced. The lazy read is evaluated by the staging
+    * manifest write while v is still retained (the commit's own prune
+    * runs after its rename); a racing winner's prune surfaces as a
+    * raceArtifact [[commit]] rebases.
+    */
+  private def carry(v: Long, m: Meta, replaced: Set[String]): Option[Carry] =
+    if (replaced.nonEmpty && storedFiles(v).forall(replaced)) None
+    else Some(Carry(
+      if (replaced.isEmpty) manifestDf(v)
+      else manifestDf(v).filter(!col("file").isInCollection(replaced)),
+      if (m.bloomCols.nonEmpty) None
+      else {
+        val (s, r) = manifestSnap(v)
+        val fIx = s.fieldIndex("file")
+        Some((s, r.toSeq.filterNot(x => replaced(x.getString(fIx)))))
+      }))
 
   /** The files the current version references (resolved to full paths) —
     * the authoritative scan list; no directory listing happens anywhere
@@ -1133,8 +1249,8 @@ final class GraftTable private[operators] (spark: SparkSession,
     * unsafe direction). Every manifest writer records `bytes` for every
     * row.
     *
-    * This sizes compaction and feeds the CBO `CatalogTable` of catalog
-    * reads; a read's plan size is the same byte total, summed by its
+    * This feeds the CBO `CatalogTable` of catalog reads; a read's plan
+    * size is the same byte total, summed by its
     * [[graft.sources.GraftFileIndex]].
     *
     * A committed version's manifest is IMMUTABLE, so the answer is
@@ -1229,61 +1345,23 @@ final class GraftTable private[operators] (spark: SparkSession,
   def append(batch: DataFrame, batchId: Long): Boolean =
     appendImpl(batch, Some(batchId))
 
-  /** Append body with OPTIMISTIC REBASE: an append reads nothing — its
-    * manifest carry-forward re-resolves from whatever head it publishes
-    * against — so losing a commit race to ANY winner (another append, a
-    * merge, a compaction) is always a false conflict: re-attempt against
-    * the new head. Two concurrent appenders therefore BOTH commit, at
-    * contiguous versions, with the exact union of their rows. The one
-    * true conflict left: an explicit-id append whose id the winner's
-    * ledger already reached (same checkpoint lineage racing itself) —
-    * silently skipping it as "redelivery" would drop rows, so it throws.
-    * `batchId = None` (the manual form) re-ledgers at high-water + 1 on
-    * every attempt.
+  /** Append body: an append replaces no file, so under the one rebase
+    * rule ([[commit]]) losing a race to ANY winner — another append, a
+    * merge, a compaction, even one whose retention pruned the base — is
+    * a false conflict, and it re-attempts against the new head. Two
+    * concurrent appenders therefore BOTH commit, at contiguous versions,
+    * with the exact union of their rows. The one true conflict left: an
+    * explicit-id append whose id the winner's ledger already reached
+    * (same checkpoint lineage racing itself) — silently skipping it as
+    * "redelivery" would drop rows, so it throws. `batchId = None` (the
+    * manual form) re-ledgers at high-water + 1 on every attempt.
     */
-  private def appendImpl(batch: DataFrame, batchId: Option[Long]): Boolean = {
-    var attempt = 0
-    while (true) {
-      val v = version
-      try {
-        val m = readMeta(spark, path, v)
-        val id = batchId.getOrElse {
-          requireManualLedgerAllowed(m, "append")
-          m.appliedHwm + 1
-        }
-        if (id <= m.appliedHwm) {
-          DedupIndex.log.warn(s"graft table $path: batch $id at or below " +
-            s"the applied high-water mark ${m.appliedHwm} — redelivery (or a " +
-            "non-monotone id, which violates the append contract) skipped")
-          return false
-        }
-        val evolved = GraftTable.evolveSchema(m, batch.schema)
-        publishGeneration(spark, path, batch, v + 1,
-          m.copy(appliedHwm = id, schemaDdl = evolved.toDDL),
-          // LAZY carry: the staging manifest write evaluates this read
-          // while v is still retained (our own prune runs after the
-          // commit rename). Under contention a racing winner's retention
-          // prune can delete v's manifest dir mid-staging-write — that
-          // surfaces as a raceArtifact this very catch rebases, so the
-          // eager localCheckpoint job the pre-r18 shape paid per commit
-          // defended nothing the retry loop doesn't already cover.
-          carryForward = Some(manifestDf(v)),
-          op = "append", carrySnap = carrySnapOf(v, m))
-        return true
-      } catch {
-        case e: Throwable
-            if e.isInstanceOf[java.util.ConcurrentModificationException] ||
-              (GraftTable.raceArtifact(e) && version > v) =>
-          attempt += 1
-          val idCollides =
-            batchId.exists(_ <= readMeta(spark, path, version).appliedHwm)
-          if (attempt >= 10 || idCollides) throw e
-          DedupIndex.log.info(s"graft table $path: append lost the " +
-            s"v${v + 1} race — rebasing onto v$version (attempt $attempt)")
-      }
+  private def appendImpl(batch: DataFrame, batchId: Option[Long]): Boolean =
+    commit("append", Some(Ledger(batchId, false))) { a =>
+      val evolved = GraftTable.evolveSchema(a.meta, batch.schema)
+      Publish(Some(batch), Set.empty, a.meta.copy(schemaDdl = evolved.toDDL),
+        Changes.Diff, true)
     }
-    sys.error("unreachable")
-  }
 
   /** A streaming checkpoint that bootstrapped this table OWNS its
     * ledger: a manual `hwm + 1` stamp could advance the high-water mark
@@ -1445,13 +1523,11 @@ final class GraftTable private[operators] (spark: SparkSession,
     * high-water + 1 on EVERY attempt, so an optimistic rebase after a
     * lost race re-ledgers against the new head instead of colliding.
     *
-    * OPTIMISTIC REBASE (the Delta/Iceberg retry discipline): when the
-    * publish loses a commit race, the merge re-attempts against the new
-    * head iff it is provably serializable after the winner — the files
-    * this attempt planned to rewrite are all still referenced (the
-    * winner's rewrite-set is disjoint from this read-set) and, for an
-    * explicit-id merge, the winner did not advance the ledger past this
-    * batch's id. A true overlap (two merges on the same key stripe, a
+    * A merge replaces its affected files, so under the one rebase rule
+    * ([[commit]]) it re-attempts after a lost race iff the winner removed
+    * none of them (and, for an explicit-id merge, did not reach its id);
+    * a winner whose retention pruned the base version counts as an
+    * overlap. A true overlap (two merges on the same key stripe, a
     * concurrent compaction) still throws
     * `ConcurrentModificationException` — rebase never papers over a
     * genuine conflict, it only removes the false ones. The re-attempt
@@ -1498,24 +1574,12 @@ final class GraftTable private[operators] (spark: SparkSession,
     val isDel =
       if (opCol == null) lit(false) else col(opCol) <=> lit(DeleteOp)
     val keys = batch0.select(keyCols.map(col): _*)
-    var attempt = 0
-    while (true) {
-      val v = version
-      val m = readMeta(spark, path, v)
+    commit("merge", Some(Ledger(batchId, (0L, 0L)))) { a =>
+      val (v, m) = (a.v, a.meta)
       require(m.zoneCols.contains(keyCol),
         s"the leading merge key $keyCol must be zone-indexed " +
           s"(zones: ${m.zoneCols.mkString(", ")})")
-      val id = batchId.getOrElse {
-        requireManualLedgerAllowed(m, "merge")
-        m.appliedHwm + 1
-      }
-      if (id <= m.appliedHwm) {
-        DedupIndex.log.warn(s"graft table $path: merge batch $id at or " +
-          s"below the applied high-water mark ${m.appliedHwm} — redelivery " +
-          "(or a non-monotone id) skipped")
-        return (0L, 0L)
-      }
-      val manifest = manifestDf(v)
+      lazy val manifest = manifestDf(v)
       // a file is affected iff SOME batch key — upsert or tombstone —
       // falls inside its zone range. The candidacy probe keeps batch
       // keys executor-side; the manifest side rides into the plan as a
@@ -1582,71 +1646,35 @@ final class GraftTable private[operators] (spark: SparkSession,
         }
         }
       }
-      // LAZY carry (the appendImpl discipline): evaluated by the staging
-      // manifest write while v is still retained; a racing winner's prune
-      // surfaces as a raceArtifact the rebase catch below retries. The
-      // carried COUNT is set arithmetic over the cached file list —
-      // affected ⊆ stored by construction — not a Spark job.
-      val carried = manifest.filter(!col("file").isInCollection(affected))
+      // the carried COUNT is set arithmetic over the cached file list —
+      // affected ⊆ stored by construction — not a Spark job
       val carriedCount = storedFiles(v).size.toLong - affected.size
       val evolved = GraftTable.evolveSchema(m,
         StructType(batch.schema.filterNot(f =>
           f.name == opCol || carryCols.contains(f.name))))
-      val sliceSchema = evolved
       // feed ON: the affected stripe is read by the rewrite AND by every
       // change-slice leg (2-4 more evaluations) — cache it once
       // (lazily: the rewrite's own pass populates it, no extra job),
       // spillable storage proportional to the rewrite the commit pays
-      // anyway, released after the commit. Feed OFF: the slice never
+      // anyway, released after the attempt. Feed OFF: the slice never
       // executes, so the single lazy read stays the cheapest plan.
       val stored =
         if (affected.isEmpty) None
         else {
           val st = frame(v, Some(affected), Some(evolved))
-          Some(if (m.changeFeed) st.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else st)
+          Some(if (m.changeFeed) a.persist(st) else st)
         }
-      val (rewrittenRows, slice, sliceCleanup) = spec match {
+      val (rewrittenRows, slice) = spec match {
         case None =>
-          classicMerge(batch0, keyCols, isDel, opCol, stored, sliceSchema,
-            m.changeFeed)
+          classicMerge(batch0, keyCols, isDel, opCol, stored, evolved)
         case Some(sp) =>
-          condMerge(batch0, keyCols, isDel, opCol, sp, stored, evolved,
-            sliceSchema, m.changeFeed)
+          condMerge(batch0, keyCols, isDel, opCol, sp, stored, evolved)
       }
-      try {
-        publishGeneration(spark, path, rewrittenRows, v + 1,
-          m.copy(appliedHwm = id, schemaDdl = evolved.toDDL),
-          carryForward = Some(carried), changes = Some(slice),
-          op = "merge", carrySnap = carrySnapOf(v, m, affected))
-        return (affected.size.toLong, carriedCount)
-      } catch {
-        case e: Throwable
-            if e.isInstanceOf[java.util.ConcurrentModificationException] ||
-              (GraftTable.raceArtifact(e) && version > v) =>
-          attempt += 1
-          val head = version
-          // base version pruned by the winner's retention → this
-          // attempt's read-set cannot be proven disjoint: conservative,
-          // the conflict surfaces (widen keepVersions to rebase merges
-          // under heavy contention)
-          val removed =
-            try storedFiles(v).toSet -- storedFiles(head).toSet
-            catch { case _: Throwable => throw e }
-          val headHwm = readMeta(spark, path, head).appliedHwm
-          val idCollides = batchId.exists(_ <= headHwm)
-          if (attempt >= 10 || idCollides || affected.exists(removed))
-            throw e
-          DedupIndex.log.info(s"graft table $path: merge lost the v${v + 1} " +
-            s"race but is disjoint from the winner — rebasing onto v$head " +
-            s"(attempt $attempt)")
-      } finally {
-        sliceCleanup()
-        stored.foreach(_.unpersist(false))
-      }
+      Publish(Some(rewrittenRows), affected,
+        m.copy(schemaDdl = evolved.toDDL), Changes.Rows(slice),
+        (affected.size.toLong, carriedCount))
     }
     } finally batch0.unpersist(false)
-    sys.error("unreachable")
   }
 
   /** [[merge]]'s latest-wins upsert body: delete every stored row whose
@@ -1655,8 +1683,7 @@ final class GraftTable private[operators] (spark: SparkSession,
     */
   private def classicMerge(batch: DataFrame, keyCols: Seq[String],
       isDel: Column, opCol: String, stored: Option[DataFrame],
-      sliceSchema: StructType, changeFeed: Boolean)
-      : (DataFrame, DataFrame, () => Unit) = {
+      sliceSchema: StructType): (DataFrame, DataFrame) = {
     val keys = batch.select(keyCols.map(col): _*)
     val upserts = (if (opCol == null) batch else batch.filter(!isDel)
       .drop(opCol))
@@ -1687,7 +1714,7 @@ final class GraftTable private[operators] (spark: SparkSession,
         alignSlice(pre, sliceSchema)
           .unionByName(alignSlice(post, sliceSchema))
     }
-    (rewritten, slice, () => ())
+    (rewritten, slice)
   }
 
   /** [[mergeCond]]/[[mergeSpec]]'s SQL-MERGE body over one full-outer
@@ -1699,9 +1726,8 @@ final class GraftTable private[operators] (spark: SparkSession,
     */
   private def condMerge(batch: DataFrame, keyCols: Seq[String],
       isDel: Column, opCol: String, spec: GraftTable.MergeSpec,
-      stored: Option[DataFrame], evolved: StructType,
-      sliceSchema: StructType, changeFeed: Boolean)
-      : (DataFrame, DataFrame, () => Unit) = {
+      stored: Option[DataFrame], evolved: StructType)
+      : (DataFrame, DataFrame) = {
     val keyCol = keyCols.head
     val s0 = batch.withColumn("_del", isDel)
     val sBatch = (if (opCol == null) s0 else s0.drop(opCol)).alias("s")
@@ -1732,8 +1758,7 @@ final class GraftTable private[operators] (spark: SparkSession,
       case None =>
         val ins = sBatch.filter(!col("_del") && insOk)
         val img = ins.select(evolved.fieldNames.map(c => sCol(c).as(c)): _*)
-        (img, alignSlice(img.withColumn(ChangeType, lit("insert")),
-          sliceSchema), () => ())
+        (img, alignSlice(img.withColumn(ChangeType, lit("insert")), evolved))
       case Some(st) =>
         val joined = st.alias("t").join(sBatch,
           keyCols.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _),
@@ -1782,7 +1807,7 @@ final class GraftTable private[operators] (spark: SparkSession,
             when(doInsert, sliceStruct("insert", sCol))))).as("_r"))
           .select((evolved.fieldNames.map(c => col(s"_r.$c")) :+
             col(s"_r.$ChangeType")): _*)
-        (rewritten, slice, () => ())
+        (rewritten, slice)
     }
   }
 
@@ -1881,94 +1906,66 @@ final class GraftTable private[operators] (spark: SparkSession,
     *                     [[delete]]/[[update]] contract)
     */
   private def dmlImpl(cnf: ZoneMap.Cnf, extra: Column,
-      set: Option[Map[String, Column]], filterUsable: Boolean): DmlResult = {
-    var attempt = 0
-    while (true) {
-      val v = version
-      val m = readMeta(spark, path, v)
+      set: Option[Map[String, Column]], filterUsable: Boolean): DmlResult =
+    commit(if (set.isDefined) "update" else "delete") { a =>
+      val (v, m) = (a.v, a.meta)
       set.foreach { s =>
         val bad = s.keySet -- m.schema.fieldNames.toSet
         require(bad.isEmpty,
           s"SET columns not in the table schema: ${bad.mkString(", ")}")
       }
-      val manifest = manifestDf(v)
       val usable = if (filterUsable) usableCnf(m, cnf) else cnf
       val affected =
         if (usable.isEmpty) storedFiles(v).toSet
         else pruneVersion(v, m, usable)._1.toSet
-      if (affected.isEmpty) return DmlResult(0L, storedFiles(v).size.toLong, 0L)
-      // LAZY carry + arithmetic count — the mergeImpl discipline
-      val carried = manifest.filter(!col("file").isInCollection(affected))
       val carriedCount = storedFiles(v).size.toLong - affected.size
       val cond = coalesce(extra, lit(false))
       // the stripe feeds the row gate, the rewrite AND (feed on) the
       // change slice — 2-3 evaluations; a LAZY persist lets the gate's
       // count populate the cache in the pass it pays anyway (no extra
-      // job) and the later consumers read it back. Released per attempt.
-      val stored = frame(v, Some(affected))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-      val (rewritten, slice) = set match {
-        case None =>
-          (stored.filter(!cond),
-            alignSlice(stored.filter(cond)
-              .withColumn(ChangeType, lit("delete")), m.schema))
-        case Some(sets) =>
-          def image(of: DataFrame, updated: Column) =
-            of.select(m.schema.fieldNames.map { c =>
-              (sets.get(c) match {
-                case Some(e) => when(updated, e.cast(m.schema(c).dataType))
-                  .otherwise(col(c))
-                case None => col(c)
-              }).as(c)
-            }: _*)
-          val pre = stored.filter(cond)
-          (image(stored, cond),
-            alignSlice(pre.withColumn(ChangeType, lit("update_preimage")),
-                m.schema)
-              .unionByName(alignSlice(image(pre, lit(true))
-                .withColumn(ChangeType, lit("update_postimage")), m.schema)))
-      }
+      // job) and the later consumers read it back
+      lazy val stored = a.persist(frame(v, Some(affected)))
       // ROW-level no-op gate, not just file-level: zone pruning is
       // conservative (a strict bound widens, a bloom false-positives),
       // so "some file survived pruning" does not mean "some row
       // matches" — and committing an identical rewrite of a 100 GB
       // stripe because k < 0 could not rule out the min_k = 0 file is
       // exactly the pointless I/O the manifest exists to avoid. The gate
-      // is one COUNT of the matching rows (over the feed-ON path's
-      // materialized stripe, so it costs a cache pass, not a re-scan),
-      // which doubles as the exact rows-affected report; the slice stays
-      // LAZY — feed ON, the `_changes` write inside the commit evaluates
-      // it once from the same materialized stripe, feed OFF it never
-      // runs at all.
-      val matchedRows = stored.filter(cond).count()
-      val changesOpt = if (m.changeFeed) Some(slice) else None
+      // is one COUNT of the matching rows (over the materialized
+      // stripe, so it costs a cache pass, not a re-scan), which doubles
+      // as the exact rows-affected report; the slice stays LAZY — feed
+      // ON, the `_changes` write inside the commit evaluates it once
+      // from the same materialized stripe, feed OFF it never runs.
+      val matchedRows =
+        if (affected.isEmpty) 0L else stored.filter(cond).count()
       if (matchedRows == 0L)
-        return DmlResult(0L, storedFiles(v).size.toLong, 0L)
-      try {
-        publishGeneration(spark, path, rewritten, v + 1, m,
-          carryForward = Some(carried), changes = changesOpt,
-          op = if (set.isDefined) "update" else "delete",
-          carrySnap = carrySnapOf(v, m, affected))
-        return DmlResult(affected.size.toLong, carriedCount, matchedRows)
-      } catch {
-        case e: Throwable
-            if e.isInstanceOf[java.util.ConcurrentModificationException] ||
-              (GraftTable.raceArtifact(e) && version > v) =>
-          attempt += 1
-          val head = version
-          val removed =
-            try storedFiles(v).toSet -- storedFiles(head).toSet
-            catch { case _: Throwable => throw e }
-          if (attempt >= 10 || affected.exists(removed)) throw e
-          DedupIndex.log.info(s"graft table $path: DML lost the v${v + 1} " +
-            s"race but is disjoint from the winner — rebasing onto v$head " +
-            s"(attempt $attempt)")
+        Skip(DmlResult(0L, storedFiles(v).size.toLong, 0L))
+      else {
+        val (rewritten, slice) = set match {
+          case None =>
+            (stored.filter(!cond),
+              alignSlice(stored.filter(cond)
+                .withColumn(ChangeType, lit("delete")), m.schema))
+          case Some(sets) =>
+            def image(of: DataFrame, updated: Column) =
+              of.select(m.schema.fieldNames.map { c =>
+                (sets.get(c) match {
+                  case Some(e) => when(updated, e.cast(m.schema(c).dataType))
+                    .otherwise(col(c))
+                  case None => col(c)
+                }).as(c)
+              }: _*)
+            val pre = stored.filter(cond)
+            (image(stored, cond),
+              alignSlice(pre.withColumn(ChangeType, lit("update_preimage")),
+                  m.schema)
+                .unionByName(alignSlice(image(pre, lit(true))
+                  .withColumn(ChangeType, lit("update_postimage")), m.schema)))
+        }
+        Publish(Some(rewritten), affected, m, Changes.Rows(slice),
+          DmlResult(affected.size.toLong, carriedCount, matchedRows))
       }
-      } finally stored.unpersist(false)
     }
-    sys.error("unreachable")
-  }
 
   /** Change the table's lifecycle POLICIES — retention (`keepVersions`,
     * `keepHours`), change-feed persistence (`changeFeed`) — as ONE
@@ -1984,19 +1981,15 @@ final class GraftTable private[operators] (spark: SparkSession,
       changeFeed: Option[Boolean] = None): Unit = {
     require(keepVersions.forall(_ >= 1),
       s"keepVersions must be >= 1: $keepVersions")
-    val v = version
-    val m = readMeta(spark, path, v)
-    val nm = m.copy(
-      keepVersions = keepVersions.getOrElse(m.keepVersions),
-      keepHours = keepHours.getOrElse(m.keepHours),
-      changeFeed = changeFeed.getOrElse(m.changeFeed))
-    if (nm == m) return
-    publishGeneration(spark, path,
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema),
-      v + 1, nm,
-      carryForward = Some(manifestDf(v)),
-      changesEmpty = true, op = "setpolicy", carrySnap = carrySnapOf(v, m))
+    commit("setpolicy") { a =>
+      val m = a.meta
+      val nm = m.copy(
+        keepVersions = keepVersions.getOrElse(m.keepVersions),
+        keepHours = keepHours.getOrElse(m.keepHours),
+        changeFeed = changeFeed.getOrElse(m.changeFeed))
+      if (nm == m) Skip(())
+      else Publish(None, Set.empty, nm, Changes.Empty, ())
+    }
   }
 
   /** `ALTER TABLE … ADD COLUMN` — ADDITIVE schema evolution declared by
@@ -2011,26 +2004,23 @@ final class GraftTable private[operators] (spark: SparkSession,
     */
   def addColumns(cols: StructType): Unit = {
     require(cols.nonEmpty, "ADD COLUMN needs at least one column")
-    val v = version
-    val m = readMeta(spark, path, v)
-    val stored = m.schema.fields.map(f => f.name -> f.dataType).toMap
-    cols.foreach { f =>
-      stored.get(f.name).foreach { dt =>
-        require(dt == f.dataType, s"column ${f.name} already exists " +
-          s"with type ${dt.sql} — parquet files cannot re-type " +
-          s"(ADD COLUMN declared ${f.dataType.sql})")
+    commit("addcolumns") { a =>
+      val m = a.meta
+      val stored = m.schema.fields.map(f => f.name -> f.dataType).toMap
+      cols.foreach { f =>
+        stored.get(f.name).foreach { dt =>
+          require(dt == f.dataType, s"column ${f.name} already exists " +
+            s"with type ${dt.sql} — parquet files cannot re-type " +
+            s"(ADD COLUMN declared ${f.dataType.sql})")
+        }
       }
+      val fresh = cols.fields.filterNot(f => stored.contains(f.name))
+        .map(_.copy(nullable = true))
+      if (fresh.isEmpty) Skip(())
+      else Publish(None, Set.empty,
+        m.copy(schemaDdl = StructType(m.schema.fields ++ fresh).toDDL),
+        Changes.Empty, ())
     }
-    val fresh = cols.fields.filterNot(f => stored.contains(f.name))
-      .map(_.copy(nullable = true))
-    if (fresh.isEmpty) return
-    val evolved = StructType(m.schema.fields ++ fresh)
-    publishGeneration(spark, path,
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], evolved),
-      v + 1, m.copy(schemaDdl = evolved.toDDL),
-      carryForward = Some(manifestDf(v)),
-      changesEmpty = true, op = "addcolumns", carrySnap = carrySnapOf(v, m))
   }
 
   /** The table's current lifecycle policies:
@@ -2206,27 +2196,7 @@ final class GraftTable private[operators] (spark: SparkSession,
     */
   def compact(targetRows: Long,
       sortCols: Seq[String] = Nil): (Long, Long) = {
-    require(targetRows > 0, s"targetRows must be positive: $targetRows")
-    val v = version
-    val m = readMeta(spark, path, v)
-    val before = storedFiles(v).size.toLong
-    val df = frame(v)
-    // the manifest already records the EXACT per-file row count (`cnt`)
-    // — sizing the relayout from its sum ([[approxStats]], cached) costs
-    // one metadata fold instead of a full count() scan of the table
-    val rows = approxStats(v)._1
-    val n = math.max(1L, (rows + targetRows - 1) / targetRows).toInt
-    val out =
-      if (sortCols.nonEmpty)
-        df.repartitionByRange(n, sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-      else df.coalesce(n)
-    // a pure relayout changes NO rows: persist an EMPTY change slice so
-    // the feed serves nothing for this commit instead of churning the
-    // whole table through file-diff delete+insert pairs
-    publishGeneration(spark, path, out, v + 1,
-      m.copy(layoutCols = sortCols), carryForward = None,
-      changesEmpty = true, op = "compact")
+    val (before, _) = relayout(None, targetRows, sortCols)
     (before, files().size.toLong)
   }
 
@@ -2240,13 +2210,12 @@ final class GraftTable private[operators] (spark: SparkSession,
     * consume batch ids; schema evolves additively like [[append]].
     */
   def replace(df: DataFrame, nFiles: Int = 0): Unit = {
-    val v = version
-    val m = readMeta(spark, path, v)
-    val evolved = GraftTable.evolveSchema(m, df.schema)
     val sized = if (nFiles > 0) df.repartition(nFiles) else df
-    publishGeneration(spark, path, sized, v + 1,
-      m.copy(schemaDdl = evolved.toDDL), carryForward = None,
-      op = "overwrite")
+    commit("overwrite") { a =>
+      val evolved = GraftTable.evolveSchema(a.meta, df.schema)
+      Publish(Some(sized), storedFiles(a.v).toSet,
+        a.meta.copy(schemaDdl = evolved.toDDL), Changes.Diff, ())
+    }
   }
 
   /** INCREMENTAL compaction (the `OPTIMIZE … WHERE …` shape): re-layout
@@ -2265,31 +2234,49 @@ final class GraftTable private[operators] (spark: SparkSession,
       sortCols: Seq[String] = Nil): (Long, Long) = {
     require(preds.nonEmpty, "compactWhere needs at least one predicate — " +
       "use compact() for the whole-table pass")
+    relayout(Some(preds), targetRows, sortCols)
+  }
+
+  /** [[compact]] (`preds = None`: every file, and the sort columns
+    * become the recorded layout) and [[compactWhere]] (the files whose
+    * zone stats intersect `preds`; an empty stripe commits nothing):
+    * one relayout of the stripe into ~`ceil(stripe rows / targetRows)`
+    * files.
+    *
+    * @return (files rewritten, files carried untouched)
+    */
+  private def relayout(preds: Option[Seq[ZoneMap.Pred]], targetRows: Long,
+      sortCols: Seq[String]): (Long, Long) = {
     require(targetRows > 0, s"targetRows must be positive: $targetRows")
-    val v = version
-    val m = readMeta(spark, path, v)
-    val affected = pruneVersion(v, m, Seq(Seq(preds)))._1.toSet
-    if (affected.isEmpty) return (0L, storedFiles(v).size.toLong)
-    val carried = manifestDf(v)
-      .filter(!col("file").isInCollection(affected))
-    val carriedCount = storedFiles(v).size.toLong - affected.size
-    val df = frame(v, Some(affected))
-    // stripe row count from the manifest's exact per-file `cnt` — one
-    // metadata-scale aggregate instead of a full count() of the stripe
-    val rowsRow = manifestDf(v).filter(col("file").isInCollection(affected))
-      .agg(sum("cnt")).head()
-    val rows = if (rowsRow.isNullAt(0)) 0L else rowsRow.getLong(0)
-    val n = math.max(1L, (rows + targetRows - 1) / targetRows).toInt
-    val out =
-      if (sortCols.nonEmpty)
-        df.repartitionByRange(n, sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-      else df.coalesce(n)
-    publishGeneration(spark, path, out, v + 1, m,
-      carryForward = Some(carried),
-      changesEmpty = true, op = "compact",
-      carrySnap = carrySnapOf(v, m, affected))
-    (affected.size.toLong, carriedCount)
+    commit("compact") { a =>
+      val (v, m) = (a.v, a.meta)
+      val all = storedFiles(v).size.toLong
+      val stripe = preds.map(p => pruneVersion(v, m, Seq(Seq(p)))._1.toSet)
+      if (stripe.exists(_.isEmpty)) Skip((0L, all))
+      else {
+        val affected = stripe.getOrElse(storedFiles(v).toSet)
+        // the manifest already records the EXACT per-file row count
+        // (`cnt`): sizing the relayout folds it over the snapshot instead
+        // of running a count() of the stripe
+        val (s, snap) = manifestSnap(v)
+        val (fIx, cIx) = (s.fieldIndex("file"), s.fieldIndex("cnt"))
+        val rows = snap.iterator.filter(r => affected(r.getString(fIx)))
+          .map(r => if (r.isNullAt(cIx)) 0L else r.getLong(cIx)).sum
+        val n = math.max(1L, (rows + targetRows - 1) / targetRows).toInt
+        val df = frame(v, stripe)
+        val out =
+          if (sortCols.nonEmpty)
+            df.repartitionByRange(n, sortCols.map(col): _*)
+              .sortWithinPartitions(sortCols.map(col): _*)
+          else df.coalesce(n)
+        // a pure relayout changes NO rows: an EMPTY change slice, so the
+        // feed serves nothing for this commit instead of churning the
+        // stripe through file-diff delete+insert pairs
+        Publish(Some(out), affected,
+          if (preds.isEmpty) m.copy(layoutCols = sortCols) else m,
+          Changes.Empty, (affected.size.toLong, all - affected.size))
+      }
+    }
   }
 
   /** The commit log over the RETAINED versions — (version, operation,
@@ -2326,40 +2313,40 @@ final class GraftTable private[operators] (spark: SparkSession,
     */
   def zorder(cols: Seq[String], nFiles: Int, bits: Int = 16): Unit = {
     require(nFiles > 0, s"nFiles must be positive: $nFiles")
-    val v = version
-    val m = readMeta(spark, path, v)
-    val df = frame(v)
-    // global (min, max) per curve column from the MANIFEST when every
-    // column is zone-indexed and numeric (min-of-mins/max-of-maxes is the
-    // global bound; cast monotone) — one metadata fold replaces the full
-    // column-stats scan of the table. Non-indexed or non-numeric columns
-    // keep the data-scan path.
-    val numeric: Set[String] =
-      Set("BIGINT", "INT", "SMALLINT", "TINYINT", "DOUBLE", "FLOAT")
-    val manifestStats: Option[Map[String, (Double, Double)]] =
-      if (cols.forall(c => m.zoneCols.contains(c) &&
-          numeric(m.types.getOrElse(c, "").toUpperCase))) {
-        val st = columnStats(v)
-        def d(a: Any): Double = a match {
-          case null => Double.NaN
-          case n: Number => n.doubleValue()
-          case _ => Double.NaN
-        }
-        val got = st.collect { case (c, mn, mx, _) if cols.contains(c) =>
-          c -> (if (mn == null) (0.0, 0.0) else (d(mn), d(mx)))
-        }.toMap
-        if (cols.forall(c => got.get(c).exists(p =>
-          !p._1.isNaN && !p._2.isNaN))) Some(got) else None
-      } else None
-    val key = Layout.zkey(cols,
-      manifestStats.getOrElse(Layout.colStats(df, cols)), bits)
-    val out = df.withColumn("__zkey", key)
-      .repartitionByRange(nFiles, col("__zkey"))
-      .sortWithinPartitions("__zkey")
-      .drop("__zkey")
-    publishGeneration(spark, path, out, v + 1,
-      m.copy(layoutCols = cols), carryForward = None,
-      changesEmpty = true, op = "zorder")
+    commit("zorder") { a =>
+      val (v, m) = (a.v, a.meta)
+      val df = frame(v)
+      // global (min, max) per curve column from the MANIFEST when every
+      // column is zone-indexed and numeric (min-of-mins/max-of-maxes is the
+      // global bound; cast monotone) — one metadata fold replaces the full
+      // column-stats scan of the table. Non-indexed or non-numeric columns
+      // keep the data-scan path.
+      val numeric: Set[String] =
+        Set("BIGINT", "INT", "SMALLINT", "TINYINT", "DOUBLE", "FLOAT")
+      val manifestStats: Option[Map[String, (Double, Double)]] =
+        if (cols.forall(c => m.zoneCols.contains(c) &&
+            numeric(m.types.getOrElse(c, "").toUpperCase))) {
+          val st = columnStats(v)
+          def d(x: Any): Double = x match {
+            case null => Double.NaN
+            case n: Number => n.doubleValue()
+            case _ => Double.NaN
+          }
+          val got = st.collect { case (c, mn, mx, _) if cols.contains(c) =>
+            c -> (if (mn == null) (0.0, 0.0) else (d(mn), d(mx)))
+          }.toMap
+          if (cols.forall(c => got.get(c).exists(p =>
+            !p._1.isNaN && !p._2.isNaN))) Some(got) else None
+        } else None
+      val key = Layout.zkey(cols,
+        manifestStats.getOrElse(Layout.colStats(df, cols)), bits)
+      val out = df.withColumn("__zkey", key)
+        .repartitionByRange(nFiles, col("__zkey"))
+        .sortWithinPartitions("__zkey")
+        .drop("__zkey")
+      Publish(Some(out), storedFiles(v).toSet, m.copy(layoutCols = cols),
+        Changes.Empty, ())
+    }
   }
 
   /** Delete data files no committed manifest references (orphans from

@@ -3,7 +3,6 @@ package graft.sources
 import graft.operators.GraftTable
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SaveMode, SQLContext}
-import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.sources.{BaseRelation,
   CreatableRelationProvider, DataSourceRegister, RelationProvider,
@@ -171,39 +170,20 @@ final class GraftTableSink(path: String, parameters: Map[String, String])
   private var handle: GraftTable = null
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    val spark = data.sparkSession
     val batch = org.apache.spark.sql.graft.StreamBridge.asBatchFrame(data)
     val mergeKey = opt("mergeKey")
-    val opCol = opt("opCol").orNull
-    if (handle == null && !GraftTable.exists(spark, path)) {
+    handle = GraftTable.streamBatch(handle, batch, path, batchId, mergeKey,
+        opt("opCol").orNull) { seed =>
       val zs = if (mergeKey.isDefined) mergeKey.toSeq else cols("zoneCols")
       require(zs.nonEmpty,
         "the graft-table sink's first micro-batch CREATES the table — " +
           "pass option 'zoneCols' (comma-separated) or 'mergeKey'")
-      // tombstones against a not-yet-existing table are no-ops: seed
-      // from the upsert rows only (null-safe — a NULL op is an upsert)
-      val seed =
-        if (opCol == null) batch
-        else batch.filter(!(col(opCol) <=> lit(GraftTable.DeleteOp)))
-          .drop(opCol)
-      // a merge sink's FIRST batch must honor the same batch-key
-      // contract merge() enforces for every later one — duplicate or
-      // null keys in batch 0 would otherwise land silently and make the
-      // table's upsert state wrong from birth
-      mergeKey.foreach(k => GraftTable.requireMergeContract(seed, k))
-      handle = GraftTable.create(seed, path, zoneCols = zs,
+      GraftTable.create(seed, path, zoneCols = zs,
         bloomCols = cols("bloomCols"),
         keepVersions = opt("keepVersions").map(_.toInt).getOrElse(1),
         changeFeed = opt("changeFeed").forall(_.toBoolean),
         keepHours = opt("keepHours").map(_.toDouble).getOrElse(-1.0),
         firstBatchId = batchId)
-      ()
-    } else {
-      if (handle == null) handle = GraftTable.open(spark, path)
-      mergeKey match {
-        case Some(k) => handle.merge(batch, k, batchId, opCol); ()
-        case None => handle.append(batch, batchId); ()
-      }
     }
   }
 

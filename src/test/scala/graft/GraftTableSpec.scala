@@ -245,8 +245,8 @@ class GraftTableSpec extends SparkSpec {
     // not silently replace the committed v2
     val m = GraftTable.readMeta(spark, p, 2L)
     intercept[java.util.ConcurrentModificationException] {
-      GraftTable.publishGeneration(spark, p, rows(900, 950), 2L, m,
-        carryForward = None)
+      GraftTable.publishGeneration(spark, p, Some(rows(900, 950)), 2L, m,
+        carry = None)
     }
     assert(t.version == 2 && t.read().orderBy("k").collect().toSeq == headRows,
       "the loser must leave the winner's commit untouched")
@@ -1165,5 +1165,130 @@ class GraftTableSpec extends SparkSpec {
     // a path-list read lists its files with a Spark job of its own
     assert(jobs == 1 && !labels.exists(_.contains("Listing")),
       s"the read must run one job and list nothing: $jobs jobs ${labels.mkString("; ")}")
+  }
+
+  test("rebase rule: disjoint and pruned-base commits re-plan; an overlap or a reached batch id loses") {
+    val mine = Set("a", "b")
+    assert(GraftTable.rebases(mine, Some(Set("c")), None, headHwm = 5L),
+      "a winner that removed none of the replaced files is disjoint")
+    assert(!GraftTable.rebases(mine, Some(Set("b", "c")), None, headHwm = 5L),
+      "a winner that removed a replaced file overlaps")
+    assert(GraftTable.rebases(Set.empty, Some(Set("a")), None, headHwm = 5L),
+      "a commit that replaces nothing cannot overlap")
+    assert(!GraftTable.rebases(mine, None, None, headHwm = 5L),
+      "a pruned base hides the removed set: an overlap when files are replaced")
+    assert(GraftTable.rebases(Set.empty, None, None, headHwm = 5L),
+      "a pruned base is no overlap when nothing is replaced")
+    assert(!GraftTable.rebases(Set.empty, Some(Set.empty), Some(5L), headHwm = 5L),
+      "a winner that reached the explicit batch id is a true conflict")
+    assert(GraftTable.rebases(Set.empty, Some(Set.empty), Some(6L), headHwm = 5L),
+      "an explicit id above the winner's high-water mark rebases")
+    assert(GraftTable.rebases(mine, Some(Set.empty), None, headHwm = 99L),
+      "the manual form has no id to reach")
+  }
+
+  test("job budget: compactWhere sizes its stripe from the snapshot; policy and ADD COLUMN commits run no job") {
+    val p = base()
+    val t = GraftTable.create(rows(0, 800).repartitionByRange(8, col("k"))
+      .sortWithinPartitions("k"), p, zoneCols = Seq("k"), keepVersions = 5)
+    assert(t.files().size == 8)
+    val (cw, _, cwLabels) = sparkWork {
+      t.compactWhere(Seq(ZoneMap.Range("k", 0L, 250L)), targetRows = 100000)
+    }
+    assert(cw == 1, s"compactWhere runs only its generation write: $cw jobs " +
+      cwLabels.mkString("; "))
+    assert(t.read().count() == 800)
+    val (sp, _, spLabels) = sparkWork { t.setPolicies(keepVersions = Some(6)) }
+    assert(sp == 0, s"setPolicies writes no generation: $sp jobs " +
+      spLabels.mkString("; "))
+    val (ac, _, acLabels) = sparkWork {
+      t.addColumns(new org.apache.spark.sql.types.StructType()
+        .add("w", org.apache.spark.sql.types.LongType))
+    }
+    assert(ac == 0, s"addColumns writes no generation: $ac jobs " +
+      acLabels.mkString("; "))
+    val v = t.version
+    assert(t.policies()._1 == 6 && t.read().columns.contains("w"))
+    assert(t.read().count() == 800 && t.read().filter(col("w").isNotNull).count() == 0)
+    assert(t.commitChanges(v).exists(_.count() == 0) &&
+      t.commitChanges(v - 1).exists(_.count() == 0),
+      "metadata-only commits persist an empty change slice")
+    assert(t.history().orderBy("version").collect().map(_.getString(1))
+      .takeRight(2).toSeq == Seq("setpolicy", "addcolumns"))
+    assert(t.scan(Seq(ZoneMap.Range("k", 700L, 799L))).count() == 100,
+      "the carried manifest still prunes and reads exactly")
+  }
+
+  /** Run `bodies` at once on fresh handles of `p`; each reports "ok", or
+    * "conflict" when it lost loudly.
+    */
+  private def race(p: String)(bodies: (GraftTable => Unit)*): Seq[String] = {
+    val barrier = new java.util.concurrent.CyclicBarrier(bodies.size)
+    val outcomes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val threads = bodies.map { body =>
+      new Thread(() => {
+        val h = GraftTable.open(spark, p)
+        barrier.await()
+        try { body(h); outcomes.add("ok") }
+        catch {
+          case _: java.util.ConcurrentModificationException =>
+            outcomes.add("conflict")
+          case e: Throwable => outcomes.add(s"unexpected: $e")
+        }
+      })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    import scala.jdk.CollectionConverters._
+    outcomes.asScala.toSeq
+  }
+
+  test("optimistic rebase: compactWhere and setPolicies each commit alongside a racing append") {
+    val p = base()
+    val t = GraftTable.create(rows(0, 800).repartitionByRange(8, col("k"))
+      .sortWithinPartitions("k"), p, zoneCols = Seq("k"), keepVersions = 2)
+    val expected = (rows(0, 800).collect() ++ rows(900, 950).collect())
+      .map(_.toString).sorted.toSeq
+    val os = race(p)(
+      _.compactWhere(Seq(ZoneMap.Range("k", 0L, 250L)), targetRows = 100000),
+      _.append(rows(900, 950)))
+    assert(os == Seq("ok", "ok"),
+      s"an append replaces none of the stripe's files: both commit: $os")
+    assert(t.versions() == Seq(2L, 3L), s"versions contiguous: ${t.versions()}")
+    assert(t.read().collect().map(_.toString).sorted.toSeq == expected)
+    assert(t.history().orderBy("version").collect().map(_.getString(1))
+      .toSet == Set("compact", "append"))
+
+    val os2 = race(p)(
+      _.setPolicies(keepVersions = Some(3)),
+      _.append(rows(950, 1000)))
+    assert(os2 == Seq("ok", "ok"),
+      s"a metadata-only commit replaces nothing: both commit: $os2")
+    assert(t.versions() == Seq(3L, 4L, 5L), s"versions contiguous: ${t.versions()}")
+    assert(t.policies()._1 == 3)
+    assert(t.read().count() == 900L && t.read().filter(col("k") >= 900L).count() == 100L)
+  }
+
+  test("optimistic rebase: a delete and a merge on the same stripe serialize or lose loudly") {
+    val p = base()
+    val t = GraftTable.create(rows(0, 1000).repartitionByRange(10, col("k"))
+      .sortWithinPartitions("k"), p, zoneCols = Seq("k"), keepVersions = 3)
+    val os = race(p)(
+      _.delete(Seq(ZoneMap.Range("k", 500L, 519L))),
+      _.merge((500L until 520L).map(k => (k, -7.0, "s")).toDF("k", "v", "u"), "k"))
+    assert(os.count(_ == "ok") >= 1 && os.forall(o => o == "ok" || o == "conflict"),
+      s"same-stripe racers must commit or lose LOUDLY: $os")
+    val vs = t.versions()
+    assert(vs == (vs.head to vs.last) && vs.last == 1L + os.count(_ == "ok"),
+      s"one contiguous version per winner: $vs $os")
+    // the stripe is either merged (the merge ran last, or alone) or gone
+    // (the delete ran last, or alone); everything else is untouched
+    val stripe = t.read().filter(col("k").between(500, 519))
+      .select("v").as[Double].collect().toSeq
+    assert(stripe.isEmpty || (stripe.size == 20 && stripe.toSet == Set(-7.0)),
+      s"the stripe must be one serial order's outcome: $stripe")
+    assert(t.read().filter(!col("k").between(500, 519)).collect()
+      .map(_.toString).sorted.toSeq ==
+      rows(0, 1000).filter(!col("k").between(500, 519)).collect()
+        .map(_.toString).sorted.toSeq)
   }
 }
