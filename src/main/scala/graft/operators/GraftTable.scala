@@ -72,7 +72,8 @@ import graft.sources.GraftFileIndex
   *    iff the winner removed none of the files it replaces and did not
   *    reach its explicit batch id (a winner that pruned the loser's base
   *    counts as an overlap unless the loser replaces nothing), at most
-  *    10 attempts; otherwise the conflict surfaces.
+  *    10 attempts; otherwise the conflict surfaces. A replace, whose rows
+  *    need not come from the head, never rebases.
   *  - data files are immutable and superseded versions are pruned only
   *    AFTER the new commit (best-effort, marker-first), so a reader that
   *    resolved a committed version never has files deleted under it by
@@ -670,12 +671,14 @@ object GraftTable {
 
   /** What a mutation decides against one head: commit nothing and
     * return `result`, or publish `rows` (None = a metadata-only commit)
-    * in place of the head's `replaced` files under `meta`.
+    * in place of the head's `replaced` files under `meta`. `replaced =
+    * None` replaces every file unread, whatever the head holds: such a
+    * commit's rows were not planned from the head, so it never rebases.
     */
   private[operators] sealed trait Plan[+R]
   private[operators] final case class Skip[R](result: R) extends Plan[R]
   private[operators] final case class Publish[R](rows: Option[DataFrame],
-      replaced: Set[String], meta: Meta, changes: Changes, result: R)
+      replaced: Option[Set[String]], meta: Meta, changes: Changes, result: R)
       extends Plan[R]
 
   /** How a mutation consumes a batch id: `batchId = None` is the manual
@@ -1081,14 +1084,15 @@ final class GraftTable private[operators] (spark: SparkSession,
     * of the files this attempt replaces and did not reach its explicit
     * batch id, at most 10 attempts. Every re-attempt plans from the new
     * head, so the commit is serializable after the winner; a true
-    * overlap still throws `ConcurrentModificationException`.
+    * overlap, or a publish that replaces every file unread
+    * (`replaced = None`), still throws `ConcurrentModificationException`.
     */
   private def commit[R](op: String, ledger: Option[Ledger[R]] = None)(
       plan: Attempt => Plan[R]): R = {
     var attempt = 0
     while (true) {
       val v = version
-      var replaced = Set.empty[String]
+      var replaced = Option(Set.empty[String])
       try {
         val m = readMeta(spark, path, v)
         val id = ledger.map(_.batchId.getOrElse {
@@ -1107,8 +1111,8 @@ final class GraftTable private[operators] (spark: SparkSession,
           case Publish(rows, rep, nm, changes, r) =>
             replaced = rep
             publishGeneration(spark, path, rows, v + 1,
-              id.fold(nm)(i => nm.copy(appliedHwm = i)), carry(v, m, rep),
-              changes, op)
+              id.fold(nm)(i => nm.copy(appliedHwm = i)),
+              rep.flatMap(carry(v, m, _)), changes, op)
             return r
         } finally a.release()
       } catch {
@@ -1117,11 +1121,12 @@ final class GraftTable private[operators] (spark: SparkSession,
               (GraftTable.raceArtifact(e) && version > v) =>
           attempt += 1
           val head = version
-          val removed =
-            scala.util.Try(storedFiles(v).toSet -- storedFiles(head)).toOption
-          val headHwm = readMeta(spark, path, head).appliedHwm
-          if (attempt >= 10 || !GraftTable.rebases(replaced, removed,
-              ledger.flatMap(_.batchId), headHwm)) throw e
+          if (attempt >= 10 || !replaced.exists { rep =>
+              val removed = scala.util.Try(
+                storedFiles(v).toSet -- storedFiles(head)).toOption
+              GraftTable.rebases(rep, removed, ledger.flatMap(_.batchId),
+                readMeta(spark, path, head).appliedHwm)
+            }) throw e
           DedupIndex.log.info(s"graft table $path: $op lost the v${v + 1} " +
             s"race — rebasing onto v$head (attempt $attempt)")
       }
@@ -1359,8 +1364,8 @@ final class GraftTable private[operators] (spark: SparkSession,
   private def appendImpl(batch: DataFrame, batchId: Option[Long]): Boolean =
     commit("append", Some(Ledger(batchId, false))) { a =>
       val evolved = GraftTable.evolveSchema(a.meta, batch.schema)
-      Publish(Some(batch), Set.empty, a.meta.copy(schemaDdl = evolved.toDDL),
-        Changes.Diff, true)
+      Publish(Some(batch), Some(Set.empty),
+        a.meta.copy(schemaDdl = evolved.toDDL), Changes.Diff, true)
     }
 
   /** A streaming checkpoint that bootstrapped this table OWNS its
@@ -1670,7 +1675,7 @@ final class GraftTable private[operators] (spark: SparkSession,
         case Some(sp) =>
           condMerge(batch0, keyCols, isDel, opCol, sp, stored, evolved)
       }
-      Publish(Some(rewrittenRows), affected,
+      Publish(Some(rewrittenRows), Some(affected),
         m.copy(schemaDdl = evolved.toDDL), Changes.Rows(slice),
         (affected.size.toLong, carriedCount))
     }
@@ -1962,7 +1967,7 @@ final class GraftTable private[operators] (spark: SparkSession,
                 .unionByName(alignSlice(image(pre, lit(true))
                   .withColumn(ChangeType, lit("update_postimage")), m.schema)))
         }
-        Publish(Some(rewritten), affected, m, Changes.Rows(slice),
+        Publish(Some(rewritten), Some(affected), m, Changes.Rows(slice),
           DmlResult(affected.size.toLong, carriedCount, matchedRows))
       }
     }
@@ -1988,7 +1993,7 @@ final class GraftTable private[operators] (spark: SparkSession,
         keepHours = keepHours.getOrElse(m.keepHours),
         changeFeed = changeFeed.getOrElse(m.changeFeed))
       if (nm == m) Skip(())
-      else Publish(None, Set.empty, nm, Changes.Empty, ())
+      else Publish(None, Some(Set.empty), nm, Changes.Empty, ())
     }
   }
 
@@ -2017,7 +2022,7 @@ final class GraftTable private[operators] (spark: SparkSession,
       val fresh = cols.fields.filterNot(f => stored.contains(f.name))
         .map(_.copy(nullable = true))
       if (fresh.isEmpty) Skip(())
-      else Publish(None, Set.empty,
+      else Publish(None, Some(Set.empty),
         m.copy(schemaDdl = StructType(m.schema.fields ++ fresh).toDDL),
         Changes.Empty, ())
     }
@@ -2207,14 +2212,17 @@ final class GraftTable private[operators] (spark: SparkSession,
     * version within retention. The change feed derives the full
     * delete-old + insert-new from the manifest diff (a replace IS that
     * change). Ledger untouched — like a relayout, a replace does not
-    * consume batch ids; schema evolves additively like [[append]].
+    * consume batch ids; schema evolves additively like [[append]]. The
+    * rows may be a read of this table pinned to an older version, so a
+    * replace never rebases: any commit that lands while it writes makes
+    * it throw `ConcurrentModificationException`.
     */
   def replace(df: DataFrame, nFiles: Int = 0): Unit = {
     val sized = if (nFiles > 0) df.repartition(nFiles) else df
     commit("overwrite") { a =>
       val evolved = GraftTable.evolveSchema(a.meta, df.schema)
-      Publish(Some(sized), storedFiles(a.v).toSet,
-        a.meta.copy(schemaDdl = evolved.toDDL), Changes.Diff, ())
+      Publish(Some(sized), None, a.meta.copy(schemaDdl = evolved.toDDL),
+        Changes.Diff, ())
     }
   }
 
@@ -2272,7 +2280,7 @@ final class GraftTable private[operators] (spark: SparkSession,
         // a pure relayout changes NO rows: an EMPTY change slice, so the
         // feed serves nothing for this commit instead of churning the
         // stripe through file-diff delete+insert pairs
-        Publish(Some(out), affected,
+        Publish(Some(out), Some(affected),
           if (preds.isEmpty) m.copy(layoutCols = sortCols) else m,
           Changes.Empty, (affected.size.toLong, all - affected.size))
       }
@@ -2344,8 +2352,8 @@ final class GraftTable private[operators] (spark: SparkSession,
         .repartitionByRange(nFiles, col("__zkey"))
         .sortWithinPartitions("__zkey")
         .drop("__zkey")
-      Publish(Some(out), storedFiles(v).toSet, m.copy(layoutCols = cols),
-        Changes.Empty, ())
+      Publish(Some(out), Some(storedFiles(v).toSet),
+        m.copy(layoutCols = cols), Changes.Empty, ())
     }
   }
 

@@ -24,6 +24,29 @@ class GraftTableSpec extends SparkSpec {
   private def rows(lo: Long, hi: Long) =
     (lo until hi).map(k => (k, k * 2.0, s"u${k % 7}")).toDF("k", "v", "u")
 
+  /** Run `bodies` at once on fresh handles of `p`; each reports "ok", or
+    * "conflict" when it lost loudly.
+    */
+  private def race(p: String)(bodies: (GraftTable => Unit)*): Seq[String] = {
+    val barrier = new java.util.concurrent.CyclicBarrier(bodies.size)
+    val outcomes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val threads = bodies.map { body =>
+      new Thread(() => {
+        val h = GraftTable.open(spark, p)
+        barrier.await()
+        try { body(h); outcomes.add("ok") }
+        catch {
+          case _: java.util.ConcurrentModificationException =>
+            outcomes.add("conflict")
+          case e: Throwable => outcomes.add(s"unexpected: $e")
+        }
+      })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    import scala.jdk.CollectionConverters._
+    outcomes.asScala.toSeq
+  }
+
   test("create/append/scan: one version per mutation, results exact, pruning real") {
     val p = base()
     val t = GraftTable.create(rows(0, 800), p, zoneCols = Seq("k", "v"),
@@ -259,20 +282,7 @@ class GraftTableSpec extends SparkSpec {
     // onto the winner's head and commits at the next version — BOTH
     // appends land (optimistic concurrency, the Delta/Iceberg retry
     // discipline), at contiguous versions, with the exact union of rows
-    val barrier = new java.util.concurrent.CyclicBarrier(2)
-    val outcomes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val threads = Seq(300L, 400L).map { lo =>
-      new Thread(() => {
-        barrier.await()
-        try {
-          new GraftTable(spark, p).append(rows(lo, lo + 50))
-          outcomes.add("ok")
-        } catch { case e: Throwable => outcomes.add(s"unexpected: $e") }
-      })
-    }
-    threads.foreach(_.start()); threads.foreach(_.join())
-    import scala.jdk.CollectionConverters._
-    val os = outcomes.asScala.toSeq
+    val os = race(p)(_.append(rows(300, 350)), _.append(rows(400, 450)))
     assert(os == Seq("ok", "ok"),
       s"disjoint concurrent appends must BOTH commit via rebase: $os")
     val vs = t.versions()
@@ -292,23 +302,13 @@ class GraftTableSpec extends SparkSpec {
     // two concurrent merges on DISJOINT key stripes: the loser's planned
     // rewrite-set does not intersect the winner's, so it rebases and both
     // land — serialized at contiguous versions
-    val barrier = new java.util.concurrent.CyclicBarrier(2)
-    val outcomes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val stripes = Seq(100L -> -1.0, 800L -> -2.0)
-    val threads = stripes.map { case (lo, v) =>
-      new Thread(() => {
-        barrier.await()
-        try {
-          new GraftTable(spark, p).merge(
-            (lo until lo + 20L).map(k => (k, v, "m")).toDF("k", "v", "u"), "k")
-          outcomes.add("ok")
-        } catch { case e: Throwable => outcomes.add(s"unexpected: $e") }
-      })
-    }
-    threads.foreach(_.start()); threads.foreach(_.join())
-    import scala.jdk.CollectionConverters._
-    assert(outcomes.asScala.toSeq == Seq("ok", "ok"),
-      s"disjoint-stripe merges must both commit: ${outcomes.asScala.toSeq}")
+    val os = race(p)(stripes.map { case (lo, v) => (h: GraftTable) =>
+      h.merge((lo until lo + 20L).map(k => (k, v, "m")).toDF("k", "v", "u"), "k")
+      ()
+    }: _*)
+    assert(os == Seq("ok", "ok"),
+      s"disjoint-stripe merges must both commit: $os")
     val vs = t.versions()
     assert(vs == (vs.head to vs.last), s"versions contiguous: $vs")
     assert(t.read().count() == 1000)
@@ -323,23 +323,10 @@ class GraftTableSpec extends SparkSpec {
     // (if the scheduler happens to serialize them, both land, latest
     // wins — also correct). Never silent corruption: afterwards every
     // stripe key carries exactly ONE of the two batch values.
-    val b2 = new java.util.concurrent.CyclicBarrier(2)
-    val o2 = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val same = Seq(-7.0, -8.0).map { v =>
-      new Thread(() => {
-        b2.await()
-        try {
-          new GraftTable(spark, p).merge(
-            (500L until 520L).map(k => (k, v, "s")).toDF("k", "v", "u"), "k")
-          o2.add("ok")
-        } catch {
-          case _: java.util.ConcurrentModificationException => o2.add("conflict")
-          case e: Throwable => o2.add(s"unexpected: $e")
-        }
-      })
-    }
-    same.foreach(_.start()); same.foreach(_.join())
-    val so = o2.asScala.toSeq
+    val so = race(p)(Seq(-7.0, -8.0).map { v => (h: GraftTable) =>
+      h.merge((500L until 520L).map(k => (k, v, "s")).toDF("k", "v", "u"), "k")
+      ()
+    }: _*)
     assert(so.count(_ == "ok") >= 1 &&
       so.forall(o => o == "ok" || o == "conflict"),
       s"same-stripe racers must commit or lose LOUDLY, never corrupt: $so")
@@ -1187,7 +1174,7 @@ class GraftTableSpec extends SparkSpec {
       "the manual form has no id to reach")
   }
 
-  test("job budget: compactWhere sizes its stripe from the snapshot; policy and ADD COLUMN commits run no job") {
+  test("job budget: compactWhere sizes its stripe from the snapshot; policy and ADD COLUMN commits run no job; a replace reads no snapshot") {
     val p = base()
     val t = GraftTable.create(rows(0, 800).repartitionByRange(8, col("k"))
       .sortWithinPartitions("k"), p, zoneCols = Seq("k"), keepVersions = 5)
@@ -1217,29 +1204,15 @@ class GraftTableSpec extends SparkSpec {
       .takeRight(2).toSeq == Seq("setpolicy", "addcolumns"))
     assert(t.scan(Seq(ZoneMap.Range("k", 700L, 799L))).count() == 100,
       "the carried manifest still prunes and reads exactly")
-  }
-
-  /** Run `bodies` at once on fresh handles of `p`; each reports "ok", or
-    * "conflict" when it lost loudly.
-    */
-  private def race(p: String)(bodies: (GraftTable => Unit)*): Seq[String] = {
-    val barrier = new java.util.concurrent.CyclicBarrier(bodies.size)
-    val outcomes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val threads = bodies.map { body =>
-      new Thread(() => {
-        val h = GraftTable.open(spark, p)
-        barrier.await()
-        try { body(h); outcomes.add("ok") }
-        catch {
-          case _: java.util.ConcurrentModificationException =>
-            outcomes.add("conflict")
-          case e: Throwable => outcomes.add(s"unexpected: $e")
-        }
-      })
-    }
-    threads.foreach(_.start()); threads.foreach(_.join())
-    import scala.jdk.CollectionConverters._
-    outcomes.asScala.toSeq
+    // a replace names no files: under a moved root, whose manifest
+    // snapshots this process never cached, it still runs only its write
+    val moved = s"${new java.io.File(p).getParent}/moved"
+    Files.move(java.nio.file.Paths.get(p), java.nio.file.Paths.get(moved))
+    val cold = GraftTable.open(spark, moved)
+    val (rp, _, rpLabels) = sparkWork { cold.replace(rows(0, 100)) }
+    assert(rp == 1, s"replace runs only its generation write: $rp jobs " +
+      rpLabels.mkString("; "))
+    assert(cold.read().count() == 100)
   }
 
   test("optimistic rebase: compactWhere and setPolicies each commit alongside a racing append") {
@@ -1290,5 +1263,107 @@ class GraftTableSpec extends SparkSpec {
       .map(_.toString).sorted.toSeq ==
       rows(0, 1000).filter(!col("k").between(500, 519)).collect()
         .map(_.toString).sorted.toSeq)
+  }
+  private def tableRows(t: GraftTable) =
+    t.read().as[(Long, Double, String)].collect().sorted.toSeq
+
+  private def rowSet(keys: Seq[Long], v: Long => Double = _ * 2.0) =
+    keys.map(k => (k, v(k), s"u${k % 7}")).sorted
+
+  test("commit hands the rule the merge's rewrite set and the winner's removed files: a delete committed mid-write on its stripe makes it lose, one elsewhere lets it rebase") {
+    val p = base()
+    val t = GraftTable.create(rows(0, 1000).repartitionByRange(10, col("k"))
+      .sortWithinPartitions("k"), p, zoneCols = Seq("k"), keepVersions = 5)
+    // the merge's write evaluates its matched condition row by row, after
+    // it planned its rewrite set against v1
+    def merge(lo: Long, v: Double): Unit = t.mergeCond(
+      (lo until lo + 20L).map(k => (k, v, "m")).toDF("k", "v", "u"), "k",
+      MidWrite.hook(col("t.k")), updateCols = Seq("v"))
+
+    val os = MidWrite.race(
+      GraftTable.open(spark, p).delete(Seq(ZoneMap.Range("k", 800L, 819L))))(
+      merge(100L, -1.0))
+    assert(os == "ok", "the delete removed none of the merge's files: it rebases")
+    assert(t.versions() == Seq(1L, 2L, 3L))
+    assert(t.history().orderBy("version").collect().map(_.getString(1))
+      .drop(1).toSeq == Seq("delete", "merge"))
+    val merged = (k: Long) => if (k >= 100L && k < 120L) -1.0 else k * 2.0
+    assert(tableRows(t) ==
+      rowSet((0L until 1000L).filterNot(k => k >= 800L && k < 820L), merged))
+
+    val os2 = MidWrite.race(
+      GraftTable.open(spark, p).delete(Seq(ZoneMap.Range("k", 505L, 509L))))(
+      merge(500L, -2.0))
+    assert(os2 == "conflict",
+      "the delete rewrote the file the merge planned to rewrite: it loses")
+    assert(t.versions() == Seq(1L, 2L, 3L, 4L))
+    assert(tableRows(t) == rowSet((0L until 1000L).filterNot(k =>
+      (k >= 800L && k < 820L) || (k >= 505L && k < 510L)), merged),
+      "the winner's delete stands and the loser wrote nothing")
+  }
+
+  test("a replace never rebases: an append that commits while it writes makes it lose loudly") {
+    val p = base()
+    val t = GraftTable.create(rows(0, 1000).repartitionByRange(10, col("k"))
+      .sortWithinPartitions("k"), p, zoneCols = Seq("k"), keepVersions = 5)
+    // INSERT OVERWRITE t SELECT … FROM t: the rows are a read pinned to v1
+    val kept = t.read().filter(MidWrite.hook(col("k")) && col("k") < 500L)
+    val os = MidWrite.race(
+      GraftTable.open(spark, p).append(rows(2000, 2050)))(t.replace(kept))
+    assert(os == "conflict",
+      "re-publishing v1's rows over the append would drop its rows silently")
+    assert(t.versions() == Seq(1L, 2L))
+    assert(tableRows(t) == rowSet((0L until 1000L) ++ (2000L until 2050L)))
+    t.replace(t.read().filter(col("k") < 500L))
+    assert(tableRows(t) == rowSet(0L until 500L), "unraced, it commits")
+  }
+}
+
+/** A deterministic lost race: [[MidWrite.race]] runs `rival` to its
+  * commit when the first row of a mutation's write passes through
+  * [[MidWrite.hook]], so the mutation plans against the head `rival`
+  * then replaces and publishes after it. Only that one row's task
+  * waits; the others keep their slots free for `rival`'s jobs.
+  */
+object MidWrite extends Serializable {
+  import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+  private final class Rival {
+    val claimed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reached, done = new CountDownLatch(1)
+  }
+
+  @volatile private var pending: Option[Rival] = None
+
+  /** Always true; the first row waits until the pending rival committed. */
+  val hook = udf { (_: Long) =>
+    pending.filter(_.claimed.compareAndSet(false, true)).foreach { r =>
+      r.reached.countDown(); r.done.await(2, TimeUnit.MINUTES)
+    }
+    true
+  }.asNondeterministic()
+
+  /** "ok", or "conflict" when `mutation` lost loudly. */
+  def race(rival: => Unit)(mutation: => Unit): String = {
+    val r = new Rival
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val t = new Thread(() => {
+      try if (r.reached.await(2, TimeUnit.MINUTES)) rival
+      catch { case e: Throwable => failure.set(e) }
+      finally r.done.countDown()
+    })
+    pending = Some(r)
+    t.start()
+    val out =
+      try { mutation; "ok" }
+      catch { case _: java.util.ConcurrentModificationException => "conflict" }
+      finally {
+        pending = None
+        if (r.reached.getCount > 0) t.interrupt()
+        t.join()
+      }
+    assert(r.reached.getCount == 0, "the mutation's write never reached the hook")
+    Option(failure.get).foreach(e => throw e)
+    out
   }
 }
