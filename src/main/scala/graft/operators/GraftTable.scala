@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.sources.GraftFileIndex
@@ -1417,6 +1418,13 @@ final class GraftTable private[operators] (spark: SparkSession,
     * must still carry the indexed columns (the batch schema is one
     * schema; change streams ship key + image anyway).
     *
+    * The upsert is the [[mergeSpec]] "update every matched row to the
+    * whole batch row (stored columns the batch lacks go null), insert
+    * the rest, delete on op", run through the same one-join body, plus
+    * one rule: stored rows repeating a batch key collapse to the one
+    * batch row. Each copy still feeds an `update_preimage` (or a
+    * `delete`) to the change slice; the key feeds one `update_postimage`.
+    *
     * Selection is conservative-by-construction: a file is skipped only
     * when its zone range provably excludes every batch key (all-null
     * zone rows exclude all non-null keys), decided by one broadcast join
@@ -1522,7 +1530,7 @@ final class GraftTable private[operators] (spark: SparkSession,
       else lit(null).cast(f.dataType).as(f.name)) :+ col(ChangeType)): _*)
   }
 
-  /** The shared engine behind [[merge]] and [[mergeCond]].
+  /** The shared engine behind [[merge]], [[mergeCond]] and [[mergeSpec]].
     *
     * `batchId = None` is the manual-ledger form: the id is recomputed as
     * high-water + 1 on EVERY attempt, so an optimistic rebase after a
@@ -1562,13 +1570,13 @@ final class GraftTable private[operators] (spark: SparkSession,
     // pruning would multiply manifest columns for little extra power
     val keyCol = keyCols.head
     // cache the batch ONCE (the Delta merge-source discipline): the
-    // contract aggregate, the pruning join, the merge join and every
-    // change-slice leg all re-evaluate the batch plan otherwise — for a
-    // CDC batch built from scans+unions that is 4-6 full re-executions
-    // per commit. LAZY persist, not an eager checkpoint: no extra job —
-    // the contract aggregate (the first consumer) populates the cache in
-    // the pass it pays anyway; O(batch) rows in spillable storage,
-    // released explicitly after the commit.
+    // contract aggregate, the pruning join and the merge join's two
+    // evaluations (rewrite, change slice) all re-evaluate the batch plan
+    // otherwise — for a CDC batch built from scans+unions that is 4 full
+    // re-executions per commit. LAZY persist, not an eager checkpoint:
+    // no extra job — the contract aggregate (the first consumer)
+    // populates the cache in the pass it pays anyway; O(batch) rows in
+    // spillable storage, released explicitly after the commit.
     val batch0 = batch.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1657,24 +1665,33 @@ final class GraftTable private[operators] (spark: SparkSession,
       val evolved = GraftTable.evolveSchema(m,
         StructType(batch.schema.filterNot(f =>
           f.name == opCol || carryCols.contains(f.name))))
-      // feed ON: the affected stripe is read by the rewrite AND by every
-      // change-slice leg (2-4 more evaluations) — cache it once
-      // (lazily: the rewrite's own pass populates it, no extra job),
-      // spillable storage proportional to the rewrite the commit pays
-      // anyway, released after the attempt. Feed OFF: the slice never
-      // executes, so the single lazy read stays the cheapest plan.
       val stored =
         if (affected.isEmpty) None
-        else {
-          val st = frame(v, Some(affected), Some(evolved))
-          Some(if (m.changeFeed) a.persist(st) else st)
-        }
-      val (rewrittenRows, slice) = spec match {
-        case None =>
-          classicMerge(batch0, keyCols, isDel, opCol, stored, evolved)
-        case Some(sp) =>
-          condMerge(batch0, keyCols, isDel, opCol, sp, stored, evolved)
-      }
+        else Some(frame(v, Some(affected), Some(evolved)))
+      // [[merge]]'s upsert: a matched row takes the whole batch row
+      // (stored columns the batch lacks go null), the rest insert
+      val own = batch.columns.toSeq.filterNot(_ == opCol)
+      val sp = spec.getOrElse(GraftTable.MergeSpec(update = Some(lit(true)),
+        updateCols = own.diff(keyCols),
+        updateExprs = evolved.fieldNames.toSeq.diff(own).map(_ -> lit(null)),
+        insert = Some(lit(true)), opCol = opCol))
+      // feed ON: the rewrite AND the change slice read the merge join —
+      // cache it once (lazily: the rewrite's own pass populates it, no
+      // extra job), spillable storage proportional to the rewrite the
+      // commit pays anyway, released after the attempt. Feed OFF: the
+      // slice never executes, so the single lazy evaluation stays the
+      // cheapest plan.
+      val keep: DataFrame => DataFrame =
+        if (m.changeFeed) a.persist else identity
+      val (joinedRows, slice) = condMerge(batch0, keyCols, isDel, opCol,
+        sp, collapse = spec.isEmpty, stored, evolved, keep)
+      // the join hash-partitions its output on the keys: written as is,
+      // every new file would span the stripe's whole key range, and each
+      // later merge touching the stripe would rewrite all of it. Range
+      // partitioning restores key-clustered files, as many as it replaces.
+      val rewrittenRows =
+        if (affected.isEmpty) joinedRows
+        else joinedRows.repartitionByRange(affected.size, col(keyCol))
       Publish(Some(rewrittenRows), Some(affected),
         m.copy(schemaDdl = evolved.toDDL), Changes.Rows(slice),
         (affected.size.toLong, carriedCount))
@@ -1682,57 +1699,20 @@ final class GraftTable private[operators] (spark: SparkSession,
     } finally batch0.unpersist(false)
   }
 
-  /** [[merge]]'s latest-wins upsert body: delete every stored row whose
-    * key appears in the batch, insert the non-tombstone batch rows.
-    * Returns (rewritten rows, row-level change slice).
-    */
-  private def classicMerge(batch: DataFrame, keyCols: Seq[String],
-      isDel: Column, opCol: String, stored: Option[DataFrame],
-      sliceSchema: StructType): (DataFrame, DataFrame) = {
-    val keys = batch.select(keyCols.map(col): _*)
-    val upserts = (if (opCol == null) batch else batch.filter(!isDel)
-      .drop(opCol))
-    val rewritten = stored match {
-      case None => upserts
-      case Some(st) => st.join(keys, keyCols, "left_anti")
-        .unionByName(upserts, allowMissingColumns = true)
-    }
-    // the row-level change slice the merge computes anyway: stored rows
-    // whose key the batch touches are the pre-images (delete for
-    // tombstoned keys, update_preimage otherwise); batch upserts are the
-    // post-images (update_postimage when a pre-image exists, insert when
-    // the key is new). O(batch + matched stored rows), never O(file).
-    val keyOps = batch.select(keyCols.map(col) :+ isDel.as("_del"): _*)
-    val slice = stored match {
-      case None =>
-        alignSlice(upserts.withColumn(ChangeType, lit("insert")), sliceSchema)
-      case Some(st) =>
-        val pre = st.join(keyOps, keyCols, "inner")
-          .withColumn(ChangeType,
-            when(col("_del"), lit("delete")).otherwise(lit("update_preimage")))
-        val existed = st.join(keys, keyCols, "left_semi")
-          .select(keyCols.map(col): _*).distinct()
-          .withColumn("_ex", lit(true))
-        val post = upserts.join(existed, keyCols, "left")
-          .withColumn(ChangeType,
-            when(col("_ex"), lit("update_postimage")).otherwise(lit("insert")))
-        alignSlice(pre, sliceSchema)
-          .unionByName(alignSlice(post, sliceSchema))
-    }
-    (rewritten, slice)
-  }
-
-  /** [[mergeCond]]/[[mergeSpec]]'s SQL-MERGE body over one full-outer
-    * join of the affected files (`t`) with the batch (`s`): every wing
-    * condition ([[GraftTable.MergeSpec]]) evaluates row-level on that
-    * join — no extra table reads, first-match-wins between the matched
-    * DELETE and UPDATE wings per `deleteFirst`. Returns
-    * (rewritten rows, row-level change slice).
+  /** The one merge body ([[merge]], [[mergeCond]], [[mergeSpec]]): one
+    * full-outer join of the affected files (`t`) with the batch (`s`).
+    * Every wing condition ([[GraftTable.MergeSpec]]) evaluates row-level
+    * on that join — no extra table reads, first-match-wins between the
+    * matched DELETE and UPDATE wings per `deleteFirst`. `collapse` is
+    * [[merge]]'s upsert rule: stored rows that repeat a batch key leave
+    * for the one batch row instead of each updating. `keep` wraps the
+    * join both outputs read. Returns (rewritten rows, row-level change
+    * slice).
     */
   private def condMerge(batch: DataFrame, keyCols: Seq[String],
       isDel: Column, opCol: String, spec: GraftTable.MergeSpec,
-      stored: Option[DataFrame], evolved: StructType)
-      : (DataFrame, DataFrame) = {
+      collapse: Boolean, stored: Option[DataFrame], evolved: StructType,
+      keep: DataFrame => DataFrame): (DataFrame, DataFrame) = {
     val keyCol = keyCols.head
     val s0 = batch.withColumn("_del", isDel)
     val sBatch = (if (opCol == null) s0 else s0.drop(opCol)).alias("s")
@@ -1765,14 +1745,21 @@ final class GraftTable private[operators] (spark: SparkSession,
         val img = ins.select(evolved.fieldNames.map(c => sCol(c).as(c)): _*)
         (img, alignSlice(img.withColumn(ChangeType, lit("insert")), evolved))
       case Some(st) =>
-        val joined = st.alias("t").join(sBatch,
+        // the upsert numbers each key's stored copies: the window's exchange
+        // and sort on the keys are the ones the sort-merge join needs anyway
+        val keyed = keyCols.map(col)
+        val t =
+          if (collapse) st.withColumn("_copy",
+            row_number().over(Window.partitionBy(keyed: _*).orderBy(keyed: _*)))
+          else st
+        val joined = keep(t.alias("t").join(sBatch,
           keyCols.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _),
-          "full_outer")
-        // key components are non-null per contract (stored side: they
-        // were merged in under it; batch side: requireMergeContract), so
-        // the leading component's null-ness identifies the join wing
+          "full_outer"))
+        // batch key components are non-null (requireMergeContract) and a
+        // match equates them, so the leading component's null-ness
+        // identifies the wing; a stored null key rides the `t`-only wing
         val matched = col(s"t.$keyCol").isNotNull && col(s"s.$keyCol").isNotNull
-        val sOnly = col(s"t.$keyCol").isNull
+        val sOnly = col(s"t.$keyCol").isNull && col(s"s.$keyCol").isNotNull
         // first-match-wins between the matched wings: the clause written
         // first claims a row passing both conditions; opCol tombstones
         // ride the delete wing unconditionally (the merge() convention)
@@ -1781,11 +1768,15 @@ final class GraftTable private[operators] (spark: SparkSession,
         val doUpdate = matched && !col("_del") &&
           (if (spec.deleteFirst) !dc && uc else uc)
         val doInsert = sOnly && !col("_del") && insOk
+        // an updated copy past a key's first leaves, feeding its pre-image
+        val dropCopy =
+          if (collapse) doUpdate && col("t._copy") > 1 else lit(false)
         // per-column final image: insert rows take the batch value,
         // condition-passing updates take the wing's value for updateSet
         // columns, everything else (including matched rows no wing
         // claims) preserves the stored value
-        val rewritten = joined.filter(!doDelete && !(sOnly && !doInsert))
+        val rewritten = joined
+          .filter(!doDelete && !(sOnly && !doInsert) && !dropCopy)
           .select(evolved.fieldNames.map { c =>
             val out =
               if (keyCols.contains(c)) coalesce(col(s"t.$c"), col(s"s.$c"))
@@ -1808,7 +1799,8 @@ final class GraftTable private[operators] (spark: SparkSession,
         val slice = joined.select(explode(array_compact(array(
             when(doDelete, sliceStruct("delete", tImg)),
             when(doUpdate, sliceStruct("update_preimage", tImg)),
-            when(doUpdate, sliceStruct("update_postimage", postImg)),
+            when(doUpdate && !dropCopy,
+              sliceStruct("update_postimage", postImg)),
             when(doInsert, sliceStruct("insert", sCol))))).as("_r"))
           .select((evolved.fieldNames.map(c => col(s"_r.$c")) :+
             col(s"_r.$ChangeType")): _*)
@@ -1938,11 +1930,14 @@ final class GraftTable private[operators] (spark: SparkSession,
       // exactly the pointless I/O the manifest exists to avoid. The gate
       // is one COUNT of the matching rows (over the materialized
       // stripe, so it costs a cache pass, not a re-scan), which doubles
-      // as the exact rows-affected report; the slice stays LAZY — feed
-      // ON, the `_changes` write inside the commit evaluates it once
-      // from the same materialized stripe, feed OFF it never runs.
+      // as the exact rows-affected report — one job without AQE, which
+      // would stage the count's aggregate as three; the slice stays
+      // LAZY — feed ON, the `_changes` write inside the commit evaluates
+      // it once from the same materialized stripe, feed OFF it never runs.
       val matchedRows =
-        if (affected.isEmpty) 0L else stored.filter(cond).count()
+        if (affected.isEmpty) 0L
+        else GraftTable.labeled(spark, s"graft:dml:gate v$v")(
+          GraftTable.withoutAqe(spark)(stored.filter(cond).count()))
       if (matchedRows == 0L)
         Skip(DmlResult(0L, storedFiles(v).size.toLong, 0L))
       else {

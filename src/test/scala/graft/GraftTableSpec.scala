@@ -197,6 +197,53 @@ class GraftTableSpec extends SparkSpec {
     intercept[IllegalArgumentException] { t.merge(updates, "v") }
   }
 
+  test("merge upsert: stored copies of a batch key collapse to the one batch row; exact change slice") {
+    val p = base()
+    // keys 3 and 7 are each stored k = 3 times; `w` is a stored column
+    // the batch does not carry
+    val k = 3
+    val single = (0L until 10L).map(i => (i, i * 2.0, s"u$i", Option(i * 10L)))
+    val copies = for (key <- Seq(3L, 7L); c <- 1 until k)
+      yield (key, key * 2.0 + c, s"u$key", Option(key * 10L + c))
+    val t = GraftTable.create((single ++ copies).toDF("k", "v", "u", "w"),
+      p, zoneCols = Seq("k"), nFiles = 2)
+    type Img = (Long, Double, String, Option[Long])
+    def img(r: org.apache.spark.sql.Row): Img = (r.getLong(0), r.getDouble(1),
+      r.getString(2), Option(r.get(3)).map(_.asInstanceOf[Long]))
+    val before = t.read().collect().map(img).toSeq
+    // upsert the first duplicated key, upsert a new key, tombstone the
+    // second duplicated key
+    t.merge(Seq((3L, -1.0, "up", "u"), (100L, 9.0, "new", "u"),
+        (7L, 0.0, "x", GraftTable.DeleteOp)).toDF("k", "v", "u", "op"),
+      "k", "op")
+    val after = t.read().collect().map(img).toSeq
+    // each batch key appears once, with `w` null on the upserted rows
+    assert(after.filter(_._1 == 3L) == Seq((3L, -1.0, "up", None)))
+    assert(after.filter(_._1 == 100L) == Seq((100L, 9.0, "new", None)))
+    assert(after.count(_._1 == 7L) == 0)
+    assert(after.filterNot(r => Set(3L, 7L, 100L)(r._1)).sortBy(_.toString) ==
+      before.filterNot(r => Set(3L, 7L)(r._1)).sortBy(_.toString))
+    // the exact change slice: k pre-images + 1 post-image, 1 insert,
+    // k deletes
+    val stored = (key: Long) => before.filter(_._1 == key)
+    val want = stored(3L).map(_ -> "update_preimage") ++
+      Seq((3L, -1.0, "up", None) -> "update_postimage",
+        (100L, 9.0, "new", None) -> "insert") ++
+      stored(7L).map(_ -> "delete")
+    val slice = t.commitChanges(t.version).get.collect()
+      .map(r => img(r) -> r.getString(4)).toSeq
+    assert(want.size == 2 * k + 2)
+    assert(slice.sortBy(_.toString) == want.sortBy(_.toString))
+    // a stored row whose key is null matches no batch key: it is carried
+    val nt = GraftTable.create(
+      Seq((Option(1L), 1.0), (Option.empty[Long], 2.0)).toDF("k", "v"),
+      Files.createTempDirectory("graft_table").toString + "/n",
+      zoneCols = Seq("k"), nFiles = 1)
+    nt.merge(Seq((1L, 5.0), (2L, 6.0)).toDF("k", "v"), "k")
+    assert(nt.read().orderBy("k").as[(Option[Long], Double)].collect().toSeq ==
+      Seq((None, 2.0), (Some(1L), 5.0), (Some(2L), 6.0)))
+  }
+
   test("version retention: time travel within the window; vacuum keeps retained files") {
     val p = base()
     val t = GraftTable.create(rows(0, 300), p, zoneCols = Seq("k"),
@@ -1213,6 +1260,34 @@ class GraftTableSpec extends SparkSpec {
     assert(rp == 1, s"replace runs only its generation write: $rp jobs " +
       rpLabels.mkString("; "))
     assert(cold.read().count() == 100)
+  }
+
+  test("job budget: a classic merge runs its one merge body; a predicate delete's row gate is one job; every job is graft:-labeled") {
+    val p = base()
+    val t = GraftTable.create(rows(0, 800).repartitionByRange(8, col("k"))
+      .sortWithinPartitions("k"), p, zoneCols = Seq("k"))
+    assert(t.files().size == 8)
+    // upsert 30 keys and tombstone 10 in one stripe, insert 20 new keys
+    val batch = ((100L until 130L).map(k => (k, -1.0, "upd", "u")) ++
+      (130L until 140L).map(k => (k, 0.0, "d", GraftTable.DeleteOp)) ++
+      (800L until 820L).map(k => (k, k * 2.0, "new", "u")))
+      .toDF("k", "v", "u", "op")
+    val (mj, _, mLabels) = sparkWork { t.merge(batch, "k", "op") }
+    assert(mj < 10, s"a classic merge runs one merge join and no " +
+      s"separate change-slice legs: $mj jobs " + mLabels.mkString("; "))
+    assert(mLabels.forall(_.startsWith("graft:")),
+      "every merge job is labeled: " + mLabels.mkString("; "))
+    assert(t.read().count() == 810 &&
+      t.commitChanges(t.version).get.count() == 30 * 2 + 10 + 20)
+    val (dj, _, dLabels) = sparkWork {
+      t.delete(Seq(ZoneMap.Range("k", 0L, 20L)))
+    }
+    assert(dj == 3, s"a predicate delete runs its gate, its generation " +
+      s"and its change slice: $dj jobs " + dLabels.mkString("; "))
+    assert(dLabels.forall(_.startsWith("graft:")),
+      "every delete job is labeled: " + dLabels.mkString("; "))
+    assert(t.read().count() == 789 &&
+      t.commitChanges(t.version).get.count() == 21)
   }
 
   test("optimistic rebase: compactWhere and setPolicies each commit alongside a racing append") {
