@@ -404,11 +404,11 @@ object ScaleProbe {
       time("bloom_point_scan") {
         // bloom data-skipping leg on a HASH-SCATTERED layout: 256 files
         // that each span the whole key range, so zone min/max prunes
-        // nothing and only the per-file blooms discriminate. On a bloom
-        // table the pruner runs EXECUTOR-side (ZoneMap.pruneFrameCnf):
-        // the driver collects (file, keep) verdicts, never the ~91 KB
-        // of bloom bits per file — the invariant that keeps an 800k-file table's
-        // pushed `=` metadata-sized instead of a ~700 GB driver collect.
+        // nothing and only the per-file blooms discriminate. The pruner
+        // runs on the driver over the manifest snapshot and reads the
+        // ~91 KB bloom sidecar of each file the zone check keeps — the
+        // manifest itself never carries bloom bits, so collecting it
+        // stays metadata-sized at any file count.
         // Gates: a present key opens ~collision-many files (fpp 3% of
         // 256, never the corpus), and the lookup is row-exact. Encoded
         // files·10^6 + rows, the zonemap leg's convention.

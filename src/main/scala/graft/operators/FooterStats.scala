@@ -22,9 +22,10 @@ import org.apache.spark.sql.types._
   *
   * STRICTLY CONSERVATIVE BY FALLBACK: any file/column whose footer
   * cannot give exact, safely-ordered statistics returns None and the
-  * caller keeps the executor aggregation path. Cases that refuse here:
-  *  - bloom-indexed tables (bits need the actual values — the one
-  *    legitimate data pass);
+  * caller derives the rows from one [[ZoneMap.zoneRows]] pass over the
+  * data instead — the reference these rows must equal. A bloom-indexed
+  * table takes that pass without asking: its sidecar bits need the
+  * actual values. Cases that refuse here:
   *  - column types whose parquet stats ordering or representation does
   *    not provably match Spark's aggregate semantics (timestamps can be
   *    INT96 with no usable stats; decimals/nested are out of scope);
@@ -99,8 +100,10 @@ private[operators] object FooterStats {
     Some(out.result())
   }
 
-  /** The manifest schema the footer rows are built against — identical
-    * to the aggregate path's (zoneRows ⨝ sizes) output shape.
+  /** The manifest schema of a table zoned on `zoneCols` of `schema` —
+    * what every manifest row holds, whether from footers or from the
+    * aggregate pass (its zone rows plus the file's bytes), and what a
+    * manifest is read back under: a function of the table's meta alone.
     */
   def manifestSchema(zoneCols: Seq[String], schema: StructType): StructType =
     StructType(

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -24,15 +24,26 @@ import graft.sources.GraftFileIndex
   *                                   (the token makes racing attempts
   *                                   collision-free), shared by every
   *                                   later manifest referencing them
-  *   base/v{v}/manifest/             one zone row per referenced file:
-  *                                   (file, cnt, min_c…, max_c…,
-  *                                   nulls_c…[, bloom_c…]) — the
-  *                                   manifest IS the zone map. File
+  *   base/data/g{v}_{token}/_blooms/{c}/part-*.parquet.bloom
+  *                                   one sidecar per data file and bloom
+  *                                   column: the file's serialized bloom
+  *                                   bits (empty: no non-null value),
+  *                                   written with the file's manifest
+  *                                   row and immutable like the file.
+  *                                   Listings skip it (`_` prefix,
+  *                                   `.bloom` suffix); vacuum deletes it
+  *                                   with its data file
+  *   base/v{v}/manifest/             one parquet file, one zone row per
+  *                                   referenced file: (file, cnt,
+  *                                   (min_c, max_c, nulls_c)…, bytes),
+  *                                   its schema a function of meta —
+  *                                   the manifest IS the zone map, and
+  *                                   the driver writes it whole. File
   *                                   paths are TABLE-ROOT-RELATIVE, so
   *                                   a committed table can be moved,
   *                                   renamed or DR-copied wholesale
-  *                                   (legacy absolute rows still
-  *                                   resolve — the read shim)
+  *                                   (absolute rows — a shallow clone's
+  *                                   source files — resolve as-is)
   *   base/v{v}/meta/                 1 row: geometry (zone/bloom columns,
   *                                   bloom sizing, column types), layout
   *                                   columns, schema, applied batch
@@ -171,6 +182,10 @@ object GraftTable {
     val spark = df.sparkSession
     val types = (zoneCols ++ bloomCols).distinct
       .map(c => c -> df.schema(c).dataType.sql).toMap
+    // the stored schema is nullable throughout, as evolveSchema stores a
+    // new column: a later write may leave any column null (an upsert
+    // whose batch lacks it), and a NOT NULL field would read that back
+    // as 0.
     // firstBatchId seeds the ledger ATOMICALLY with the first data when a
     // stream bootstraps the table ([[ingestStream]]): stamping it after
     // the create commit would open a crash window in which batch 0's rows
@@ -179,12 +194,13 @@ object GraftTable {
     // lineage OWNS the ledger and manual unledgered mutations refuse.
     val meta = Meta(zoneCols, bloomCols, bloomItems, bloomFpp, types,
       layoutCols = Nil, appliedHwm = firstBatchId,
-      schemaDdl = df.schema.toDDL, keepVersions = keepVersions,
+      schemaDdl = StructType(df.schema.fields.map(_.copy(nullable = true))).toDDL,
+      keepVersions = keepVersions,
       streamed = firstBatchId >= 0L, changeFeed = changeFeed,
       keepHours = keepHours)
     val v = currentVersion(spark, path).getOrElse(0L) + 1
     val sized = if (nFiles > 0) df.repartition(nFiles) else df
-    publishGeneration(spark, path, Some(sized), v, meta, carry = None,
+    publishGeneration(spark, path, Some(sized), v, meta, carried = Nil,
       op = "create")
     new GraftTable(spark, path)
   }
@@ -423,8 +439,8 @@ object GraftTable {
     */
   private def writeMeta(spark: SparkSession, dir: String, m: Meta): Unit = {
     val f = fs(spark, dir)
-    writeSmall(f, new Path(dir, "meta.json"), metaJson(m))
-    writeSmall(f, new Path(dir, "_SUCCESS"), "")
+    MetaIo.writeFile(f, new Path(dir, "meta.json"), metaJson(m))
+    MetaIo.writeFile(f, new Path(dir, "_SUCCESS"), "")
   }
 
   private def metaJson(m: Meta): String = {
@@ -477,9 +493,38 @@ object GraftTable {
   private[operators] def readMeta(spark: SparkSession, base: String,
       v: Long): Meta = {
     val p = new Path(s"$base/v$v/meta/meta.json")
-    parseMetaJson(readSmall(fs(spark, base), p)
+    parseMetaJson(MetaIo.readFile(fs(spark, base), p)
       .getOrElse(sys.error(s"graft table $base has no metadata record at $p")),
       base)
+  }
+
+  /** A table data file: a visible `.parquet` file — never a sidecar,
+    * marker or hidden staging file.
+    */
+  private def isDataFile(p: Path): Boolean = {
+    val n = p.getName
+    n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+  }
+
+  /** The bloom sidecar of data file `file` for column `c`:
+    * `<generation>/_blooms/<c>/<file name>.bloom`, next to the file it
+    * describes, so a shallow clone's absolute references reach their
+    * source's sidecars too.
+    */
+  private[operators] def bloomSidecar(file: String, c: String): Path = {
+    val p = new Path(file)
+    new Path(p.getParent, s"_blooms/$c/${p.getName}.bloom")
+  }
+
+  /** Data file `file`'s serialized bloom of column `c` (null: the file
+    * holds no non-null value of it) — one small read, uncached. A
+    * missing sidecar fails naming its path.
+    */
+  private def readBloom(f: FileSystem, file: String, c: String): Array[Byte] = {
+    val p = bloomSidecar(file, c)
+    val bits = MetaIo.readBytes(f, p).getOrElse(sys.error(
+      s"bloom sidecar $p is missing: data file $file has no bloom bits for $c"))
+    if (bits.isEmpty) null else bits
   }
 
   /** The new generation's data files as (path, on-disk bytes) — the
@@ -496,13 +541,48 @@ object GraftTable {
     val out = Seq.newBuilder[(String, Long)]
     while (it.hasNext) {
       val st = it.next()
-      val n = st.getPath.getName
-      if (st.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-        !n.startsWith("."))
+      if (st.isFile && isDataFile(st.getPath))
         out += ((st.getPath.toUri.getPath, st.getLen))
     }
     out.result()
   }
+
+  /** Manifest rows of the generation `gen` just wrote, over its `files`
+    * (path, bytes), from ONE collected [[ZoneMap.zoneRows]] pass — the
+    * reference [[FooterStats]] answers for without a job. Each bloom
+    * column's bits go to the file's sidecar ([[bloomSidecar]]) from the
+    * task that aggregated them, so they never reach the driver.
+    */
+  private def zonePass(spark: SparkSession, gen: String,
+      files: Seq[(String, Long)], schema: StructType, meta: Meta,
+      label: String): Seq[Row] =
+    if (files.isEmpty) Nil
+    else {
+      val data = spark.baseRelationToDataFrame(
+        GraftFileIndex.relation(spark, gen, files, None, schema))
+      val zones = 2 + 3 * meta.zoneCols.size
+      val blooms = meta.bloomCols
+      val conf = new org.apache.spark.util.SerializableConfiguration(
+        spark.sessionState.newHadoopConf())
+      val rows = labeled(spark, label) {
+        withoutAqe(spark) {
+          ZoneMap.zoneRows(data, meta.zoneCols, blooms, meta.bloomItems,
+            meta.bloomFpp).rdd.mapPartitions(_.map { r =>
+            // input_file_name() is a URI: decode it to the listed path
+            val file = new java.net.URI(r.getString(0)).getPath
+            blooms.indices.foreach { i =>
+              val p = bloomSidecar(file, blooms(i))
+              val bits = r.getAs[Array[Byte]](zones + i)
+              MetaIo.writeBytes(p.getFileSystem(conf.value), p,
+                if (bits == null) Array.emptyByteArray else bits)
+            }
+            Row.fromSeq(file +: r.toSeq.slice(1, zones))
+          }).collect()
+        }
+      }
+      val bytes = files.toMap
+      rows.toSeq.map(r => Row.fromSeq(r.toSeq :+ bytes(r.getString(0))))
+    }
 
   /** Is `e` the SHAPE of a lost commit race rather than a conflict
     * exception proper? Under contention with a short retention window
@@ -540,40 +620,19 @@ object GraftTable {
     */
   private val statsCacheG = scala.collection.concurrent.TrieMap
     .empty[(String, Long, String), (Long, Long)]
-  private val manifestSchemaG = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, String), StructType]
-  /** A committed version's NON-BLOOM manifest columns, collected once
-    * process-wide (schema + rows): the metadata every per-statement ask
-    * needs — file list, size/row stats, per-column zone ranges, merge
-    * range-candidacy — served from ONE collect per version instead of
-    * one Spark job per ask. Bloom bytes (the only heavy manifest
-    * payload) are EXCLUDED and stay executor-side; what remains is the
-    * same O(|files|) of strings/longs [[GraftTable!.storedFiles]] always
-    * collected.
+  /** A committed version's manifest (schema + rows), held once
+    * process-wide: the metadata every per-statement ask needs — file
+    * list, size/row stats, per-column zone ranges, pruning, merge
+    * range-candidacy — served from one snapshot per version instead of
+    * one Spark job per ask. Every commit seeds its own version's entry
+    * with the rows it wrote; a cold version costs one collect. The rows
+    * are O(|files|) strings and scalars: bloom bits live in sidecars.
     */
   private val snapCacheG = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, String), (StructType, Array[org.apache.spark.sql.Row])]
+    .empty[(String, Long, String), (StructType, Array[Row])]
   private def boundCache(
       m: scala.collection.concurrent.TrieMap[(String, Long, String), _]): Unit =
     if (m.size > 4096) m.clear()
-
-  private def writeSmall(f: FileSystem, p: Path, s: String): Unit = {
-    val out = f.create(p, true)
-    try out.write(s.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readSmall(f: FileSystem, p: Path): Option[String] =
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](4096)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        Some(new String(bytes.toByteArray, "UTF-8"))
-      } finally in.close()
-    }
 
   /** Is there a committed graft table at `path`? */
   def exists(spark: SparkSession, path: String): Boolean =
@@ -581,9 +640,10 @@ object GraftTable {
 
   /** Zero-copy SHALLOW CLONE (the Delta `CLONE` shape): a NEW table at
     * `destPath` whose v1 manifest references the SOURCE's data files by
-    * absolute path — no data moves, zone ranges and blooms copy verbatim
-    * (the clone prunes exactly like the source from birth), and the
-    * commit itself is metadata-sized regardless of table size: cloning
+    * absolute path — no data moves, zone ranges copy verbatim and the
+    * blooms are the source files' own sidecars (the clone prunes exactly
+    * like the source from birth), and the commit itself is
+    * metadata-sized regardless of table size: cloning
     * 100 TB costs one manifest write. Copy-on-write from there: every
     * clone mutation writes its own generations under the clone root; a
     * merge/DML rewrite replaces absolute source references with
@@ -622,13 +682,16 @@ object GraftTable {
     // engine — ZoneMap.canonical's convention).
     val srcRoot = fs(spark, srcPath)
       .makeQualified(new Path(srcPath)).toUri.getPath
-    val manifest = src.manifestDf(v).withColumn("file",
-      when(col("file").startsWith("/"), col("file"))
-        .otherwise(concat(lit(srcRoot + "/"), col("file"))))
+    val (schema, rows) = src.manifestSnap(v)
+    val fIx = schema.fieldIndex("file")
+    val manifest = rows.toSeq.map { r =>
+      val f = r.getString(fIx)
+      Row.fromSeq(r.toSeq.updated(fIx, if (f.startsWith("/")) f else s"$srcRoot/$f"))
+    }
     // a metadata-only publish whose carried rows are the whole manifest
     publishGeneration(spark, destPath, None, 1L,
       m.copy(appliedHwm = -1L, streamed = false, keepVersions = keepVersions),
-      Some(Carry(manifest, None)), op = "clone")
+      manifest, op = "clone")
     // register the clone against its SOURCE so a source vacuum/drop/
     // rename is LOUD instead of silently breaking the clone's absolute
     // references ([[GraftTable!.vacuum]]'s clone-safety check, shared by
@@ -648,7 +711,7 @@ object GraftTable {
   private[graft] def registerClone(spark: SparkSession, srcPath: String,
       destPath: String): Unit = {
     val token = java.util.UUID.randomUUID().toString
-    writeSmall(fs(spark, srcPath), new Path(s"$srcPath/_clones/$token"),
+    MetaIo.writeFile(fs(spark, srcPath), new Path(s"$srcPath/_clones/$token"),
       fs(spark, destPath).makeQualified(new Path(destPath)).toUri.getPath)
   }
 
@@ -662,13 +725,6 @@ object GraftTable {
     case object Empty extends Changes
     case object Diff extends Changes
   }
-
-  /** The rows of the head's manifest a commit keeps: lazily for the
-    * engine write, and as driver rows off the snapshot when it holds
-    * them (not on bloom tables, whose bloom bytes it leaves out).
-    */
-  private[operators] final case class Carry(rows: DataFrame,
-      snap: Option[(StructType, Seq[org.apache.spark.sql.Row])])
 
   /** What a mutation decides against one head: commit nothing and
     * return `result`, or publish `rows` (None = a metadata-only commit)
@@ -703,24 +759,24 @@ object GraftTable {
 
   /** The whole publish cycle for a mutation that lands `rows` as the
     * version-`v` generation. Collision-free until one atomic commit:
-    * data files land under a publish-unique `data/g{v}_{token}`, the
-    * manifest (new files' zone rows, paths RELATIVIZED to the table
-    * root, plus the `carry`ed rows of the previous manifest), the
-    * meta and the publisher token are staged under a hidden dir, and ONE
-    * directory rename makes `v{v}` visible whole. `rows = None` is a
-    * metadata-only commit: no generation is written and the carried
-    * rows are the whole manifest. The token read back
-    * after the rename certifies whose attempt won; a loser cleans its
-    * debris and throws `ConcurrentModificationException` — exactly one
-    * commit per version survives, and the winner's files were never
-    * touched by the loser (no shared directories before the commit
-    * point). A crash anywhere before the rename leaves the previous
+    * data files (and a bloom table's sidecars) land under a
+    * publish-unique `data/g{v}_{token}`, the manifest (new files' zone
+    * rows, paths RELATIVIZED to the table root, after the `carried` rows
+    * of the previous manifest), the meta and the publisher token are
+    * staged under a hidden dir, and ONE directory rename makes `v{v}`
+    * visible whole. `rows = None` is a metadata-only commit: no
+    * generation is written and the carried rows are the whole manifest.
+    * The token read back after the rename certifies whose attempt won; a
+    * loser cleans its debris and throws `ConcurrentModificationException`
+    * — exactly one commit per version survives, and the winner's files
+    * were never touched by the loser (no shared directories before the
+    * commit point). A crash anywhere before the rename leaves the previous
     * version current and only vacuum-fodder behind; an existing
     * UNCOMMITTED `v{v}` dir can only be such a remnant (a live racer
     * stages elsewhere) and is cleared.
     */
   private[operators] def publishGeneration(spark: SparkSession, base: String,
-      rows: Option[DataFrame], v: Long, meta: Meta, carry: Option[Carry],
+      rows: Option[DataFrame], v: Long, meta: Meta, carried: Seq[Row],
       changes: Changes = Changes.Diff, op: String = "write"): Unit = {
     val f = fs(spark, base)
     val verDir = new Path(s"$base/v$v")
@@ -760,83 +816,23 @@ object GraftTable {
     // outside the root) pass through and resolve as-is on read
     def relativize(p: String): String =
       if (p.startsWith(rootNorm + "/")) p.drop(rootNorm.length + 1) else p
-    // ZONE STATS FROM THE FOOTERS the generation write just produced
-    // ([[FooterStats]], the Delta/Iceberg stats-at-write idea): min/max/
-    // null-count/row-count per file read from row-group metadata, so the
-    // manifest job stops RE-READING the whole generation — at 100 TB that
-    // second full pass is the single largest per-commit cost, and on the
-    // bench it is one full Spark scan per commit. Bloom-indexed tables
-    // (bits need the values) and any footer outside the provably-exact
-    // cases fall back to the aggregate pass unchanged.
-    val footerRows: Option[Seq[org.apache.spark.sql.Row]] =
-      if (meta.bloomCols.nonEmpty) None
+    // the new files' rows: from the FOOTERS the generation write just
+    // produced ([[FooterStats]], the Delta/Iceberg stats-at-write idea),
+    // with zero Spark jobs, wherever they prove every zone column exact;
+    // otherwise, and on a bloom table (its bits need the values), from
+    // one zone pass over the generation that writes the sidecars too
+    val fresh = (if (meta.bloomCols.nonEmpty) None
       else FooterStats.zoneRowsFromFooters(
-        spark.sparkContext.hadoopConfiguration, files, meta.zoneCols,
-        schema).map(_.map(r =>
-        org.apache.spark.sql.Row.fromSeq(
-          relativize(r.getString(0)) +: r.toSeq.tail)))
-    val footerSchema = FooterStats.manifestSchema(meta.zoneCols, schema)
-    // the WHOLE new manifest driver-side when both halves already are —
-    // fresh rows from the footers just written, carried rows from the
-    // previous version's snapshot: written without a Spark job
-    // ([[ManifestIo.write]]) and seeding the new version's snapshot for
-    // free after the commit. Any gap (bloom table, exotic type, write
-    // failure) falls back to the engine write path unchanged.
-    val driverManifest: Option[(StructType, Seq[org.apache.spark.sql.Row])] =
-      footerRows.flatMap { fr =>
-        carry match {
-          case None => Some((footerSchema, fr))
-          case Some(c) => c.snap.map { case (cs, cr) =>
-            ManifestIo.unionAligned(cs, cr, footerSchema, fr) }
-        }
-      }.filter(m => ManifestIo.driverWritable(m._1))
-    lazy val footerFresh = footerRows.map { rs =>
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rs.asJava, footerSchema)
-    }
-    lazy val fresh = footerFresh.getOrElse {
-      // the files just listed, read back under the schema they were
-      // written with; an all-delete merge's generation of ZERO files
-      // reads as an empty frame of that schema
-      val genRows = spark.baseRelationToDataFrame(GraftFileIndex.relation(
-        spark, gen, files, None, schema))
-      import spark.implicits._
-      // REAL on-disk bytes per file, joined onto the zone rows (both
-      // metadata-scale) before relativization: size estimation must never
-      // guess from rows × schema width when the filesystem already told us
-      // — a string-heavy table under-estimates by 100× otherwise and a
-      // too-small sizeInBytes broadcasts what should shuffle (driver OOM)
-      val sizes = files.toDF("file", "bytes")
-      ZoneMap.zoneRows(genRows,
-        meta.zoneCols, meta.bloomCols, meta.bloomItems, meta.bloomFpp)
-        .join(broadcast(sizes), Seq("file"), "left")
-        .withColumn("file",
-          when(col("file").startsWith(rootNorm + "/"),
-            col("file").substr(lit(rootNorm.length + 2), lit(Int.MaxValue)))
-            .otherwise(col("file")))
-    }
+        spark.sparkContext.hadoopConfiguration, files, meta.zoneCols, schema))
+      .getOrElse(zonePass(spark, gen, files, schema, meta,
+        s"graft:publish:zones v$v ($op)"))
+      .map(r => Row.fromSeq(relativize(r.getString(0)) +: r.toSeq.tail))
+    // the whole manifest is on the driver: written without a Spark job,
+    // and it is the new version's snapshot
+    val manifestSchema = FooterStats.manifestSchema(meta.zoneCols, meta.schema)
+    val manifest = carried ++ fresh
     val staging = s"$base/.v${v}_stage_$token"
-    val wroteDriver = driverManifest.exists { case (ms, mr) =>
-      ManifestIo.write(spark, s"$staging/manifest", ms, mr) }
-    if (!wroteDriver) {
-      val manifest = (carry, rows) match {
-        case (Some(prev), None) => prev.rows
-        // by name: both sides carry the same zone, null-count and bytes
-        // columns, each in its writer's order
-        case (Some(prev), Some(_)) => prev.rows.unionByName(fresh)
-        case (None, _) => fresh
-      }
-      labeled(spark, s"graft:publish:manifest v$v ($op)") {
-        // |files| metadata rows — one file keeps reads cheap. coalesce, not
-        // repartition: no exchange, so the whole write (carried-manifest
-        // read + fresh rows) is ONE single-task job, and AQE has no stage
-        // boundary to re-optimize (the repartition form cost 2 jobs/commit)
-        withoutAqe(spark) {
-          manifest.coalesce(1)
-            .write.mode(SaveMode.Overwrite).parquet(s"$staging/manifest")
-        }
-      }
-    }
+    ManifestIo.write(spark, s"$staging/manifest", manifestSchema, manifest)
     writeMeta(spark, s"$staging/meta", meta)
     require(f.exists(new Path(s"$staging/meta/_SUCCESS")),
       s"meta commit left no _SUCCESS under $staging/meta — " +
@@ -858,7 +854,7 @@ object GraftTable {
     // empty slice for the version), one job less per commit.
     if (meta.changeFeed) changes match {
       case Changes.Empty =>
-        writeSmall(f, new Path(s"$staging/_changes_none"), "")
+        MetaIo.writeFile(f, new Path(s"$staging/_changes_none"), "")
       case Changes.Rows(c) => labeled(spark, s"graft:publish:changes v$v") {
         c.write.mode(SaveMode.Overwrite).parquet(s"$staging/_changes")
       }
@@ -866,14 +862,14 @@ object GraftTable {
     }
     // the operation marker feeds [[GraftTable.history]]; written inside
     // the staged commit so it is atomic with everything else
-    writeSmall(f, new Path(s"$staging/_op"), op)
-    writeSmall(f, new Path(s"$staging/_publisher"), token)
+    MetaIo.writeFile(f, new Path(s"$staging/_op"), op)
+    MetaIo.writeFile(f, new Path(s"$staging/_publisher"), token)
     // the commit point: one atomic rename publishes the version whole
     val renamed =
       try f.rename(new Path(staging), verDir)
       catch { case _: Throwable => false }
     val won = renamed &&
-      readSmall(f, new Path(verDir, "_publisher")).contains(token)
+      MetaIo.readFile(f, new Path(verDir, "_publisher")).contains(token)
     if (!won) {
       // lost the race: remove own debris (including the rename-into-dir
       // fallback some local filesystems perform), leave the winner alone
@@ -883,14 +879,11 @@ object GraftTable {
       try f.delete(new Path(gen), true) catch { case _: Throwable => () }
       conflict(base, v)
     }
-    // the driver-written manifest IS the new version's snapshot: seed the
-    // process-wide cache so no consumer ever pays the snap collect job
-    // for this version (the rows equal a collect of the file just
-    // written, by construction)
-    if (wroteDriver) driverManifest.foreach { case (ms, mr) =>
-      boundCache(snapCacheG)
-      snapCacheG.put((rootNorm, v, token), (ms, mr.toArray))
-    }
+    // the manifest just written IS the new version's snapshot: seed the
+    // process-wide cache so no consumer pays the snap collect job for
+    // this version (the rows equal a collect of the file, by construction)
+    boundCache(snapCacheG)
+    snapCacheG.put((rootNorm, v, token), (manifestSchema, manifest.toArray))
     // retention: keep the newest `keepVersions` committed versions (the
     // time-travel window); with `keepHours >= 0` a version ALSO survives
     // while its commit is younger than that many hours (the RETAIN n
@@ -983,41 +976,6 @@ final class GraftTable private[operators] (spark: SparkSession,
 
   private def metaNow: Meta = readMeta(spark, path, version)
 
-  /** Manifest schema read DRIVER-SIDE from the (single) manifest file's
-    * footer, memoized process-wide: a bare `spark.read.parquet` runs
-    * schema inference as its own Spark JOB, and the commit/read paths
-    * open the manifest several times per statement — that job was ~40 ms
-    * of scheduling per ask, every ask. Falls back to engine inference if
-    * the directory shape is unexpected.
-    */
-  private def manifestSchema(v: Long): StructType = {
-    val key = (rootNorm, v, commitToken(v))
-    GraftTable.boundCache(GraftTable.manifestSchemaG)
-    GraftTable.manifestSchemaG.getOrElseUpdate(key, {
-      val dir = new Path(s"$path/v$v/manifest")
-      val f = fs(spark, path)
-      val file = f.listStatus(dir).find(st => st.isFile &&
-        st.getPath.getName.endsWith(".parquet") &&
-        !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      file match {
-        case Some(st) =>
-          val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              st.getPath, spark.sparkContext.hadoopConfiguration))
-          val msg = try in.getFooter.getFileMetaData.getSchema
-            finally in.close()
-          new org.apache.spark.sql.execution.datasources.parquet
-            .ParquetToSparkSchemaConverter(
-              org.apache.spark.sql.internal.SQLConf.get).convert(msg)
-        case None => spark.read.parquet(dir.toString).schema
-      }
-    })
-  }
-
-  private def manifestDf(v: Long): DataFrame =
-    spark.read.schema(manifestSchema(v)).parquet(s"$path/v$v/manifest")
-
   /** This handle's (version → publisher token) memo — one tiny FS read
     * per version instead of one per cache lookup. Handle-scoped like the
     * single-writer contract that makes it safe.
@@ -1027,30 +985,30 @@ final class GraftTable private[operators] (spark: SparkSession,
 
   private def commitToken(v: Long): String =
     tokenCache.getOrElseUpdate(v,
-      readSmall(fs(spark, path), new Path(s"$path/v$v/_publisher"))
+      MetaIo.readFile(fs(spark, path), new Path(s"$path/v$v/_publisher"))
         .getOrElse(""))
 
-  /** A committed version's manifest is IMMUTABLE — its non-bloom rows
-    * are collected once PROCESS-WIDE ([[GraftTable.snapCacheG]]) and
-    * every metadata ask (file list, stats, column ranges, merge
-    * candidacy ranges) folds over the snapshot driver-side instead of
+  /** A committed version's manifest is IMMUTABLE — its rows are held
+    * once PROCESS-WIDE ([[GraftTable.snapCacheG]]), seeded by the commit
+    * that wrote them or collected once under the schema meta implies,
+    * and every metadata ask (file list, stats, column ranges, pruning,
+    * merge candidacy) folds over the snapshot driver-side instead of
     * running its own Spark job.
     */
-  private def manifestSnap(v: Long)
-      : (StructType, Array[org.apache.spark.sql.Row]) = {
+  private def manifestSnap(v: Long): (StructType, Array[Row]) = {
     val key = (rootNorm, v, commitToken(v))
     GraftTable.snapCacheG.get(key).getOrElse {
       GraftTable.boundCache(GraftTable.snapCacheG)
-      GraftTable.snapCacheG.getOrElseUpdate(key,
+      GraftTable.snapCacheG.getOrElseUpdate(key, {
+        val m = readMeta(spark, path, v)
+        val schema = FooterStats.manifestSchema(m.zoneCols, m.schema)
         GraftTable.labeled(spark, s"graft:manifest:snap v$v") {
           GraftTable.withoutAqe(spark) {
-            val mdf = manifestDf(v)
-            val cols = mdf.schema.fieldNames
-              .filterNot(_.startsWith("bloom_"))
-            val pruned = mdf.select(cols.map(col): _*)
-            (pruned.schema, pruned.collect())
+            (schema, spark.read.schema(schema)
+              .parquet(s"$path/v$v/manifest").collect())
           }
-        })
+        }
+      })
     }
   }
 
@@ -1113,7 +1071,7 @@ final class GraftTable private[operators] (spark: SparkSession,
             replaced = rep
             publishGeneration(spark, path, rows, v + 1,
               id.fold(nm)(i => nm.copy(appliedHwm = i)),
-              rep.flatMap(carry(v, m, _)), changes, op)
+              rep.fold(Seq.empty[Row])(carry(v, _)), changes, op)
             return r
         } finally a.release()
       } catch {
@@ -1135,23 +1093,15 @@ final class GraftTable private[operators] (spark: SparkSession,
     sys.error("unreachable")
   }
 
-  /** Version `v`'s manifest rows minus the `replaced` files — None when
-    * every file is replaced. The lazy read is evaluated by the staging
-    * manifest write while v is still retained (the commit's own prune
-    * runs after its rename); a racing winner's prune surfaces as a
-    * raceArtifact [[commit]] rebases.
+  /** Version `v`'s manifest rows minus the `replaced` files, off its
+    * snapshot. A racing winner's prune of v surfaces as a raceArtifact
+    * [[commit]] rebases.
     */
-  private def carry(v: Long, m: Meta, replaced: Set[String]): Option[Carry] =
-    if (replaced.nonEmpty && storedFiles(v).forall(replaced)) None
-    else Some(Carry(
-      if (replaced.isEmpty) manifestDf(v)
-      else manifestDf(v).filter(!col("file").isInCollection(replaced)),
-      if (m.bloomCols.nonEmpty) None
-      else {
-        val (s, r) = manifestSnap(v)
-        val fIx = s.fieldIndex("file")
-        Some((s, r.toSeq.filterNot(x => replaced(x.getString(fIx)))))
-      }))
+  private def carry(v: Long, replaced: Set[String]): Seq[Row] = {
+    val (s, rows) = manifestSnap(v)
+    val fIx = s.fieldIndex("file")
+    rows.toSeq.filterNot(r => replaced(r.getString(fIx)))
+  }
 
   /** The files the current version references (resolved to full paths) —
     * the authoritative scan list; no directory listing happens anywhere
@@ -1166,24 +1116,32 @@ final class GraftTable private[operators] (spark: SparkSession,
   def read(): DataFrame = readVersion(version)
 
   /** One pruning pass for version `v` under a CNF spec, through the one
-    * [[ZoneMap.Pruner]]: on the driver over the manifest snapshot (zero
-    * Spark jobs), or — on a bloom table, whose bloom bytes the snapshot
-    * leaves out — in executors over the manifest, collecting only
-    * `(file, _keep)`.
+    * [[ZoneMap.Pruner]] on the driver over the manifest snapshot: zero
+    * Spark jobs, and one sidecar read per bloom column a Point probes,
+    * for each file the zone checks keep.
     */
   private def pruneVersion(v: Long, m: Meta, cnf: ZoneMap.Cnf)
-      : (Seq[String], Set[String]) =
-    if (m.bloomCols.isEmpty) {
-      val (schema, rows) = manifestSnap(v)
-      ZoneMap.pruner(schema, m.zoneMeta, cnf).survivors(rows)
-    } else ZoneMap.pruneZoneRowsCnf(manifestDf(v), m.zoneMeta, cnf)
+      : (Seq[String], Set[String]) = {
+    val (schema, rows) = manifestSnap(v)
+    pruner(schema, m, cnf).survivors(rows)
+  }
+
+  /** The [[ZoneMap.Pruner]] over manifest rows of `schema`, reading each
+    * file's blooms from its sidecars.
+    */
+  private def pruner(schema: StructType, m: Meta,
+      cnf: ZoneMap.Cnf): ZoneMap.Pruner = {
+    val (f, fIx) = (fs(spark, path), schema.fieldIndex("file"))
+    ZoneMap.pruner(schema, m.zoneMeta, cnf,
+      Some((r, c) => readBloom(f, resolve(r.getString(fIx)), c)))
+  }
 
   /** Zone-and-bloom-pruned scan under `preds`: the current version
     * filtered by `ZoneMap.predicate(preds)`. Catalyst hands those
     * predicates to the version's file index, which prunes the manifest
-    * ([[pruneFilesCnf]] — on the driver with zero Spark jobs unless the
-    * table carries blooms; conservative by construction), and the exact
-    * predicate re-applies on read — the result is row-identical to
+    * ([[pruneFilesCnf]] — on the driver with zero Spark jobs;
+    * conservative by construction), and the exact predicate re-applies
+    * on read — the result is row-identical to
     * `read().filter(ZoneMap.predicate(preds))`, pruning only changes how
     * many files open.
     */
@@ -1193,7 +1151,7 @@ final class GraftTable private[operators] (spark: SparkSession,
     val m = readMeta(spark, path, v)
     // compiled only for its loud checks: every pred names an indexed
     // column and a value that column can hold
-    ZoneMap.pruner(manifestSnap(v)._1, m.zoneMeta, Seq(Seq(preds)))
+    pruner(manifestSnap(v)._1, m, Seq(Seq(preds)))
     frame(v).filter(ZoneMap.predicate(preds))
   }
 
@@ -1298,7 +1256,7 @@ final class GraftTable private[operators] (spark: SparkSession,
     * over the manifest: global min/max from the per-file zone ranges,
     * null count from the per-file null counts. Zero write-path cost —
     * everything falls out of statistics the manifest already carries
-    * (both manifest writers record min, max and nulls for every zone
+    * (every manifest row records min, max and nulls for every zone
     * column); NDV derivation (bounded by the integral value-range
     * width) happens in the consumer. Feeds the CBO-facing
     * `CatalogTable` [[graft.plans.GraftV2ScanStats]] synthesizes when
@@ -1427,9 +1385,11 @@ final class GraftTable private[operators] (spark: SparkSession,
     *
     * Selection is conservative-by-construction: a file is skipped only
     * when its zone range provably excludes every batch key (all-null
-    * zone rows exclude all non-null keys), decided by one broadcast join
-    * of the metadata-scale manifest against the batch — batch keys never
-    * visit the driver.
+    * zone rows exclude all non-null keys), decided by one job that
+    * matches the batch keys against the manifest's ranges executor-side
+    * — batch keys never visit the driver; on a bloom-keyed table the same
+    * job brings their distinct hashes, and the driver probes the range
+    * candidates' bloom sidecars with them.
     *
     * Contract: `keyCol` must be zone-indexed; batch keys must be
     * non-null and unique within the batch (ONE aggregate answers both —
@@ -1592,16 +1552,15 @@ final class GraftTable private[operators] (spark: SparkSession,
       require(m.zoneCols.contains(keyCol),
         s"the leading merge key $keyCol must be zone-indexed " +
           s"(zones: ${m.zoneCols.mkString(", ")})")
-      lazy val manifest = manifestDf(v)
       // a file is affected iff SOME batch key — upsert or tombstone —
       // falls inside its zone range. The candidacy probe keeps batch
       // keys executor-side; the manifest side rides into the plan as a
       // LITERAL range array off the per-version snapshot when it fits
       // (one narrow job, no broadcast-exchange build job), and falls
-      // back to the broadcast join beyond the literal cap (a 100 TB
-      // manifest belongs in an exchange, not an expression tree). Files
-      // whose zone range is all-null exclude every non-null batch key —
-      // the join semantics — so they drop from the literal up front.
+      // back to a broadcast join of the snapshot beyond the literal cap
+      // (a 100 TB manifest belongs in an exchange, not an expression
+      // tree). Files whose zone range is all-null exclude every non-null
+      // batch key — the join semantics — so they drop up front.
       val (snapSchema, snapRows) = manifestSnap(v)
       val ranges: Seq[(String, Any, Any)] = {
         val fIx = snapSchema.fieldIndex("file")
@@ -1624,39 +1583,45 @@ final class GraftTable private[operators] (spark: SparkSession,
                 col(keyCol) <= r.getField("mx"))).as("_r"))
             .select(col("_r.f").as("file")).distinct()
         case None =>
+          import scala.jdk.CollectionConverters._
           keys.join(
-              broadcast(manifest.select(col("file"),
-                col(s"min_$keyCol").as("_mn"), col(s"max_$keyCol").as("_mx"))),
+              broadcast(spark.createDataFrame(ranges.map { case (f, mn, mx) =>
+                Row(f, mn, mx) }.asJava, StructType(Seq(
+                  snapSchema("file"), snapSchema(s"min_$keyCol").copy(name = "_mn"),
+                  snapSchema(s"max_$keyCol").copy(name = "_mx"))))),
               col(keyCol) >= col("_mn") && col(keyCol) <= col("_mx"))
             .select("file").distinct()
       }
-      // …tightened by the per-file manifest blooms when the key column
+      // …tightened by the per-file bloom sidecars when the key column
       // carries them: on a hash-scattered layout every file spans the
       // full key range (min/max prunes nothing) but contains only its
       // own keys, so the bloom shrinks the rewrite set to the files that
-      // might actually hold a batch key. No false negatives ⇒ exact.
-      // Distinct key hashes ride as ONE array row (executor-side, never
-      // the driver), each candidate file's bloom deserializes once;
-      // capped so a giant batch can't fold into a single fat row.
+      // might actually hold a batch key. No false negatives ⇒ exact. The
+      // collect that lists the range candidates also brings the batch's
+      // distinct key hashes, as ONE array row, and the driver probes each
+      // candidate's sidecar with them; capped so the hashes stay
+      // metadata-sized on the driver.
+      val bloomed = m.bloomCols.contains(keyCol) && batchRows <= 1000000L
       val affected = GraftTable.labeled(spark, s"graft:merge:affected v$v") {
         GraftTable.withoutAqe(spark) {
-        if (ranges.isEmpty && litRanges.isEmpty && snapRows.nonEmpty)
-          Set.empty[String] // every zone range is null: nothing can match
-        else if (snapRows.isEmpty) Set.empty[String]
-        else if (!m.bloomCols.contains(keyCol) || batchRows > 5000000L)
-          rangeCand.collect().map(_.getString(0)).toSet
-        else {
-          val anyHit = udf((bytes: Array[Byte], hs: Seq[Long]) =>
-            ZoneMap.bloomProbe(bytes, hs).contains(true))
-          val khs = keys
-            .select(ZoneMap.bloomHash(col(keyCol)).as("_kh")).distinct()
-            .agg(collect_list("_kh").as("_khs"))
-          manifest.join(rangeCand, Seq("file"), "left_semi")
-            .select(col("file"), col(s"bloom_$keyCol").as("_bl"))
-            .crossJoin(khs)
-            .filter(anyHit(col("_bl"), col("_khs")))
-            .select("file").collect().map(_.getString(0)).toSet
-        }
+          if (ranges.isEmpty) Set.empty[String] // no file, or no non-null range
+          else if (!bloomed) rangeCand.collect().map(_.getString(0)).toSet
+          else {
+            val hashes = keys.agg(collect_set(ZoneMap.bloomHash(col(keyCol),
+              m.schema(keyCol).dataType)).as("_khs"))
+            val got = rangeCand
+              .select(col("file"), lit(null).cast("array<bigint>").as("_khs"))
+              .unionByName(hashes.select(lit(null).cast("string").as("file"),
+                col("_khs")))
+              .collect()
+            val khs = got.collectFirst {
+              case r if !r.isNullAt(1) => r.getSeq[Long](1) }.getOrElse(Nil)
+            val f = fs(spark, path)
+            got.iterator.filter(!_.isNullAt(0)).map(_.getString(0))
+              .filter(file => ZoneMap.bloomProbe(
+                readBloom(f, resolve(file), keyCol), khs).contains(true))
+              .toSet
+          }
         }
       }
       // the carried COUNT is set arithmetic over the cached file list —
@@ -2165,7 +2130,7 @@ final class GraftTable private[operators] (spark: SparkSession,
     val fy = new Path(cursorDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cp = new Path(s"$cursorDir/cursor")
-    val raw = readSmall(fy, cp)
+    val raw = MetaIo.readFile(fy, cp)
     val cur = raw.flatMap(s => scala.util.Try(s.trim.toLong).toOption)
       .getOrElse {
         if (raw.isDefined) DedupIndex.log.warn(
@@ -2178,7 +2143,7 @@ final class GraftTable private[operators] (spark: SparkSession,
     pending.foreach { w =>
       f(readChanges(w - 1, w), w)
       val tmp = new Path(s"$cursorDir/.cursor_tmp")
-      writeSmall(fy, tmp, w.toString)
+      MetaIo.writeFile(fy, tmp, w.toString)
       if (fy.exists(cp)) fy.delete(cp, false)
       require(fy.rename(tmp, cp), s"cursor replace failed: $tmp -> $cp")
     }
@@ -2294,7 +2259,7 @@ final class GraftTable private[operators] (spark: SparkSession,
     import spark.implicits._
     versions().map { v =>
       val p = new Path(s"$path/v$v/_op")
-      val op = readSmall(f, p).getOrElse(
+      val op = MetaIo.readFile(f, p).getOrElse(
         sys.error(s"graft table $path has no operation marker at $p"))
       (v, op, storedFiles(v).size)
     }.toDF("version", "operation", "files")
@@ -2388,7 +2353,8 @@ final class GraftTable private[operators] (spark: SparkSession,
       catch { case _: Throwable => () } }
     orphanFiles.foreach(p => try { f.delete(p, false); () }
       catch { case _: Throwable => () })
-    orphanFiles.size.toLong + deadGens.map(_._2.toLong).sum
+    orphanFiles.count(GraftTable.isDataFile).toLong +
+      deadGens.map(_._2.toLong).sum
   }
 
   /** What a [[vacuum]] WOULD delete, without deleting anything — the
@@ -2403,7 +2369,8 @@ final class GraftTable private[operators] (spark: SparkSession,
 
   /** The sweep set, computed once and shared by [[vacuum]] and
     * [[vacuumDryRun]]: (crash-debris dirs, orphan data files in live
-    * generations, (dead generation dir, its data-file count) pairs —
+    * generations with their bloom sidecars, (dead generation dir, its
+    * data-file count) pairs —
     * whole generations with zero referenced files). Orphan files inside
     * a dead generation are NOT double-listed — the generation dir
     * subsumes them; the count keeps [[vacuum]]'s files-deleted return
@@ -2442,14 +2409,16 @@ final class GraftTable private[operators] (spark: SparkSession,
       var live = false
       while (it.hasNext) {
         val st = it.next()
-        if (st.isFile) {
-          val n = st.getPath.getName
-          val isData = n.endsWith(".parquet") && !n.startsWith("_") &&
-            !n.startsWith(".")
-          if (isData) {
-            if (referenced(st.getPath.toUri.getPath)) live = true
-            else { orphans += st.getPath; nOrphans += 1 }
-          }
+        val p = st.getPath
+        if (st.isFile && GraftTable.isDataFile(p)) {
+          if (referenced(p.toUri.getPath)) live = true
+          else { orphans += p; nOrphans += 1 }
+        } else if (st.isFile && p.getName.endsWith(".bloom") &&
+            p.getParent.getParent.getName == "_blooms") {
+          // <generation>/_blooms/<c>/<data file>.bloom goes with its file
+          val data = new Path(p.getParent.getParent.getParent,
+            p.getName.stripSuffix(".bloom"))
+          if (!referenced(data.toUri.getPath)) orphans += p
         }
       }
       if (!live) deadGens += ((gen.getPath, nOrphans)) // superseded whole
@@ -2468,7 +2437,7 @@ final class GraftTable private[operators] (spark: SparkSession,
     val dir = new Path(s"$path/_clones")
     if (!f.exists(dir)) Nil
     else f.listStatus(dir).toSeq.filter(_.isFile)
-      .flatMap(st => readSmall(f, st.getPath)).sorted
+      .flatMap(st => MetaIo.readFile(f, st.getPath)).sorted
   }
 
   /** Roots of OTHER graft tables whose data files this table's retained
@@ -2497,7 +2466,7 @@ final class GraftTable private[operators] (spark: SparkSession,
     val target = fs(spark, destPath)
       .makeQualified(new Path(destPath)).toUri.getPath
     f.listStatus(dir).filter(_.isFile).foreach { st =>
-      if (readSmall(f, st.getPath).contains(target))
+      if (MetaIo.readFile(f, st.getPath).contains(target))
         try { f.delete(st.getPath, false); () }
         catch { case _: Throwable => () }
     }

@@ -12,32 +12,19 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
-/** Driver-side parquet I/O for METADATA-SCALE row sets — the per-version
-  * manifest ([[GraftTable]]): when a commit's manifest rows are already
-  * resident on the driver (zone stats from parquet footers + the carried
-  * rows from the previous version's snapshot), writing them through a
-  * Spark job is pure scheduling overhead — one job per commit on every
-  * DML/stream lifecycle. This writes the SAME parquet file (Spark's own
-  * [[ParquetWriteSupport]], so types/annotations match a Spark write
-  * byte-for-semantics) straight from the driver: zero Spark jobs.
-  *
-  * STRICTLY CONSERVATIVE: [[driverWritable]] gates the path to the
-  * flat primitive types the manifest actually uses (no timestamps/dates
-  * — their rebase-mode semantics stay with the engine write path), and
-  * [[write]] returns false on ANY failure so the caller falls back to
-  * the Spark write unchanged.
+/** Driver-side parquet writer for [[GraftTable]]'s per-version
+  * manifest, the only writer it has. A manifest is one row per data file
+  * of metadata-scale scalars — file, row count, zone bounds and null
+  * counts, bytes — and its rows are already on the driver when a commit
+  * writes it: fresh rows from the new generation's footers or its zone
+  * pass, carried rows from the previous version's snapshot. Bloom bits
+  * live in per-file sidecars, never here. Writing through a Spark job
+  * would only add scheduling, so this writes the same parquet file a
+  * Spark write would (Spark's own [[ParquetWriteSupport]] under the
+  * session's write settings, so every type and annotation matches)
+  * straight from the driver, with zero Spark jobs.
   */
 private[operators] object ManifestIo {
-
-  /** Types whose parquet representation has no mode/rebase subtleties —
-    * the driver write path is enabled only when EVERY field qualifies.
-    */
-  def driverWritable(schema: StructType): Boolean =
-    schema.fields.forall(_.dataType match {
-      case LongType | IntegerType | ShortType | ByteType | StringType |
-           BooleanType | DoubleType | FloatType => true
-      case _ => false
-    })
 
   private final class Builder(out: HadoopOutputFile)
       extends ParquetWriter.Builder[InternalRow, Builder](out) {
@@ -47,85 +34,44 @@ private[operators] object ManifestIo {
   }
 
   /** Write `rows` as ONE parquet file (plus the `_SUCCESS` marker Spark
-    * would leave) under `dir`, driver-side. Returns false on any failure
-    * — callers keep the Spark-job write as the fallback, so this is an
-    * optimization, never a semantics change.
+    * would leave) under `dir`, driver-side. A failure throws: the commit
+    * it belongs to fails with it.
     */
   def write(spark: SparkSession, dir: String, schema: StructType,
-      rows: Seq[Row]): Boolean =
+      rows: Seq[Row]): Unit = {
+    val conf = new Configuration(spark.sessionState.newHadoopConf())
+    ParquetWriteSupport.setSchema(schema, conf)
+    // the session-conf keys ParquetWriteSupport.init asserts on — the
+    // same set ParquetFileFormat.prepareWrite stamps before a write
+    val sqlc = spark.sessionState.conf
+    conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key,
+      sqlc.writeLegacyParquetFormat.toString)
+    conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
+      sqlc.parquetOutputTimestampType.toString)
+    conf.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key,
+      sqlc.parquetFieldIdWriteEnabled.toString)
+    conf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key,
+      sqlc.getConf(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE).toString)
+    // how dates and timestamps are written: the session's settings,
+    // as a Spark write would resolve them
+    conf.set(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key,
+      sqlc.getConf(SQLConf.PARQUET_REBASE_MODE_IN_WRITE).toString)
+    conf.set(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE.key,
+      sqlc.getConf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE).toString)
+    val d = new Path(dir)
+    val fs = d.getFileSystem(conf)
+    fs.mkdirs(d)
+    val file = new Path(d,
+      s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet")
+    val w = new Builder(HadoopOutputFile.fromPath(file, conf))
+      .withConf(conf)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .build()
     try {
-      val conf = new Configuration(spark.sessionState.newHadoopConf())
-      ParquetWriteSupport.setSchema(schema, conf)
-      // the session-conf keys ParquetWriteSupport.init asserts on — the
-      // same set ParquetFileFormat.prepareWrite stamps before a write
-      val sqlc = spark.sessionState.conf
-      conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key,
-        sqlc.writeLegacyParquetFormat.toString)
-      conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
-        sqlc.parquetOutputTimestampType.toString)
-      conf.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key,
-        sqlc.parquetFieldIdWriteEnabled.toString)
-      conf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key,
-        sqlc.getConf(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE).toString)
-      // irrelevant to the gated types (no dates/timestamps) but the
-      // write support may still resolve them
-      conf.set("spark.sql.parquet.datetimeRebaseModeInWrite",
-        spark.conf.getOption("spark.sql.parquet.datetimeRebaseModeInWrite")
-          .getOrElse("CORRECTED"))
-      conf.set("spark.sql.parquet.int96RebaseModeInWrite",
-        spark.conf.getOption("spark.sql.parquet.int96RebaseModeInWrite")
-          .getOrElse("CORRECTED"))
-      val d = new Path(dir)
-      val fs = d.getFileSystem(conf)
-      fs.mkdirs(d)
-      val file = new Path(d,
-        s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet")
-      val w = new Builder(HadoopOutputFile.fromPath(file, conf))
-        .withConf(conf)
-        .withCompressionCodec(CompressionCodecName.SNAPPY)
-        .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
-        .build()
-      try {
-        val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
-        rows.foreach(r => w.write(toInternal(r).asInstanceOf[InternalRow]))
-      } finally w.close()
-      val ok = fs.create(new Path(d, "_SUCCESS"), true)
-      ok.close()
-      true
-    } catch {
-      case e: Throwable =>
-        DedupIndex.log.warn(
-          s"driver-side manifest write failed — falling back to the " +
-            s"engine write path ($dir): $e")
-        false
-    }
-
-  /** Driver-side twin of `a.unionByName(b, allowMissingColumns = true)`:
-    * output columns are `a`'s in order plus `b`'s extras appended;
-    * fields missing on one side read null there and merge as nullable,
-    * shared fields merge nullability. Returns the union schema and the
-    * aligned rows (`a`'s first — the DataFrame union's order).
-    */
-  def unionAligned(aSchema: StructType, aRows: Seq[Row],
-      bSchema: StructType, bRows: Seq[Row]): (StructType, Seq[Row]) = {
-    val bByName = bSchema.fields.map(f => f.name -> f).toMap
-    val aNames = aSchema.fieldNames.toSet
-    val merged = StructType(
-      aSchema.fields.map { f =>
-        bByName.get(f.name) match {
-          case Some(bf) => f.copy(nullable = f.nullable || bf.nullable)
-          case None => f.copy(nullable = true)
-        }
-      } ++ bSchema.fields.filterNot(f => aNames(f.name))
-        .map(_.copy(nullable = true)))
-    def align(schema: StructType, rows: Seq[Row]): Seq[Row] = {
-      val ix = merged.fields.map(f =>
-        if (schema.fieldNames.contains(f.name)) schema.fieldIndex(f.name)
-        else -1)
-      rows.map { r =>
-        Row.fromSeq(ix.toSeq.map(i => if (i < 0) null else r.get(i)))
-      }
-    }
-    (merged, align(aSchema, aRows) ++ align(bSchema, bRows))
+      val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+      rows.foreach(r => w.write(toInternal(r).asInstanceOf[InternalRow]))
+    } finally w.close()
+    fs.create(new Path(d, "_SUCCESS"), true).close()
   }
 }

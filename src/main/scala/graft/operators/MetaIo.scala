@@ -23,23 +23,33 @@ private[operators] object MetaIo {
   private def fs(spark: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def writeFile(f: FileSystem, p: Path, s: String): Unit = {
+  /** Write `bytes` to `p`, replacing it — the one small-file codec of
+    * the engine's directly written records: JSON meta, commit markers,
+    * [[GraftTable]]'s publisher tokens and bloom sidecars.
+    */
+  def writeBytes(f: FileSystem, p: Path, bytes: Array[Byte]): Unit = {
     val out = f.create(p, true)
-    try out.write(s.getBytes("UTF-8")) finally out.close()
+    try out.write(bytes) finally out.close()
   }
 
-  private def readFile(f: FileSystem, p: Path): Option[String] =
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        Some(new String(bytes.toByteArray, "UTF-8"))
-      } finally in.close()
-    }
+  /** The whole content of `p`, or None when it does not exist. */
+  def readBytes(f: FileSystem, p: Path): Option[Array[Byte]] = {
+    val in =
+      try f.open(p) catch { case _: java.io.FileNotFoundException => return None }
+    try {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val buf = new Array[Byte](8192)
+      var n = in.read(buf)
+      while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
+      Some(bytes.toByteArray)
+    } finally in.close()
+  }
+
+  def writeFile(f: FileSystem, p: Path, s: String): Unit =
+    writeBytes(f, p, s.getBytes("UTF-8"))
+
+  def readFile(f: FileSystem, p: Path): Option[String] =
+    readBytes(f, p).map(new String(_, "UTF-8"))
 
   /** Replace `dir` with a committed JSON record (meta.json + _SUCCESS) —
     * the same overwrite semantics the parquet writer had.

@@ -8,14 +8,16 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.{AnsiTypeCoercion, TypeCoercion}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
-  EvalMode, Literal, XxHash64}
+  EvalMode, Expression, Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{DataType, DateType, NumericType,
-  StringType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, DateType, DoubleType,
+  FloatType, NumericType, StringType, StructType, TimestampNTZType,
+  TimestampType}
 
 /** File-level zone maps — the data-skipping layer between partition
   * pruning and row-group statistics: a tiny parquet table holding
@@ -51,9 +53,10 @@ import org.apache.spark.sql.types.{DataType, DateType, NumericType,
   *
   * Pruning is ONE evaluator, the [[Pruner]] ([[pruner]] compiles it on
   * the driver): it judges zone rows on the driver over a collected
-  * snapshot ([[GraftTable]]'s non-bloom manifests) or in executors
-  * ([[pruneFrameCnf]]) where bloom bytes live, comparing in the type
-  * and under the ordering Catalyst itself uses.
+  * snapshot ([[GraftTable]]'s manifests, whose blooms sit in per-file
+  * sidecars) or in executors ([[pruneFrameCnf]]) over this index's zone
+  * rows, whose blooms ride in the row, comparing in the type and under
+  * the ordering Catalyst itself uses.
   *
   * Null semantics: min/max aggregate over non-null values, so a file
   * whose column is entirely null carries null min/max and is pruned for
@@ -165,8 +168,14 @@ object ZoneMap {
     * ".0") can never hash differently. A hash mismatch here would be a
     * silent FALSE NEGATIVE — files dropped that contain matching rows —
     * the one failure mode a pruning index must never have. Sibling
-    * operators probing manifest blooms executor-side ([[GraftTable]]'s
-    * merge candidacy) hash through this too.
+    * operators hash through this too ([[GraftTable]]'s sidecar blooms and
+    * the batch keys its merge candidacy probes them with).
+    *
+    * Float and double values are normalized first (Catalyst's
+    * [[NormalizeNaNAndZero]], on both sides): `-0.0 = 0.0` holds in SQL,
+    * but their strings differ, and a SQL `0.0` literal is a decimal,
+    * which has no signed zero — unnormalized, a file holding `-0.0`
+    * would hash away from the probe and be dropped.
     *
     * The cast is PINNED to UTC, not left to the analyzer: a bare
     * `cast("string")` resolves with the SESSION time zone, and
@@ -178,9 +187,16 @@ object ZoneMap {
     * different zones — a session-zone key would bake the builder's
     * zone into the bits with no record of it in meta.
     */
-  private[operators] def bloomHash(c: Column): Column =
-    ColumnBridge.column(XxHash64(
-      Seq(Cast(ColumnBridge.expression(c), StringType, Some("UTC"))), 42L))
+  private[operators] def bloomHash(c: Column, dt: DataType): Column =
+    ColumnBridge.column(hashOf(ColumnBridge.expression(c), dt))
+
+  private def hashOf(e: Expression, dt: DataType): Expression = {
+    val normalized = dt match {
+      case FloatType | DoubleType => NormalizeNaNAndZero(e)
+      case _ => e
+    }
+    XxHash64(Seq(Cast(normalized, StringType, Some("UTC"))), 42L)
+  }
 
   /** The probe-side twin of [[bloomHash]]: cast the literal to the
     * indexed column's type as a comparison would (session zone `tz`),
@@ -188,19 +204,19 @@ object ZoneMap {
     * canonicalization by construction. Fails loudly on a probe value
     * the column type cannot hold rather than guessing.
     */
-  private def probeHash(v: Any, dt: DataType, tz: String): Long = {
-    val typed = Cast(Literal(v), dt, Some(tz))
-    XxHash64(Seq(Cast(typed, StringType, Some("UTC"))), 42L)
-      .eval(null).asInstanceOf[Long]
-  }
+  private def probeHash(v: Any, dt: DataType, tz: String): Long =
+    hashOf(Cast(Literal(v), dt, Some(tz)), dt).eval(null).asInstanceOf[Long]
 
-  private def bloomAgg(c: String, items: Long, bits: Long): Column =
+  private def bloomAgg(c: String, dt: DataType, items: Long,
+      bits: Long): Column =
     ColumnBridge.column(new BloomFilterAggregate(
-      ColumnBridge.expression(bloomHash(col(c))), Literal(items), Literal(bits))
-      .toAggregateExpression())
+      ColumnBridge.expression(bloomHash(col(c), dt)), Literal(items),
+      Literal(bits)).toAggregateExpression())
 
   /** Zone rows for every file behind `df` (one group per file out of a
-    * single scan): `(file, cnt, min_c…, max_c…, nulls_c…[, bloom_c…])`.
+    * single scan): `(file, cnt, (min_c, max_c, nulls_c)…[, bloom_c…])`,
+    * each bloom its serialized bits, null where the file holds no
+    * non-null value of the column.
     * The shuffle moves |files| tiny rows (a bloom adds its fixed bit
     * array); partial aggregation collapses everything map-side first.
     * Every zone column gets its `nulls_c` count, which [[Nulls]] prunes
@@ -216,22 +232,25 @@ object ZoneMap {
       min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"),
       sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c"))
     } ++ bloomCols.map { c =>
-      bloomAgg(c, bloomItems, bloomBits(bloomItems, bloomFpp)).as(s"bloom_$c")
+      bloomAgg(c, df.schema(c).dataType, bloomItems,
+        bloomBits(bloomItems, bloomFpp)).as(s"bloom_$c")
     }
     df.groupBy(canonical(input_file_name()).as(FileCol))
       .agg(count(lit(1)).as("cnt"), aggs: _*)
   }
 
   /** What the bloom bits hash, as a versioned tag written by build and
-    * CHECKED against on read: pre-tag indexes hashed the SESSION-zone
-    * string cast of timestamps (the bug the UTC pin fixed), so their
-    * bloom bits silently false-negative when probed under a different
-    * zone — the one failure a pruning index must never have. A bloomed
-    * index whose meta carries a different scheme is refused
-    * loudly with a rebuild instruction instead of probed wrong;
-    * min/max-only indexes are scheme-independent and unaffected.
+    * CHECKED against on read. Earlier schemes can silently
+    * false-negative under this engine's probes — the one failure a
+    * pruning index must never have: the first hashed the SESSION-zone
+    * string cast of timestamps (fixed by the UTC pin), the second hashed
+    * `-0.0` apart from `0.0` (fixed by normalizing floats). A bloomed
+    * index whose meta carries a different scheme is refused loudly with
+    * a rebuild instruction instead of probed wrong; min/max-only indexes
+    * are scheme-independent and unaffected.
     */
-  private[operators] val BloomScheme = "xxhash64(utc-string),seed=42"
+  private[operators] val BloomScheme =
+    "xxhash64(utc-string,normalized-nan-zero),seed=42"
 
   /** The persisted geometry: indexed cols, bloom cols, bloom sizing,
     * the DDL type of every indexed/bloomed column (the probe-side
@@ -268,10 +287,9 @@ object ZoneMap {
       (j \ "bloom_scheme").extract[String])
     require(m.bloomCols.isEmpty || m.scheme == BloomScheme,
       s"zone-map index at $indexPath has bloom bits under hash scheme " +
-        s"'${m.scheme}' but this engine probes '$BloomScheme' — indexes " +
-        "built before the UTC cast pin hashed session-local timestamp " +
-        "strings and can silently false-negative; rebuild the index " +
-        "(ZoneMap.build) instead of probing it")
+        s"'${m.scheme}' but this engine probes '$BloomScheme' — bits " +
+        "hashed another way can silently false-negative; rebuild the " +
+        "index (ZoneMap.build) instead of probing it")
     m
   }
 
@@ -399,8 +417,9 @@ object ZoneMap {
 
   /** Probe one file's serialized bloom for each hash. A null bloom (the
     * column is all-null in that file) contains nothing. The one place
-    * bloom bytes are deserialized: zone pruning and [[GraftTable]]'s
-    * merge candidacy both probe through it, executor-side.
+    * bloom bytes are deserialized: zone pruning (in executors over this
+    * index's rows, on the driver over [[GraftTable]]'s sidecars) and
+    * [[GraftTable]]'s merge candidacy all probe through it.
     */
   private[operators] def bloomProbe(bytes: Array[Byte],
       hashes: Seq[Long]): Seq[Boolean] =
@@ -438,34 +457,46 @@ object ZoneMap {
   /** Hash `i` of bloom slot `slot` may be in the file. */
   private final case class Bloom(slot: Int, i: Int) extends Check
 
+  /** Where a [[Pruner]] finds a file's serialized bloom of a column,
+    * given the file's zone row: in the row itself (this index) or in a
+    * sidecar next to the file ([[GraftTable]]). Null = no non-null value.
+    */
+  private[operators] type Blooms = (Row, String) => Array[Byte]
+
   /** The CNF survivor test, written once. [[pruner]] compiles it on
     * the driver, once per pruning call; [[keep]] judges one zone row. It
     * runs on the driver over a collected manifest snapshot (zero Spark
-    * jobs) and in executors ([[pruneFrameCnf]]), where bloom bytes live.
+    * jobs) and in executors ([[pruneFrameCnf]]) over this index's rows.
     *
     * A file survives iff every OR-group has some disjunct whose checks
     * all hold — the conservative reading of `k < 10 OR k > 90`; an empty
     * spec, group or conjunct keeps everything. A Point checks the zone
-    * range and, where built, the bloom (no false negatives). Each file's
-    * bloom deserializes at most once, however many Points probe it.
+    * range and, where built, the bloom (no false negatives). Blooms are
+    * read only for files the zone checks alone keep, each at most once,
+    * however many Points probe it.
     */
   private[operators] final class Pruner private[ZoneMap] (fileIx: Int,
-      cnf: Seq[Seq[Seq[Check]]], blooms: Seq[(Int, Seq[Long])])
-      extends Serializable {
+      cnf: Seq[Seq[Seq[Check]]], blooms: Seq[(String, Seq[Long])],
+      read: Blooms) extends Serializable {
 
-    def keep(r: Row): Boolean = {
-      val hits = new Array[Seq[Boolean]](blooms.size)
+    private def passes(r: Row, bloom: Bloom => Boolean): Boolean = {
       def holds(c: Check): Boolean = c match {
         case b: Bound => b.holds(r)
         case NullCount(nl, cnt, want) =>
           if (want) r.getLong(nl) > 0L else r.getLong(cnt) > r.getLong(nl)
-        case Bloom(slot, i) =>
-          if (hits(slot) == null) hits(slot) =
-            bloomProbe(r.getAs[Array[Byte]](blooms(slot)._1), blooms(slot)._2)
-          hits(slot)(i)
+        case b: Bloom => bloom(b)
       }
       cnf.forall(dnf => dnf.isEmpty || dnf.exists(_.forall(holds)))
     }
+
+    def keep(r: Row): Boolean = passes(r, _ => true) && (blooms.isEmpty || {
+      val hits = new Array[Seq[Boolean]](blooms.size)
+      passes(r, { case Bloom(slot, i) =>
+        if (hits(slot) == null) hits(slot) =
+          bloomProbe(read(r, blooms(slot)._1), blooms(slot)._2)
+        hits(slot)(i)
+      })
+    })
 
     /** (survivor files, all files) over `rows`. */
     def survivors(rows: Iterable[Row]): (Seq[String], Set[String]) =
@@ -475,7 +506,8 @@ object ZoneMap {
 
   /** Compile `cnf` against zone rows of `schema`: resolve field
     * indexes, refuse preds on columns the index does not hold, hash
-    * bloom probes ([[probeHash]]) and normalize each literal.
+    * bloom probes ([[probeHash]]) and normalize each literal. Blooms are
+    * read through `blooms`, by default from the row's `bloom_c` field.
     *
     * The literal is cast to the type Catalyst itself compares
     * `column <op> literal` in (the wider of the two). Where that is not
@@ -489,7 +521,7 @@ object ZoneMap {
     * (PARQUET-1246) while Spark's ordering calls NaN the maximum.
     */
   private[operators] def pruner(schema: StructType, meta: Meta,
-      cnf: Cnf): Pruner = {
+      cnf: Cnf, blooms: Option[Blooms] = None): Pruner = {
     val conf = SQLConf.get
     val tz = conf.sessionLocalTimeZone
     def wider(a: DataType, b: DataType): Option[DataType] =
@@ -521,7 +553,7 @@ object ZoneMap {
     def bloom(c: String, v: Any): Option[Check] =
       typed(c, v).collect { case (_, ct, t) if t == ct =>
         probeHash(v, ct, tz) // loud on a value c can't hold
-      }.filter(_ => schema.fieldNames.contains(s"bloom_$c")).map { h =>
+      }.map { h =>
         val hs = hashes.getOrElseUpdate(c, mutable.ArrayBuffer.empty[Long])
         if (!hs.contains(h)) hs += h
         Bloom(hashes.keysIterator.indexOf(c), hs.indexOf(h))
@@ -548,15 +580,20 @@ object ZoneMap {
           schema.fieldIndex("cnt"), want))
     }
     val compiled = cnf.map(_.map(_.flatMap(checks)))
-    new Pruner(schema.fieldIndex(FileCol), compiled, hashes.toSeq.map {
-      case (c, hs) => (schema.fieldIndex(s"bloom_$c"), hs.toVector) })
+    val read = blooms.getOrElse {
+      val inRow = hashes.keys.map(c => c -> schema.fieldIndex(s"bloom_$c")).toMap
+      (r: Row, c: String) => r.getAs[Array[Byte]](inRow(c))
+    }
+    new Pruner(schema.fieldIndex(FileCol), compiled,
+      hashes.toSeq.map { case (c, hs) => (c, hs.toVector) }, read)
   }
 
   /** The pruning verdict frame `(file, _keep)` for the indexed rows of
     * `z` under `preds`: the [[Pruner]] runs EXECUTOR-side, bloom probes
     * included, so a caller only ever collects file names and booleans.
     * At the default sizing (~912 KB of bits per file per column) an
-    * 800k-file table's blooms are ~700 GB: a driver-side probe is an OOM.
+    * 800k-file index's in-row blooms are ~700 GB: collecting them is an
+    * OOM.
     */
   private[operators] def pruneFrame(z: DataFrame, meta: Meta,
       preds: Seq[Pred]): DataFrame = pruneFrameCnf(z, meta, Seq(Seq(preds)))
@@ -578,14 +615,8 @@ object ZoneMap {
     * [[pruneFrame]]'s `(file, _keep)` rows, never bloom bytes.
     */
   private[operators] def pruneZoneRows(z: DataFrame, meta: Meta,
-      preds: Seq[Pred]): (Seq[String], Set[String]) =
-    pruneZoneRowsCnf(z, meta, Seq(Seq(preds)))
-
-  /** [[pruneZoneRows]] over a [[Cnf]] spec, for [[GraftTable]]'s bloom
-    * manifests (the same row shape). */
-  private[operators] def pruneZoneRowsCnf(z: DataFrame, meta: Meta,
-      cnf: Cnf): (Seq[String], Set[String]) = {
-    val rows = pruneFrameCnf(z, meta, cnf).collect()
+      preds: Seq[Pred]): (Seq[String], Set[String]) = {
+    val rows = pruneFrame(z, meta, preds).collect()
     (rows.filter(_.getBoolean(1)).map(_.getString(0)).toSeq,
       rows.map(_.getString(0)).toSet)
   }

@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.StructType
   * Pruning has one entry point. `listFiles` receives the data filters
   * Catalyst pushed to the scan, translates them once
   * ([[graft.plans.DmlExpr.toCnf]]) and keeps the files the pinned
-  * version's zone and bloom manifest cannot rule out
+  * version's zone manifest and bloom sidecars cannot rule out
   * (`GraftTable.pruneFilesCnf`). Spark re-applies every filter above
   * the scan, so pruning never changes a result. Each pruned listing
   * records (files kept, files listed) under the table root for

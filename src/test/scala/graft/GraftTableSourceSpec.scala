@@ -314,7 +314,7 @@ class GraftTableSourceSpec extends SparkSpec {
     val t = GraftTable.create(spark.createDataFrame(
       spark.sparkContext.parallelize(files.indices, files.size)
         .flatMap(i => files(i)), schema),
-      p, zoneCols = cols, bloomCols = Seq("k", "s"), bloomItems = 1000L,
+      p, zoneCols = cols, bloomCols = cols, bloomItems = 1000L,
       bloomFpp = 0.01)
     assert(t.files().size == 14)
     val unpruned = spark.read.parquet(t.files(): _*)

@@ -316,7 +316,7 @@ class GraftTableSpec extends SparkSpec {
     val m = GraftTable.readMeta(spark, p, 2L)
     intercept[java.util.ConcurrentModificationException] {
       GraftTable.publishGeneration(spark, p, Some(rows(900, 950)), 2L, m,
-        carry = None)
+        carried = Nil)
     }
     assert(t.version == 2 && t.read().orderBy("k").collect().toSeq == headRows,
       "the loser must leave the winner's commit untouched")
@@ -1139,7 +1139,7 @@ class GraftTableSpec extends SparkSpec {
       s"bytes must survive the carry-forward: $bytes1")
   }
 
-  test("job budget: scanFileCount prunes on the driver for every zone type; a bloom table runs one job") {
+  test("job budget: scanFileCount prunes on the driver with no Spark job for every zone type and on a bloom table") {
     import java.sql.{Date, Timestamp}
     val day0 = java.time.LocalDate.of(2024, 1, 1)
     val typed = (0L until 400L).map { k =>
@@ -1160,14 +1160,102 @@ class GraftTableSpec extends SparkSpec {
       assert(jobs == 0, s"$zone zone: pruning ran $jobs Spark jobs")
       assert(opened >= 1 && opened < all, s"$zone zone: opened $opened of $all files")
     }
-    // blooms stay in the executors: one (file, _keep) collect
+    // blooms are probed on the driver too, from the zone survivors'
+    // sidecars
     val bt = GraftTable.create(rows(0, 400).repartition(8), base(),
       zoneCols = Seq("v"), bloomCols = Seq("k"), bloomItems = 1000L, bloomFpp = 0.01)
     bt.files()
     var opened = 0L
     val (jobs, _, _) = sparkWork { opened = bt.scanFileCount(Seq(ZoneMap.Point("k", 7L))) }
-    assert(jobs == 1, s"bloom pruning must run exactly one Spark job: $jobs")
+    assert(jobs == 0, s"bloom pruning ran $jobs Spark jobs")
     assert(opened >= 1 && opened <= 3, s"the bloom must prune: opened $opened of 8 files")
+  }
+
+  test("job budget: a bloom-table append and a Timestamp/Decimal/Date-zoned append run one zone pass and no manifest job; the next statement runs none") {
+    import java.sql.{Date, Timestamp}
+    val day0 = java.time.LocalDate.of(2024, 1, 1)
+    def typed(lo: Long, hi: Long) = (lo until hi).map { k =>
+      (k, new Timestamp(1700000000000L + k * 60000L),
+        java.math.BigDecimal.valueOf(k * 25L, 2), Date.valueOf(day0.plusDays(k)))
+    }.toDF("k", "ts", "m", "dt")
+    val bloomed = GraftTable.create(rows(0, 400).repartition(8), base(),
+      zoneCols = Seq("v"), bloomCols = Seq("k"), bloomItems = 1000L, bloomFpp = 0.01)
+    val zoned = GraftTable.create(typed(0, 400).repartitionByRange(8, col("k")),
+      base(), zoneCols = Seq("k", "ts", "m", "dt"))
+    // jobs the same appends ran when the manifest carried bloom bits and
+    // was written by a Spark job for these zone types
+    Seq((bloomed, rows(400, 500), 4), (zoned, typed(400, 500), 5)).foreach {
+      case (t, batch, before) =>
+        val (jobs, _, labels) = sparkWork { t.append(batch.repartition(2)) }
+        assert(jobs < before && labels.count(_.startsWith("graft:publish:zones")) == 1 &&
+          labels.forall(l => l.startsWith("graft:publish:zones") ||
+            l.startsWith("graft:publish:generation")),
+          s"an append writes its generation and runs one zone pass: $jobs jobs " +
+            labels.mkString("; "))
+        val (next, _, nextLabels) = sparkWork { t.files() }
+        assert(next == 0, "the commit seeds its snapshot: " + nextLabels.mkString("; "))
+    }
+    assert(bloomed.read().count() == 500 && zoned.read().count() == 500)
+    assert(zoned.scan(Seq(ZoneMap.Point("dt", Date.valueOf(day0.plusDays(450)))))
+      .count() == 1)
+  }
+
+  test("shallow clone of a bloom table prunes like its source, through the source files' sidecars") {
+    val p = base()
+    val src = GraftTable.create(rows(0, 400).repartition(8), s"$p/src",
+      zoneCols = Seq("v"), bloomCols = Seq("k"), bloomItems = 1000L, bloomFpp = 0.01)
+    val cl = GraftTable.shallowClone(spark, s"$p/src", s"$p/cl")
+    Seq(7L, 123L, 399L, 5000L).foreach { k =>
+      val pt = Seq(ZoneMap.Point("k", k))
+      assert(cl.scanFileCount(pt) == src.scanFileCount(pt), s"k = $k")
+      assert(cl.scan(pt).count() == (if (k < 400) 1L else 0L), s"k = $k")
+    }
+    assert(cl.scanFileCount(Seq(ZoneMap.Point("k", 7L))) <= 3)
+    // copy-on-write: the rewritten stripe's sidecars are the clone's own
+    cl.delete(Seq(ZoneMap.Point("k", 7L)))
+    assert(cl.scan(Seq(ZoneMap.Point("k", 7L))).count() == 0 &&
+      cl.scan(Seq(ZoneMap.Point("k", 8L))).count() == 1 &&
+      src.scan(Seq(ZoneMap.Point("k", 7L))).count() == 1)
+    assert(cl.scanFileCount(Seq(ZoneMap.Point("k", 8L))) <= 3)
+  }
+
+  test("vacuum deletes a merge's replaced files' bloom sidecars and keeps the live ones; a missing sidecar is loud") {
+    val p = base()
+    val t = GraftTable.create(rows(0, 2000).repartition(16), p,
+      zoneCols = Seq("k"), bloomCols = Seq("k"), bloomItems = 1000L, bloomFpp = 0.01)
+    val before = t.files().toSet
+    t.merge(Seq((777L, -1.0, "x")).toDF("k", "v", "u"), "k")
+    val live = t.files().toSet
+    val replaced = before -- live
+    assert(replaced.nonEmpty)
+    def sidecar(f: String) =
+      new java.io.File(GraftTable.bloomSidecar(f, "k").toUri.getPath)
+    assert((before ++ live).forall(sidecar(_).isFile),
+      "every written data file has its sidecar")
+    t.vacuum()
+    assert(replaced.forall(!sidecar(_).exists),
+      "the replaced files' sidecars go with them")
+    assert(live.forall(sidecar(_).isFile), "live sidecars stay")
+    assert(t.scan(Seq(ZoneMap.Point("k", 777L))).select("v").as[Double]
+      .collect().toSeq == Seq(-1.0))
+    // no legacy reader: a file without its sidecar fails naming the path
+    // (an untouched file spans the whole key range, so its zone keeps 1000)
+    val gone = sidecar((before & live).head)
+    assert(gone.delete())
+    val e = intercept[RuntimeException] {
+      t.scanFileCount(Seq(ZoneMap.Point("k", 1000L)))
+    }
+    assert(e.getMessage.contains(gone.getPath), e.getMessage)
+  }
+
+  test("a column a merge leaves null reads back null, whatever its create-time nullability") {
+    val p = base()
+    // primitive tuple fields are NOT NULL in the frame the table is created from
+    val t = GraftTable.create(Seq((1L, 10L, 100L), (2L, 20L, 200L)).toDF("k", "v", "w"),
+      p, zoneCols = Seq("k"))
+    t.merge(Seq((1L, 11L)).toDF("k", "v"), "k")
+    assert(t.read().orderBy("k").as[(Long, Long, Option[Long])].collect().toSeq ==
+      Seq((1L, 11L, None), (2L, 20L, Some(200L))))
   }
 
   test("a read frame stays its snapshot: after a later commit prunes its version, filters still prune its files") {

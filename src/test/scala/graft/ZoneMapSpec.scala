@@ -231,6 +231,27 @@ class ZoneMapSpec extends SparkSpec {
     }
   }
 
+  test("float blooms normalize signed zero and NaN: -0.0 = 0.0 never prunes away") {
+    // SQL's 0.0 is a decimal, which has no signed zero, and -0.0 = 0.0
+    // holds on doubles: a bloom that hashed the strings "-0.0" and "0.0"
+    // apart would drop the file holding -0.0 for `d = 0.0`
+    val (data, idx) = mkDirs()
+    Seq((1L, -0.0, -0.0f), (2L, Double.NaN, Float.NaN), (3L, 1.5, 1.5f),
+      (4L, 2.5, 2.5f)).toDF("k", "d", "f").repartition(4).write.parquet(data)
+    ZoneMap.build(spark, data, Seq("k"), idx, bloomCols = Seq("d", "f"),
+      bloomItems = 1000L, bloomFpp = 0.01)
+    def keys(p: ZoneMap.Pred): Seq[Long] =
+      ZoneMap.scan(spark, data, idx, Seq(p)).select("k").as[Long].collect().toSeq
+    Seq[Any](0.0, -0.0, 0, new java.math.BigDecimal("0.0")).foreach { zero =>
+      assert(keys(ZoneMap.Point("d", zero)) == Seq(1L), s"d = $zero")
+      assert(keys(ZoneMap.Point("f", zero)) == Seq(1L), s"f = $zero")
+    }
+    assert(keys(ZoneMap.Point("d", Double.NaN)) == Seq(2L))
+    assert(keys(ZoneMap.Point("f", Float.NaN)) == Seq(2L))
+    assert(ZoneMap.prunedFiles(spark, data, idx,
+      Seq(ZoneMap.Point("d", 0.0))).get.size < 4, "the bloom still prunes")
+  }
+
   test("timestamp bloom probes agree across session time zones") {
     // the bloom hashes the engine's string cast of the value; a bare
     // cast resolves with the SESSION zone while the probe evaluates with
@@ -435,7 +456,9 @@ class ZoneMapSpec extends SparkSpec {
     var pruned = 0
     cnfs.zipWithIndex.foreach { case (cnf, i) =>
       val want = held.filter(_.getBoolean(i + 1)).map(_.getString(0)).toSet
-      val (executor, all) = ZoneMap.pruneZoneRowsCnf(z, meta, cnf)
+      val verdicts = ZoneMap.pruneFrameCnf(z, meta, cnf).collect()
+      val executor = verdicts.filter(_.getBoolean(1)).map(_.getString(0)).toSeq
+      val all = verdicts.map(_.getString(0)).toSet
       val (driver, _) = ZoneMap.pruner(z.schema, meta, cnf).survivors(zoneRows)
       assert(want.subsetOf(executor.toSet),
         s"$cnf pruned files holding kept rows: ${want -- executor}")
