@@ -57,9 +57,10 @@ object Bpe {
     filter(split(w, ""), s => s =!= lit(""))
 
   /** Word tables at or under this many distinct words train on the
-    * DRIVER (see [[trainMerges]]) — the [[Dedup.components]]
-    * driverThreshold discipline. ~10 MB of driver strings at the cap;
-    * the bound is on the VOCABULARY, never on corpus-sized data.
+    * DRIVER (see [[trainMerges]]): each distributed round costs fixed
+    * Spark jobs that a bounded table does not repay. ~10 MB of driver
+    * strings at the cap; the bound is on the VOCABULARY, never on
+    * corpus-sized data.
     */
   val DriverWords = 500000
 
@@ -77,7 +78,8 @@ object Bpe {
     * the distributed loop runs unchanged: one pair-count aggregate
     * (shuffle ∝ distinct pairs) + a 1-row argmax collect + a narrow
     * merge application per round, lineage cut with a lazy
-    * localCheckpoint every 4 rounds ([[Dedup.components]]' policy).
+    * localCheckpoint every 4 rounds, so the plan stays bounded however
+    * many merges are trained.
     */
   def trainMerges(
       wordCounts: DataFrame, k: Int): (Seq[(String, String, Long)], DataFrame) = {

@@ -71,15 +71,13 @@ final class CompIndex private[operators] (
   }
 
   /** Fold a batch of new pairs in. Endpoint resolution is one bucketed
-    * join; everything after is batch-bounded driver work (same
-    * justification as [[Dedup.components]]'s driver fast path — the
-    * bound is on the batch's edge list, never on corpus-sized data).
-    * `maxBatchEdges` makes that contract LOUD: feeding a corpus-sized
-    * pair set here would otherwise die as a silent driver OOM — that
-    * workload belongs in [[ComponentsIndex.build]], whose
-    * [[Dedup.components]] has a distributed path.
+    * join; everything after is batch-bounded driver work: the batch's
+    * edges are collected into a [[Dedup.UnionFind]]. A batch above
+    * [[Dedup.OneTaskEdges]] is refused rather than risk a driver OOM — a
+    * corpus-sized pair set belongs in [[ComponentsIndex.build]], whose
+    * [[Dedup.components]] contracts it on the executors first.
     */
-  def update(newPairs: DataFrame, maxBatchEdges: Long = 1000000L): Unit = {
+  def update(newPairs: DataFrame): Unit = {
     spark.catalog.refreshTable(assignTable)
     val remap0 = loadRemap()
     val pe = newPairs
@@ -87,10 +85,9 @@ final class CompIndex private[operators] (
       .distinct()
       .localCheckpoint(true)
     val nPairs = pe.count()
-    require(nPairs <= maxBatchEdges,
-      s"update() is for micro-batches ($nPairs edges > $maxBatchEdges): " +
-        "corpus-sized pair sets go through ComponentsIndex.build " +
-        "(distributed components), or raise maxBatchEdges deliberately")
+    require(nPairs <= Dedup.OneTaskEdges,
+      s"update() is for micro-batches ($nPairs edges > ${Dedup.OneTaskEdges}): " +
+        "corpus-sized pair sets go through ComponentsIndex.build")
     val ids = pe.select(explode(array(col("i"), col("j"))).as("doc_id")).distinct()
     // one bucketed join answers both "current comp0" (null → the doc is
     // its own class) and "already stored" per endpoint
@@ -102,24 +99,13 @@ final class CompIndex private[operators] (
     val cur: Map[Long, Long] = endpoint.map { case (d, c) => d -> c.getOrElse(d) }
     def resolve0(c: Long): Long = remap0.getOrElse(c, c)
     // union-find over the batch's ROOT graph (batch-bounded)
-    val parent = scala.collection.mutable.LongMap.empty[Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
-      r
-    }
-    def union(a: Long, b: Long): Unit = {
-      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
+    val uf = new Dedup.UnionFind
     pe.collect().foreach { r =>
-      union(resolve0(cur(r.getLong(0))), resolve0(cur(r.getLong(1))))
+      uf.union(resolve0(cur(r.getLong(0))), resolve0(cur(r.getLong(1))))
     }
     // compose: every historical comp0 whose current root merged points at
     // the new root; plus the merge edges themselves; fully collapsed
-    val merged: Map[Long, Long] =
-      parent.keys.map(x => x -> find(x)).filter { case (k, v) => k != v }.toMap
+    val merged: Map[Long, Long] = uf.labels.filter { case (k, v) => k != v }.toMap
     val remap1 = (remap0.map { case (c0, r0) => c0 -> merged.getOrElse(r0, r0) } ++
       merged).filter { case (k, v) => k != v }
     import spark.implicits._

@@ -448,137 +448,139 @@ object Dedup extends CacheLedger {
     verifyHashed(lSets.unionByName(rSets), candidates, threshold)
   }
 
-  /** Connected components over near-duplicate pairs via distributed label
-    * propagation: every member starts as its own component; each round a
-    * member adopts the minimum label among itself and its neighbors;
-    * converged when no label changes. Diameter-bounded rounds, no
-    * driver-side union-find.
-    *
-    * ONE distributed job per round: the convergence signal is a `chg` flag
-    * column computed in the same pass as the label update, and the round's
-    * single `count` both materializes the persisted next-labels frame and
-    * returns the changed-count (the former separate join+count convergence
-    * job tripled the per-round job bill). Lineage is cut with a lazy
-    * localCheckpoint every [[checkpointEvery]] rounds — materialized by
-    * that same count, so checkpoint rounds stay one job too.
-    *
-    * Small-graph fast path: near-dup edge sets are usually a vanishing
-    * fraction of the corpus (the r-th duplicate pair, not the r-th
-    * document), so when the materialized edge count is provably under
-    * `driverThreshold` the labels come from a driver union-find — two
-    * jobs total instead of one per propagation round. The bound is on the
-    * EDGE LIST, never on corpus-sized data; above it the distributed loop
-    * runs unconditionally. Edges stream through `toLocalIterator` (one
-    * partition resident at a time, no all-rows collect) into a primitive
-    * open-addressed LongMap — ~48 bytes/entry of steady driver heap, so the
-    * default 1M-edge cap costs ~100 MB transient, not GB.
-    *
-    * @param pairs (i, j) undirected duplicate edges
-    * @return (doc_id, comp) for every pair member, comp = min id reachable
+  /** Most edges the components kernel finishes in one task: an edge list
+    * at or under it streams through one `coalesce(1)` task into the
+    * driver [[UnionFind]] (~48 bytes of heap per node, so ~100 MB at the
+    * cap). [[CompIndex.update]] collects its batches to the driver too, so
+    * it holds them to the same bound.
     */
-  def components(
-      pairs: DataFrame, maxIters: Int = 20, checkpointEvery: Int = 3,
-      driverThreshold: Long = 1000000L): DataFrame = {
-    val spark = pairs.sparkSession
-    val rawEdges = pairs.select(col("i").cast("long").as("i"), col("j").cast("long").as("j"))
-      .cache()
-      .transform(ledgered)
-    val nEdges = rawEdges.count() // materializes the cache both paths read
-    if (nEdges <= driverThreshold) {
-      // LongMap: unboxed keys, open addressing — no per-entry hash nodes.
-      // toLocalIterator keeps at most one (cached) partition of Rows
-      // resident instead of materializing every edge Row at once.
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
-        r
-      }
-      import scala.jdk.CollectionConverters._
-      // coalesce(1) first: toLocalIterator submits ONE JOB PER PARTITION,
-      // and the cached edge list inherits the upstream shuffle's partition
-      // count (cache pins it — AQE cannot coalesce a cached plan), so a
-      // 32-partition tiny edge list paid 32 scheduled jobs here (~100 ms
-      // each — the q103 over-parallelization the r17 verdict flagged).
-      // One narrow task streams the cache blocks instead; driver memory
-      // unchanged (still an iterator, one batch resident).
-      rawEdges.coalesce(1).toLocalIterator().asScala.foreach { row =>
-        val (a, b) = (row.getLong(0), row.getLong(1))
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        // union by MIN root so the representative is the min reachable id
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val labels = parent.keys.toSeq.sorted.map(x => (x, find(x)))
-      rawEdges.unpersist()
-      import spark.implicits._
-      return labels.toDF("doc_id", "comp")
+  private[operators] val OneTaskEdges = 1000000L
+
+  /** Union-find over long ids with min-id roots and path halving: after
+    * any sequence of unions, an id's root is the smallest id connected to
+    * it.
+    * A LongMap keeps ids unboxed and open-addressed (no per-entry nodes).
+    */
+  private[operators] final class UnionFind {
+    private val parent = scala.collection.mutable.LongMap.empty[Long]
+
+    private def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
     }
-    distributedComponents(rawEdges, maxIters, checkpointEvery)
+
+    def union(a: Long, b: Long): Unit = {
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+
+    /** (id, smallest connected id) for every id seen, ascending by id. */
+    def labels: Seq[(Long, Long)] = parent.keys.toSeq.sorted.map(x => (x, find(x)))
   }
 
-  /** The distributed label-propagation path of [[components]]; `edges0`
-    * must be cached (it is re-read every round).
+  /** Connected components over near-duplicate pairs.
+    *
+    * Near-duplicate edges are the r-th duplicate pair, not the r-th
+    * document, so the edge list usually fits [[OneTaskEdges]] as it comes.
+    * Then no round runs: one `count`, and one `coalesce(1)` task streams
+    * the cached edges (`toLocalIterator`, one batch resident) into a
+    * driver [[UnionFind]], whose roots are the labels.
+    *
+    * A larger edge list is first contracted by alternating large-star /
+    * small-star rounds (Kiveris et al., "Connected Components in
+    * MapReduce and Beyond", SoCC 2014). Each round keeps every component
+    * connected and never adds edges; its output is a lazy checkpoint that
+    * the round's one aggregate both materializes and measures. The rounds
+    * stop when the edge list fits the budget, and the union-find finishes
+    * it, or when it has converged to stars — every edge (node, its
+    * component's minimum) — which are then the labels. Rounds are
+    * O(log² n) whatever the graph's diameter, so long chains of revisions
+    * need no iteration cap.
+    *
+    * @param pairs (i, j) undirected duplicate edges; (i, i) labels i as
+    *              its own component unless other edges join it
+    * @return (doc_id, comp) for every pair member, comp = min id reachable
     */
-  private def distributedComponents(
-      pairs: DataFrame, maxIters: Int, checkpointEvery: Int): DataFrame = {
-    // Both edge directions PLUS a self-loop per node: with self-loops, the
-    // label update collapses to one join + one aggregation per round —
-    // min(comp over neighbors ∪ self) — instead of a neighbor-min join
-    // followed by a second left-join back to pick up the node's own label.
-    // One shuffle join fewer per round, at 100 TB as at sf0.01.
-    val directed = pairs.select(col("i"), col("j"))
-      .union(pairs.select(col("j").as("i"), col("i").as("j")))
-    // Node set is checkpointed FIRST and reused for both the self-loops and
-    // the initial labels: a distinct() branch inside the edges union would
-    // re-evaluate the whole upstream pairs pipeline (no cross-branch CSE).
-    val nodes = directed.select(col("i").as("doc_id")).distinct().localCheckpoint()
-    val edges = directed
-      .union(nodes.select(col("doc_id").as("i"), col("doc_id").as("j")))
-      .cache()
-      .transform(ledgered)
-    // Fresh aliases (new expression ids): the edges plan embeds the same
-    // nodes frame for its self-loops, and a shared attribute would trip
-    // Spark's ambiguous-self-join detection in the first round's join.
-    var labels = nodes.select(col("doc_id").as("doc_id"), col("doc_id").as("comp"))
-    var prev: DataFrame = null // superseded persisted frame, unpersisted lazily
-    var iter = 0
-    var changed = 1L
-    while (iter < maxIters && changed > 0) {
-      // The self-loop row contributes the node's current comp, so max(when
-      // j==i) recovers the old label in the same aggregation that computes
-      // the new one — the convergence signal costs no extra pass.
-      val lab = labels
-      val stepped = edges
-        .join(lab, edges("j") === lab("doc_id"))
-        .groupBy(edges("i").as("doc_id"))
-        .agg(min(lab("comp")).as("comp"),
-          max(when(edges("i") === lab("doc_id"), lab("comp"))).as("old"))
-        .select(col("doc_id"), col("comp"), (col("comp") < col("old")).as("chg"))
-      val next =
-        if ((iter + 1) % checkpointEvery == 0) stepped.localCheckpoint(false)
-        else { stepped.persist(); stepped }
-      changed = next.filter(col("chg")).count() // materializes persist/checkpoint
-      if (prev != null) prev.unpersist()
-      prev = next
-      labels = next.drop("chg")
-      iter += 1
+  def components(pairs: DataFrame): DataFrame = components(pairs, OneTaskEdges)
+
+  /** [[components]] with the one-task budget as a parameter, so specs can
+    * force contraction rounds on small graphs.
+    */
+  private[operators] def components(pairs: DataFrame, budget: Long): DataFrame = {
+    val spark = pairs.sparkSession
+    val raw = ledgered(pairs
+      .select(col("i").cast("long").as("i"), col("j").cast("long").as("j"))
+      .cache())
+    var edges = raw
+    var n = GraftTable.labeled(spark, "dedup:components:count")(raw.count())
+    var stars = false
+    while (n > budget && !stars) GraftTable.labeled(spark, "dedup:components:round") {
+      // under AQE even a lazy checkpoint runs the round's shuffles here
+      edges = smallStar(largeStar(edges)).localCheckpoint(false)
+      val (m, unstarred) = starCount(edges)
+      raw.unpersist() // read by the first round only
+      n = m
+      stars = unstarred == 0
     }
-    // Silent non-convergence would make dedupeCorpus keep several docs of
-    // one cluster; fail loudly instead (diameter > maxIters is a caller
-    // decision, not a default to paper over).
-    if (changed > 0) throw new IllegalStateException(
-      s"components() did not converge after $maxIters iterations " +
-        s"($changed labels still changing); raise maxIters for graphs of larger diameter")
-    // Detach the result from the loop's caches before releasing them: the
-    // eager checkpoint snapshots the (tiny) label frame, then the last
-    // round's persisted frame and the edge cache can go — components()
-    // leaves no CacheManager entries behind.
-    val out = labels.localCheckpoint()
-    if (prev != null) prev.unpersist()
-    edges.unpersist()
-    pairs.unpersist() // the caller-cached raw edge list
+    val out = GraftTable.labeled(spark, "dedup:components:finish") {
+      if (n <= budget) {
+        import scala.jdk.CollectionConverters._
+        import spark.implicits._
+        val uf = new UnionFind
+        // coalesce(1): toLocalIterator runs one job per partition
+        edges.coalesce(1).toLocalIterator().asScala
+          .foreach(r => uf.union(r.getLong(0), r.getLong(1)))
+        uf.labels.toDF("doc_id", "comp")
+      } else edges.select(col("i").as("doc_id"), col("j").as("comp"))
+        .union(edges.select(col("j"), col("j")))
+        .distinct()
+        .localCheckpoint()
+    }
+    raw.unpersist()
     out
+  }
+
+  /** Large-star: every neighbor v > u of u re-points at the minimum of u's
+    * closed neighborhood. Edges come out as (i, j) with i > j; a node whose
+    * only edge is its own loop keeps that loop, so it stays labeled.
+    */
+  private def largeStar(e: DataFrame): DataFrame = {
+    val w = Window.partitionBy("u")
+    e.select(col("i").as("u"), col("j").as("v"))
+      .union(e.select(col("j"), col("i")))
+      .select(col("u"), col("v"),
+        least(col("u"), min("v").over(w)).as("m"), max("v").over(w).as("mx"))
+      .filter(col("v") > col("u") || col("m") === col("u") && col("mx") === col("u"))
+      .select(col("v").as("i"), col("m").as("j"))
+      .distinct()
+  }
+
+  /** Small-star over (i, j), i > j edges: i and every j of i re-point at
+    * the smallest such j; an isolated node's loop passes through.
+    */
+  private def smallStar(e: DataFrame): DataFrame =
+    e.withColumn("m", min("j").over(Window.partitionBy("i")))
+      .select(col("i"), col("m"), explode(array(col("i"), col("j"))).as("x"))
+      .filter(col("x") =!= col("m") || col("i") === col("m"))
+      .select(col("x").as("i"), col("m").as("j"))
+      .distinct()
+
+  /** (edges, nodes breaking the star shape) of a small-star output, in
+    * one pass: the edges are stars once no node has two parents or is
+    * both a child and a parent (an isolated node's loop is neither).
+    */
+  private def starCount(e: DataFrame): (Long, Long) = {
+    val r = e.select(explode(array(
+        struct(col("i").as("v"), lit(1L).as("c"), lit(0L).as("p")),
+        struct(col("j").as("v"), lit(0L).as("c"),
+          (col("i") =!= col("j")).cast("long").as("p")))).as("r"))
+      .groupBy(col("r.v")).agg(sum("r.c").as("c"), sum("r.p").as("p"))
+      .agg(coalesce(sum("c"), lit(0L)),
+        count(when(col("c") > 1 || col("c") > 0 && col("p") > 0, 1)))
+      .head()
+    (r.getLong(0), r.getLong(1))
   }
 
   /** End-to-end corpus dedup: find near-dup pairs (MinHash LSH,

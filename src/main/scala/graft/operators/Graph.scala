@@ -11,8 +11,7 @@ import org.apache.spark.sql.functions._
   * Everything is expressed on DataFrames so the graph never materializes on
   * the driver:
   *  - edges/nodes stay distributed; each PageRank round is one equi-join on
-  *    the source id plus one hash aggregate on the destination — the same
-  *    shuffle shape as [[Dedup.components]]' label propagation.
+  *    the source id plus one hash aggregate on the destination.
   *  - at cluster scale, both per-round shuffles key on the vertex id, so
   *    pre-partitioning `edges` by `src` (bucketing, or a one-time
   *    `repartition`) makes the join side shuffle-free and only the rank
@@ -20,8 +19,8 @@ import org.apache.spark.sql.functions._
   *  - iteration count is FIXED (not convergence-tested): training-data
   *    ranking wants a reproducible, oracle-checkable result, and 3–10
   *    damped rounds already separate hubs from leaves. Lineage is cut with
-  *    a lazy `localCheckpoint` every 3 rounds, exactly as in
-  *    [[Dedup.components]], so deep iteration cannot blow the plan up.
+  *    a lazy `localCheckpoint` every 3 rounds, so deep iteration cannot
+  *    blow the plan up.
   */
 object Graph extends CacheLedger {
 

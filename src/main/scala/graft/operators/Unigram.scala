@@ -266,10 +266,9 @@ object Unigram {
       maxPieceLen: Int, emIters: Int, shrink: Double): Model = {
     val spark = wc0.sparkSession
     import spark.implicits._
-    // Small-vocabulary fast path (the [[Bpe.trainMerges]] /
-    // [[Dedup.components]] discipline): the word table is
-    // vocabulary-sized, and each of the ~3·rounds E-steps costs a fixed
-    // Spark job — on a bounded vocabulary the whole EM loop runs on the
+    // Small-vocabulary fast path (as in [[Bpe.trainMerges]]): the word
+    // table is vocabulary-sized, and each of the ~3·rounds E-steps costs
+    // a fixed Spark job — on a bounded vocabulary the whole EM loop runs on the
     // driver through the SAME lattice/seed/normalize code, zero jobs per
     // round. The probe is one bounded collect off the already-
     // checkpointed table; above the cap the distributed loop runs

@@ -6,8 +6,9 @@ import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The incremental components index must equal [[Dedup.components]] over
-  * the union of every pair ingested so far — after every update, through
+/** The incremental components index must equal the connected components
+  * ([[ComponentsOracle]], a union-find outside the engine) of the union of
+  * every pair ingested so far — after every update, through
   * every merge topology (join an existing component, bridge two old
   * components, chain through a prior merge) — while keeping the
   * assignments table append-only and the remap fully collapsed.
@@ -17,12 +18,7 @@ class ComponentsIndexSpec extends SparkSpec {
   private def resolved(i: CompIndex): Map[Long, Long] =
     i.assignments().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  private def want(pairs: DataFrame): Map[Long, Long] = {
-    val m = Dedup.components(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Dedup.releaseCaches()
-    m
-  }
+  private def want(pairs: DataFrame): Map[Long, Long] = ComponentsOracle.labels(pairs)
 
   test("updates == batch components over all pairs so far; append-only; compact folds remap") {
     import spark.implicits._

@@ -250,24 +250,57 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("components: chained pairs collapse to one min-labeled component (both paths)") {
+  test("components: chained pairs collapse to one min-labeled component") {
     val pairs = spark.createDataFrame(Seq(
       (1L, 2L), (2L, 3L), (3L, 4L),   // chain 1-2-3-4
       (10L, 11L)                      // separate pair
     )).toDF("i", "j")
     val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L)
-    // driver union-find fast path (edge count under the threshold)
-    val fast = Dedup.components(pairs)
+    val got = Dedup.components(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fast == want)
-    // distributed label propagation, forced by a zero threshold
-    val dist = Dedup.components(pairs, driverThreshold = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(dist == want)
+    assert(got == want)
     // a pair-free corpus yields an empty labeling, not an error
     val empty = spark.createDataFrame(Seq.empty[(Long, Long)]).toDF("i", "j")
     assert(Dedup.components(empty).isEmpty)
     assert(Dedup.dedupeCorpus(docs.limit(0), "doc_id", "text").isEmpty)
+  }
+
+  test("components kernel == a test-side union-find, with and without contraction rounds") {
+    import graft.operators.ComponentsOracle
+    val rnd = new scala.util.Random(17)
+    val n = 10000L
+    val chain = (1L until n).map(k => (k - 1, k))
+    val ids = rnd.shuffle((0L until n).toVector)
+    val loops = (0L until 200L).map(k => (k, k)) ++          // loops on chain nodes
+      (0L until 199L).map(k => (k, k + 1)) ++
+      (1000L until 1100L).flatMap(k => Seq((k, k), (k, k)))  // isolated, repeated
+    val inputs: Seq[(String, Seq[(Long, Long)])] = Seq(
+      "ascending 10^4 chain" -> chain,
+      "shuffled 10^4 chain" -> ids.sliding(2).map(w => (w(0), w(1))).toSeq,
+      "2000-leaf star" -> (0L to 2000L).filter(_ != 1000L)
+        .map(k => if (k % 2 == 0) (1000L, k) else (k, 1000L)),
+      "sparse seeded random graph" ->
+        Seq.fill(2500)((rnd.nextInt(3000).toLong, rnd.nextInt(3000).toLong)),
+      "dense seeded random graph" ->
+        Seq.fill(400)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong)),
+      "self-loop pairs" -> loops,
+      "duplicate and reversed pairs" ->
+        (0L until 100L).flatMap(k => Seq((k, k + 1), (k + 1, k), (k, k + 1))),
+      "empty" -> Seq.empty)
+    import spark.implicits._
+    inputs.foreach { case (name, edges) =>
+      val want = ComponentsOracle.labels(edges)
+      val pairs = edges.toDF("i", "j")
+      Seq(1000000L, 64L).foreach { budget =>
+        var got = Seq.empty[(Long, Long)]
+        val (_, _, labels) = sparkWork { got = ComponentsOracle.kernel(pairs, budget) }
+        assert(got.map(_._1).distinct.size == got.size, s"[$name @ $budget] a node labeled twice")
+        assert(got.toMap == want, s"[$name @ $budget] labels differ from the reference")
+        val rounds = labels.count(_ == "dedup:components:round")
+        if (edges.size > budget) assert(rounds > 0, s"[$name @ $budget] no contraction round ran")
+        else assert(rounds == 0, s"[$name @ $budget] $rounds rounds on a graph that fits")
+      }
+    }
   }
 
   test("dedupeCorpus keeps one doc per duplicate group plus all singletons") {
