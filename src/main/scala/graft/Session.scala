@@ -9,7 +9,10 @@ import org.apache.spark.sql.SparkSession
   * 1000-executor cluster: AQE on (runtime re-planning, skew-join splitting,
   * partition coalescing), UTC session time zone (oracle parity), and
   * broadcast threshold left at Spark's default so small dimension tables
-  * (region/nation/customer at low SF) broadcast automatically.
+  * (region/nation/customer at low SF) broadcast automatically. Parquet
+  * timestamps are written as INT64 microseconds, the format's standard
+  * type, whose footers carry the exact bounds a GraftTable commit reads
+  * its zone rows from (INT96, Spark's default, carries none).
   */
 object Session {
 
@@ -26,6 +29,7 @@ object Session {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -8,6 +8,7 @@ import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 
 /** Per-file zone statistics read from parquet FOOTERS instead of a Spark
@@ -27,8 +28,8 @@ import org.apache.spark.sql.types._
   * table takes that pass without asking: its sidecar bits need the
   * actual values. Cases that refuse here:
   *  - column types whose parquet stats ordering or representation does
-  *    not provably match Spark's aggregate semantics (timestamps can be
-  *    INT96 with no usable stats; decimals/nested are out of scope);
+  *    not provably match Spark's aggregate semantics (INT96 timestamps
+  *    carry no usable stats; nested types are out of scope);
   *  - float/double chunks whose bounds are NaN-polluted, or any file
   *    that mixes non-null values with absent statistics (parquet-mr
   *    drops oversized binary stats rather than truncating);
@@ -36,6 +37,11 @@ import org.apache.spark.sql.types._
   * Strings are safe: parquet-mr ≥ 1.8 writes `min_value`/`max_value`
   * under UNSIGNED byte order (the reader API hides legacy signed-order
   * stats as "no stats"), which is exactly UTF8String's comparison.
+  * Timestamps answer when written as INT64 microseconds adjusted to UTC
+  * (`spark.sql.parquet.outputTimestampType = TIMESTAMP_MICROS`, which
+  * [[graft.Session]] sets), decimals when their INT32, INT64 or
+  * fixed-length annotation carries the column's own precision and scale:
+  * both compare as signed integers, as Spark compares them.
   */
 private[operators] object FooterStats {
 
@@ -48,11 +54,12 @@ private[operators] object FooterStats {
     * negative a Point(NaN) probe. [[decode]] therefore refuses the whole
     * file when a chunk's bounds are NaN, and [[zoneRowsFromFooters]]
     * additionally refuses when the footer cannot prove the chunk
-    * NaN-free; integral/string/date/bool types have no such hazard).
+    * NaN-free; the other types have no such hazard).
     */
   private def supported(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | ShortType | ByteType | StringType |
-         BooleanType | DateType | DoubleType | FloatType => true
+         BooleanType | DateType | DoubleType | FloatType | TimestampType |
+         _: DecimalType => true
     case _ => false
   }
 
@@ -252,6 +259,26 @@ private[operators] object FooterStats {
         val (lo, hi) = (st.genericGetMin.asInstanceOf[java.lang.Float].floatValue(),
           st.genericGetMax.asInstanceOf[java.lang.Float].floatValue())
         if (lo.isNaN || hi.isNaN) None else Some((lo, hi))
+      case (TimestampType, PrimitiveTypeName.INT64) if (ann match {
+            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+              t.isAdjustedToUTC && t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
+            case _ => false
+          }) =>
+        def ts(v: Any) = DateTimeUtils.toJavaTimestamp(
+          v.asInstanceOf[java.lang.Long].longValue())
+        Some((ts(st.genericGetMin), ts(st.genericGetMax)))
+      case (d: DecimalType, PrimitiveTypeName.INT32 | PrimitiveTypeName.INT64 |
+          PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY) if (ann match {
+            case a: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
+              a.getPrecision == d.precision && a.getScale == d.scale
+            case _ => false
+          }) =>
+        def dec(v: Any) = new java.math.BigDecimal(v match {
+          case i: java.lang.Integer => java.math.BigInteger.valueOf(i.longValue())
+          case l: java.lang.Long => java.math.BigInteger.valueOf(l)
+          case b: Binary => new java.math.BigInteger(b.getBytes)
+        }, d.scale)
+        Some((dec(st.genericGetMin), dec(st.genericGetMax)))
       case _ => None
     }
   }

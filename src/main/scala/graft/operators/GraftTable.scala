@@ -2,9 +2,13 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import graft.sources.GraftFileIndex
 
 /** The unified table: data files + zone statistics + layout committed as
@@ -289,32 +293,43 @@ object GraftTable {
   // ------------------------------------------------------------ internals --
 
   /** ONE aggregate, three contract answers — row count, non-null key
-    * count, distinct key count — instead of three separate Spark jobs:
-    * this runs per micro-batch on [[mergeStream]]'s hot path, and
-    * GraftTableSpec pins the single-job shape with a listener.
-    *
-    * @return the batch row count (free from the same aggregate; callers
-    *         use it to bound driver-adjacent work like the bloom-probe
-    *         hash array)
+    * count, distinct key count — instead of three separate Spark jobs,
+    * for a stream's seed batch and a merge into a table with no non-null
+    * key range; every other merge computes the same aggregate inside its
+    * file probe. GraftTableSpec pins the single-job shape with a listener.
     */
   private[graft] def requireMergeContract(batch: DataFrame,
-      keyCol: String): Long = requireMergeContract(batch, Seq(keyCol))
+      keyCol: String): Unit = requireMergeContract(batch, Seq(keyCol))
 
   /** Composite form: the key is the TUPLE — every component non-null,
     * tuples unique within the batch (same single-aggregate shape).
     */
   private[graft] def requireMergeContract(batch: DataFrame,
-      keyCols: Seq[String]): Long = {
-    val ks = keyCols.map(col)
-    val allSet = ks.map(_.isNotNull).reduce(_ && _)
+      keyCols: Seq[String]): Unit = {
+    val agg = contractAgg(keyCols)
     val stats = labeled(batch.sparkSession, "graft:merge:contract") {
       withoutAqe(batch.sparkSession) {
-        batch.agg(count(lit(1)).as("n"),
-          count(when(allSet, lit(1))).as("nk"),
-          countDistinct(ks.head, ks.tail: _*).as("nd")).head()
+        batch.agg(agg.head, agg.tail: _*).head()
       }
     }
-    val (n, nk, nd) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
+    checkContract(keyCols, stats.getLong(0), stats.getLong(1),
+      stats.getLong(2))
+  }
+
+  /** The contract's three aggregate columns — row count `_n`, non-null
+    * key count `_nk`, distinct key count `_nd` — which a merge's file
+    * probe also computes in its own collect.
+    */
+  private def contractAgg(keyCols: Seq[String]): Seq[Column] = {
+    val ks = keyCols.map(col)
+    val allSet = ks.map(_.isNotNull).reduce(_ && _)
+    Seq(count(lit(1)).as("_n"), count(when(allSet, lit(1))).as("_nk"),
+      countDistinct(ks.head, ks.tail: _*).as("_nd"))
+  }
+
+  /** Throws unless `(n, nk, nd)` ([[contractAgg]]) meet the contract. */
+  private def checkContract(keyCols: Seq[String], n: Long, nk: Long,
+      nd: Long): Unit = {
     require(n == nk,
       s"merge keys (${keyCols.mkString(", ")}) must be non-null: " +
         s"${n - nk} null-component keys in the batch")
@@ -322,7 +337,6 @@ object GraftTable {
       s"merge batch keys (${keyCols.mkString(", ")}) must be unique " +
         s"within the batch ($nk rows, $nd distinct) — latest-wins is " +
         "order-dependent otherwise")
-    n
   }
 
 
@@ -383,15 +397,17 @@ object GraftTable {
     try body finally sc.setJobDescription(prev)
   }
 
-  /** Run a METADATA/BATCH-BOUNDED planning action without AQE: adaptive
-    * execution re-optimizes per exchange, which costs one extra scheduled
-    * job per stage — pure overhead for the commit protocol's small
-    * bounded queries (batch contract aggregate, file-candidacy probe),
-    * whose shuffles are already sized by `spark.sql.shuffle.partitions`
-    * and gain nothing from runtime re-planning (AQE's skew handling is
-    * join-only and these plans' joins are broadcast by construction).
-    * The DATA-scale legs — generation writes, the merge join itself —
-    * keep AQE untouched. Restores the caller's setting.
+  /** Run commit-protocol actions without AQE: adaptive execution stages
+    * every exchange as a scheduled job of its own, which is pure overhead
+    * for the commit protocol's queries, whose shuffles are already sized
+    * by `spark.sql.shuffle.partitions` (or, for a merge's rewrite, by the
+    * number of files it replaces). Wrapped: the batch contract aggregate,
+    * the manifest snapshot collect, the zone pass, and a merge's whole
+    * commit — its file probe, its generation write (join, window and
+    * placement shuffle in one job) and its change-slice write. Every
+    * other mutation's generation write keeps AQE. The flip is a session
+    * conf, so a statement running concurrently on the same session sees
+    * it too. Restores the caller's setting.
     */
   private[operators] def withoutAqe[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.adaptive.enabled"
@@ -401,6 +417,37 @@ object GraftTable {
       case Some(p) => spark.conf.set(key, p)
       case None => spark.conf.unset(key)
     }
+  }
+
+  /** The most distinct batch-key hashes a merge probes bloom sidecars
+    * with; a batch with more keeps every range candidate.
+    */
+  private val BloomProbeCap = 1000000
+
+  /** The rewrite partition of a row of a merge whose replaced files have
+    * the zone minimums `mins` (one or more) on a key of type `dt`: the
+    * number of minimums, other than the smallest, at or below `key` — so a row
+    * lands in the partition of the last replaced file whose range starts
+    * at or below it, rows below every range in partition 0 and above
+    * every range in the last. A null key goes to 0. The minimums are
+    * sorted under Catalyst's own ordering of `dt` (NaN greatest, ±0.0
+    * equal, UTF-8 byte order), the one `>=` compares under, and the
+    * column is a balanced CASE tree over them: O(log n) comparisons per
+    * row, for every orderable type.
+    */
+  private[operators] def placement(key: Column, dt: DataType,
+      mins: Seq[Any]): Column = {
+    val bounds = mins.map(CatalystTypeConverters.createToCatalystConverter(dt))
+      .sorted(PhysicalDataType.ordering(dt)).toIndexedSeq
+    // the answer lies in [lo, hi]; bounds(0) never counts
+    def tree(lo: Int, hi: Int): Column =
+      if (lo == hi) lit(lo)
+      else {
+        val mid = (lo + hi + 1) / 2
+        when(key >= ColumnBridge.column(Literal(bounds(mid), dt)),
+          tree(mid, hi)).otherwise(tree(lo, mid - 1))
+      }
+    tree(0, bounds.size - 1)
   }
 
   private val VerRe = "v(\\d+)".r
@@ -1530,23 +1577,27 @@ final class GraftTable private[operators] (spark: SparkSession,
     // pruning would multiply manifest columns for little extra power
     val keyCol = keyCols.head
     // cache the batch ONCE (the Delta merge-source discipline): the
-    // contract aggregate, the pruning join and the merge join's two
-    // evaluations (rewrite, change slice) all re-evaluate the batch plan
-    // otherwise — for a CDC batch built from scans+unions that is 4 full
-    // re-executions per commit. LAZY persist, not an eager checkpoint:
-    // no extra job — the contract aggregate (the first consumer)
-    // populates the cache in the pass it pays anyway; O(batch) rows in
-    // spillable storage, released explicitly after the commit.
+    // probe (which carries the contract aggregate) and the merge join's
+    // two evaluations (rewrite, change slice) all re-evaluate the batch
+    // plan otherwise — for a CDC batch built from scans+unions that is 3
+    // full re-executions per commit. LAZY persist, not an eager
+    // checkpoint: no extra job — the probe (the first consumer) populates
+    // the cache in the pass it pays anyway; O(batch) rows in spillable
+    // storage, released explicitly after the commit.
     val batch0 = batch.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-    val batchRows = requireMergeContract(batch0, keyCols)
     // null-safe: a NULL op is "any other value", i.e. an upsert — a bare
     // =!= would evaluate to null and silently drop the row while its key
     // still tombstoned through the delete set
     val isDel =
       if (opCol == null) lit(false) else col(opCol) <=> lit(DeleteOp)
     val keys = batch0.select(keyCols.map(col): _*)
+    // the merge's own actions — the probe, the generation write and the
+    // change-slice write — run without AQE: each is then one job, where
+    // adaptive execution stages every exchange of the join, the window
+    // and the placement shuffle as a job of its own
+    withoutAqe(spark) {
     commit("merge", Some(Ledger(batchId, (0L, 0L)))) { a =>
       val (v, m) = (a.v, a.meta)
       require(m.zoneCols.contains(keyCol),
@@ -1596,31 +1647,39 @@ final class GraftTable private[operators] (spark: SparkSession,
       // carries them: on a hash-scattered layout every file spans the
       // full key range (min/max prunes nothing) but contains only its
       // own keys, so the bloom shrinks the rewrite set to the files that
-      // might actually hold a batch key. No false negatives ⇒ exact. The
-      // collect that lists the range candidates also brings the batch's
-      // distinct key hashes, as ONE array row, and the driver probes each
-      // candidate's sidecar with them; capped so the hashes stay
-      // metadata-sized on the driver.
-      val bloomed = m.bloomCols.contains(keyCol) && batchRows <= 1000000L
+      // might actually hold a batch key. No false negatives ⇒ exact.
+      //
+      // ONE collect answers the probe AND the batch-key contract: the
+      // candidate file rows plus one row of the contract aggregate — on
+      // a bloom key that row also brings the batch's distinct key
+      // hashes, and the driver probes each candidate's sidecar with
+      // them. The hashes are capped so they stay metadata-sized on the
+      // driver: past the cap the range candidates stand unprobed. The
+      // contract runs before any write, inside the attempt, so a
+      // redelivered batch id is skipped by the ledger before it.
+      val bloomed = m.bloomCols.contains(keyCol)
       val affected = GraftTable.labeled(spark, s"graft:merge:affected v$v") {
-        GraftTable.withoutAqe(spark) {
-          if (ranges.isEmpty) Set.empty[String] // no file, or no non-null range
-          else if (!bloomed) rangeCand.collect().map(_.getString(0)).toSet
+        if (ranges.isEmpty) { // no file, or no non-null range
+          requireMergeContract(batch0, keyCols)
+          Set.empty[String]
+        } else {
+          val agg = contractAgg(keyCols) ++ (if (!bloomed) Nil
+            else Seq(slice(collect_set(ZoneMap.bloomHash(col(keyCol),
+              m.schema(keyCol).dataType)), 1, BloomProbeCap + 1).as("_khs")))
+          val batchRow = keys.agg(agg.head, agg.tail: _*)
+          val got = rangeCand.unionByName(batchRow, allowMissingColumns = true)
+            .collect()
+          val (cands, stats) = got.partition(!_.isNullAt(0))
+          val s = stats.head
+          checkContract(keyCols, s.getAs[Long]("_n"), s.getAs[Long]("_nk"),
+            s.getAs[Long]("_nd"))
+          val files = cands.iterator.map(_.getString(0))
+          val khs = if (bloomed) s.getSeq[Long](s.fieldIndex("_khs")) else Nil
+          if (!bloomed || khs.size > BloomProbeCap) files.toSet
           else {
-            val hashes = keys.agg(collect_set(ZoneMap.bloomHash(col(keyCol),
-              m.schema(keyCol).dataType)).as("_khs"))
-            val got = rangeCand
-              .select(col("file"), lit(null).cast("array<bigint>").as("_khs"))
-              .unionByName(hashes.select(lit(null).cast("string").as("file"),
-                col("_khs")))
-              .collect()
-            val khs = got.collectFirst {
-              case r if !r.isNullAt(1) => r.getSeq[Long](1) }.getOrElse(Nil)
             val f = fs(spark, path)
-            got.iterator.filter(!_.isNullAt(0)).map(_.getString(0))
-              .filter(file => ZoneMap.bloomProbe(
-                readBloom(f, resolve(file), keyCol), khs).contains(true))
-              .toSet
+            files.filter(file => ZoneMap.bloomProbe(
+              readBloom(f, resolve(file), keyCol), khs).contains(true)).toSet
           }
         }
       }
@@ -1648,18 +1707,25 @@ final class GraftTable private[operators] (spark: SparkSession,
       // cheapest plan.
       val keep: DataFrame => DataFrame =
         if (m.changeFeed) a.persist else identity
-      val (joinedRows, slice) = condMerge(batch0, keyCols, isDel, opCol,
+      val (joinedRows, sliceRows) = condMerge(batch0, keyCols, isDel, opCol,
         sp, collapse = spec.isEmpty, stored, evolved, keep)
       // the join hash-partitions its output on the keys: written as is,
       // every new file would span the stripe's whole key range, and each
-      // later merge touching the stripe would rewrite all of it. Range
-      // partitioning restores key-clustered files, as many as it replaces.
+      // later merge touching the stripe would rewrite all of it. Placing
+      // each row by the replaced files' own zone minimums instead writes
+      // one key-clustered file per replaced file, from bounds the
+      // snapshot already holds: no sampling job.
       val rewrittenRows =
         if (affected.isEmpty) joinedRows
-        else joinedRows.repartitionByRange(affected.size, col(keyCol))
+        else {
+          val mins = ranges.collect { case (f, mn, _) if affected(f) => mn }
+          joinedRows.repartitionById(affected.size,
+            placement(col(keyCol), m.schema(keyCol).dataType, mins))
+        }
       Publish(Some(rewrittenRows), Some(affected),
-        m.copy(schemaDdl = evolved.toDDL), Changes.Rows(slice),
+        m.copy(schemaDdl = evolved.toDDL), Changes.Rows(sliceRows),
         (affected.size.toLong, carriedCount))
+    }
     }
     } finally batch0.unpersist(false)
   }

@@ -459,6 +459,24 @@ class GraftTableSpec extends SparkSpec {
     }
   }
 
+  test("merge contract runs inside the attempt: a redelivered batch id is skipped before it, a fresh id throws") {
+    val p = base()
+    val t = GraftTable.create(rows(0, 100), p, zoneCols = Seq("k"), nFiles = 2)
+    assert(t.merge(rows(0, 10), "k", 0L)._1 >= 1 && t.lastAppliedBatch() == 0L)
+    val dup = rows(0, 5).unionByName(rows(0, 5))
+    val nullKey = Seq((null.asInstanceOf[java.lang.Long], 1.0, "x"))
+      .toDF("k", "v", "u")
+    Seq(dup, nullKey).foreach { bad =>
+      assert(t.merge(bad, "k", 0L) == ((0L, 0L)),
+        "the ledger skips a redelivered id before the contract reads the batch")
+      intercept[IllegalArgumentException] { t.merge(bad, "k", 1L) }
+    }
+    // a table with no non-null key range still checks the contract
+    val empty = GraftTable.create(rows(0, 0), base(), zoneCols = Seq("k"))
+    intercept[IllegalArgumentException] { empty.merge(dup, "k", 0L) }
+    assert(t.version == 2 && t.lastAppliedBatch() == 0L && empty.version == 1)
+  }
+
   test("relative manifests: a committed table survives a directory move wholesale") {
     val dir = Files.createTempDirectory("graft_mv").toString
     val p = s"$dir/old/t"
@@ -1171,7 +1189,7 @@ class GraftTableSpec extends SparkSpec {
     assert(opened >= 1 && opened <= 3, s"the bloom must prune: opened $opened of 8 files")
   }
 
-  test("job budget: a bloom-table append and a Timestamp/Decimal/Date-zoned append run one zone pass and no manifest job; the next statement runs none") {
+  test("job budget: a bloom-table append runs one zone pass, a Timestamp/Decimal/Date-zoned append none, and no manifest job; the next statement runs none") {
     import java.sql.{Date, Timestamp}
     val day0 = java.time.LocalDate.of(2024, 1, 1)
     def typed(lo: Long, hi: Long) = (lo until hi).map { k =>
@@ -1183,15 +1201,17 @@ class GraftTableSpec extends SparkSpec {
     val zoned = GraftTable.create(typed(0, 400).repartitionByRange(8, col("k")),
       base(), zoneCols = Seq("k", "ts", "m", "dt"))
     // jobs the same appends ran when the manifest carried bloom bits and
-    // was written by a Spark job for these zone types
-    Seq((bloomed, rows(400, 500), 4), (zoned, typed(400, 500), 5)).foreach {
-      case (t, batch, before) =>
+    // was written by a Spark job for these zone types; the bloom bits need
+    // the values, the typed zones come from the footers
+    Seq((bloomed, rows(400, 500), 4, 1), (zoned, typed(400, 500), 5, 0)).foreach {
+      case (t, batch, before, zonePasses) =>
         val (jobs, _, labels) = sparkWork { t.append(batch.repartition(2)) }
-        assert(jobs < before && labels.count(_.startsWith("graft:publish:zones")) == 1 &&
+        assert(jobs < before &&
+          labels.count(_.startsWith("graft:publish:zones")) == zonePasses &&
           labels.forall(l => l.startsWith("graft:publish:zones") ||
             l.startsWith("graft:publish:generation")),
-          s"an append writes its generation and runs one zone pass: $jobs jobs " +
-            labels.mkString("; "))
+          s"an append writes its generation and runs $zonePasses zone pass: " +
+            s"$jobs jobs " + labels.mkString("; "))
         val (next, _, nextLabels) = sparkWork { t.files() }
         assert(next == 0, "the commit seeds its snapshot: " + nextLabels.mkString("; "))
     }
@@ -1361,8 +1381,9 @@ class GraftTableSpec extends SparkSpec {
       (800L until 820L).map(k => (k, k * 2.0, "new", "u")))
       .toDF("k", "v", "u", "op")
     val (mj, _, mLabels) = sparkWork { t.merge(batch, "k", "op") }
-    assert(mj < 10, s"a classic merge runs one merge join and no " +
-      s"separate change-slice legs: $mj jobs " + mLabels.mkString("; "))
+    assert(mj == 3, s"a classic merge runs its probe (with the batch-key " +
+      s"contract), its generation and its change slice: $mj jobs " +
+      mLabels.mkString("; "))
     assert(mLabels.forall(_.startsWith("graft:")),
       "every merge job is labeled: " + mLabels.mkString("; "))
     assert(t.read().count() == 810 &&
@@ -1376,6 +1397,162 @@ class GraftTableSpec extends SparkSpec {
       "every delete job is labeled: " + dLabels.mkString("; "))
     assert(t.read().count() == 789 &&
       t.commitChanges(t.version).get.count() == 21)
+  }
+
+  /** Twenty keys of `dt`, ascending under `ord` — the test's own
+    * statement of Spark's ordering — with the type's adversarial values.
+    * `stored` overrides what a stored row holds in a key's slot.
+    */
+  private case class KeyCase(dt: org.apache.spark.sql.types.DataType,
+      keys: Seq[Any], ord: Ordering[Any], stored: Map[Int, Any] = Map.empty)
+
+  private def keyCases: Seq[KeyCase] = {
+    import org.apache.spark.sql.types._
+    def by[T](f: (T, T) => Int): Ordering[Any] = new Ordering[Any] {
+      def compare(a: Any, b: Any): Int = f(a.asInstanceOf[T], b.asInstanceOf[T])
+    }
+    val utf8 = by[String] { (a, b) =>
+      val (x, y) = (a.getBytes("UTF-8"), b.getBytes("UTF-8"))
+      x.indices.find(i => i >= y.length || x(i) != y(i)) match {
+        case Some(i) if i < y.length => (x(i) & 0xff) - (y(i) & 0xff)
+        case Some(_) => 1
+        case None => x.length - y.length
+      }
+    }
+    val double = by[Double] { (a, b) =>
+      if (a.isNaN || b.isNaN) java.lang.Boolean.compare(a.isNaN, b.isNaN)
+      else if (a == b) 0 else java.lang.Double.compare(a, b)
+    }
+    Seq(
+      KeyCase(LongType, Seq(Long.MinValue, -1000000000000L, -5000L, -4096L,
+        -300L, -257L, -256L, -255L, -2L, -1L, 0L, 1L, 2L, 255L, 256L, 4096L,
+        1000000000L, 1000000000000L, 1L << 62, Long.MaxValue),
+        by[Long](java.lang.Long.compare)),
+      // UTF-8 byte order: U+E000 and U+FFFD sort below a surrogate pair,
+      // unlike UTF-16's String.compareTo
+      KeyCase(StringType, Seq("", "A", "AA", "Z", "a", "b", "z", "~", "é",
+        "ü", "ɐ", "ά", "ש", "ࠀ", "中", "\uE000", "\uFFFD", "😀", "😀a", "🙂"),
+        utf8),
+      KeyCase(DateType, Seq("1900-01-01", "1950-06-15", "1969-12-30",
+        "1969-12-31", "1970-01-01", "1970-01-02", "1999-12-31", "2000-02-29",
+        "2000-03-01", "2024-01-01", "2024-01-02", "2024-02-29", "2100-01-01",
+        "2500-05-05", "3000-01-01", "5000-01-01", "8000-01-01", "9999-01-01",
+        "9999-12-30", "9999-12-31").map(java.sql.Date.valueOf),
+        by[java.sql.Date](_.compareTo(_))),
+      KeyCase(DecimalType(20, 4), Seq("-9999999999999999.9999", "-100000.0000",
+        "-256.0000", "-255.9999", "-1.0000", "-0.0001", "0.0000", "0.0001",
+        "0.5000", "1.0000", "2.0000", "9.9999", "10.0000", "255.0000",
+        "4096.1234", "100000.0000", "123456789012.3456", "999999999999.9999",
+        "1000000000000.0000", "9999999999999999.9999")
+        .map(new java.math.BigDecimal(_)),
+        by[java.math.BigDecimal](_.compareTo(_))),
+      // slot 12 holds zero: stored as -0.0 in one file and 0.0 in the
+      // other, upserted as 0.0 — one key to Spark; NaN is the greatest
+      KeyCase(DoubleType, Seq(Double.NegativeInfinity, -1e300, -1e10, -4096.5,
+        -256.0, -2.5, -1.5, -1.0, -0.5, -1e-10, -1e-300,
+        -Double.MinPositiveValue, 0.0, Double.MinPositiveValue, 1e-300, 0.5,
+        1.0, Double.MaxValue, Double.PositiveInfinity, Double.NaN), double,
+        Map(12 -> -0.0)))
+  }
+
+  test("merge placement: the replaced files' zone minimums place each row; a driver fold and range partitioning agree on the layout") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    keyCases.foreach { case KeyCase(dt, keys, ord, storedAt) =>
+      assert(keys.size == 20 && keys.sliding(2).forall(w => ord.lt(w(0), w(1))),
+        s"$dt keys ascend")
+      val schema = StructType(Seq(StructField("k", dt), StructField("v", LongType)))
+      // (a) the placement column against a driver fold and against the
+      // layout repartitionByRange gives: ordered key ranges per partition
+      val mins = Seq(keys(15), keys(3), keys(9), keys(3), keys(0))
+      val sorted = mins.sorted(ord)
+      val probe = spark.createDataFrame((keys.map(k => Row(k, 0L)) ++
+        Seq(Row(null, 0L), Row(storedAt.getOrElse(12, keys(12)), 0L))).asJava,
+        schema)
+      val pid = GraftTable.placement(col("k"), dt, mins)
+      probe.select(col("k"), pid).collect().foreach { r =>
+        val want =
+          if (r.isNullAt(0)) 0 else sorted.tail.count(b => ord.lteq(b, r.get(0)))
+        assert(r.getInt(1) == want, s"$dt key ${r.get(0)}: ${r.getInt(1)} != $want")
+      }
+      Seq(probe.repartitionByRange(mins.size, col("k")),
+          probe.repartitionById(mins.size, pid)).foreach { placed =>
+        val byKey = placed.select(col("k"), spark_partition_id()).collect()
+          .filterNot(_.isNullAt(0)).sortBy(_.get(0))(ord).map(_.getInt(1))
+        assert(byKey.sliding(2).forall(w => w(0) <= w(1)),
+          s"$dt: partition ids follow key order: ${byKey.mkString(",")}")
+      }
+
+      // (b) a merge. Six files by key slot, F1 also holding a null key;
+      // F3 and F4 share their minimum (one key stored twice); the batch
+      // touches F1-F4, deletes every row of F2, inserts below F1 (slot
+      // 3), above F4 (18) and between files (7, 11), and tombstones a
+      // key never stored (15)
+      def key(i: Int) = keys(i)
+      def storedKey(i: Int) = storedAt.getOrElse(i, keys(i))
+      val fileSlots = Seq(Seq(0, 1, 2), Seq(4, 5, 6), Seq(8, 9, 10),
+        Seq(12, 13, 14), Seq(12, 16, 17), Seq(19))
+      var nextV = 0L
+      val stored = fileSlots.zipWithIndex.map { case (slots, f) =>
+        slots.map { i =>
+          nextV += 1
+          // the second copy of slot 12 holds the plain key
+          Row(if (f == 4) key(i) else storedKey(i), nextV)
+        } ++ (if (f == 1) Seq(Row(null, -1L)) else Nil)
+      }
+      val p = base()
+      def frame(rs: Seq[Row], s: StructType) =
+        spark.createDataFrame(spark.sparkContext.parallelize(rs, 1), s)
+      val t = GraftTable.create(frame(stored.head, schema), p, zoneCols = Seq("k"))
+      stored.tail.foreach(rs => t.append(frame(rs, schema)))
+      assert(t.files().size == 6)
+      val upserts = Seq(5, 12, 16, 3, 18, 7, 11)
+      val deletes = Seq(6, 8, 9, 10, 15)
+      val batchSchema = schema.add("op", StringType)
+      val batch = frame(upserts.map(i => Row(key(i), 1000L + i, "u")) ++
+        deletes.map(i => Row(key(i), 0L, GraftTable.DeleteOp)), batchSchema)
+      val before = t.version
+      val oldFiles = t.files().toSet
+      val (rewritten, carried) = t.merge(batch, "k", "op")
+      assert((rewritten, carried) == ((4L, 2L)), s"$dt: F1-F4 rewritten")
+
+      // contents and the exact change slice against a driver fold; keys
+      // compare by slot, so the ±0.0 copies are one key
+      def slot(k: Any): Int =
+        if (k == null) -1 else keys.indexWhere(x => ord.equiv(x, k))
+      val storedRows = stored.flatten.map(r => (slot(r.get(0)), r.getLong(1)))
+      val touched = (upserts ++ deletes).toSet
+      val want = storedRows.filterNot(r => touched(r._1)) ++
+        upserts.map(i => (i, 1000L + i))
+      val got = t.read().collect().map(r => (slot(r.get(0)), r.getLong(1)))
+      assert(got.sorted.toSeq == want.sorted, s"$dt contents")
+      val wantSlice =
+        storedRows.filter(r => deletes.contains(r._1)).map(r => (r._1, r._2, "delete")) ++
+          storedRows.filter(r => upserts.contains(r._1))
+            .map(r => (r._1, r._2, "update_preimage")) ++
+          upserts.filter(i => storedRows.exists(_._1 == i))
+            .map(i => (i, 1000L + i, "update_postimage")) ++
+          upserts.filterNot(i => storedRows.exists(_._1 == i))
+            .map(i => (i, 1000L + i, "insert"))
+      val gotSlice = t.commitChanges(t.version).get.collect()
+        .map(r => (slot(r.get(0)), r.getLong(1), r.getString(2)))
+      assert(gotSlice.sorted.toSeq == wantSlice.sorted, s"$dt change slice")
+
+      // the new files: one per non-empty placement partition, each the
+      // key slots the fold assigns it, their zone ranges disjoint
+      val manifest = spark.read.parquet(s"$p/v${before + 1}/manifest").collect()
+        .filterNot(r => oldFiles.exists(_.endsWith(r.getAs[String]("file"))))
+      assert(manifest.length <= 4, s"$dt: ${manifest.length} new files")
+      val ranges = manifest.map(r => (r.getAs[Any]("min_k"), r.getAs[Any]("max_k")))
+        .sortBy(_._1)(ord)
+      assert(ranges.sliding(2).forall(w => ord.lt(w(0)._2, w(1)._1)),
+        s"$dt: disjoint zone ranges ${ranges.mkString(", ")}")
+      val layout = t.files().filterNot(oldFiles).map(f =>
+        spark.read.parquet(f).collect().map(r => slot(r.get(0))).toSet).toSet
+      assert(layout == Set(Set(-1, 3, 4, 5, 7), Set(11), Set(12, 13, 14, 16, 17, 18)),
+        s"$dt: files by key slot $layout")
+    }
   }
 
   test("optimistic rebase: compactWhere and setPolicies each commit alongside a racing append") {

@@ -77,17 +77,28 @@ class ManifestSpec extends SparkSpec {
   }
 
   test("FooterStats equals the zoneRows aggregate wherever it answers; it refuses a NaN chunk") {
+    import java.math.{BigDecimal => JBigDecimal, BigInteger}
+    // decimals of each physical width: INT32, INT64, FIXED_LEN_BYTE_ARRAY
     val schema = StructType(Seq(StructField("l", LongType),
       StructField("i", IntegerType), StructField("sh", ShortType),
       StructField("b", ByteType), StructField("s", StringType),
       StructField("bo", BooleanType), StructField("dt", DateType),
       StructField("d", DoubleType), StructField("f", FloatType),
-      StructField("z", LongType)))
+      StructField("z", LongType), StructField("ts", TimestampType),
+      StructField("m9", DecimalType(9, 2)), StructField("m18", DecimalType(18, 4)),
+      StructField("m38", DecimalType(38, 10))))
     val cols = schema.fieldNames.toSeq
     def row(k: Int): Row = Row(k.toLong * 7 - 20, -k, (k * 3).toShort,
       (k - 2).toByte, s"v${k}é", k % 2 == 0,
       java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(k)),
-      if (k == 1) -0.0 else k * 1.5 - 4, (k * 0.25 - 1).toFloat, null)
+      if (k == 1) -0.0 else k * 1.5 - 4, (k * 0.25 - 1).toFloat, null,
+      // before and after the epoch, to the microsecond
+      java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
+        k * 977777L - 2000000L, k * 123457000L)),
+      JBigDecimal.valueOf(k * 12345L - 30000L, 2),
+      JBigDecimal.valueOf(k * 123456789012L - 300000000000L, 4),
+      new JBigDecimal(BigInteger.TEN.pow(27).multiply(BigInteger.valueOf(k * 7L - 20L))
+        .add(BigInteger.valueOf(k)), 10))
     val nulls = Row.fromSeq(Seq.fill(cols.size)(null))
     // four files: values with nulls, all-null, no rows, and one whose
     // double bound is a signed zero; `z` is all-null everywhere
@@ -127,6 +138,18 @@ class ManifestSpec extends SparkSpec {
     assert(FooterStats.zoneRowsFromFooters(conf, nan, cols, schema).isEmpty,
       "a chunk holding NaN must refuse")
     assert(FooterStats.zoneRowsFromFooters(conf, nan, cols.filter(_ != "d"), schema)
+      .isDefined, "the other columns of that file still answer")
+
+    // the session writes INT64 microsecond timestamps; INT96 ones carry
+    // no usable statistics and refuse
+    val prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    assert(prev == "TIMESTAMP_MICROS", prev)
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    val int96 = try write(Seq(Seq(row(0), row(2))))
+      finally spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
+    assert(FooterStats.zoneRowsFromFooters(conf, int96, cols, schema).isEmpty,
+      "an INT96 timestamp must refuse")
+    assert(FooterStats.zoneRowsFromFooters(conf, int96, cols.filter(_ != "ts"), schema)
       .isDefined, "the other columns of that file still answer")
   }
 }
