@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Jobs
 import graft.functions.{TextFunctions => TF, VectorOps => V}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -514,9 +515,9 @@ object Dedup extends CacheLedger {
       .select(col("i").cast("long").as("i"), col("j").cast("long").as("j"))
       .cache())
     var edges = raw
-    var n = GraftTable.labeled(spark, "dedup:components:count")(raw.count())
+    var n = Jobs.labeled(spark, "dedup:components:count")(raw.count())
     var stars = false
-    while (n > budget && !stars) GraftTable.labeled(spark, "dedup:components:round") {
+    while (n > budget && !stars) Jobs.labeled(spark, "dedup:components:round") {
       // under AQE even a lazy checkpoint runs the round's shuffles here
       edges = smallStar(largeStar(edges)).localCheckpoint(false)
       val (m, unstarred) = starCount(edges)
@@ -524,7 +525,7 @@ object Dedup extends CacheLedger {
       n = m
       stars = unstarred == 0
     }
-    val out = GraftTable.labeled(spark, "dedup:components:finish") {
+    val out = Jobs.labeled(spark, "dedup:components:finish") {
       if (n <= budget) {
         import scala.jdk.CollectionConverters._
         import spark.implicits._

@@ -9,6 +9,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import graft.Jobs.labeled
 import graft.sources.GraftFileIndex
 
 /** The unified table: data files + zone statistics + layout committed as
@@ -383,19 +384,6 @@ object GraftTable {
 
   private def fs(spark: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Label the Spark jobs `body` submits (guide-§1.5 observability: the
-    * commit protocol runs several small jobs per mutation and an
-    * unlabeled UI/job-profile cannot attribute them). Thread-local;
-    * restores the caller's description.
-    */
-  private[operators] def labeled[T](spark: SparkSession, desc: String)(
-      body: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(desc)
-    try body finally sc.setJobDescription(prev)
-  }
 
   /** Run commit-protocol actions without AQE: adaptive execution stages
     * every exchange as a scheduled job of its own, which is pure overhead
@@ -1049,7 +1037,7 @@ final class GraftTable private[operators] (spark: SparkSession,
       GraftTable.snapCacheG.getOrElseUpdate(key, {
         val m = readMeta(spark, path, v)
         val schema = FooterStats.manifestSchema(m.zoneCols, m.schema)
-        GraftTable.labeled(spark, s"graft:manifest:snap v$v") {
+        labeled(spark, s"graft:manifest:snap v$v") {
           GraftTable.withoutAqe(spark) {
             (schema, spark.read.schema(schema)
               .parquet(s"$path/v$v/manifest").collect())
@@ -1658,7 +1646,7 @@ final class GraftTable private[operators] (spark: SparkSession,
       // contract runs before any write, inside the attempt, so a
       // redelivered batch id is skipped by the ledger before it.
       val bloomed = m.bloomCols.contains(keyCol)
-      val affected = GraftTable.labeled(spark, s"graft:merge:affected v$v") {
+      val affected = labeled(spark, s"graft:merge:affected v$v") {
         if (ranges.isEmpty) { // no file, or no non-null range
           requireMergeContract(batch0, keyCols)
           Set.empty[String]
@@ -1967,7 +1955,7 @@ final class GraftTable private[operators] (spark: SparkSession,
       // it once from the same materialized stripe, feed OFF it never runs.
       val matchedRows =
         if (affected.isEmpty) 0L
-        else GraftTable.labeled(spark, s"graft:dml:gate v$v")(
+        else labeled(spark, s"graft:dml:gate v$v")(
           GraftTable.withoutAqe(spark)(stored.filter(cond).count()))
       if (matchedRows == 0L)
         Skip(DmlResult(0L, storedFiles(v).size.toLong, 0L))

@@ -1,7 +1,13 @@
 package graft.sources
 
+import graft.Jobs
 import graft.functions.MonoidAggregator
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import java.nio.file.{FileSystems, Files, NoSuchFileException, Paths}
+import java.nio.file.attribute.{PosixFileAttributes, PosixFilePermissions}
+import java.nio.file.attribute.PosixFilePermission.{GROUP_READ, OTHERS_READ, OWNER_READ}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.hadoop.fs.permission.FsAction
+import org.apache.hadoop.security.UserGroupInformation
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
@@ -203,10 +209,12 @@ object Crawl {
     * Spark's own file index lists; one level per barrier, directories
     * within a level listed concurrently. The access probes run on the same
     * pool, queued as each directory's entries arrive and overlapping the
-    * next level's listing: a probe is not free — without native Hadoop IO
-    * the local filesystem loads a file's permissions by running a shell
-    * command — so a serial probe loop would cost one such round trip per
-    * file on the calling thread.
+    * next level's listing. A local file is checked from its own attributes
+    * ([[readProbe]]): one `stat`, judged by Hadoop's access rule, which has
+    * no superuser bypass, so a file no one may read is refused even to
+    * root. Hadoop's own local check would run `ls -ld` in a child process
+    * per file where native Hadoop IO is absent. Other file systems keep
+    * `fs.access`, one metadata call per file.
     *
     * Scale note: a mid-stream read failure on a file that passed the probe
     * is NOT zero-substituted — Spark retries the task and then fails the
@@ -226,25 +234,21 @@ object Crawl {
       spark: SparkSession, root: String, parallelism: Int,
       accessProbe: Boolean): (Seq[FileStatus], Seq[IoError]) = {
     import java.util.concurrent.{Callable, CompletableFuture, Future}
-    import org.apache.hadoop.fs.permission.FsAction
     import scala.jdk.CollectionConverters._
     val rootPath = new HPath(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism.max(1))
     val probes = Seq.newBuilder[Future[Either[IoError, FileStatus]]]
     val errors = Seq.newBuilder[IoError]
-    def msg(e: Throwable): String =
-      Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-    // One metadata call per file; on object stores where access() is
-    // advisory (S3A always succeeds) pass accessProbe=false to skip the
-    // round-trips — open failures then surface as task retries instead of
-    // pre-flight IoErrors.
+    // A local probe costs one stat; on an object store each is a metadata
+    // round trip, and where access() is advisory (S3A always succeeds)
+    // accessProbe=false skips them — open failures then surface as task
+    // retries instead of pre-flight IoErrors.
+    val readable = readProbe(fs)
     def probe(st: FileStatus): Future[Either[IoError, FileStatus]] =
       if (!accessProbe) CompletableFuture.completedFuture[Either[IoError, FileStatus]](Right(st))
       else pool.submit(new Callable[Either[IoError, FileStatus]] {
-        def call() =
-          try { fs.access(st.getPath, FsAction.READ); Right(st) }
-          catch { case e: Exception => Left(IoError("open", st.getPath.toString, msg(e))) }
+        def call() = readable(st)
       })
     // Symlink-cycle guard: track each directory's *resolved* identity (real
     // path on filesystems that support symlinks, identity elsewhere) and
@@ -259,7 +263,7 @@ object Crawl {
       // stores) have no symlinks to chase — the raw path dedupes revisits
       // without spending a metadata RPC per directory.
       if (uri.getScheme == null || uri.getScheme == "file")
-        java.nio.file.Paths.get(uri.getPath).toRealPath().toString
+        Paths.get(uri.getPath).toRealPath().toString
       else p.toString
     } catch { case _: Exception => p.toString }
     try {
@@ -287,6 +291,53 @@ object Crawl {
       val (bad, files) = probes.result().map(_.get()).partitionMap(identity)
       (files, errors.result() ++ bad)
     } finally pool.shutdown()
+  }
+
+  private def msg(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
+
+  /** The read-access probe of one listing over `fs`: a listed file passes,
+    * or becomes an `IoError("open")` naming its path.
+    *
+    * On the local file system (scheme `file`, whatever class serves it) a
+    * file is judged from its POSIX attributes, read with symlinks followed
+    * as Hadoop's `getFileStatus` follows them, under Hadoop's own rule
+    * (`FileSystem.checkAccessPermissions`): the owner's read bit if the
+    * caller's short user name owns the file, else the group's if one of the
+    * caller's groups owns it, else the others'. There is no superuser
+    * bypass. The caller is looked up once per listing, its groups only when
+    * it does not own a file. This is the check `fs.access` makes, without
+    * the child process (`ls -ld`) Hadoop's local file system runs per file
+    * to load permissions where native Hadoop IO is absent.
+    *
+    * Every other file system, and a local one without a POSIX attribute
+    * view, keeps `fs.access`: remote file systems check ACLs on the server.
+    */
+  private[graft] def readProbe(fs: FileSystem): FileStatus => Either[IoError, FileStatus] = {
+    def refused(st: FileStatus, why: String) = Left(IoError("open", st.getPath.toString, why))
+    if (fs.getUri.getScheme != "file" ||
+        !FileSystems.getDefault.supportedFileAttributeViews.contains("posix"))
+      st => try { fs.access(st.getPath, FsAction.READ); Right(st) }
+        catch { case e: Exception => refused(st, msg(e)) }
+    else {
+      lazy val ugi = UserGroupInformation.getCurrentUser
+      lazy val groups = ugi.getGroupsSet
+      st => try {
+        val user = ugi.getShortUserName
+        val a = Files.readAttributes(Paths.get(st.getPath.toUri.getPath), classOf[PosixFileAttributes])
+        val (owner, group) = (a.owner.getName, a.group.getName)
+        val read =
+          if (owner == user) OWNER_READ
+          else if (groups.contains(group)) GROUP_READ
+          else OTHERS_READ
+        if (a.permissions.contains(read)) Right(st)
+        else refused(st, s"Permission denied: user=$user, path=\"${st.getPath}\":" +
+          s"$owner:$group:${if (a.isDirectory) "d" else "-"}${PosixFilePermissions.toString(a.permissions)}")
+      } catch {
+        case _: NoSuchFileException => refused(st, s"File ${st.getPath} does not exist")
+        case e: Exception => refused(st, msg(e))
+      }
+    }
   }
 
   /** The crawl rows of exactly `files`, already listed: Spark neither
@@ -382,9 +433,11 @@ object Crawl {
         .withColumn(BadFile, when(col(CorruptCol).isNotNull, listedForm(col("source_file"))))
       val typed = zeroFilled(rows, schema)
         .select(schema.fieldNames.map(col).toIndexedSeq :+ col(BadFile): _*).as[T]
-      val (result, firstBad, nBad) = typed.select(agg.column,
-        min(col(BadFile)).as(Encoders.STRING),
-        count_distinct(col(BadFile)).as(Encoders.scalaLong)).head()
+      val (result, firstBad, nBad) = Jobs.labeled(spark, "crawl:collect:fold") {
+        typed.select(agg.column,
+          min(col(BadFile)).as(Encoders.STRING),
+          count_distinct(col(BadFile)).as(Encoders.scalaLong)).head()
+      }
       val firstDecode = Option(firstBad).map(f => s"failed to decode: $f")
       CrawlResult(result, nBad + openFailures, firstIo.orElse(firstDecode))
     }

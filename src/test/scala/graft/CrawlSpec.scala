@@ -321,6 +321,79 @@ class CrawlSpec extends SparkSpec {
     assert(unprobed.files.length == 2 && unprobed.errors.isEmpty)
   }
 
+  test("local read probe == fs.access on the plain local file system: mode bits, owners, symlinks, races") {
+    import java.nio.file.attribute.{PosixFileAttributeView, PosixFilePermission, PosixFilePermissions}
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, FilterFileSystem, Path => HPath}
+    import org.apache.hadoop.fs.permission.FsAction
+    import org.apache.hadoop.security.UserGroupInformation
+    import scala.jdk.CollectionConverters._
+    val local = FileSystem.getLocal(spark.sessionState.newHadoopConf())
+    // A `file:` file system of another class whose access() fails the
+    // test: the probe picks the attribute check by scheme, not by class,
+    // and never calls it.
+    val noAccess = new FilterFileSystem(local) {
+      override def access(p: HPath, mode: FsAction): Unit =
+        throw new AssertionError(s"fs.access called on $p")
+    }
+    val probe = Crawl.readProbe(noAccess)
+    val root = Files.createTempDirectory("crawlprobe")
+    def status(p: Path) = new FileStatus(0L, false, 1, 0L, 0L, new HPath(p.toUri))
+    def check(what: String, p: Path): Unit = {
+      val st = status(p)
+      val want =
+        try { local.access(st.getPath, FsAction.READ); None }
+        catch { case e: Exception => Some(e) }
+      probe(st) match {
+        case Right(got) =>
+          assert(want.isEmpty, s"$what: the probe passed what fs.access refused: $want")
+          assert(got eq st)
+        case Left(err) =>
+          assert(want.nonEmpty, s"$what: the probe refused what fs.access passed: $err")
+          assert(err.op == "open" && err.path == st.getPath.toString, s"$what: $err")
+          if (want.get.getMessage.startsWith("Permission denied"))
+            assert(err.error == want.get.getMessage, what)
+      }
+    }
+    val bits = Seq(PosixFilePermission.OWNER_READ, PosixFilePermission.GROUP_READ,
+      PosixFilePermission.OTHERS_READ)
+    def files(tag: String) = (0 until 8).map { m =>
+      val f = Files.writeString(root.resolve(s"$tag$m.json"), """{"data": 1}""")
+      val perms = bits.zipWithIndex.collect { case (b, i) if (m >> i & 1) == 1 => b }
+      Files.setPosixFilePermissions(f, (perms :+ PosixFilePermission.OWNER_WRITE).toSet.asJava)
+      (s"$tag mode ${PosixFilePermissions.toString(Files.getPosixFilePermissions(f))}", f)
+    }
+    // Files the test user owns: the owner bits decide.
+    files("own").foreach { case (what, f) => check(what, f) }
+    // Symlinks are followed to their target's bits, a dangling one refused.
+    val readable = Files.writeString(root.resolve("readable.json"), """{"data": 1}""")
+    val locked = Files.writeString(root.resolve("locked.json"), """{"data": 1}""")
+    Files.setPosixFilePermissions(locked, PosixFilePermissions.fromString("---------"))
+    check("symlink to a readable file", Files.createSymbolicLink(root.resolve("to-readable"), readable))
+    check("symlink to a locked file", Files.createSymbolicLink(root.resolve("to-locked"), locked))
+    check("dangling symlink", Files.createSymbolicLink(root.resolve("dangling"), root.resolve("absent")))
+    // A file deleted between its listing and its probe.
+    val gone = Files.writeString(root.resolve("gone.json"), """{"data": 1}""")
+    Files.delete(gone)
+    check("file deleted after listing", gone)
+    // Files owned by another user: the group bits decide when the caller is
+    // in the file's group, the other bits when it is not. Re-owning needs
+    // root; elsewhere these cases are skipped.
+    val lookup = root.getFileSystem.getUserPrincipalLookupService
+    val ugi = UserGroupInformation.getCurrentUser
+    val other = Seq("nobody", "daemon").find(_ != ugi.getShortUserName)
+      .flatMap(u => scala.util.Try(lookup.lookupPrincipalByName(u)).toOption)
+    val outsider = Seq("nogroup", "nobody", "daemon").filterNot(ugi.getGroupsSet.contains)
+      .flatMap(g => scala.util.Try(lookup.lookupPrincipalByGroupName(g)).toOption).headOption
+    assume(ugi.getShortUserName == "root" && other.nonEmpty && outsider.nonEmpty,
+      "re-owning files to another user and group needs root and both to exist")
+    for ((tag, group) <- Seq(("ingroup", None), ("outgroup", outsider)); (what, f) <- files(tag)) {
+      val view = Files.getFileAttributeView(f, classOf[PosixFileAttributeView])
+      view.setOwner(other.get)
+      group.foreach(view.setGroup)
+      check(what, f)
+    }
+  }
+
   /** `n` equal-size `{"data": 1}` files spread over a three-level tree. */
   private def equalTree(prefix: String, n: Int): Path = {
     val root = Files.createTempDirectory(prefix)
@@ -352,6 +425,8 @@ class CrawlSpec extends SparkSpec {
       s"collect must run a fixed, small number of jobs: 40 files $jobs40, 120 files $jobs120")
     assert((labels40 ++ labels120).forall(!_.startsWith("Listing leaf files")),
       s"collect re-listed files it had already listed: ${labels40 ++ labels120}")
+    assert((labels40 ++ labels120).forall(_.startsWith("crawl:")),
+      s"every collect job is crawl:-labeled: ${labels40 ++ labels120}")
     assert(tasks40 == tasks120,
       s"collect's task count must not grow with the file count: $tasks40 -> $tasks120")
     assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
